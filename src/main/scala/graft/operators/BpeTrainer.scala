@@ -3,10 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Distributed byte-pair-encoding tokenizer TRAINING (Sennrich et al.
-  * 2016, arXiv:1508.07909 — the classic word-frequency formulation):
-  * greedy merge steps where each step promotes the corpus's most
-  * frequent adjacent symbol pair to a new symbol.
+/** Byte-pair-encoding tokenizer TRAINING (Sennrich et al. 2016,
+  * arXiv:1508.07909 — the classic word-frequency formulation): greedy
+  * merge steps where each step promotes the corpus's most frequent
+  * adjacent symbol pair to a new symbol.
   *
   * Exact + engine-portable by construction:
   *  - pair frequencies are INTEGER sums over the word-frequency table
@@ -19,16 +19,16 @@ import org.apache.spark.sql.functions._
   *    algorithm's in-word merge walk, and exactly what SQL `replace`
   *    does, so a DuckDB recomputation hash-matches (q126's oracle).
   *
-  * 100 TB shape: the corpus text is scanned ONCE into the
-  * word-frequency table (the classic BPE state — its size is the
-  * corpus VOCABULARY, millions of rows at web scale, not the corpus).
-  * Each merge step is then one hash aggregation over that persisted
-  * table: the step-`i` symbol sequences are derived by folding the
-  * `i` accumulated single-char replaces into the projection (fused by
-  * whole-stage codegen), so no per-step materialization, no growing
-  * cache, and the only driver traffic is ONE (pair, count) row per
-  * step. Corpus text is never rescanned after the prep — Scratch14
-  * probes that per-step cost tracks vocabulary size, not corpus size.
+  * 100 TB shape: the corpus text is scanned ONCE, distributed, into
+  * the word-frequency table (the classic BPE state — its size is the
+  * corpus VOCABULARY, not the corpus), which is collected to the
+  * driver once. The merge loop then runs on the driver over that
+  * table with incremental pair counts ([[learnMerges]]), so a merge
+  * costs in proportion to the words containing its pair and no Spark
+  * job: training submits the same jobs for 4 steps as for 400. The
+  * driver holds the vocabulary and its pair postings — memory in
+  * proportion to the distinct word forms times their length, the
+  * state single-process BPE trainers hold too.
   */
 object BpeTrainer {
 
@@ -67,46 +67,95 @@ object BpeTrainer {
             textCol: String = "text"): Seq[Merge] = {
     require(steps >= 1 && steps <= 6400,
       s"BPE merge steps must be in [1, 6400]: $steps")
-    val base = wordCounts(docs, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      base.count() // materialize: the ONLY corpus-text scan
-      val merges = Seq.newBuilder[Merge]
-      // accumulated (pair -> minted symbol) replaces; expansion of a
-      // minted symbol back to base characters for the Merge record
-      var reps = List.empty[(String, String)] // newest first
-      val expansion = scala.collection.mutable.Map.empty[Char, String]
-      var step = 1
-      var exhausted = false
-      while (step <= steps && !exhausted) {
-        // fold the accumulated merges into the projection (oldest
-        // first — each replace's output feeds the next, the same
-        // order the merges were learned)
-        val seqCol = reps.reverse.foldLeft(col("seq")) {
-          case (c, (p, z)) => replace(c, lit(p), lit(z))
-        }.as("seq")
-        val best = base.select(seqCol, col("cnt"))
-          .where(length(col("seq")) >= 2) // sequence(1,0) is DESCENDING, never empty
-          .select(explode(expr(
-            "transform(sequence(1, length(seq) - 1), p -> substring(seq, p, 2))"))
-            .as("pair"), col("cnt"))
-          .groupBy("pair").agg(sum("cnt").as("c"))
-          .orderBy(col("c").desc, col("pair").asc)
-          .limit(1).collect()
-        if (best.isEmpty) exhausted = true
-        else {
-          val pair = best(0).getString(0)
-          val freq = best(0).getLong(1)
-          val z = (SymBase + step - 1).toChar
-          val token = pair.flatMap(ch => expansion.getOrElse(ch, ch.toString))
-          expansion(z) = token
-          reps = (pair -> z.toString) :: reps
-          merges += Merge(step, token, freq, pair)
-          step += 1
-        }
+    val vocab = wordCounts(docs, textCol).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    learnMerges(vocab, steps)
+  }
+
+  /** The greedy merge loop over a collected word-frequency table.
+    *
+    * Incremental pair counts (the HF tokenizers / SentencePiece
+    * trainer shape): `counts` holds every adjacent pair's positional
+    * frequency, `postings` the words each pair occurs in, and a
+    * max-heap ranks pairs by (count DESC, pair ASC) with lazy
+    * deletion (an entry is live only while its count is the pair's
+    * current count). A merge rewrites only the words posted under its
+    * pair: each one's old pairs are subtracted, the left-to-right
+    * non-overlapping replace walk runs, and its new pairs are added
+    * back. The merged pair's count is then 0 — the walk leaves no
+    * occurrence of it, since the minted symbol matches neither half.
+    *
+    * A pair `xy` is keyed `x << 16 | y`; unsigned key order is the
+    * two-char string order, which is also the binary (UTF-8) order
+    * Spark and DuckDB compare with, because every symbol is `[a-z]`
+    * or U+E000..U+F8FF (no surrogates).
+    */
+  private[operators] def learnMerges(vocab: Seq[(String, Long)], steps: Int): Seq[Merge] = {
+    import scala.collection.mutable
+    val syms = vocab.map(_._1.toCharArray).toArray
+    val lens = syms.map(_.length)
+    val freq = vocab.map(_._2).toArray
+    val counts = mutable.HashMap.empty[Int, Long]
+    val postings = mutable.HashMap.empty[Int, mutable.HashSet[Int]]
+    val rank: Ordering[(Long, Int)] = (a, b) => {
+      val c = java.lang.Long.compare(a._1, b._1)
+      if (c != 0) c else Integer.compareUnsigned(b._2, a._2)
+    }
+    val heap = mutable.PriorityQueue.empty[(Long, Int)](rank)
+    def key(w: Int, i: Int): Int = (syms(w)(i) << 16) | syms(w)(i + 1)
+    def addPairs(w: Int, sign: Long, touched: mutable.Set[Int]): Unit = {
+      var i = 0
+      while (i < lens(w) - 1) {
+        val k = key(w, i)
+        counts(k) = counts.getOrElse(k, 0L) + sign * freq(w)
+        if (sign > 0) postings.getOrElseUpdate(k, mutable.HashSet.empty[Int]) += w
+        touched += k
+        i += 1
       }
-      merges.result()
-    } finally base.unpersist(blocking = false)
+    }
+    def push(touched: Iterable[Int]): Unit = touched.foreach { k =>
+      val c = counts(k)
+      if (c > 0) heap.enqueue((c, k)) else counts.remove(k)
+    }
+
+    val init = mutable.HashSet.empty[Int]
+    syms.indices.foreach(addPairs(_, 1L, init))
+    push(init)
+
+    val merges = Seq.newBuilder[Merge]
+    val expansion = mutable.Map.empty[Char, String]
+    var step = 1
+    while (step <= steps && heap.nonEmpty) {
+      val (c, k) = heap.dequeue()
+      if (counts.get(k).contains(c)) {
+        val (a, b) = ((k >>> 16).toChar, (k & 0xFFFF).toChar)
+        val z = (SymBase + step - 1).toChar
+        val token = expansion.getOrElse(a, a.toString) + expansion.getOrElse(b, b.toString)
+        expansion(z) = token
+        merges += Merge(step, token, c, s"$a$b")
+        val touched = mutable.HashSet.empty[Int]
+        postings.remove(k).get.foreach { w =>
+          val s = syms(w)
+          // postings are never pruned: an earlier merge may have
+          // consumed this word's occurrences of the pair
+          if ((0 until lens(w) - 1).exists(i => s(i) == a && s(i + 1) == b)) {
+            addPairs(w, -1L, touched)
+            var i = 0
+            var j = 0
+            while (i < lens(w)) {
+              if (i + 1 < lens(w) && s(i) == a && s(i + 1) == b) { s(j) = z; i += 2 }
+              else { s(j) = s(i); i += 1 }
+              j += 1
+            }
+            lens(w) = j
+            addPairs(w, 1L, touched)
+          }
+        }
+        push(touched)
+        step += 1
+      }
+    }
+    merges.result()
   }
 
   /** [[train]] as a DataFrame `(step int, token string, freq bigint)`

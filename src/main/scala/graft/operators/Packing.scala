@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Sequence packing — the "concatenate then chop" step that turns a
   * curated corpus into fixed-length training sequences: documents are
@@ -16,13 +18,15 @@ import org.apache.spark.sql.functions._
   * single-partition window: a `Window.orderBy(id)` with no partition
   * key funnels the whole corpus through one task — the classic
   * 100 TB-killer. Instead: range-repartition by id (contiguous id
-  * ranges per partition, sorted within), one pass for per-partition
-  * token totals (P longs to the driver — a bounded probe set), prefix
-  * offsets broadcast back, then one streaming pass per partition adds
-  * its offset to a local running sum. Both passes read the persisted
-  * partitioning, so partition indices are stable; the result is
-  * byte-identical for ANY partition count (PackingSuite pins P=1 vs
-  * P=7).
+  * ranges per partition, sorted within) and evaluate that plan ONCE
+  * into a persisted `(id, n_tokens)` RDD. One pass over the cache
+  * sums each partition's tokens (P longs to the driver — a bounded
+  * probe set); the driver's prefix offsets ship in the task closure
+  * of the second pass, which streams each partition adding its offset
+  * to a local running sum and checkpoints the result. Both passes
+  * read the same cached partitions, so partition indices and range
+  * boundaries cannot shift between them; the result is byte-identical
+  * for ANY partition count (PackingSuite pins P=1 vs P=7).
   */
 object Packing {
 
@@ -47,7 +51,6 @@ object Packing {
       lengthCol: Column = null): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive: $seqLen")
     val spark = docs.sparkSession
-    import spark.implicits._
 
     val lenExpr =
       if (lengthCol != null) lengthCol else TextAnalysis.tokenCount(col(textCol))
@@ -61,34 +64,34 @@ object Packing {
     val ranged = (if (numPartitions > 0) sized.repartitionByRange(numPartitions, col("id"))
                   else sized.repartitionByRange(col("id")))
       .sortWithinPartitions("id")
-      .persist()
-    ranged.count() // materialize: pins the sampled range boundaries so
-                   // both passes see the SAME partitioning
 
-    // pass 1: per-partition token totals (empty partitions absent from
-    // the agg → default 0). P longs on the driver — bounded.
-    val nParts = ranged.rdd.getNumPartitions
-    val partSums = new Array[Long](nParts)
-    ranged.groupBy(spark_partition_id().as("pid"))
-      .agg(sum("n_tokens").as("t")).as[(Int, Long)].collect()
-      .foreach { case (pid, t) => partSums(pid) = t }
-    val offsets = partSums.scanLeft(0L)(_ + _) // offsets(p) = tokens before partition p
-    val bc = spark.sparkContext.broadcast(offsets)
-
-    // pass 2: streaming local cumsum + broadcast prefix offset. The
-    // rows inside a cached partition are the sortWithinPartitions
-    // order, so the running sum is the global id-order prefix sum.
-    val packed = ranged.select(col("id").as("_1"), col("n_tokens").as("_2"))
-      .as[(Long, Long)].mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var cum = bc.value(pid)
-      it.map { case (id, t) =>
-        val start = cum
-        cum += t
-        (id, t, start / seqLen, start % seqLen)
+    // ONE evaluation of the ranged plan, cached as (id, n_tokens): the
+    // sums pass fills the cache and the prefix pass reads it, so both
+    // see the same rows in the same partitions and sorted order.
+    val cached = ranged.queryExecution.toRdd.map { r =>
+      require(!r.isNullAt(0) && !r.isNullAt(1),
+        s"sequencePack: null $idCol or token length")
+      (r.getLong(0), r.getLong(1))
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // pass 1: per-partition token totals, P longs on the driver in
+      // partition order — bounded
+      val partSums = cached.mapPartitions(it => Iterator(it.map(_._2).sum)).collect()
+      val offsets = partSums.scanLeft(0L)(_ + _) // offsets(p) = tokens before partition p
+      // pass 2: streaming local cumsum from the partition's prefix
+      // offset; rows inside a partition are in id order, so the
+      // running sum is the global id-order prefix sum
+      val packed = cached.mapPartitionsWithIndex { (pid, it) =>
+        var cum = offsets(pid)
+        it.map { case (id, t) =>
+          val start = cum
+          cum += t
+          Row(id, t, start / seqLen, start % seqLen)
+        }
       }
-    }.toDF(idCol, "n_tokens", "bin", "bin_offset")
-
-    Dedup.materializeAndRelease(packed, ranged)
+      val schema = StructType(Seq(idCol, "n_tokens", "bin", "bin_offset")
+        .map(StructField(_, LongType, nullable = false)))
+      spark.createDataFrame(packed, schema).localCheckpoint(true)
+    } finally cached.unpersist(false)
   }
 }

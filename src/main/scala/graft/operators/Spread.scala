@@ -89,9 +89,9 @@ private[graft] object Spread {
     * Footers are read DRIVER-SIDE only on the slow path — a handful of
     * files (the estSplits gate already proved file count ≪ cores)
     * whose compressed size is under the floor, so the probe is a few
-    * ms and only ever runs where the input is small. Non-parquet or
-    * unreadable footers contribute their compressed length (the
-    * pre-r19 behavior).
+    * ms and only ever runs where the input is small. Non-parquet
+    * files contribute their on-disk length (the pre-r19 behavior); a
+    * file whose footer or status cannot be read contributes 0.
     */
   private def uncompressedBytes(df: DataFrame, files: Array[String]): Long = {
     val hconf = df.sparkSession.sparkContext.hadoopConfiguration

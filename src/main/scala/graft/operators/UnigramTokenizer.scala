@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * table (vocabulary-sized state, like BPE's), explodes it to weighted
   * substrings (≤ maxLen·|word| pieces per DISTINCT word form, never per
   * occurrence), and one hash aggregation + TakeOrdered yields the
-  * vocabulary; the only driver traffic is the top-K rows (bounded
-  * collect, like the BPE winner). Scoring is a PURE PROJECTION: the
+  * vocabulary; the only driver traffic is the top-K rows (a bounded
+  * collect). Scoring is a PURE PROJECTION: the
   * piece set inlines as per-length literal arrays and the greedy walk
   * runs as native `aggregate`/`transform` higher-order expressions —
   * one corpus scan, zero joins, zero windows, no UDF.

@@ -156,19 +156,25 @@ final class Pipeline(spark: SparkSession, spec: PipelineSpec) {
         val keep = graft.operators.Dedup.exact(df, idCol, textCol).select(col(idCol))
         df.join(keep, Seq(idCol), "left_semi")
       case "minhash" =>
-        val pairs = graft.operators.Dedup.minhashLsh(df, idCol, textCol,
-          threshold = threshold)
-        val groups = graft.operators.Dedup.nearDupGroups(pairs, // eager
-          maxIters = maxIters, localMaxPairs = localMaxPairs)
-        graft.operators.Dedup.releaseCheckpoint(pairs)
-        val losers = groups.where(col("doc_id") =!= col("group_id"))
-          .select(col("doc_id").as(idCol))
-        // materialize before releasing the groups checkpoint the
-        // anti-join reads (same contract as the operators' own
-        // materialize-then-release)
-        val out = df.join(losers, Seq(idCol), "left_anti").localCheckpoint(true)
-        graft.operators.Dedup.releaseCheckpoint(groups)
-        out
+        // the input is read twice (signatures, then the anti-join):
+        // persist it so the upstream pipeline evaluates once, and
+        // release it after the checkpoint — the Validate step's pattern
+        val input = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val pairs = graft.operators.Dedup.minhashLsh(input, idCol, textCol,
+            threshold = threshold)
+          val groups = graft.operators.Dedup.nearDupGroups(pairs, // eager
+            maxIters = maxIters, localMaxPairs = localMaxPairs)
+          graft.operators.Dedup.releaseCheckpoint(pairs)
+          val losers = groups.where(col("doc_id") =!= col("group_id"))
+            .select(col("doc_id").as(idCol))
+          // materialize before releasing the groups checkpoint the
+          // anti-join reads (same contract as the operators' own
+          // materialize-then-release)
+          val out = input.join(losers, Seq(idCol), "left_anti").localCheckpoint(true)
+          graft.operators.Dedup.releaseCheckpoint(groups)
+          out
+        } finally input.unpersist(false)
       case m => throw new IllegalArgumentException(s"dedup step: unknown method '$m'")
     }
     case CurateStep(idCol, textCol, minTokens, maxTokens, langs, nearDup, threshold, keep) =>

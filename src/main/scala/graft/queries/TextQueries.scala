@@ -616,16 +616,16 @@ object TextQueries {
         .scores.orderBy("doc_id")
     }),
 
-    // q126: DISTRIBUTED BPE TOKENIZER TRAINING (round 14) — 8 greedy
-    // merge steps over the documents table's word-frequency state.
-    // Every pair frequency is an exact integer sum and the winner's
-    // tie-break is a binary string order, so the DuckDB oracle
-    // recomputes the IDENTICAL merge table with an unrolled 8-step
-    // replace walk (single-char symbols make "apply a merge" a
-    // literal SQL replace on both engines). Corpus text is scanned
-    // once; each step is one hash aggregation over the vocabulary
-    // (BpeTrainerSuite's probe pins per-step cost flat under a 12x
-    // corpus blow-up).
+    // q126: BPE TOKENIZER TRAINING (round 14) — 8 greedy merge steps
+    // over the documents table's word-frequency state. Every pair
+    // frequency is an exact integer sum and the winner's tie-break is
+    // a binary string order, so the DuckDB oracle recomputes the
+    // IDENTICAL merge table with an unrolled 8-step replace walk
+    // (single-char symbols make "apply a merge" a literal SQL replace
+    // on both engines). Corpus text is scanned once, distributed, into
+    // the vocabulary table; the merge loop runs on the driver over
+    // that collected table with incremental pair counts, so the job
+    // count does not grow with the steps (BpeTrainerSuite pins it).
     "q126_bpe" -> ((s, dir) =>
       graft.operators.BpeTrainer.trainDF(s, t(s, dir, "documents"), steps = 8)
         .orderBy("step")),

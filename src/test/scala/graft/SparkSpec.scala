@@ -18,4 +18,38 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   lazy val sfDir: String = TestSession.sfDir
+
+  /** `body`'s result and the number of Spark jobs it submits from
+    * this thread, counted through a local property every job
+    * inherits. Listener events arrive asynchronously but in order, so
+    * one marker job after `body` flushes every earlier job start to
+    * the listener.
+    */
+  def jobsSubmitted[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobTag"
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case `tag` => jobs.incrementAndGet()
+          case t if t == s"$tag-marker" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = body
+      sc.setLocalProperty(key, s"$tag-marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      (out, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -130,6 +130,38 @@ class BpeTrainerSuite extends SparkSpec {
     assert(got.find(_.getLong(0) == 1L).get.getLong(2) == 6L)
   }
 
+  test("seeded Zipf vocabulary: 200+ incremental merges equal the reference loop") {
+    // count ties (many words share a frequency), overlapping-pair words
+    // (aaaa, abab, aaa) and long chains: the incremental pair-count
+    // update must reproduce the full-recount reference exactly
+    val rng = new scala.util.Random(126)
+    val letters = "abcdefgh"
+    val vocab = (Seq("aaaa", "abab", "aaa", "abababab", "baaab", "aabaa") ++
+      (0 until 300).map(_ => Seq.fill(2 + rng.nextInt(9))(letters(rng.nextInt(8))).mkString))
+      .distinct
+    val texts = vocab.zipWithIndex.map { case (w, r) =>
+      Seq.fill(math.max(1, 60 / (r + 1)))(w).mkString(" ") // Zipf, flat tail of 1s
+    }
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val got = BpeTrainer.train(spark, docs, steps = 260)
+    val want = referenceMerges(texts, steps = 260)
+    assert(want.size >= 200, s"vocabulary exhausted early: ${want.size} merges")
+    assert(got == want, s"\nfirst diff at ${got.zip(want).indexWhere { case (g, w) => g != w }}")
+    assert(want.groupBy(_.freq).exists(_._2.size > 1), "no count ties exercised")
+  }
+
+  test("training submits the same Spark jobs for 4 steps as for 40") {
+    val docs = Seq(
+      (1L, "the lower lowest low low lowering newer newest"),
+      (2L, "new news the the the abab aaaa banana bandana"))
+      .toDF("doc_id", "text")
+    def jobsFor(steps: Int): Int = jobsSubmitted(BpeTrainer.train(spark, docs, steps))._2
+    jobsFor(4) // warm-up
+    val (j4, j40) = (jobsFor(4), jobsFor(40))
+    assert(j4 > 0 && j4 == j40, s"jobs: steps=4 -> $j4, steps=40 -> $j40")
+  }
+
   test("per-step cost tracks VOCABULARY, not corpus size (no corpus rescan)") {
     // duplicate the same text 1x vs 12x: identical vocabulary, 12x the
     // corpus. After prep, per-step time must stay in the same band —

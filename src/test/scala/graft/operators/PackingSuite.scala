@@ -57,4 +57,21 @@ class PackingSuite extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty,
       "sequencePack leaked a persisted intermediate into the cache manager")
   }
+
+  test("no RDD persist leaks: only the returned checkpoint stays persisted; bounded jobs") {
+    // the one-pass cache is an RDD persist, which the cacheManager
+    // check above cannot see
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (out, jobs) = jobsSubmitted(Packing.sequencePack(docs, seqLen = 1024, numPartitions = 3))
+    val held = sc.getPersistentRDDs.keySet -- before
+    val returned = out.queryExecution.logical.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+    assert(returned.size == 1 && held == returned,
+      s"persisted RDDs left behind: $held, returned checkpoint: $returned")
+    // range sampling + range shuffle + partition sums + checkpoint
+    assert(jobs <= 4, s"sequencePack submitted $jobs jobs")
+    Dedup.releaseCheckpoint(out)
+  }
 }

@@ -50,6 +50,37 @@ class PipelineSuite extends SparkSpec {
     assert(piv.columns.contains("bob"))
   }
 
+  test("YAML minhash dedup step: same rows as the operator chain, input not left persisted") {
+    val docs = s"$sfDir/documents.parquet"
+    val spec = YamlLoader.load(
+      s"""pipeline_name: dd
+         |sources: [{name: documents, type: file, format: parquet, path: "$docs"}]
+         |steps: [{type: dedup, params: {method: minhash, threshold: 0.8}}]
+         |""".stripMargin)
+    val input = spark.read.parquet(docs).where(col("doc_id") % 3 =!= 1)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = Pipeline(spark, spec).applyStep(input, spec.steps.head)
+    assert(input.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "dedup step left its input persisted")
+    val returned = out.queryExecution.logical.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+    assert(sc.getPersistentRDDs.keySet -- before == returned,
+      "dedup step left persisted RDDs behind beyond its checkpoint")
+    // the unpersisted operator chain the step composes
+    val pairs = graft.operators.Dedup.minhashLsh(input, threshold = 0.8)
+    val groups = graft.operators.Dedup.nearDupGroups(pairs)
+    val expected = input.join(
+      groups.where(col("doc_id") =!= col("group_id")).select(col("doc_id")),
+      Seq("doc_id"), "left_anti")
+    assert(out.columns.toSeq == expected.columns.toSeq)
+    val got = out.orderBy("doc_id").collect().toSeq
+    assert(got == expected.orderBy("doc_id").collect().toSeq)
+    assert(got.size < input.count(), "no near-duplicate removed: the check is vacuous")
+    graft.operators.Dedup.releaseCheckpoint(out, groups, pairs)
+  }
+
   test("partitioned sink: read with a partition predicate prunes partitions") {
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/orders_by_year"
     val orders = graft.Tables.load(spark, sfDir, "orders")

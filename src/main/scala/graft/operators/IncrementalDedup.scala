@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.pipeline.VersionedTable
+import graft.pipeline.{Txn, VersionedTable}
 
 /** Incremental corpus deduplication against a PERSISTED signature
   * store — the workflow a 100 TB training-data pipeline actually runs:
@@ -68,13 +68,6 @@ object IncrementalDedup {
   final case class SigParams(numHashes: Int = 128, shingleK: Int = 5, seed: Long = 42L)
 
   private val ParamsFile = "_sig_params"
-
-  /** Conflict-retry cap for the optimistic commit loop. Every retry
-    * means another writer made progress (the version strictly
-    * advances), so hitting this indicates pathological contention, not
-    * livelock.
-    */
-  private val MaxCommitAttempts = 10
 
   private def fsFor(spark: SparkSession, root: String): (FileSystem, Path) = {
     val p = new Path(root)
@@ -366,7 +359,7 @@ object IncrementalDedup {
             committed = true
           } catch {
             case c: VersionedTable.VersionConflictException =>
-              if (attempts >= MaxCommitAttempts) throw new IllegalStateException(
+              if (attempts >= Txn.MaxAttempts) throw new IllegalStateException(
                 s"incremental dedup at $root lost the commit race $attempts times — " +
                   "writer contention is pathological; retry with backoff", c)
               // Re-check survivors against ONLY the span the winner(s)
@@ -593,7 +586,7 @@ object IncrementalDedup {
             committed = true
           } catch {
             case c: VersionedTable.VersionConflictException =>
-              if (attempts >= MaxCommitAttempts) throw new IllegalStateException(
+              if (attempts >= Txn.MaxAttempts) throw new IllegalStateException(
                 s"incremental exact dedup at $root lost the commit race $attempts " +
                   "times — writer contention is pathological; retry with backoff", c)
               val winnerFps = VersionedTable.changesBetween(spark, root, curVersion, c.actual)

@@ -282,8 +282,7 @@ object MaterializedAgg {
     */
   def refresh(spark: SparkSession, srcRoot: String, aggRoot: String,
               groupBy: Seq[String], aggs: Seq[MAgg],
-              srcFormat: String = "parquet", aggFormat: String = "parquet",
-              maxAttempts: Int = 5): Long = {
+              srcFormat: String = "parquet", aggFormat: String = "parquet"): Long = {
     require(groupBy.nonEmpty, "refresh needs at least one group column")
     require(aggs.nonEmpty, "refresh needs at least one aggregate")
     // A BRANCH-addressed rollup root is refused loudly: the rollup is
@@ -325,7 +324,7 @@ object MaterializedAgg {
         return refreshOnce(spark, srcRoot, aggRoot, groupBy, aggs, srcFormat, aggFormat)
       } catch {
         case e: VersionedTable.VersionConflictException =>
-          if (attempt >= maxAttempts) throw e // pathological contention
+          if (attempt >= Txn.MaxAttempts) throw e // pathological contention
       }
     }
     throw new IllegalStateException("unreachable")
@@ -342,7 +341,7 @@ object MaterializedAgg {
     * Returns the source version the rollup now reflects. SQL surface:
     * `GRAFT_REFRESH('/aggRoot', FULL)`.
     */
-  def rebuild(spark: SparkSession, aggRoot: String, maxAttempts: Int = 5): Long = {
+  def rebuild(spark: SparkSession, aggRoot: String): Long = {
     val d = viewDef(spark, aggRoot).getOrElse(throw new IllegalArgumentException(
       s"no materialized-view definition at $aggRoot — nothing to rebuild; run " +
         "refresh(spark, srcRoot, aggRoot, groupBy, aggs) once to define it"))
@@ -359,7 +358,7 @@ object MaterializedAgg {
       try return commit(spark, aggRoot, full, srcHead, d.aggFormat, aggSnap.map(_.version))
       catch {
         case e: VersionedTable.VersionConflictException =>
-          if (attempt >= maxAttempts) throw e // pathological contention
+          if (attempt >= Txn.MaxAttempts) throw e // pathological contention
       }
     }
     throw new IllegalStateException("unreachable")

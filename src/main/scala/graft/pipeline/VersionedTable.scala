@@ -905,14 +905,11 @@ object VersionedTable {
       format: String,
       merge: Option[DataFrame] => DataFrame,
       partitionBy: Seq[String] = Nil,
-      maxAttempts: Int = 5,
       expectedVersion: Option[Long] = None,
       commitKind: String = "rewrite"): Long = {
     val (fs, rootP) = fsFor(spark, root)
     fs.mkdirs(mdirOf(rootP, root))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    Txn.run(fs, s"versioned commit at $root") { _ =>
       val snap = currentSnapshot(spark, root)
       // Optimistic-concurrency guard (same contract as commitDelta's):
       // a caller whose merged result was DERIVED from a specific base
@@ -932,19 +929,24 @@ object VersionedTable {
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
         .save(dataDir.toString)
       FileStats.writeSidecar(spark, fs, dataDir, format)
-      if (casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
-          dirName + s"\n#kind=$commitKind" + layoutLine(partitionBy))) {
-        recordFormat(fs, rootP, format) // only a PUBLISHED format is recorded
-        return next
-      }
-      // lost the race: discard the private directory (vacuum would also
-      // sweep it) and re-merge against the winner's snapshot
-      fs.delete(dataDir, true)
+      // a lost race discards the private directory and re-merges
+      // against the winner's snapshot
+      publishStep(fs, rootP, root, next,
+        dirName + s"\n#kind=$commitKind" + layoutLine(partitionBy), format, Seq(dataDir))
     }
-    throw new IllegalStateException(
-      s"versioned commit at $root lost the publish race $maxAttempts times — " +
-        "writer contention is pathological; retry with backoff or shard the table")
   }
+
+  /** One manifest attempt's publish step: `content` lands as pointer
+    * `v<version>` through [[casPublish]], and a win records `format`
+    * (only a PUBLISHED format is recorded). `staged` are the data dirs
+    * this attempt wrote.
+    */
+  private def publishStep(fs: FileSystem, rootP: Path, root: String, version: Long,
+                          content: String, format: String,
+                          staged: Seq[Path] = Nil): Txn.Publish =
+    Txn.Publish(version,
+      () => casPublish(fs, new Path(mdirOf(rootP, root), f"v$version%010d"), content),
+      () => recordFormat(fs, rootP, format), staged)
 
   /** Append-only commit: write ONLY the delta rows to a private
     * directory and publish a pointer listing the base's directories
@@ -963,7 +965,6 @@ object VersionedTable {
       format: String,
       delta: DataFrame,
       partitionBy: Seq[String] = Nil,
-      maxAttempts: Int = 5,
       compactAfter: Int = 16,
       expectedVersion: Option[Long] = None,
       tag: Option[String] = None): Long = {
@@ -986,35 +987,28 @@ object VersionedTable {
     (if (partitionBy.nonEmpty) wd.partitionBy(partitionBy: _*) else wd)
       .save(new Path(rootP, deltaName).toString)
     FileStats.writeSidecar(spark, fs, new Path(rootP, deltaName), format)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    // the delta dir is the call's own: a race loss reuses it unchanged,
+    // and the driver deletes it only if the call ends without a win
+    Txn.run(fs, s"versioned append at $root",
+        staged = Seq(new Path(rootP, deltaName))) { _ =>
       val snap = currentSnapshot(spark, root)
       // expectedVersion re-check inside the loop: a writer that lands
       // between the early exit above and this read makes our delta
-      // stale — discard the written dir and surface the conflict (the
-      // CAS alone would silently append a delta derived from the wrong
-      // base)
+      // stale — surface the conflict (the CAS alone would silently
+      // append a delta derived from the wrong base)
       expectedVersion.foreach { exp =>
         val cur = snap.map(_.version).getOrElse(0L)
-        if (cur != exp) {
-          fs.delete(new Path(rootP, deltaName), true)
-          throw VersionConflictException(root, exp, cur)
-        }
+        if (cur != exp) throw VersionConflictException(root, exp, cur)
       }
       val next = snap.map(_.version + 1).getOrElse(1L)
       val baseDirs = snap.map(_.dataDirs).getOrElse(Nil)
-      val manifest = new Path(mdirOf(rootP, root), f"v$next%010d")
       val tagLine = tag.map(t => s"\n#tag=$t").getOrElse("")
       if (baseDirs.length + 1 <= compactAfter) {
-        if (casPublish(fs, manifest,
-            ((baseDirs :+ deltaName) :+ "#kind=append").mkString("\n") +
-              layoutLine(partitionBy) + tagLine)) {
-          recordFormat(fs, rootP, format)
-          return next
-        }
         // pointer-only race loss: the delta directory is still private
         // and valid — just recompute the dir list against the winner
+        publishStep(fs, rootP, root, next,
+          ((baseDirs :+ deltaName) :+ "#kind=append").mkString("\n") +
+            layoutLine(partitionBy) + tagLine, format)
       } else {
         val compactName = f"data-$next%010d-" + java.util.UUID.randomUUID.toString.take(8)
         val all = load(spark, rootP, format, baseDirs :+ deltaName)
@@ -1026,25 +1020,17 @@ object VersionedTable {
         // repackages the whole table — record WHICH dir carries the
         // new rows so delta-maintenance readers (MaterializedAgg,
         // diffVersions) survive the bounded auto-compaction instead of
-        // treating it as an opaque rewrite
-        if (casPublish(fs, manifest,
-            compactName + s"\n#kind=fold:$deltaName" + layoutLine(partitionBy) + tagLine)) {
-          // the delta's rows now live in the compacted dir; the delta
-          // dir is unreferenced and left for vacuum's grace period to
-          // sweep — deleting it HERE would yank the freshest rows out
-          // from under a readStream consumer mid-listing (streams read
-          // delta dirs, never compacted dirs; the vacuum grace is their
-          // retention window)
-          recordFormat(fs, rootP, format)
-          return next
-        }
-        fs.delete(new Path(rootP, compactName), true)
+        // treating it as an opaque rewrite. On a win the delta's rows
+        // live in the compacted dir; the delta dir is unreferenced and
+        // left for vacuum's grace period to sweep — deleting it HERE
+        // would yank the freshest rows out from under a readStream
+        // consumer mid-listing (streams read delta dirs, never
+        // compacted dirs; the vacuum grace is their retention window)
+        publishStep(fs, rootP, root, next,
+          compactName + s"\n#kind=fold:$deltaName" + layoutLine(partitionBy) + tagLine,
+          format, Seq(new Path(rootP, compactName)))
       }
     }
-    fs.delete(new Path(rootP, deltaName), true)
-    throw new IllegalStateException(
-      s"versioned append at $root lost the publish race $maxAttempts times — " +
-        "writer contention is pathological; retry with backoff or shard the table")
   }
 
   /** FILE-PRUNED keyed merge — the commit that keeps MERGE O(touched
@@ -1092,7 +1078,6 @@ object VersionedTable {
       keys: Seq[String],
       merge: (DataFrame, DataFrame) => DataFrame = null,
       partitionBy: Seq[String] = Nil,
-      maxAttempts: Int = 5,
       maxCollectedKeys: Int = 4000000): Long = {
     require(keys.nonEmpty, "commitMerge needs at least one key column")
     val mergeFn: (DataFrame, DataFrame) => DataFrame =
@@ -1122,23 +1107,20 @@ object VersionedTable {
         st => FileStats.rangeOverlaps(st, lo, hi)
       }
 
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = currentSnapshot(spark, root)
-      snap match {
+    Txn.run(fs, s"versioned merge at $root") { _ =>
+      currentSnapshot(spark, root) match {
         case None =>
           // empty table: the merge IS the source — a plain first commit
-          return commit(spark, root, format, _ => source,
-            partitionBy = partitionBy, commitKind = "merge")
+          Txn.Done(commit(spark, root, format, _ => source,
+            partitionBy = partitionBy, commitKind = "merge"))
         case Some(s) =>
           classifyEntries(spark, fs, rootP, s.dataDirs, keyCol, pruner) match {
             case None =>
               // hive layout (or a non-parquet table): no file-level
               // carry-over — full rewrite preserves semantics
-              return commit(spark, root, format,
+              Txn.Done(commit(spark, root, format,
                 base => mergeFn(base.getOrElse(source.limit(0)), source),
-                partitionBy = partitionBy, commitKind = "merge")
+                partitionBy = partitionBy, commitKind = "merge"))
             case Some((untouchedEntries, touchedFiles)) =>
               val next = s.version + 1
               val dirName = f"data-$next%010d-" + java.util.UUID.randomUUID.toString.take(8)
@@ -1158,18 +1140,11 @@ object VersionedTable {
               FileStats.writeSidecar(spark, fs, dataDir, format)
               val pointer = ((untouchedEntries :+ dirName) :+ "#kind=merge") :+
                 layoutLine(partitionBy).stripPrefix("\n")
-              if (casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
-                  pointer.mkString("\n"))) {
-                recordFormat(fs, rootP, format)
-                return next
-              }
-              fs.delete(dataDir, true) // lost the race: re-derive
+              // lost the race: the staged dir goes, re-derive
+              publishStep(fs, rootP, root, next, pointer.mkString("\n"), format, Seq(dataDir))
           }
       }
     }
-    throw new IllegalStateException(
-      s"versioned merge at $root lost the publish race $maxAttempts times — " +
-        "writer contention is pathological; retry with backoff or shard the table")
   }
 
   /** PARTITION-PRUNED dynamic partition overwrite — the commit that
@@ -1206,8 +1181,7 @@ object VersionedTable {
       root: String,
       format: String,
       source: DataFrame,
-      partitionBy: Seq[String],
-      maxAttempts: Int = 5): Long = {
+      partitionBy: Seq[String]): Long = {
     require(partitionBy.nonEmpty, "commitPartitionOverwrite needs partition columns")
     val (fs, rootP) = fsFor(spark, root)
     fs.mkdirs(mdirOf(rootP, root))
@@ -1253,49 +1227,30 @@ object VersionedTable {
     // every other commit path writes one (commit/commitDelta/compact/
     // commitMerge/commitOverwriteWhere)
     FileStats.writeSidecar(spark, fs, dataDir, format)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      currentSnapshot(spark, root) match {
+    // pointer-only race losses reuse the written dir (it is still
+    // private and valid) and re-classify against the winner's snapshot
+    Txn.run(fs, s"versioned partition overwrite at $root", staged = Seq(dataDir)) { _ =>
+      val snap = currentSnapshot(spark, root)
+      // empty table: the written dir IS the first version
+      snap.fold(Option(Seq.empty[String]))(s =>
+          classifyPartitionEntries(fs, rootP, s.dataDirs, partitionBy, touched)) match {
         case None =>
-          // empty table: the written dir IS the first version
-          val pointer = (Seq(dirName) :+ "#kind=merge") :+
+          // not partition-classifiable: sound full-rewrite fallback (the
+          // driver deletes the unused dir)
+          Txn.Done(commit(spark, root, format, {
+            case None => source
+            case Some(b) =>
+              val parts = source.select(partitionBy.map(col): _*).distinct()
+              b.join(parts, partitionBy, "left_anti")
+                .unionByName(source, allowMissingColumns = true)
+          }, partitionBy = partitionBy, commitKind = "merge"))
+        case Some(carried) =>
+          val pointer = ((carried :+ dirName) :+ "#kind=merge") :+
             layoutLine(partitionBy).stripPrefix("\n")
-          if (casPublish(fs, new Path(mdirOf(rootP, root), "v0000000001"),
-              pointer.mkString("\n"))) {
-            recordFormat(fs, rootP, format)
-            return 1L
-          }
-        case Some(s) =>
-          classifyPartitionEntries(fs, rootP, s.dataDirs, partitionBy, touched) match {
-            case None =>
-              // not partition-classifiable: sound full-rewrite fallback
-              fs.delete(dataDir, true)
-              return commit(spark, root, format, {
-                case None => source
-                case Some(b) =>
-                  val parts = source.select(partitionBy.map(col): _*).distinct()
-                  b.join(parts, partitionBy, "left_anti")
-                    .unionByName(source, allowMissingColumns = true)
-              }, partitionBy = partitionBy, commitKind = "merge")
-            case Some(carried) =>
-              val next = s.version + 1
-              val pointer = ((carried :+ dirName) :+ "#kind=merge") :+
-                layoutLine(partitionBy).stripPrefix("\n")
-              if (casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
-                  pointer.mkString("\n"))) {
-                recordFormat(fs, rootP, format)
-                return next
-              }
-            // pointer-only race loss: the written dir is still private
-            // and valid — re-classify against the winner's snapshot
-          }
+          publishStep(fs, rootP, root, snap.fold(1L)(_.version + 1),
+            pointer.mkString("\n"), format)
       }
     }
-    fs.delete(dataDir, true)
-    throw new IllegalStateException(
-      s"versioned partition overwrite at $root lost the publish race $maxAttempts " +
-        "times — writer contention is pathological; retry with backoff or shard the table")
   }
 
   /** Split a snapshot's entries for a partition overwrite: Some(the
@@ -1310,29 +1265,26 @@ object VersionedTable {
       fs: FileSystem, rootP: Path, entries: Seq[String],
       partitionBy: Seq[String], touched: Set[Seq[String]])
       : Option[Seq[String]] = {
-    val carried = Seq.newBuilder[String]
-    for (entry <- entries) {
+    // per entry: Some(what it carries over), None = unclassifiable
+    val kept: Seq[Option[Seq[String]]] = entries.iterator.map { entry =>
       if (isPartitionRef(entry)) {
         val segs = entry.split('/')
         val names = segs.drop(1).map(_.takeWhile(_ != '='))
-        if (!names.sameElements(partitionBy)) return None
-        val vals = segs.drop(1).zip(partitionBy).map { case (seg, c) =>
-          unescapePartitionValue(seg.substring(c.length + 1))
+        if (!names.sameElements(partitionBy)) None
+        else {
+          val vals = segs.drop(1).zip(partitionBy).map { case (seg, c) =>
+            unescapePartitionValue(seg.substring(c.length + 1))
+          }
+          Some(if (touched.contains(vals.toSeq)) Nil else Seq(entry))
         }
-        if (!touched.contains(vals.toSeq)) carried += entry
-      } else if (isFileRef(entry)) {
-        return None // flat file ref: its rows' partitions are unknown
-      } else {
-        partitionLeaves(fs, new Path(rootP, entry), partitionBy) match {
-          case None => return None
-          case Some(leaves) =>
-            val (t, u) = leaves.partition { case (_, vals) => touched.contains(vals) }
-            if (t.isEmpty) carried += entry // whole dir survives as-is
-            else carried ++= u.map { case (rel, _) => s"$entry/$rel" }
-        }
+      } else if (isFileRef(entry)) None // flat file ref: its rows' partitions are unknown
+      else partitionLeaves(fs, new Path(rootP, entry), partitionBy).map { leaves =>
+        val (t, u) = leaves.partition { case (_, vals) => touched.contains(vals) }
+        if (t.isEmpty) Seq(entry) // whole dir survives as-is
+        else u.map { case (rel, _) => s"$entry/$rel" }
       }
-    }
-    Some(carried.result())
+    }.takeWhile(_.isDefined).toSeq
+    if (kept.length < entries.length) None else Some(kept.flatMap(_.get))
   }
 
   /** Leaf partition subtrees of a hive-partitioned data dir, as
@@ -1402,7 +1354,6 @@ object VersionedTable {
       source: DataFrame,
       cond: String,
       transform: DataFrame => DataFrame = identity,
-      maxAttempts: Int = 5,
       partitionBy: Seq[String] = Nil,
       // replaceWhere guards its region by re-filtering the source with
       // `cond`; an UPDATE's replacement rows may no longer SATISFY the
@@ -1453,23 +1404,21 @@ object VersionedTable {
         })
       case None => true
     }
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    Txn.run(fs, s"versioned overwrite-where at $root") { _ =>
       currentSnapshot(spark, root) match {
         case None =>
           // legacy Writer contract on an empty table: the source lands
           // whole (no base rows to preserve, nothing to filter)
-          return commit(spark, root, format, _ => transform(source),
-            partitionBy = layout, commitKind = "merge")
+          Txn.Done(commit(spark, root, format, _ => transform(source),
+            partitionBy = layout, commitKind = "merge"))
         case Some(s) =>
           classifyEntriesBy(fs, rootP, s.dataDirs, touchesFile) match {
             case None =>
-              return commit(spark, root, format,
+              Txn.Done(commit(spark, root, format,
                 base => transform(base.map(_.where(s"($cond) IS NOT TRUE")
                     .unionByName(sourceInRegion, allowMissingColumns = true))
                   .getOrElse(source)),
-                partitionBy = layout, commitKind = "merge")
+                partitionBy = layout, commitKind = "merge"))
             case Some((untouchedEntries, touchedFiles)) =>
               val next = s.version + 1
               val dirName = f"data-$next%010d-" + java.util.UUID.randomUUID.toString.take(8)
@@ -1510,18 +1459,11 @@ object VersionedTable {
                 }
               val pointer = (entriesOut :+ "#kind=merge") :+
                 layoutLine(layout).stripPrefix("\n")
-              if (casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
-                  pointer.mkString("\n"))) {
-                recordFormat(fs, rootP, format)
-                return next
-              }
-              fs.delete(dataDir, true) // lost the race: re-classify
+              // lost the race: the staged dir goes, re-classify
+              publishStep(fs, rootP, root, next, pointer.mkString("\n"), format, Seq(dataDir))
           }
       }
     }
-    throw new IllegalStateException(
-      s"versioned overwrite-where at $root lost the publish race $maxAttempts " +
-        "times — writer contention is pathological; retry with backoff or shard the table")
   }
 
   /** STATS-PRUNED row-level DELETE — `commitOverwriteWhere` with an
@@ -1537,14 +1479,13 @@ object VersionedTable {
       spark: SparkSession,
       root: String,
       cond: String,
-      format: String = "",
-      maxAttempts: Int = 5): Long = {
+      format: String = ""): Long = {
     val fmt = resolveFormat(spark, root, format)
     val empty = read(spark, root, fmt).limit(0)
     // a hive-partitioned table takes the full-rewrite fallback inside
     // commitOverwriteWhere — detect its partition columns so the
     // rewrite keeps the layout instead of silently flattening it
-    commitOverwriteWhere(spark, root, fmt, empty, cond, maxAttempts = maxAttempts,
+    commitOverwriteWhere(spark, root, fmt, empty, cond,
       partitionBy = detectPartitionColumns(spark, root))
   }
 
@@ -1563,8 +1504,7 @@ object VersionedTable {
       root: String,
       cond: String,
       assignments: Map[String, String],
-      format: String = "",
-      maxAttempts: Int = 5): Long = {
+      format: String = ""): Long = {
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
     val fmt = resolveFormat(spark, root, format)
     val cur = read(spark, root, fmt)
@@ -1582,7 +1522,7 @@ object VersionedTable {
     // filterSource = false: the updated rows may no longer satisfy the
     // WHERE they matched (SET touching a WHERE column) — re-filtering
     // them would silently DELETE instead of update
-    commitOverwriteWhere(spark, root, fmt, updated, cond, maxAttempts = maxAttempts,
+    commitOverwriteWhere(spark, root, fmt, updated, cond,
       partitionBy = detectPartitionColumns(spark, root), filterSource = false)
   }
 
@@ -1595,7 +1535,9 @@ object VersionedTable {
     */
   private def detectPartitionColumns(spark: SparkSession, root: String): Seq[String] = {
     val (fs, rootP) = fsFor(spark, root)
-    val snap = currentSnapshot(spark, root).getOrElse(return Nil)
+    val current = currentSnapshot(spark, root)
+    if (current.isEmpty) return Nil
+    val snap = current.get
     val pointer = new Path(mdirOf(rootP, root), f"v${snap.version}%010d")
     readSmall(fs, pointer).flatMap(parseLayout) match {
       case Some(cols) => return cols
@@ -2163,16 +2105,15 @@ object VersionedTable {
     * (returns the current version) when the table is already at the
     * target's entry set.
     */
-  def restore(spark: SparkSession, root: String, toVersion: Long,
-              maxAttempts: Int = 5): Long =
-    restoreHooked(spark, root, toVersion, maxAttempts, () => ())
+  def restore(spark: SparkSession, root: String, toVersion: Long): Long =
+    restoreHooked(spark, root, toVersion, () => ())
 
   /** [[restore]] with a test seam: `afterValidate` runs between the
     * target-dirs liveness check and the pointer CAS, so a test can
     * interleave a racing vacuum deterministically.
     */
   private[graft] def restoreHooked(spark: SparkSession, root: String, toVersion: Long,
-                                   maxAttempts: Int, afterValidate: () => Unit): Long = {
+                                   afterValidate: () => Unit): Long = {
     val (fs, rootP) = fsFor(spark, root)
     val targetPath = new Path(mdirOf(rootP, root), f"v$toVersion%010d")
     val content = readSmall(fs, targetPath).getOrElse(throw new IllegalArgumentException(
@@ -2190,72 +2131,70 @@ object VersionedTable {
       s"cannot restore $root to v$toVersion: data dirs ${gone.mkString(", ")} were " +
         "already vacuumed — restore only reaches versions within the vacuum retention")
     afterValidate()
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    Txn.run(fs, s"restore of $root to v$toVersion") { _ =>
       val snap = currentSnapshot(spark, root).getOrElse(throw new IllegalArgumentException(
         s"versioned table at $root has no committed version"))
-      if (snap.dataDirs == targetDirs) return snap.version // already there: no churn
-      val next = snap.version + 1
-      if (casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
-          (targetDirs :+ s"#kind=restore").mkString("\n") + targetLayoutPart)) {
-        // TOCTOU re-check: a vacuum that computed its referenced set
-        // BEFORE this pointer landed can have swept the target's dirs
-        // between validation and publish (they were outside its keep
-        // window and too old for the grace period). This NARROWS the
-        // race to the sub-second span between this re-check and an
-        // in-flight sweep's final deletions — vacuum's own pre-sweep
-        // re-listing (see vacuum) covers that side; full closure
-        // would need a coordination primitive the protocol
-        // deliberately omits (Delta documents the same RESTORE/VACUUM
-        // hazard). On detection, roll the table FORWARD to the
-        // pre-restore snapshot (its dirs are the newest-kept set,
-        // alive by vacuum's own retention) and refuse loudly.
-        val swept = missingDirs(spark, root, targetTops)
-        if (swept.isEmpty) {
-          syncIfLinked(spark, root)
-          return next
-        }
-        val preLayoutPart = currentLayoutOf(fs, mdirOf(rootP, root), snap.version).map(layoutLine).getOrElse("")
-        // The heal must actually LAND: loop its CAS against the moving
-        // head. A concurrent commit built on the dangling restore head
-        // is poisoned regardless (its pointer copied the swept
-        // entries) — rolling forward to the pre-restore snapshot is
-        // the best consistent state available; the thrown message
-        // reports honestly which outcome happened.
-        var healed = false
-        var healTry = 0
-        while (!healed && healTry < maxAttempts) {
-          healTry += 1
-          val cur = currentSnapshot(spark, root)
-          cur match {
-            case Some(c) if c.dataDirs == snap.dataDirs => healed = true
-            case Some(c) =>
-              healed = casPublish(fs,
-                new Path(mdirOf(rootP, root), f"v${c.version + 1}%010d"),
-                (snap.dataDirs :+ s"#kind=restore").mkString("\n") + preLayoutPart)
-            case None => healTry = maxAttempts
-          }
-        }
-        syncIfLinked(spark, root)
-        throw new IllegalStateException(
-          s"restore of $root to v$toVersion raced a vacuum: data dirs " +
-            s"${swept.mkString(", ")} were swept after validation — " +
-            (if (healed)
-              "the table was rolled forward to its pre-restore snapshot. "
-            else
-              s"AND the roll-forward heal lost its publish race to concurrent " +
-                s"writers, so the current head may still reference swept dirs; " +
-                s"run VersionedTable.restore(root, ${snap.version}) to roll " +
-                "forward manually. ") +
-            "Raise the vacuum keep window to cover restore targets, or run " +
-            "restore and vacuum from one maintenance process")
+      if (snap.dataDirs == targetDirs) Txn.Done(snap.version) // already there: no churn
+      else {
+        val next = snap.version + 1
+        // a pointer-only race loss re-reads the winner and retries
+        Txn.Publish(next,
+          () => casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
+            (targetDirs :+ s"#kind=restore").mkString("\n") + targetLayoutPart),
+          after = () => {
+            // TOCTOU re-check: a vacuum that computed its referenced set
+            // BEFORE this pointer landed can have swept the target's dirs
+            // between validation and publish (they were outside its keep
+            // window and too old for the grace period). This NARROWS the
+            // race to the sub-second span between this re-check and an
+            // in-flight sweep's final deletions — vacuum's own pre-sweep
+            // re-listing (see vacuum) covers that side; full closure
+            // would need a coordination primitive the protocol
+            // deliberately omits (Delta documents the same RESTORE/VACUUM
+            // hazard). On detection, roll the table FORWARD to the
+            // pre-restore snapshot (its dirs are the newest-kept set,
+            // alive by vacuum's own retention) and refuse loudly.
+            val swept = missingDirs(spark, root, targetTops)
+            if (swept.nonEmpty) {
+              val preLayoutPart = currentLayoutOf(fs, mdirOf(rootP, root), snap.version).map(layoutLine).getOrElse("")
+              // The heal must actually LAND: loop its CAS against the moving
+              // head. A concurrent commit built on the dangling restore head
+              // is poisoned regardless (its pointer copied the swept
+              // entries) — rolling forward to the pre-restore snapshot is
+              // the best consistent state available; the thrown message
+              // reports honestly which outcome happened.
+              var healed = false
+              var healTry = 0
+              while (!healed && healTry < Txn.MaxAttempts) {
+                healTry += 1
+                val cur = currentSnapshot(spark, root)
+                cur match {
+                  case Some(c) if c.dataDirs == snap.dataDirs => healed = true
+                  case Some(c) =>
+                    healed = casPublish(fs,
+                      new Path(mdirOf(rootP, root), f"v${c.version + 1}%010d"),
+                      (snap.dataDirs :+ s"#kind=restore").mkString("\n") + preLayoutPart)
+                  case None => healTry = Txn.MaxAttempts
+                }
+            }
+            syncIfLinked(spark, root)
+            throw new IllegalStateException(
+              s"restore of $root to v$toVersion raced a vacuum: data dirs " +
+                s"${swept.mkString(", ")} were swept after validation — " +
+                (if (healed)
+                  "the table was rolled forward to its pre-restore snapshot. "
+                else
+                  s"AND the roll-forward heal lost its publish race to concurrent " +
+                    s"writers, so the current head may still reference swept dirs; " +
+                    s"run VersionedTable.restore(root, ${snap.version}) to roll " +
+                    "forward manually. ") +
+                "Raise the vacuum keep window to cover restore targets, or run " +
+                "restore and vacuum from one maintenance process")
+            }
+            syncIfLinked(spark, root)
+          })
       }
-      // pointer-only race loss: re-read the winner and retry
     }
-    throw new IllegalStateException(
-      s"restore of $root to v$toVersion lost the publish race $maxAttempts times — " +
-        "writer contention is pathological; retry with backoff")
   }
 
   /** The `#layout=` marker of `version`'s manifest, if readable. */
@@ -2376,7 +2315,7 @@ object VersionedTable {
     * last-writer-wins).
     */
   def publishBranch(spark: SparkSession, root: String, name: String,
-                    maxAttempts: Int = 5, force: Boolean = false): Long = {
+                    force: Boolean = false): Long = {
     require(branchOf(root).isEmpty, s"publish targets the main root, got: $root")
     val bRoot = branchRoot(root, name)
     val (fs, rootP) = fsFor(spark, root)
@@ -2385,32 +2324,28 @@ object VersionedTable {
     val fork: Option[Long] = latestFork(fs, mdirOf(rootP, bRoot))
     val layoutPart = currentLayoutOf(fs, mdirOf(rootP, bRoot), bSnap.version)
       .map(layoutLine).getOrElse("")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
+    // a pointer race lost to a concurrent main writer re-reads and retries
+    Txn.run(fs, s"publish of branch '$name' at $root") { _ =>
       val main = currentSnapshot(spark, root)
-      if (main.exists(_.dataDirs == bSnap.dataDirs)) return main.get.version
-      if (!force) fork.foreach { f =>
-        val head = main.map(_.version).getOrElse(0L)
-        if (head != f) throw new IllegalStateException(
-          s"publish of branch '$name' at $root refused: main advanced past the " +
-            s"fork point (forked at v$f, head is v$head) — publishing would " +
-            "silently revert commits the branch audit never saw. Re-audit against " +
-            "the CURRENT main (branchDiff / GRAFT_BRANCH_DIFF) and either " +
-            "re-branch, or publish with force=true (SQL: GRAFT_PUBLISH(path, " +
-            "name, FORCE)) to deliberately keep last-writer-wins")
+      if (main.exists(_.dataDirs == bSnap.dataDirs)) Txn.Done(main.get.version)
+      else {
+        if (!force) fork.foreach { f =>
+          val head = main.map(_.version).getOrElse(0L)
+          if (head != f) throw new IllegalStateException(
+            s"publish of branch '$name' at $root refused: main advanced past the " +
+              s"fork point (forked at v$f, head is v$head) — publishing would " +
+              "silently revert commits the branch audit never saw. Re-audit against " +
+              "the CURRENT main (branchDiff / GRAFT_BRANCH_DIFF) and either " +
+              "re-branch, or publish with force=true (SQL: GRAFT_PUBLISH(path, " +
+              "name, FORCE)) to deliberately keep last-writer-wins")
+        }
+        val next = main.map(_.version + 1).getOrElse(1L)
+        Txn.Publish(next,
+          () => casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
+            (bSnap.dataDirs :+ "#kind=rewrite").mkString("\n") + layoutPart),
+          after = () => syncIfLinked(spark, root))
       }
-      val next = main.map(_.version + 1).getOrElse(1L)
-      if (casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
-          (bSnap.dataDirs :+ "#kind=rewrite").mkString("\n") + layoutPart)) {
-        syncIfLinked(spark, root)
-        return next
-      }
-      // lost the pointer race to a concurrent main writer: re-read and retry
     }
-    throw new IllegalStateException(
-      s"publish of branch '$name' at $root lost the publish race $maxAttempts times — " +
-        "writer contention is pathological; retry with backoff")
   }
 
   /** REBASE branch `name` onto main's CURRENT head — the constructive

@@ -1586,8 +1586,10 @@ object DeltaRead {
     * here would ship a full Row object + the repeated file-path string
     * per matched row (~20× the bytes) and OOM the driver long before
     * the cap fired. The cap itself is BYTES of index payload
-    * ([[DeletionVectors.maxDeletedRows]] × 8 — checked BEFORE the
-    * collect, from a count-only aggregate).
+    * ([[DeletionVectors.maxDeletedRows]] × 8), checked on the collected
+    * index arrays — the collect itself is bounded by
+    * `spark.driver.maxResultSize`, so a pathological DELETE fails
+    * inside it rather than ahead of it.
     */
   private[sources] def matchedPhysicalRows(spark: SparkSession, path: String,
                                            snap: Snapshot,

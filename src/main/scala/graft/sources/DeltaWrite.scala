@@ -1,6 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.pipeline.Txn
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -170,69 +171,63 @@ object DeltaWrite {
              inlineMaxBytes: Int = 262144): Long = {
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
     var snap = DeltaRead.snapshot(spark, rootP.toString)
     // column-mapped tables work: the scan surfaces LOGICAL names (the
     // condition's namespace) and the commit re-serializes each file's
-    // partitionValues back under PHYSICAL keys (deleteContent)
+    // partitionValues back under PHYSICAL keys (addLive)
     requireWritable(snap, path, removesData = true, cdfHandled = true)
     val matched = DeltaRead.matchedPhysicalRows(spark, rootP.toString, snap, condition)
     if (matched.isEmpty) return snap.version
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
+    Txn.run(fs, s"DELETE at $path") { attempt =>
+      if (attempt > 1) {
+        snap = DeltaRead.snapshot(spark, rootP.toString)
+        // a table setting or protocol feature committed between attempts
+        // (delta.appendOnly, an unknown writer feature) must re-gate the
+        // retry — mirroring [[update]]'s per-attempt validation
+        requireWritable(snap, path, removesData = true, cdfHandled = true)
+      }
       val updates = dvUnionUpdates(spark, snap, fs, rootP, matched,
         inlineMaxBytes, "DELETE", path)
-      if (updates.isEmpty) return snap.version
-      // CHANGE DATA FEED: the deleted rows (live rows matching the
-      // predicate under THIS attempt's snapshot DVs — already-dead rows
-      // never re-appear as changes) land under _change_data/ per CAS
-      // attempt: a concurrent DV-only DELETE that won the race may have
-      // deleted an overlapping subset of the same files, and cdc rows
-      // staged against the stale snapshot would report those rows
-      // deleted twice to feed consumers. A lost race deletes the stale
-      // staged files below and re-derives, mirroring [[update]].
-      val cdcFiles: Seq[NewFile] =
-        if (!cdfEnabled(snap)) Nil
-        else {
-          val touched = matched.keySet
-          val tSnap = snap.copy(files = snap.files.filter(kv => touched.contains(kv._1)))
-          // rowTracking tables: the change rows carry their RETIRED ids
-          // ([[DeltaRead.CdcRowIdCol]]) so the id-keyed CDF read can
-          // surface them — a delete's ids are always attributable (the
-          // rows' files and baseRowIds are unchanged)
-          val withIds = snap.minWriter >= 7 &&
-            snap.writerFeatures.contains("rowTracking") &&
-            touched.forall(snap.rowIds.contains)
-          val delRows = (if (withIds)
-              DeltaRead.readSnapshotRowIds(spark, rootP.toString, tSnap,
-                DeltaRead.CdcRowIdCol)
-            else DeltaRead.readSnapshot(spark, rootP.toString, tSnap))
-            .where(condition)
-            .withColumn("_change_type", lit("delete"))
-          // `updates` non-empty ⟹ some matched row index is not in its
-          // file's old DV ⟹ at least one LIVE row matches `condition`
-          // ⟹ delRows is non-empty — the old isEmpty probe re-ran the
-          // whole matched scan as its own job to learn that (r19,
-          // guide §1.2)
-          writeCdcFiles(spark, snap, delRows, rootP, fs)
-        }
-      val next = snap.version + 1
-      if (publishCommit(fs, logP, next,
-            deleteContent(snap, updates, condition, cdcFiles),
-            snap.configuration, Some(snap))) return next
-      cdcFiles.foreach(f =>
-        try fs.delete(new Path(rootP, f.relPath), false)
-        catch { case scala.util.control.NonFatal(_) => () })
-      snap = DeltaRead.snapshot(spark, rootP.toString)
-      // a table setting or protocol feature committed between attempts
-      // (delta.appendOnly, an unknown writer feature) must re-gate the
-      // retry — mirroring [[update]]'s per-attempt validation
-      requireWritable(snap, path, removesData = true, cdfHandled = true)
+      if (updates.isEmpty) Txn.Done(snap.version)
+      else {
+        // CHANGE DATA FEED: the deleted rows (live rows matching the
+        // predicate under THIS attempt's snapshot DVs — already-dead rows
+        // never re-appear as changes) land under _change_data/ per CAS
+        // attempt: a concurrent DV-only DELETE that won the race may have
+        // deleted an overlapping subset of the same files, and cdc rows
+        // staged against the stale snapshot would report those rows
+        // deleted twice to feed consumers. A lost race deletes the stale
+        // staged files and re-derives, mirroring [[update]].
+        val cdcFiles: Seq[NewFile] =
+          if (!cdfEnabled(snap)) Nil
+          else {
+            val touched = matched.keySet
+            val tSnap = snap.copy(files = snap.files.filter(kv => touched.contains(kv._1)))
+            // rowTracking tables: the change rows carry their RETIRED ids
+            // ([[DeltaRead.CdcRowIdCol]]) so the id-keyed CDF read can
+            // surface them — a delete's ids are always attributable (the
+            // rows' files and baseRowIds are unchanged)
+            val withIds = snap.minWriter >= 7 &&
+              snap.writerFeatures.contains("rowTracking") &&
+              touched.forall(snap.rowIds.contains)
+            val delRows = (if (withIds)
+                DeltaRead.readSnapshotRowIds(spark, rootP.toString, tSnap,
+                  DeltaRead.CdcRowIdCol)
+              else DeltaRead.readSnapshot(spark, rootP.toString, tSnap))
+              .where(condition)
+              .withColumn("_change_type", lit("delete"))
+            // `updates` non-empty ⟹ some matched row index is not in its
+            // file's old DV ⟹ at least one LIVE row matches `condition`
+            // ⟹ delRows is non-empty — the old isEmpty probe re-ran the
+            // whole matched scan as its own job to learn that (r19,
+            // guide §1.2)
+            writeCdcFiles(spark, snap, delRows, rootP, fs)
+          }
+        publishCommit(spark, rootP, Some(snap),
+          dvDmlContent(snap, "DELETE", condition, updates, Nil, cdcFiles),
+          snap.configuration, cdcFiles)
+      }
     }
-    throw new IllegalStateException(
-      s"DELETE at $path lost the commit race 20 times — another writer is " +
-        "committing continuously; retry later")
   }
 
   /** DV-BASED UPDATE … SET … WHERE — delta-spark's DV-enabled UPDATE
@@ -257,7 +252,6 @@ object DeltaWrite {
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
     var snap = DeltaRead.snapshot(spark, rootP.toString)
     requireWritable(snap, path, removesData = true, cdfHandled = true)
     assignments.keys.foreach(c => require(
@@ -273,165 +267,118 @@ object DeltaWrite {
         "identity values breaks the protocol's collision-freedom contract " +
         "(delta-spark refuses this too)"))
     val byLower = assignments.map { case (k, v) => k.toLowerCase -> v }
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val matched = DeltaRead.matchedPhysicalRows(spark, rootP.toString, snap, condition)
-      if (matched.isEmpty) return snap.version
-      val updates = dvUnionUpdates(spark, snap, fs, rootP, matched,
-        inlineMaxBytes, "UPDATE", path)
-      if (updates.isEmpty) return snap.version // every match already deleted
-      val touched = matched.keySet
-      // ROW-ID MATERIALIZATION (round 18): on a table declaring a
-      // materialized row-id column, UPDATE's postimage files carry each
-      // updated row's CURRENT id in the hidden column — an update moves
-      // a row to a new file but must not re-key it (delta-spark's
-      // stable-id contract; same machinery as compact/merge). The
-      // soft-deleted originals' files keep their baseRowId, so unmatched
-      // rows' ids never move either way.
-      val matName: Option[String] =
-        if (snap.minWriter >= 7 && snap.writerFeatures.contains("rowTracking") &&
-            touched.forall(snap.rowIds.contains))
-          snap.configuration.get("delta.rowTracking.materializedRowIdColumnName")
-            .filterNot(m => snap.schema.fieldNames.contains(m) ||
-              snap.colMap.values.exists(_ == m))
-        else None
-      val touchedSnap = snap.copy(files = snap.files.filter(kv => touched.contains(kv._1)))
-      // MATCHED-ROW MATERIALIZATION (r19, guide §1.2/§5): on CDF
-      // tables the matched live rows feed THREE sub-plans — the
-      // rewritten images' data write, the cdc preimages and the cdc
-      // postimages — and each used to re-scan the touched parquet
-      // files. The matched set is DV-budget-bounded (delta-sized,
-      // never table-sized), so persist it for the attempt; spill beats
-      // a triple rescan. Without CDF there is ONE consumer (the data
-      // write) and the persist would be pure overhead — skipped.
-      // Released in the finally — a lost CAS recomputes from the
-      // winner's snapshot.
-      val updCdf = cdfEnabled(snap)
-      val liveMatched0 = (matName match {
-        case Some(m) => DeltaRead.readSnapshotRowIds(spark, rootP.toString, touchedSnap, m)
-        case None => DeltaRead.readSnapshot(spark, rootP.toString, touchedSnap)
-      }).where(condition)
-      val liveMatched =
-        if (updCdf)
-          liveMatched0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else liveMatched0
-      try {
-      val assigned = liveMatched.select((snap.schema.fields.map { f =>
-        byLower.get(f.name.toLowerCase)
-          .map(e => expr(e).cast(f.dataType).as(f.name))
-          .getOrElse(col(s"`${f.name}`"))
-      } ++ matName.map(m => col(s"`$m`"))).toIndexedSeq: _*)
-      // generated columns RECOMPUTE from the post-update row unless the
-      // statement assigned them explicitly — only the ASSIGNED ones
-      // validate (a recomputed column equals its expression by
-      // construction; re-checking it would cost a pass per column)
-      val gens = generatedOf(snap)
-      val newRows = gens.foldLeft(assigned) { case (d, (name, e)) =>
-        if (byLower.contains(name.toLowerCase)) {
-          validateGenerated(snap, d, name, e, path, "UPDATE"); d
-        }
-        else d.withColumn(name,
-          expr(e).cast(snap.schema(snap.schema.fieldIndex(name)).dataType))
+    Txn.run(fs, s"UPDATE at $path") { attempt =>
+      if (attempt > 1) {
+        snap = DeltaRead.snapshot(spark, rootP.toString)
+        requireWritable(snap, path, removesData = true, cdfHandled = true)
       }
-      enforceConstraints(snap, newRows, path, "UPDATE")
-      val cdcFiles: Seq[NewFile] =
-        if (!cdfEnabled(snap)) Nil
-        else {
-          // with a materialized row-id column the pre/postimage SHARE
-          // each row's id (rename the id column to the cdc home
-          // [[DeltaRead.CdcRowIdCol]]); without it the postimage's
-          // fresh ids are unknowable here, so no ids attach and the
-          // id-keyed CDF read refuses this commit loudly
-          val pre = matName.map(m => liveMatched
-            .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(liveMatched)
-          val post = matName.map(m => newRows
-            .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(newRows)
-          writeCdcFiles(spark, snap,
-            pre.withColumn("_change_type", lit("update_preimage"))
-              .unionByName(post.withColumn("_change_type", lit("update_postimage"))),
-            rootP, fs)
+      val matched = DeltaRead.matchedPhysicalRows(spark, rootP.toString, snap, condition)
+      val updates =
+        if (matched.isEmpty) Nil
+        else dvUnionUpdates(spark, snap, fs, rootP, matched, inlineMaxBytes, "UPDATE", path)
+      // no match, or every match already deleted
+      if (updates.isEmpty) Txn.Done(snap.version)
+      else {
+        val touched = matched.keySet
+        // ROW-ID MATERIALIZATION (round 18): on a table declaring a
+        // materialized row-id column, UPDATE's postimage files carry each
+        // updated row's CURRENT id in the hidden column — an update moves
+        // a row to a new file but must not re-key it (delta-spark's
+        // stable-id contract; same machinery as compact/merge). The
+        // soft-deleted originals' files keep their baseRowId, so unmatched
+        // rows' ids never move either way.
+        val matName: Option[String] =
+          if (snap.minWriter >= 7 && snap.writerFeatures.contains("rowTracking") &&
+              touched.forall(snap.rowIds.contains))
+            snap.configuration.get("delta.rowTracking.materializedRowIdColumnName")
+              .filterNot(m => snap.schema.fieldNames.contains(m) ||
+                snap.colMap.values.exists(_ == m))
+          else None
+        val touchedSnap = snap.copy(files = snap.files.filter(kv => touched.contains(kv._1)))
+        // MATCHED-ROW MATERIALIZATION (r19, guide §1.2/§5): on CDF
+        // tables the matched live rows feed THREE sub-plans — the
+        // rewritten images' data write, the cdc preimages and the cdc
+        // postimages — and each used to re-scan the touched parquet
+        // files. The matched set is DV-budget-bounded (delta-sized,
+        // never table-sized), so persist it for the attempt; spill beats
+        // a triple rescan. Without CDF there is ONE consumer (the data
+        // write) and the persist would be pure overhead — skipped.
+        // Released in the finally — a lost CAS recomputes from the
+        // winner's snapshot.
+        val updCdf = cdfEnabled(snap)
+        val liveMatched0 = (matName match {
+          case Some(m) => DeltaRead.readSnapshotRowIds(spark, rootP.toString, touchedSnap, m)
+          case None => DeltaRead.readSnapshot(spark, rootP.toString, touchedSnap)
+        }).where(condition)
+        val liveMatched =
+          if (updCdf)
+            liveMatched0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          else liveMatched0
+        try {
+        val assigned = liveMatched.select((snap.schema.fields.map { f =>
+          byLower.get(f.name.toLowerCase)
+            .map(e => expr(e).cast(f.dataType).as(f.name))
+            .getOrElse(col(s"`${f.name}`"))
+        } ++ matName.map(m => col(s"`$m`"))).toIndexedSeq: _*)
+        // generated columns RECOMPUTE from the post-update row unless the
+        // statement assigned them explicitly — only the ASSIGNED ones
+        // validate (a recomputed column equals its expression by
+        // construction; re-checking it would cost a pass per column)
+        val gens = generatedOf(snap)
+        val newRows = gens.foldLeft(assigned) { case (d, (name, e)) =>
+          if (byLower.contains(name.toLowerCase)) {
+            validateGenerated(snap, d, name, e, path, "UPDATE"); d
+          }
+          else d.withColumn(name,
+            expr(e).cast(snap.schema(snap.schema.fieldIndex(name)).dataType))
         }
-      val (physDf, physParts) = toPhysical(snap, newRows, matName.toSeq)
-      val newFiles = withStats(spark, fs, rootP,
-        writeDataFiles(spark, physDf, rootP, fs, physParts,
-          shredOk = shredOptIn(snap)))
-      val next = snap.version + 1
-      if (publishCommit(fs, logP, next,
-            updateContent(snap, updates, newFiles, condition, cdcFiles),
-            snap.configuration, Some(snap))) return next
-      (newFiles ++ cdcFiles).foreach(f =>
-        try fs.delete(new Path(rootP, f.relPath), false)
-        catch { case scala.util.control.NonFatal(_) => () })
-      } finally { if (updCdf) liveMatched.unpersist(false) }
-      snap = DeltaRead.snapshot(spark, rootP.toString)
-      requireWritable(snap, path, removesData = true, cdfHandled = true)
+        enforceConstraints(snap, newRows, path, "UPDATE")
+        val cdcFiles: Seq[NewFile] =
+          if (!cdfEnabled(snap)) Nil
+          else {
+            // with a materialized row-id column the pre/postimage SHARE
+            // each row's id (rename the id column to the cdc home
+            // [[DeltaRead.CdcRowIdCol]]); without it the postimage's
+            // fresh ids are unknowable here, so no ids attach and the
+            // id-keyed CDF read refuses this commit loudly
+            val pre = matName.map(m => liveMatched
+              .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(liveMatched)
+            val post = matName.map(m => newRows
+              .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(newRows)
+            writeCdcFiles(spark, snap,
+              pre.withColumn("_change_type", lit("update_preimage"))
+                .unionByName(post.withColumn("_change_type", lit("update_postimage"))),
+              rootP, fs)
+          }
+        val (physDf, physParts) = toPhysical(snap, newRows, matName.toSeq)
+        val newFiles = withStats(spark, fs, rootP,
+          writeDataFiles(spark, physDf, rootP, fs, physParts,
+            shredOk = shredOptIn(snap)))
+        publishCommit(spark, rootP, Some(snap),
+          dvDmlContent(snap, "UPDATE", condition, updates, newFiles, cdcFiles),
+          snap.configuration, newFiles ++ cdcFiles)
+        } finally { if (updCdf) liveMatched.unpersist(false) }
+      }
     }
-    throw new IllegalStateException(
-      s"UPDATE at $path lost the commit race 20 times — another writer is " +
-        "committing continuously; retry later")
   }
 
-  /** UPDATE's commit: DV'd removes+adds over the touched files (the
-    * DELETE half) plus dataChange=true adds for the updated images.
+  /** A DV DML commit (DELETE / UPDATE): each touched file's old
+    * identity is removed and — unless its new DV covers every row —
+    * re-added with the new DV, then UPDATE's rewritten images land as
+    * plain adds. The first DV on a table upgrades the protocol.
     */
-  private def updateContent(snap: DeltaRead.Snapshot,
-                            updates: Seq[(String, Option[DeletionVectors.Descriptor],
-                              DeletionVectors.Descriptor)],
-                            newFiles: Seq[NewFile],
-                            condition: String,
-                            cdcFiles: Seq[NewFile]): String = {
+  private def dvDmlContent(snap: DeltaRead.Snapshot, operation: String, condition: String,
+                           updates: Seq[(String, Option[DeletionVectors.Descriptor],
+                             DeletionVectors.Descriptor)],
+                           newFiles: Seq[NewFile], cdcFiles: Seq[NewFile]): String = {
     val now = System.currentTimeMillis
-    val lines = Seq.newBuilder[String]
-    val ci = mapper.createObjectNode
-    val cib = ci.putObject("commitInfo")
-    cib.put("timestamp", now)
-    cib.put("operation", "UPDATE")
-    cib.putObject("operationParameters").put("predicate", condition)
-    cib.put("engineInfo", "graft-delta-writer/1.0")
-    lines += mapper.writeValueAsString(ci)
-    protocolUpgrade(snap).foreach(lines += _)
-    cdcFiles.foreach(f => lines += cdcLine(f, now))
-    updates.foreach { case (rel, oldDv, newDv) =>
-      val rm = mapper.createObjectNode
-      val rmb = rm.putObject("remove")
-      rmb.put("path", encodePath(rel))
-      rmb.put("deletionTimestamp", now)
-      rmb.put("dataChange", true)
-      oldDv.foreach(putDv(rmb, _))
-      lines += mapper.writeValueAsString(rm)
-      if (newDv != null) {
-        val ad = mapper.createObjectNode
-        val adb = ad.putObject("add")
-        adb.put("path", encodePath(rel))
-        val pv = adb.putObject("partitionValues")
-        snap.files(rel).foreach { case (k, v) =>
-          val pk = snap.colMap.getOrElse(k, k)
-          if (v == null) pv.putNull(pk) else pv.put(pk, v)
-        }
-        adb.put("size", snap.sizes.getOrElse(rel, -1L))
-        adb.put("modificationTime", now)
-        adb.put("dataChange", true)
-        snap.stats.get(rel).foreach(adb.put("stats", _))
-        putDv(adb, newDv)
-        lines += mapper.writeValueAsString(ad)
-      }
-    }
-    newFiles.foreach { f =>
-      val ad = mapper.createObjectNode
-      val adb = ad.putObject("add")
-      adb.put("path", encodePath(f.relPath))
-      val pv = adb.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      adb.put("size", f.size)
-      adb.put("modificationTime", f.modificationTime)
-      adb.put("dataChange", true)
-      if (f.stats != null) adb.put("stats", f.stats)
-      lines += mapper.writeValueAsString(ad)
-    }
-    lines.result().mkString("\n") + "\n"
+    commitLines(commitInfoLine(now, operation, "predicate" -> condition) +:
+      (protocolUpgrade(snap).toSeq ++ cdcFiles.map(cdcLine(_, now)) ++
+        updates.flatMap { case (rel, oldDv, newDv) =>
+          // null newDv = the DV covered the whole file: drop it
+          removeLine(rel, now, dataChange = true, oldDv) +:
+            Option(newDv).map(d => addLive(snap, rel, now, dataChange = true, Some(d))).toSeq
+        } ++ newFiles.map(addNew(_))))
   }
 
   /** FILE-PRUNED MERGE (upsert): rows of `source` replace target rows
@@ -502,7 +449,6 @@ object DeltaWrite {
                         maxCollectedKeys: Int): Long = {
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
 
     // source key set: collected ONCE (prices the pruning for every
     // attempt); the per-file classification reruns per attempt.
@@ -578,9 +524,7 @@ object DeltaWrite {
         case _: IllegalArgumentException => _ => true
       }
 
-    var attempt = 0
-    while (attempt < 5) {
-      attempt += 1
+    Txn.run(fs, s"Delta merge at $path") { _ =>
       val snap = DeltaRead.snapshot(spark, rootP.toString)
       requireWritable(snap, path, removesData = true, cdfHandled = true)
       // CDF needs change ATTRIBUTION (which rows updated vs inserted) —
@@ -756,182 +700,89 @@ object DeltaWrite {
       val newFiles = withStats(spark, fs, rootP,
         writeDataFiles(spark, physDf, rootP, fs, physParts,
           shredOk = shredOptIn(snap)))
-      if (touched.isEmpty && newFiles.isEmpty) return snap.version // empty no-op
-
-      // CHANGE DATA FEED: decompose the default upsert into the
-      // protocol's change types — touched rows whose key the source
-      // carries are updates (preimage = current row, postimage = the
-      // source row realigned to the table schema), source rows with
-      // unseen keys are inserts. Carried rows (untouched by key) are
-      // NOT changes and never land in _change_data — exactly why a
-      // MERGE commit cannot leave CDF readers to derive from its
-      // whole-file add/remove actions.
-      val cdcFiles: Seq[NewFile] =
-        if (!cdfEnabled(snap)) Nil
-        else {
-          val tblKeys = keys.map(k =>
-            snap.schema.fieldNames.find(_.equalsIgnoreCase(k)).get)
-          val srcNames = source.columns
-          val srcT = source.select(snap.schema.fields.map { f =>
-            if (srcNames.exists(_.equalsIgnoreCase(f.name))) col(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          }: _*)
-          val tKeys = touchedData.select(tblKeys.map(col): _*)
-          // source keys from the driver-collected group set when
-          // complete (r19, guide §3.1) — the semi-join below then
-          // broadcasts instead of shuffling the touched-file side
-          val sKeys = srcKeysLocal.getOrElse(srcT.select(tblKeys.map(col): _*))
-          val changes = matName match {
-            case Some(m) =>
-              // id-keyed changes (rowTracking + materialized column):
-              // preimages carry each matched target row's own id,
-              // postimages inherit the key's surviving id (min — the
-              // same deterministic survivor the data rewrite keeps; a
-              // multi-row target key's extra preimages surface with
-              // their retired ids), inserts stay unkeyed — their fresh
-              // ids are assigned at publish, and the id-keyed CDF read
-              // re-derives them from this commit's new files.
-              // idByKey is the PERSISTED per-key survivor frame the data
-              // rewrite already computed (r19): its key set IS the
-              // distinct touched keys, so one inner join replaces the
-              // old tKeys semi-join + id left-join pair, and the insert
-              // anti-join probes the same tiny frame instead of
-              // re-scanning the touched files for their keys.
-              val idByKey = idByKeyOpt.get
-                .withColumnRenamed(m, DeltaRead.CdcRowIdCol)
-              touchedBase.withColumnRenamed(m, DeltaRead.CdcRowIdCol)
-                .join(sKeys, tblKeys, "left_semi")
-                .withColumn("_change_type", lit("update_preimage"))
-                .unionByName(srcT.join(idByKey, tblKeys, "inner")
-                  .withColumn("_change_type", lit("update_postimage")))
-                .unionByName(srcT.join(idByKey.select(tblKeys.map(col): _*),
-                    tblKeys, "left_anti")
-                  .withColumn(DeltaRead.CdcRowIdCol, lit(null).cast("long"))
-                  .withColumn("_change_type", lit("insert")))
-            case None =>
-              touchedData.join(sKeys, tblKeys, "left_semi")
-                .withColumn("_change_type", lit("update_preimage"))
-                .unionByName(srcT.join(tKeys, tblKeys, "left_semi")
-                  .withColumn("_change_type", lit("update_postimage")))
-                .unionByName(srcT.join(tKeys, tblKeys, "left_anti")
-                  .withColumn("_change_type", lit("insert")))
+      if (touched.isEmpty && newFiles.isEmpty) Txn.Done(snap.version) // empty no-op
+      else {
+        // CHANGE DATA FEED: decompose the default upsert into the
+        // protocol's change types — touched rows whose key the source
+        // carries are updates (preimage = current row, postimage = the
+        // source row realigned to the table schema), source rows with
+        // unseen keys are inserts. Carried rows (untouched by key) are
+        // NOT changes and never land in _change_data — exactly why a
+        // MERGE commit cannot leave CDF readers to derive from its
+        // whole-file add/remove actions.
+        val cdcFiles: Seq[NewFile] =
+          if (!cdfEnabled(snap)) Nil
+          else {
+            val tblKeys = keys.map(k =>
+              snap.schema.fieldNames.find(_.equalsIgnoreCase(k)).get)
+            val srcNames = source.columns
+            val srcT = source.select(snap.schema.fields.map { f =>
+              if (srcNames.exists(_.equalsIgnoreCase(f.name))) col(f.name)
+              else lit(null).cast(f.dataType).as(f.name)
+            }: _*)
+            val tKeys = touchedData.select(tblKeys.map(col): _*)
+            // source keys from the driver-collected group set when
+            // complete (r19, guide §3.1) — the semi-join below then
+            // broadcasts instead of shuffling the touched-file side
+            val sKeys = srcKeysLocal.getOrElse(srcT.select(tblKeys.map(col): _*))
+            val changes = matName match {
+              case Some(m) =>
+                // id-keyed changes (rowTracking + materialized column):
+                // preimages carry each matched target row's own id,
+                // postimages inherit the key's surviving id (min — the
+                // same deterministic survivor the data rewrite keeps; a
+                // multi-row target key's extra preimages surface with
+                // their retired ids), inserts stay unkeyed — their fresh
+                // ids are assigned at publish, and the id-keyed CDF read
+                // re-derives them from this commit's new files.
+                // idByKey is the PERSISTED per-key survivor frame the data
+                // rewrite already computed (r19): its key set IS the
+                // distinct touched keys, so one inner join replaces the
+                // old tKeys semi-join + id left-join pair, and the insert
+                // anti-join probes the same tiny frame instead of
+                // re-scanning the touched files for their keys.
+                val idByKey = idByKeyOpt.get
+                  .withColumnRenamed(m, DeltaRead.CdcRowIdCol)
+                touchedBase.withColumnRenamed(m, DeltaRead.CdcRowIdCol)
+                  .join(sKeys, tblKeys, "left_semi")
+                  .withColumn("_change_type", lit("update_preimage"))
+                  .unionByName(srcT.join(idByKey, tblKeys, "inner")
+                    .withColumn("_change_type", lit("update_postimage")))
+                  .unionByName(srcT.join(idByKey.select(tblKeys.map(col): _*),
+                      tblKeys, "left_anti")
+                    .withColumn(DeltaRead.CdcRowIdCol, lit(null).cast("long"))
+                    .withColumn("_change_type", lit("insert")))
+              case None =>
+                touchedData.join(sKeys, tblKeys, "left_semi")
+                  .withColumn("_change_type", lit("update_preimage"))
+                  .unionByName(srcT.join(tKeys, tblKeys, "left_semi")
+                    .withColumn("_change_type", lit("update_postimage")))
+                  .unionByName(srcT.join(tKeys, tblKeys, "left_anti")
+                    .withColumn("_change_type", lit("insert")))
+            }
+            // changes is empty ⟺ the source is empty (every source row is
+            // an update_postimage or an insert; every preimage needs a
+            // source key) — and the source's emptiness is already known
+            // from the collected key groups, so the old isEmpty probe
+            // re-ran the three cdc joins as its own job for nothing
+            // (r19, guide §1.2). `grouped` is complete OR past
+            // maxCollectedKeys — both cases non-empty when length > 0.
+            if (grouped.isEmpty) Nil else writeCdcFiles(spark, snap, changes, rootP, fs)
           }
-          // changes is empty ⟺ the source is empty (every source row is
-          // an update_postimage or an insert; every preimage needs a
-          // source key) — and the source's emptiness is already known
-          // from the collected key groups, so the old isEmpty probe
-          // re-ran the three cdc joins as its own job for nothing
-          // (r19, guide §1.2). `grouped` is complete OR past
-          // maxCollectedKeys — both cases non-empty when length > 0.
-          if (grouped.isEmpty) Nil else writeCdcFiles(spark, snap, changes, rootP, fs)
-        }
-
-      val next = snap.version + 1
-      if (publishCommit(fs, logP, next,
-            mergeContent(snap, touched, newFiles, keys, cdcFiles,
-              mergeIdentityHw),
-            snap.configuration, Some(snap))) {
-        autoCheckpoint(spark, rootP.toString, next, snap.configuration)
-        return next
+        // a lost race reclaims the staged files: the data job read THIS
+        // snapshot's touched files, so the output is stale against the
+        // winner's state and the retry re-derives from scratch
+        // (commitMerge's posture)
+        val now = System.currentTimeMillis
+        publishCommit(spark, rootP, Some(snap),
+          commitLines(commitInfoLine(now, "MERGE", "matchedKeys" -> keys.mkString(",")) +:
+            (identityMetaDataLine(snap, mergeIdentityHw, now).toSeq ++
+              cdcFiles.map(cdcLine(_, now)) ++
+              fileActions(now, touched, snap.dvs, newFiles, dataChange = true))),
+          snap.configuration, newFiles ++ cdcFiles)
       }
-      // lost the race: the data job read THIS snapshot's touched files
-      // — the staged output is stale against the winner's state, so
-      // reclaim it and re-derive from scratch (commitMerge's posture)
-      (newFiles ++ cdcFiles).foreach(f =>
-        try fs.delete(new Path(rootP, f.relPath), false)
-        catch { case scala.util.control.NonFatal(_) => () })
       } finally { if (mergeCdf) idByKeyOpt.foreach(_.unpersist(false)) }
     }
-    throw new IllegalStateException(
-      s"Delta merge at $path lost the commit race 5 times — another writer is " +
-        "committing continuously; retry later")
-  }
-
-  private def mergeContent(snap: DeltaRead.Snapshot, removes: Seq[String],
-                           adds: Seq[NewFile], keys: Seq[String],
-                           cdcFiles: Seq[NewFile] = Nil,
-                           identityHw: Map[String, Long] = Map.empty): String = {
-    val now = System.currentTimeMillis
-    val lines = Seq.newBuilder[String]
-    val ci = mapper.createObjectNode
-    val cib = ci.putObject("commitInfo")
-    cib.put("timestamp", now)
-    cib.put("operation", "MERGE")
-    cib.putObject("operationParameters").put("matchedKeys", keys.mkString(","))
-    cib.put("engineInfo", "graft-delta-writer/1.0")
-    lines += mapper.writeValueAsString(ci)
-    identityMetaDataLine(snap, identityHw, now).foreach(lines += _)
-    cdcFiles.foreach(f => lines += cdcLine(f, now))
-    removes.foreach { p =>
-      val rm = mapper.createObjectNode
-      val rmb = rm.putObject("remove")
-      rmb.put("path", encodePath(p))
-      rmb.put("deletionTimestamp", now)
-      rmb.put("dataChange", true)
-      snap.dvs.get(p).foreach(putDv(rmb, _))
-      lines += mapper.writeValueAsString(rm)
-    }
-    adds.foreach { f =>
-      val ad = mapper.createObjectNode
-      val adb = ad.putObject("add")
-      adb.put("path", encodePath(f.relPath))
-      val pv = adb.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      adb.put("size", f.size)
-      adb.put("modificationTime", f.modificationTime)
-      adb.put("dataChange", true)
-      if (f.stats != null) adb.put("stats", f.stats)
-      lines += mapper.writeValueAsString(ad)
-    }
-    lines.result().mkString("\n") + "\n"
-  }
-
-  private def deleteContent(snap: DeltaRead.Snapshot,
-                            updates: Seq[(String, Option[DeletionVectors.Descriptor],
-                              DeletionVectors.Descriptor)],
-                            condition: String,
-                            cdcFiles: Seq[NewFile] = Nil): String = {
-    val now = System.currentTimeMillis
-    val lines = Seq.newBuilder[String]
-    val ci = mapper.createObjectNode
-    val cib = ci.putObject("commitInfo")
-    cib.put("timestamp", now)
-    cib.put("operation", "DELETE")
-    cib.putObject("operationParameters").put("predicate", condition)
-    cib.put("engineInfo", "graft-delta-writer/1.0")
-    lines += mapper.writeValueAsString(ci)
-    protocolUpgrade(snap).foreach(lines += _)
-    cdcFiles.foreach(f => lines += cdcLine(f, now))
-    updates.foreach { case (rel, oldDv, newDv) =>
-      val rm = mapper.createObjectNode
-      val rmb = rm.putObject("remove")
-      rmb.put("path", encodePath(rel))
-      rmb.put("deletionTimestamp", now)
-      rmb.put("dataChange", true)
-      oldDv.foreach(putDv(rmb, _))
-      lines += mapper.writeValueAsString(rm)
-      if (newDv != null) { // null = the DV covered the whole file: drop it
-        val ad = mapper.createObjectNode
-        val adb = ad.putObject("add")
-        adb.put("path", encodePath(rel))
-        val pv = adb.putObject("partitionValues")
-        // Snapshot pv keys are LOGICAL; the log's are PHYSICAL under
-        // column mapping — translate back on the way out
-        snap.files(rel).foreach { case (k, v) =>
-          val pk = snap.colMap.getOrElse(k, k)
-          if (v == null) pv.putNull(pk) else pv.put(pk, v)
-        }
-        adb.put("size", snap.sizes.getOrElse(rel, -1L))
-        adb.put("modificationTime", now)
-        adb.put("dataChange", true)
-        snap.stats.get(rel).foreach(adb.put("stats", _))
-        putDv(adb, newDv)
-        lines += mapper.writeValueAsString(ad)
-      }
-    }
-    lines.result().mkString("\n") + "\n"
   }
 
   /** The protocol line a first-DV commit needs: upgrade to reader v3 /
@@ -1002,18 +853,7 @@ object DeltaWrite {
       if (snap.minReader >= 3) snap.readerFeatures.intersect(snap.writerFeatures)
       else Set.empty
     val need = features -- have
-    if (need.isEmpty) return None
-    val legacyWriter = impliedWriterFeatures(snap.minWriter)
-    val legacyReader = if (snap.minReader >= 2) Seq("columnMapping") else Nil
-    val rf = (snap.readerFeatures ++ legacyReader ++ need).toSeq.sorted
-    val wf = (snap.writerFeatures ++ legacyWriter ++ legacyReader ++ need).toSeq.sorted
-    val p = mapper.createObjectNode
-    val pb = p.putObject("protocol")
-    pb.put("minReaderVersion", math.max(snap.minReader, 3))
-    pb.put("minWriterVersion", math.max(snap.minWriter, 7))
-    val rfa = pb.putArray("readerFeatures"); rf.foreach(rfa.add)
-    val wfa = pb.putArray("writerFeatures"); wf.foreach(wfa.add)
-    Some(mapper.writeValueAsString(p))
+    if (need.isEmpty) None else Some(featuresUpgradeLine(snap, need.toSeq))
   }
 
   private def protocolUpgradeTo(snap: DeltaRead.Snapshot, feature: String,
@@ -1029,19 +869,32 @@ object DeltaWrite {
                                    extraWriter: Seq[String] = Nil): Option[String] = {
     if (features.forall(f => snap.minReader >= 3 && snap.readerFeatures.contains(f)) &&
         extraWriter.forall(snap.writerFeatures.contains)) return None
-    val legacyWriter = impliedWriterFeatures(snap.minWriter)
-    val legacyReader = if (snap.minReader >= 2) Seq("columnMapping") else Nil
-    val rf = (snap.readerFeatures ++ legacyReader ++ features).toSeq.sorted
-    val wf = (snap.writerFeatures ++ legacyWriter ++ legacyReader ++ extraWriter
-      ++ features).toSeq.sorted
-    val p = mapper.createObjectNode
-    val pb = p.putObject("protocol")
-    pb.put("minReaderVersion", math.max(snap.minReader, 3))
-    pb.put("minWriterVersion", math.max(snap.minWriter, 7))
-    val rfa = pb.putArray("readerFeatures"); rf.foreach(rfa.add)
-    val wfa = pb.putArray("writerFeatures"); wf.foreach(wfa.add)
-    Some(mapper.writeValueAsString(p))
+    Some(featuresUpgradeLine(snap, features, extraWriter))
   }
+
+  /** Reader v3 / writer v7 with `features` in both lists plus
+    * `extraWriter` writer-only features, carrying every existing
+    * feature (legacy versions expanded to their implied names).
+    */
+  private def featuresUpgradeLine(snap: DeltaRead.Snapshot, features: Seq[String],
+                                  extraWriter: Seq[String] = Nil): String = {
+    val legacyReader = if (snap.minReader >= 2) Seq("columnMapping") else Nil
+    protocolLine(math.max(snap.minReader, 3), math.max(snap.minWriter, 7),
+      Some(snap.readerFeatures ++ legacyReader ++ features),
+      Some(snap.writerFeatures ++ impliedWriterFeatures(snap.minWriter) ++ legacyReader ++
+        extraWriter ++ features))
+  }
+
+  /** `snap`'s protocol in the v7 table-features form with writer-only
+    * features `add` listed — a legacy writer version expands to its
+    * implied feature names (v7 requires the explicit list); the reader
+    * side is untouched.
+    */
+  private def withWriterFeatures(snap: DeltaRead.Snapshot, add: Seq[String]): String =
+    protocolLine(snap.minReader, 7,
+      if (snap.minReader >= 3) Some(snap.readerFeatures) else None,
+      Some((if (snap.minWriter >= 7) snap.writerFeatures.toSeq
+            else impliedWriterFeatures(snap.minWriter)) ++ add))
 
   /** Writer-side protocol gate (PROTOCOL.md "Writer Requirements"):
     * a writer must refuse a table whose minWriterVersion /
@@ -1249,46 +1102,19 @@ object DeltaWrite {
       (change: DeltaRead.Snapshot => Option[(org.apache.spark.sql.types.StructType,
         Seq[String], Map[String, String], Option[String])]): Long = {
     val rootP = qualifiedRoot(spark, path)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
+    Txn.run(rootP.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        s"$operation at $path") { _ =>
       val snap = DeltaRead.snapshot(spark, rootP.toString)
       requireWritable(snap, path, removesData = false)
-      val (schema, parts, conf, protocolLine) = change(snap) match {
-        case Some(t) => t
-        case None => return snap.version // explicit no-op: nothing to commit
+      change(snap) match {
+        case None => Txn.Done(snap.version) // explicit no-op: nothing to commit
+        case Some((schema, parts, conf, protocol)) =>
+          val now = System.currentTimeMillis
+          publishCommit(spark, rootP, Some(snap), commitLines(Seq(
+            commitInfoLine(now, operation)) ++ protocol ++
+            Seq(metaDataLine(snap.metaId, schema.json, parts, conf, now))), conf)
       }
-      val now = System.currentTimeMillis
-      val lines = Seq.newBuilder[String]
-      val ci = mapper.createObjectNode
-      val cib = ci.putObject("commitInfo")
-      cib.put("timestamp", now)
-      cib.put("operation", operation)
-      cib.put("engineInfo", "graft-delta-writer/1.0")
-      lines += mapper.writeValueAsString(ci)
-      protocolLine.foreach(lines += _)
-      val md = mapper.createObjectNode
-      val mdb = md.putObject("metaData")
-      mdb.put("id", Option(snap.metaId).getOrElse(java.util.UUID.randomUUID.toString))
-      val fmt = mdb.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      mdb.put("schemaString", schema.json)
-      val pc = mdb.putArray("partitionColumns")
-      parts.foreach(pc.add)
-      val cfg = mdb.putObject("configuration")
-      conf.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-      mdb.put("createdTime", now)
-      lines += mapper.writeValueAsString(md)
-      val next = snap.version + 1
-      if (publishCommit(fs, logP, next,
-            lines.result().mkString("\n") + "\n", conf, Some(snap))) return next
     }
-    throw new IllegalStateException(
-      s"$operation at $path lost the commit race 20 times — another writer is " +
-        "committing continuously; retry later")
   }
 
   /** Does SQL expression `e` reference identifier `name`? Word-boundary
@@ -1312,42 +1138,29 @@ object DeltaWrite {
     */
   def enableColumnMapping(spark: SparkSession, path: String): Long = {
     import org.apache.spark.sql.types.MetadataBuilder
-    commitMetaDataChange(spark, path, "SET TBLPROPERTIES") { snap =>
-      if (snap.colMap.nonEmpty) // already mapped: no-op at this version
-        return snap.version
-      val fields = snap.schema.fields.zipWithIndex.map { case (f, i) =>
-        f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
-          .putLong("delta.columnMapping.id", i + 1L)
-          .putString("delta.columnMapping.physicalName", f.name).build())
+    commitMetaDataChangeOpt(spark, path, "SET TBLPROPERTIES") { snap =>
+      if (snap.colMap.nonEmpty) None // already mapped: no-op at this version
+      else Some {
+        val fields = snap.schema.fields.zipWithIndex.map { case (f, i) =>
+          f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
+            .putLong("delta.columnMapping.id", i + 1L)
+            .putString("delta.columnMapping.physicalName", f.name).build())
+        }
+        val conf = snap.configuration +
+          ("delta.columnMapping.mode" -> "name") +
+          ("delta.columnMapping.maxColumnId" -> fields.length.toString)
+        val protocol: Option[String] =
+          if (snap.minWriter >= 7) {
+            if (snap.writerFeatures.contains("columnMapping")) None
+            else Some(protocolLine(math.max(snap.minReader, 2), snap.minWriter,
+              if (snap.minReader >= 3) Some(snap.readerFeatures + "columnMapping") else None,
+              Some(snap.writerFeatures + "columnMapping")))
+          } else if (snap.minWriter < 5 || snap.minReader < 2)
+            Some(protocolLine(math.max(snap.minReader, 2), math.max(snap.minWriter, 5)))
+          else None
+        (org.apache.spark.sql.types.StructType(fields), snap.partitionColumns,
+          conf, protocol)
       }
-      val conf = snap.configuration +
-        ("delta.columnMapping.mode" -> "name") +
-        ("delta.columnMapping.maxColumnId" -> fields.length.toString)
-      val protocolLine: Option[String] =
-        if (snap.minWriter >= 7) {
-          if (snap.writerFeatures.contains("columnMapping")) None
-          else {
-            val p = mapper.createObjectNode
-            val pb = p.putObject("protocol")
-            pb.put("minReaderVersion", math.max(snap.minReader, 2))
-            pb.put("minWriterVersion", snap.minWriter)
-            if (snap.minReader >= 3) {
-              val rfa = pb.putArray("readerFeatures")
-              (snap.readerFeatures + "columnMapping").toSeq.sorted.foreach(rfa.add)
-            }
-            val wfa = pb.putArray("writerFeatures")
-            (snap.writerFeatures + "columnMapping").toSeq.sorted.foreach(wfa.add)
-            Some(mapper.writeValueAsString(p))
-          }
-        } else if (snap.minWriter < 5 || snap.minReader < 2) {
-          val p = mapper.createObjectNode
-          val pb = p.putObject("protocol")
-          pb.put("minReaderVersion", math.max(snap.minReader, 2))
-          pb.put("minWriterVersion", math.max(snap.minWriter, 5))
-          Some(mapper.writeValueAsString(p))
-        } else None
-      (org.apache.spark.sql.types.StructType(fields), snap.partitionColumns,
-        conf, protocolLine)
     }
   }
 
@@ -1536,19 +1349,7 @@ object DeltaWrite {
         case None => f
       }
     })
-    val md = mapper.createObjectNode
-    val mdb = md.putObject("metaData")
-    mdb.put("id", Option(snap.metaId).getOrElse(java.util.UUID.randomUUID.toString))
-    val fmt = mdb.putObject("format")
-    fmt.put("provider", "parquet")
-    fmt.putObject("options")
-    mdb.put("schemaString", schema.json)
-    val pc = mdb.putArray("partitionColumns")
-    snap.partitionColumns.foreach(pc.add)
-    val cfg = mdb.putObject("configuration")
-    snap.configuration.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-    mdb.put("createdTime", now)
-    Some(mapper.writeValueAsString(md))
+    Some(metaDataLine(snap.metaId, schema.json, snap.partitionColumns, snap.configuration, now))
   }
 
   /** Generated columns (`delta.generationExpression` field metadata). */
@@ -1660,31 +1461,14 @@ object DeltaWrite {
       if (bad.nonEmpty) throw new IllegalArgumentException(
         s"cannot add CHECK constraint '$name' at $path: existing row violates " +
           s"CHECK ($expr); offending row: ${bad.head}")
-      val protocolLine: Option[String] =
+      val protocol: Option[String] =
         if (snap.minWriter >= 7) {
           if (snap.writerFeatures.contains("checkConstraints")) None
-          else {
-            val p = mapper.createObjectNode
-            val pb = p.putObject("protocol")
-            pb.put("minReaderVersion", snap.minReader)
-            pb.put("minWriterVersion", snap.minWriter)
-            if (snap.minReader >= 3) {
-              val rfa = pb.putArray("readerFeatures")
-              snap.readerFeatures.toSeq.sorted.foreach(rfa.add)
-            }
-            val wfa = pb.putArray("writerFeatures")
-            (snap.writerFeatures + "checkConstraints").toSeq.sorted.foreach(wfa.add)
-            Some(mapper.writeValueAsString(p))
-          }
-        } else if (snap.minWriter < 3) {
-          val p = mapper.createObjectNode
-          val pb = p.putObject("protocol")
-          pb.put("minReaderVersion", snap.minReader)
-          pb.put("minWriterVersion", 3)
-          Some(mapper.writeValueAsString(p))
-        } else None
+          else Some(withWriterFeatures(snap, Seq("checkConstraints")))
+        } else if (snap.minWriter < 3) Some(protocolLine(snap.minReader, 3))
+        else None
       (snap.schema, snap.partitionColumns,
-        snap.configuration + (key -> expr), protocolLine)
+        snap.configuration + (key -> expr), protocol)
     }
   }
 
@@ -2054,34 +1838,13 @@ object DeltaWrite {
       ()
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  private def crcMetaNode(s: DeltaRead.Snapshot): com.fasterxml.jackson.databind.JsonNode = {
-    val md = mapper.createObjectNode
-    md.put("id", Option(s.metaId).getOrElse(""))
-    val fmt = md.putObject("format")
-    fmt.put("provider", "parquet")
-    fmt.putObject("options")
-    md.put("schemaString", s.schema.json)
-    val pc = md.putArray("partitionColumns")
-    s.partitionColumns.foreach(pc.add)
-    val cfg = md.putObject("configuration")
-    s.configuration.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-    md
-  }
+  private def crcMetaNode(s: DeltaRead.Snapshot): com.fasterxml.jackson.databind.JsonNode =
+    metaDataNode(Option(s.metaId).getOrElse(""), s.schema.json, s.partitionColumns,
+      s.configuration)
 
-  private def crcProtoNode(s: DeltaRead.Snapshot): com.fasterxml.jackson.databind.JsonNode = {
-    val pr = mapper.createObjectNode
-    pr.put("minReaderVersion", s.minReader)
-    pr.put("minWriterVersion", s.minWriter)
-    if (s.readerFeatures.nonEmpty) {
-      val a = pr.putArray("readerFeatures")
-      s.readerFeatures.toSeq.sorted.foreach(a.add)
-    }
-    if (s.writerFeatures.nonEmpty) {
-      val a = pr.putArray("writerFeatures")
-      s.writerFeatures.toSeq.sorted.foreach(a.add)
-    }
-    pr
-  }
+  private def crcProtoNode(s: DeltaRead.Snapshot): com.fasterxml.jackson.databind.JsonNode =
+    protocolNode(s.minReader, s.minWriter, Some(s.readerFeatures).filter(_.nonEmpty),
+      Some(s.writerFeatures).filter(_.nonEmpty))
 
   /** The protocol's row-tracking high-water-mark domain. */
   private[sources] val RowTrackingDomain = "delta.rowTracking"
@@ -2199,53 +1962,50 @@ object DeltaWrite {
       } else l
     }.filter(_ != null)
     if (!stamped && !domainSeen) return content
-    val dm = mapper.createObjectNode
-    val dmb = dm.putObject("domainMetadata")
-    dmb.put("domain", RowTrackingDomain)
-    dmb.put("configuration", s"""{"rowIdHighWaterMark":$hwm}""")
-    dmb.put("removed", false)
-    (out :+ mapper.writeValueAsString(dm)).mkString("\n") + "\n"
+    commitLines(out :+ domainLine(RowTrackingDomain,
+      s"""{"rowIdHighWaterMark":$hwm}""", removed = false))
   }
 
-  /** Publish one Delta commit: plain CAS for ordinary tables; under
-    * ICT the content is re-stamped PER ATTEMPT (the timestamp must
-    * exceed whatever commit actually precedes this one) — the existing
-    * commitInfo line moves to the front and gains `inCommitTimestamp`,
-    * or a minimal one is prepended for content that carried none.
-    * Row-tracking tables get their add actions stamped here too
-    * ([[stampRowTracking]]). A winning publish also emits the `<v>.crc`
-    * version-checksum sidecar (best-effort) when `prevSnap` provides
-    * the base state.
+  /** The publish step of one Delta commit attempt — the single commit
+    * point every writer path hands to [[Txn.run]]. `content` (whose
+    * first line is the commitInfo) lands at `prevSnap`'s next version
+    * (v0 when absent). At CAS time it is stamped: under in-commit
+    * timestamps the commitInfo gains `inCommitTimestamp` — `ict` when
+    * the caller already fixed it for this attempt, else the next
+    * monotonic value (it must exceed whatever commit actually precedes
+    * this one) — and row-tracking tables get their add actions stamped
+    * ([[stampRowTracking]]). A win writes the `<v>.crc`
+    * version-checksum sidecar (best-effort) and then folds the log at
+    * the checkpoint cadence `conf` sets. `staged` are the files this
+    * attempt wrote.
     */
-  private def publishCommit(fs: FileSystem, logP: Path, version: Long,
-                            content: String, conf: Map[String, String],
-                            prevSnap: Option[DeltaRead.Snapshot] = None): Boolean = {
-    val stamped =
-      if (!ictEnabled(conf)) content
-      else {
-        val ict = nextIct(fs, logP, version)
-        val lines = content.split("\n").toIndexedSeq.filter(_.trim.nonEmpty)
-        val (ci, rest) = lines.partition(l =>
-          l.contains("\"commitInfo\"") && mapper.readTree(l).has("commitInfo"))
-        val node = ci.headOption.map(mapper.readTree(_)
-            .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
-          .getOrElse {
-            val n = mapper.createObjectNode
-            val b = n.putObject("commitInfo")
-            b.put("timestamp", ict)
-            b.put("engineInfo", "graft-delta-writer/1.0")
-            n
-          }
-        node.get("commitInfo")
-          .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-          .put("inCommitTimestamp", ict)
-        (mapper.writeValueAsString(node) +: rest).mkString("\n") + "\n"
+  private def publishCommit(spark: SparkSession, rootP: Path,
+                            prevSnap: Option[DeltaRead.Snapshot], content: String,
+                            conf: Map[String, String], staged: Seq[NewFile] = Nil,
+                            ict: Option[Long] = None): Txn.Publish = {
+    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val logP = new Path(rootP, "_delta_log")
+    val version = prevSnap.fold(0L)(_.version + 1)
+    lazy val stamped = {
+      val ictValue = ict.orElse(
+        if (ictEnabled(conf)) Some(nextIct(fs, logP, version)) else None)
+      val withIct = ictValue.fold(content) { t =>
+        val lines = content.split("\n").filter(_.trim.nonEmpty)
+        val ci = mapper.readTree(lines.head)
+        ci.get("commitInfo").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          .put("inCommitTimestamp", t)
+        commitLines(mapper.writeValueAsString(ci) +: lines.tail.toSeq)
       }
-    val rowStamped = stampRowTracking(version, stamped, prevSnap)
-    val won = graft.pipeline.VersionedTable.casPublish(
-      fs, new Path(logP, f"$version%020d.json"), rowStamped)
-    if (won) writeVersionChecksum(fs, logP, version, rowStamped, prevSnap)
-    won
+      stampRowTracking(version, withIct, prevSnap)
+    }
+    Txn.Publish(version,
+      () => graft.pipeline.VersionedTable.casPublish(
+        fs, new Path(logP, f"$version%020d.json"), stamped),
+      () => {
+        writeVersionChecksum(fs, logP, version, stamped, prevSnap)
+        autoCheckpoint(spark, rootP.toString, version, conf)
+      },
+      staged.map(f => new Path(rootP, f.relPath)))
   }
 
   /** Auto-checkpoint cadence: after a commit lands version V where
@@ -2285,7 +2045,6 @@ object DeltaWrite {
                     mergeSchema: Boolean = false): Long = {
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
 
     val existing: Option[DeltaRead.Snapshot] =
       if (DeltaRead.isDeltaTable(spark, rootP.toString))
@@ -2317,11 +2076,12 @@ object DeltaWrite {
 
     // replayed micro-batch: its txn mark is already in the log — skip
     // BEFORE the data job runs (the cheap, common replay path)
-    txn.foreach { case (appId, ver) =>
-      existing.foreach { s =>
-        if (s.txns.get(appId).exists(_ >= ver)) return s.version
+    def replayed(snap: Option[DeltaRead.Snapshot]): Option[Long] =
+      txn.flatMap { case (appId, ver) =>
+        snap.filter(_.txns.get(appId).exists(_ >= ver)).map(_.version)
       }
-    }
+    val replay = replayed(existing)
+    if (replay.isDefined) return replay.get
 
     // partition layout: inherit the table's unless this is a
     // full overwrite (which may legally re-partition the table)
@@ -2554,119 +2314,104 @@ object DeltaWrite {
       writeDataFiles(spark, physDf, rootP, fs, physParts,
         shredOk = existing.exists(shredOptIn)))
 
-    fs.mkdirs(logP) // casPublish stages its tmp inside the log dir
+    fs.mkdirs(new Path(rootP, "_delta_log")) // casPublish stages its tmp inside the log dir
     var snap = existing
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val next = snap.map(_.version + 1).getOrElse(0L)
-      val removes: Seq[String] = (mode, snap) match {
-        case (Mode.Overwrite, Some(s)) => s.files.keys.toSeq.sorted
-        case (Mode.DynamicOverwrite, Some(s)) =>
-          // newFiles carry PHYSICAL pv keys (decoded from the written
-          // dirs); the snapshot's are LOGICAL — compare physical
-          val touched = newFiles.map(_.partitionValues).distinct.toSet
-          def phys(pv: Map[String, String]): Map[String, String] =
-            if (s.colMap.isEmpty) pv
-            else pv.map { case (k, v) => s.colMap.getOrElse(k, k) -> v }
-          s.files.collect { case (p, pv) if touched.contains(phys(pv)) => p }
-            .toSeq.sorted
-        case _ => Nil
-      }
-      val content = commitContent(aligned, mode, parts, snap, newFiles, removes, next,
-        txn, mergeSchema, minted, identityHw, mappedOverwrite, newMaxColumnId)
-      if (publishCommit(fs, logP, next, content,
-            snap.map(_.configuration).getOrElse(Map.empty), snap)) {
-        autoCheckpoint(spark, rootP.toString, next,
-          snap.map(_.configuration).getOrElse(Map.empty))
-        return next
-      }
-      require(attempt < 50,
-        s"Delta commit at $path lost the version race $attempt times — giving up " +
-          "(another writer is committing continuously); the staged data files are " +
-          "unreferenced and safe to vacuum")
-      // lost the race: adopt the winner's snapshot, re-check layout
-      // compatibility (the winner may have re-partitioned or evolved
-      // the schema under us), recompute removes, retry
-      snap = Some(DeltaRead.snapshot(spark, rootP.toString))
-      // a RACING identity allocation moved the high-water mark under
-      // us: the staged values may collide with the winner's — abort
-      // loudly (the caller re-runs; delta-spark aborts the txn too)
-      if (identityHw.nonEmpty) {
-        val fresh = identitiesOf(snap.get).map(i => i.name -> i.highWater).toMap
-        identities.foreach { old =>
-          if (fresh.get(old.name).exists(_ != old.highWater)) {
-            newFiles.foreach(f =>
-              try fs.delete(new Path(rootP, f.relPath), false)
-              catch { case scala.util.control.NonFatal(_) => () })
-            throw new IllegalStateException(
-              s"identity allocation at $path conflicts: a concurrent writer moved " +
-                s"'${old.name}''s high-water mark — re-run the append")
+    // losing a race never re-runs the data job: every attempt commits
+    // the same staged files, which the driver reclaims only if the call
+    // ends without a win
+    Txn.run(fs, s"Delta commit at $path",
+        staged = newFiles.map(f => new Path(rootP, f.relPath))) { attempt =>
+      if (attempt > 1) {
+        // lost the race: adopt the winner's snapshot, re-check layout
+        // compatibility (the winner may have re-partitioned or evolved
+        // the schema under us), recompute removes, retry
+        snap = Some(DeltaRead.snapshot(spark, rootP.toString))
+        // a RACING identity allocation moved the high-water mark under
+        // us: the staged values may collide with the winner's — abort
+        // loudly (the caller re-runs; delta-spark aborts the txn too)
+        if (identityHw.nonEmpty) {
+          val fresh = identitiesOf(snap.get).map(i => i.name -> i.highWater).toMap
+          identities.foreach { old =>
+            if (fresh.get(old.name).exists(_ != old.highWater))
+              throw new IllegalStateException(
+                s"identity allocation at $path conflicts: a concurrent writer moved " +
+                  s"'${old.name}''s high-water mark — re-run the append")
           }
         }
       }
       // the winner may have been this sink's own TWIN committing the
-      // same micro-batch — its txn mark now covers this batch, so this
-      // attempt's staged files are garbage: reclaim them and bow out
-      txn.foreach { case (appId, ver) =>
-        snap.foreach { s =>
-          if (s.txns.get(appId).exists(_ >= ver)) {
-            newFiles.foreach(f =>
-              try fs.delete(new Path(rootP, f.relPath), false)
-              catch { case scala.util.control.NonFatal(_) => () })
-            return s.version
-          }
-        }
-      }
-      snap.foreach { s =>
-        // a mapped OVERWRITE that minted ids cannot tolerate a winner
-        // who minted past them: the staged parquet and the prepared
-        // metaData carry THIS attempt's ids — re-committing would
-        // reuse the winner's (delta-spark aborts this conflict too)
-        if (mode == Mode.Overwrite && mintedIdMin.nonEmpty)
-          require(mappingIdHighWater(s) < mintedIdMin.get,
-            s"concurrent writer evolved the column-mapped Delta table $path " +
-              "mid-commit (column ids were minted past this overwrite's) — " +
-              "re-run the write (its staged files are unreferenced)")
-        if (mode != Mode.Overwrite) {
-          require(s.partitionColumns.map(_.toLowerCase) == parts.map(_.toLowerCase),
-            s"concurrent writer re-partitioned Delta table $path to " +
-              s"(${s.partitionColumns.mkString(", ")}) mid-commit — this " +
-              s"${mode.toString.toLowerCase} wrote (${parts.mkString(", ")}) layout; " +
-              "re-run the write (its staged files are unreferenced)")
-          if (!mergeSchema)
-            require(s.schema.fieldNames.map(_.toLowerCase).sorted.sameElements(
-                      aligned.schema.fieldNames.map(_.toLowerCase).sorted),
-              s"concurrent writer changed the schema of Delta table $path mid-commit — " +
-                "re-run the write against the new schema (staged files are unreferenced)")
-          else {
-            // a MAPPED evolving append cannot tolerate a concurrent
-            // mint: the staged parquet already carries THIS attempt's
-            // physical names, and a winner who claimed the same ids
-            // (or the same logical columns under different physical
-            // names) would orphan them — abort loudly, never re-mint
-            if (mintedIdMin.nonEmpty) {
+      // same micro-batch — its txn mark now covers this batch, so the
+      // staged files are garbage: bow out (the driver reclaims them)
+      replayed(snap) match {
+        case Some(v) => Txn.Done(v)
+        case None =>
+          if (attempt > 1) snap.foreach { s =>
+            // a mapped OVERWRITE that minted ids cannot tolerate a winner
+            // who minted past them: the staged parquet and the prepared
+            // metaData carry THIS attempt's ids — re-committing would
+            // reuse the winner's (delta-spark aborts this conflict too)
+            if (mode == Mode.Overwrite && mintedIdMin.nonEmpty)
               require(mappingIdHighWater(s) < mintedIdMin.get,
                 s"concurrent writer evolved the column-mapped Delta table $path " +
-                  "mid-commit (column ids were minted past this append's) — " +
-                  "re-run the write (its staged files are unreferenced)")
-            }
-            // an evolving append tolerates concurrent evolution — the
-            // retry's metaData re-unions against the winner's schema —
-            // but a TYPE conflict on any shared column is fatal
-            s.schema.fields.foreach { t =>
-              aligned.schema.fields.find(_.name.equalsIgnoreCase(t.name)).foreach { d =>
-                require(t.dataType.catalogString == d.dataType.catalogString,
-                  s"concurrent writer changed the type of column '${t.name}' of Delta " +
-                    s"table $path mid-commit (${d.dataType.catalogString} staged vs " +
-                    s"${t.dataType.catalogString} now) — re-run the write")
+                  "mid-commit (column ids were minted past this overwrite's) — " +
+                  "re-run the write")
+            if (mode != Mode.Overwrite) {
+              require(s.partitionColumns.map(_.toLowerCase) == parts.map(_.toLowerCase),
+                s"concurrent writer re-partitioned Delta table $path to " +
+                  s"(${s.partitionColumns.mkString(", ")}) mid-commit — this " +
+                  s"${mode.toString.toLowerCase} wrote (${parts.mkString(", ")}) layout; " +
+                  "re-run the write")
+              if (!mergeSchema)
+                require(s.schema.fieldNames.map(_.toLowerCase).sorted.sameElements(
+                          aligned.schema.fieldNames.map(_.toLowerCase).sorted),
+                  s"concurrent writer changed the schema of Delta table $path mid-commit — " +
+                    "re-run the write against the new schema")
+              else {
+                // a MAPPED evolving append cannot tolerate a concurrent
+                // mint: the staged parquet already carries THIS attempt's
+                // physical names, and a winner who claimed the same ids
+                // (or the same logical columns under different physical
+                // names) would orphan them — abort loudly, never re-mint
+                if (mintedIdMin.nonEmpty) {
+                  require(mappingIdHighWater(s) < mintedIdMin.get,
+                    s"concurrent writer evolved the column-mapped Delta table $path " +
+                      "mid-commit (column ids were minted past this append's) — " +
+                      "re-run the write")
+                }
+                // an evolving append tolerates concurrent evolution — the
+                // retry's metaData re-unions against the winner's schema —
+                // but a TYPE conflict on any shared column is fatal
+                s.schema.fields.foreach { t =>
+                  aligned.schema.fields.find(_.name.equalsIgnoreCase(t.name)).foreach { d =>
+                    require(t.dataType.catalogString == d.dataType.catalogString,
+                      s"concurrent writer changed the type of column '${t.name}' of Delta " +
+                        s"table $path mid-commit (${d.dataType.catalogString} staged vs " +
+                        s"${t.dataType.catalogString} now) — re-run the write")
+                  }
+                }
               }
             }
           }
-        }
+          val next = snap.map(_.version + 1).getOrElse(0L)
+          val removes: Seq[String] = (mode, snap) match {
+            case (Mode.Overwrite, Some(s)) => s.files.keys.toSeq.sorted
+            case (Mode.DynamicOverwrite, Some(s)) =>
+              // newFiles carry PHYSICAL pv keys (decoded from the written
+              // dirs); the snapshot's are LOGICAL — compare physical
+              val touched = newFiles.map(_.partitionValues).distinct.toSet
+              def phys(pv: Map[String, String]): Map[String, String] =
+                if (s.colMap.isEmpty) pv
+                else pv.map { case (k, v) => s.colMap.getOrElse(k, k) -> v }
+              s.files.collect { case (p, pv) if touched.contains(phys(pv)) => p }
+                .toSeq.sorted
+            case _ => Nil
+          }
+          publishCommit(spark, rootP, snap,
+            commitContent(aligned, mode, parts, snap, newFiles, removes, next,
+              txn, mergeSchema, minted, identityHw, mappedOverwrite, newMaxColumnId),
+            snap.map(_.configuration).getOrElse(Map.empty))
       }
     }
-    -1L // unreachable
   }
 
   private final case class NewFile(
@@ -2951,15 +2696,8 @@ object DeltaWrite {
                             newMaxColumnId: Option[Long] = None): String = {
     val now = System.currentTimeMillis
     val lines = Seq.newBuilder[String]
-
-    val ci = mapper.createObjectNode
-    val cib = ci.putObject("commitInfo")
-    cib.put("timestamp", now)
-    cib.put("operation", if (mode == Mode.Append) "WRITE" else "OVERWRITE")
-    val op = cib.putObject("operationParameters")
-    op.put("mode", if (mode == Mode.Append) "Append" else "Overwrite")
-    cib.put("engineInfo", "graft-delta-writer/1.0")
-    lines += mapper.writeValueAsString(ci)
+    lines += commitInfoLine(now, if (mode == Mode.Append) "WRITE" else "OVERWRITE",
+      "mode" -> (if (mode == Mode.Append) "Append" else "Overwrite"))
 
     txn.foreach { case (appId, ver) =>
       val tx = mapper.createObjectNode
@@ -2972,25 +2710,13 @@ object DeltaWrite {
 
     if (version == 0L) {
       val tf = typeFeatures(df.schema)
-      val pr = mapper.createObjectNode
-      val prb = pr.putObject("protocol")
-      if (tf.isEmpty) {
-        prb.put("minReaderVersion", 1)
-        prb.put("minWriterVersion", 2)
-      } else {
-        // variant / timestampNtz columns gate the table behind
-        // reader+writer features — a (1,2) protocol would let
-        // feature-unaware readers misparse the encoded values, so the
-        // table is CREATED straight in the features form
-        // (delta-spark's CREATE TABLE posture)
-        prb.put("minReaderVersion", 3)
-        prb.put("minWriterVersion", 7)
-        val rfa = prb.putArray("readerFeatures")
-        tf.toSeq.sorted.foreach(rfa.add)
-        val wfa = prb.putArray("writerFeatures")
-        (tf ++ impliedWriterFeatures(2)).toSeq.sorted.foreach(wfa.add)
-      }
-      lines += mapper.writeValueAsString(pr)
+      // variant / timestampNtz columns gate the table behind
+      // reader+writer features — a (1,2) protocol would let
+      // feature-unaware readers misparse the encoded values, so the
+      // table is CREATED straight in the features form
+      // (delta-spark's CREATE TABLE posture)
+      lines += (if (tf.isEmpty) protocolLine(1, 2)
+        else protocolLine(3, 7, Some(tf), Some(tf ++ impliedWriterFeatures(2))))
     }
 
     // metaData at v0, on overwrites that change schema or layout, and
@@ -3052,28 +2778,14 @@ object DeltaWrite {
         (mergeSchema && s.schema.json != schemaJson)
       })
     if (needMeta) {
-      val md = mapper.createObjectNode
-      val mdb = md.putObject("metaData")
-      mdb.put("id", snap.flatMap(s => Option(s.metaId))
-        .getOrElse(java.util.UUID.randomUUID.toString))
-      val fmt = mdb.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      mdb.put("schemaString", schemaJson)
-      val pc = mdb.putArray("partitionColumns")
-      parts.foreach(pc.add)
       // CARRY the table configuration — a re-emitted metaData REPLACES
       // the old one, and dropping e.g. delta.appendOnly=true here would
       // silently disable an enforcement other writers rely on. A
       // mapped-table evolution bumps maxColumnId to the newest minted
       // id in the same action (the protocol's monotonic high-water).
-      val cfg = mdb.putObject("configuration")
       val confOut = snap.map(_.configuration).getOrElse(Map.empty) ++
-        newMaxColumnId.map(m =>
-          Map("delta.columnMapping.maxColumnId" -> m.toString)).getOrElse(Map.empty)
-      confOut.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-      mdb.put("createdTime", now)
-      lines += mapper.writeValueAsString(md)
+        newMaxColumnId.map(m => "delta.columnMapping.maxColumnId" -> m.toString)
+      lines += metaDataLine(snap.map(_.metaId).orNull, schemaJson, parts, confOut, now)
       // a schema change EVOLVING IN a variant / timestampNtz column
       // (mergeSchema append, full overwrite redefinition) upgrades the
       // protocol in the SAME commit — committing the new schema under
@@ -3087,32 +2799,9 @@ object DeltaWrite {
       }
     }
 
-    removes.foreach { p =>
-      val rm = mapper.createObjectNode
-      val rmb = rm.putObject("remove")
-      rmb.put("path", encodePath(p))
-      rmb.put("deletionTimestamp", now)
-      rmb.put("dataChange", true)
-      snap.flatMap(_.dvs.get(p)).foreach(putDv(rmb, _))
-      lines += mapper.writeValueAsString(rm)
-    }
-
-    adds.foreach { f =>
-      val ad = mapper.createObjectNode
-      val adb = ad.putObject("add")
-      adb.put("path", encodePath(f.relPath))
-      val pv = adb.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      adb.put("size", f.size)
-      adb.put("modificationTime", f.modificationTime)
-      adb.put("dataChange", true)
-      if (f.stats != null) adb.put("stats", f.stats)
-      lines += mapper.writeValueAsString(ad)
-    }
-
-    lines.result().mkString("\n") + "\n"
+    lines ++= fileActions(now, removes, snap.map(_.dvs).getOrElse(Map.empty), adds,
+      dataChange = true)
+    commitLines(lines.result())
   }
 
   // ----- maintenance: OPTIMIZE + VACUUM -------------------------------
@@ -3152,9 +2841,7 @@ object DeltaWrite {
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val logP = new Path(rootP, "_delta_log")
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
+    Txn.run(fs, s"SET TBLPROPERTIES at $path") { _ =>
       val snap = DeltaRead.snapshot(spark, rootP.toString)
       requireWritable(snap, path, removesData = false)
       val next = snap.version + 1
@@ -3162,7 +2849,8 @@ object DeltaWrite {
       // enabling commit itself must carry a stamped commitInfo, and a
       // table enabled after creation records the enablement provenance
       // the protocol's timestamp time travel reads (which version the
-      // ICT clock starts at, and its first value)
+      // ICT clock starts at, and its first value). The stamp is fixed
+      // once per attempt so the provenance value IS the commit's stamp.
       val enablingIct = set.get("delta.enableInCommitTimestamps")
         .exists(_.equalsIgnoreCase("true")) && !ictEnabled(snap.configuration)
       val ict = if (enablingIct || ictEnabled(snap.configuration))
@@ -3171,156 +2859,86 @@ object DeltaWrite {
         "delta.inCommitTimestampEnablementVersion" -> next.toString,
         "delta.inCommitTimestampEnablementTimestamp" -> ict.get.toString)
       val newConf = (snap.configuration ++ set ++ provenance) -- unset
-      if (newConf == snap.configuration) return snap.version
-      val now = System.currentTimeMillis
-      val lines = Seq.newBuilder[String]
-      val ci = mapper.createObjectNode
-      val cib = ci.putObject("commitInfo")
-      cib.put("timestamp", now)
-      ict.foreach(cib.put("inCommitTimestamp", _))
-      cib.put("operation", "SET TBLPROPERTIES")
-      val op = cib.putObject("operationParameters")
-      op.put("properties",
-        mapper.writeValueAsString(mapper.valueToTree(newConf): com.fasterxml.jackson.databind.JsonNode))
-      cib.put("engineInfo", "graft-delta-writer/1.0")
-      lines += mapper.writeValueAsString(ci)
-      // property-gated features need the protocol to carry them:
-      // enabling CDF → changeDataFeed (legacy minWriter 4), adding a
-      // delta.constraints.* key → checkConstraints (legacy minWriter 3),
-      // enabling ICT → inCommitTimestamp (table-features only: 7)
-      // ROW TRACKING enablement (delta.enableRowTracking = true): the
-      // protocol gains rowTracking + domainMetadata (the hwm domain
-      // lives there), and every live file that carries no baseRowId is
-      // BACKFILLED — re-added dataChange=false in this same commit so
-      // [[stampRowTracking]] assigns it a fresh range (delta-spark's
-      // ALTER TABLE enablement runs the same backfill). Zero data I/O:
-      // the re-adds are log actions over the existing files.
-      val enablingRowTracking = set.get("delta.enableRowTracking")
-        .exists(_.equalsIgnoreCase("true")) &&
-        !(snap.minWriter >= 7 && snap.writerFeatures.contains("rowTracking"))
-      val needs = Seq(
-        "changeDataFeed" -> (4, set.get("delta.enableChangeDataFeed")
-          .exists(_.equalsIgnoreCase("true"))),
-        "checkConstraints" -> (3, set.keys.exists(_.startsWith("delta.constraints."))),
-        "inCommitTimestamp" -> (7, enablingIct),
-        "rowTracking" -> (7, enablingRowTracking),
-        "domainMetadata" -> (7, enablingRowTracking &&
-          !(snap.minWriter >= 7 && snap.writerFeatures.contains("domainMetadata"))))
-        .collect { case (f, (lv, true)) => f -> lv }
-      // `delta.checkpointPolicy = v2` requires the v2Checkpoint READER
-      // feature (spec: the policy is illegal without it) — upgrade to
-      // the table-features protocol in the same commit, folding any
-      // writer features this call also needs into the one protocol
-      // action (two protocol lines would clobber each other)
-      val needV2Ckpt = set.get("delta.checkpointPolicy").contains("v2") &&
-        !(snap.minReader >= 3 && snap.readerFeatures.contains("v2Checkpoint"))
-      // VARIANT SHREDDING opt-in (`delta.enableVariantShredding=true`,
-      // delta-spark's preview property): future variant writes keep
-      // Spark's shredded layout ([[writeDataFiles]] stops pinning it
-      // off), which the variantShredding-preview READER feature gates —
-      // and shredded files are still variant files, so the base
-      // variantType feature rides along when missing.
-      val needVarShred = set.get("delta.enableVariantShredding")
-        .exists(_.equalsIgnoreCase("true")) &&
-        !(snap.minReader >= 3 &&
-          snap.readerFeatures.contains("variantShredding-preview"))
-      val readerNeeds =
-        (if (needV2Ckpt) Seq("v2Checkpoint") else Nil) ++
-        (if (needVarShred)
-          Seq("variantShredding-preview") ++
-            (if (snap.minReader >= 3 && snap.readerFeatures.contains("variantType")) Nil
-             else Seq("variantType"))
-         else Nil)
-      if (readerNeeds.nonEmpty) {
-        protocolUpgradeToAll(snap, readerNeeds, needs.map(_._1)).foreach(lines += _)
-      } else if (needs.nonEmpty) {
-        if (snap.minWriter >= 7) {
-          val missing = needs.map(_._1).filterNot(snap.writerFeatures.contains)
-          if (missing.nonEmpty) {
-            val p = mapper.createObjectNode
-            val pb = p.putObject("protocol")
-            pb.put("minReaderVersion", snap.minReader)
-            pb.put("minWriterVersion", snap.minWriter)
-            if (snap.minReader >= 3) {
-              val rfa = pb.putArray("readerFeatures")
-              snap.readerFeatures.toSeq.sorted.foreach(rfa.add)
-            }
-            val wfa = pb.putArray("writerFeatures")
-            (snap.writerFeatures ++ missing).toSeq.sorted.foreach(wfa.add)
-            lines += mapper.writeValueAsString(p)
-          }
-        } else {
-          val target = needs.map(_._2).max
-          if (target >= 7) {
+      if (newConf == snap.configuration) Txn.Done(snap.version)
+      else {
+        val now = System.currentTimeMillis
+        val lines = Seq.newBuilder[String]
+        lines += commitInfoLine(now, "SET TBLPROPERTIES", "properties" ->
+          mapper.writeValueAsString(mapper.valueToTree(newConf): com.fasterxml.jackson.databind.JsonNode))
+        // property-gated features need the protocol to carry them:
+        // enabling CDF → changeDataFeed (legacy minWriter 4), adding a
+        // delta.constraints.* key → checkConstraints (legacy minWriter 3),
+        // enabling ICT → inCommitTimestamp (table-features only: 7)
+        // ROW TRACKING enablement (delta.enableRowTracking = true): the
+        // protocol gains rowTracking + domainMetadata (the hwm domain
+        // lives there), and every live file that carries no baseRowId is
+        // BACKFILLED — re-added dataChange=false in this same commit so
+        // [[stampRowTracking]] assigns it a fresh range (delta-spark's
+        // ALTER TABLE enablement runs the same backfill). Zero data I/O:
+        // the re-adds are log actions over the existing files.
+        val enablingRowTracking = set.get("delta.enableRowTracking")
+          .exists(_.equalsIgnoreCase("true")) &&
+          !(snap.minWriter >= 7 && snap.writerFeatures.contains("rowTracking"))
+        val needs = Seq(
+          "changeDataFeed" -> (4, set.get("delta.enableChangeDataFeed")
+            .exists(_.equalsIgnoreCase("true"))),
+          "checkConstraints" -> (3, set.keys.exists(_.startsWith("delta.constraints."))),
+          "inCommitTimestamp" -> (7, enablingIct),
+          "rowTracking" -> (7, enablingRowTracking),
+          "domainMetadata" -> (7, enablingRowTracking &&
+            !(snap.minWriter >= 7 && snap.writerFeatures.contains("domainMetadata"))))
+          .collect { case (f, (lv, true)) => f -> lv }
+        // `delta.checkpointPolicy = v2` requires the v2Checkpoint READER
+        // feature (spec: the policy is illegal without it) — upgrade to
+        // the table-features protocol in the same commit, folding any
+        // writer features this call also needs into the one protocol
+        // action (two protocol lines would clobber each other)
+        val needV2Ckpt = set.get("delta.checkpointPolicy").contains("v2") &&
+          !(snap.minReader >= 3 && snap.readerFeatures.contains("v2Checkpoint"))
+        // VARIANT SHREDDING opt-in (`delta.enableVariantShredding=true`,
+        // delta-spark's preview property): future variant writes keep
+        // Spark's shredded layout ([[writeDataFiles]] stops pinning it
+        // off), which the variantShredding-preview READER feature gates —
+        // and shredded files are still variant files, so the base
+        // variantType feature rides along when missing.
+        val needVarShred = set.get("delta.enableVariantShredding")
+          .exists(_.equalsIgnoreCase("true")) &&
+          !(snap.minReader >= 3 &&
+            snap.readerFeatures.contains("variantShredding-preview"))
+        val readerNeeds =
+          (if (needV2Ckpt) Seq("v2Checkpoint") else Nil) ++
+          (if (needVarShred)
+            Seq("variantShredding-preview") ++
+              (if (snap.minReader >= 3 && snap.readerFeatures.contains("variantType")) Nil
+               else Seq("variantType"))
+           else Nil)
+        if (readerNeeds.nonEmpty) {
+          protocolUpgradeToAll(snap, readerNeeds, needs.map(_._1)).foreach(lines += _)
+        } else if (needs.nonEmpty) {
+          if (snap.minWriter >= 7) {
+            val missing = needs.map(_._1).filterNot(snap.writerFeatures.contains)
+            if (missing.nonEmpty) lines += withWriterFeatures(snap, missing)
+          } else {
+            val target = needs.map(_._2).max
             // a v7-only feature (inCommitTimestamp) on a legacy table:
             // minWriter 7 REQUIRES the writerFeatures list, so expand
             // the legacy versions to their implied names and add the
             // needed features — reader version stays untouched
-            val legacyWriter = impliedWriterFeatures(snap.minWriter)
-            val p = mapper.createObjectNode
-            val pb = p.putObject("protocol")
-            pb.put("minReaderVersion", snap.minReader)
-            pb.put("minWriterVersion", 7)
-            val wfa = pb.putArray("writerFeatures")
-            (legacyWriter ++ needs.map(_._1)).distinct.sorted.foreach(wfa.add)
-            lines += mapper.writeValueAsString(p)
-          } else if (snap.minWriter < target) {
-            val p = mapper.createObjectNode
-            val pb = p.putObject("protocol")
-            pb.put("minReaderVersion", snap.minReader)
-            pb.put("minWriterVersion", target)
-            lines += mapper.writeValueAsString(p)
+            if (target >= 7) lines += withWriterFeatures(snap, needs.map(_._1))
+            else if (snap.minWriter < target) lines += protocolLine(snap.minReader, target)
           }
         }
-      }
-      val md = mapper.createObjectNode
-      val mdb = md.putObject("metaData")
-      mdb.put("id", Option(snap.metaId).getOrElse(java.util.UUID.randomUUID.toString))
-      val fmt = mdb.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      mdb.put("schemaString", snap.schema.json)
-      val pc = mdb.putArray("partitionColumns")
-      snap.partitionColumns.foreach(pc.add)
-      val cfg = mdb.putObject("configuration")
-      newConf.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-      mdb.put("createdTime", now)
-      lines += mapper.writeValueAsString(md)
-      // row-tracking backfill: re-add every live file lacking ids
-      // (dataChange=false; pv keys go back to PHYSICAL under mapping) —
-      // stampRowTracking below assigns the ranges and the hwm domain
-      if (enablingRowTracking) {
-        snap.files.keys.toSeq.sorted
-          .filterNot(snap.rowIds.contains).foreach { rel =>
-            val ad = mapper.createObjectNode
-            val adb = ad.putObject("add")
-            adb.put("path", encodePath(rel))
-            val pv = adb.putObject("partitionValues")
-            snap.files(rel).foreach { case (k, v) =>
-              val pk = snap.colMap.getOrElse(k, k)
-              if (v == null) pv.putNull(pk) else pv.put(pk, v)
-            }
-            adb.put("size", snap.sizes.getOrElse(rel, -1L))
-            adb.put("modificationTime", now)
-            adb.put("dataChange", false)
-            snap.stats.get(rel).foreach(adb.put("stats", _))
-            snap.dvs.get(rel).foreach(putDv(adb, _))
-            lines += mapper.writeValueAsString(ad)
-          }
-      }
-      // plain CAS: the commitInfo above already carries the ICT stamp
-      // (recomputed per attempt) when the table pins or gains it
-      val content = stampRowTracking(next, lines.result().mkString("\n") + "\n",
-        Some(snap))
-      if (graft.pipeline.VersionedTable.casPublish(
-            fs, new Path(logP, f"$next%020d.json"), content)) {
-        writeVersionChecksum(fs, logP, next, content, Some(snap))
-        return next
+        lines += metaDataLine(snap.metaId, snap.schema.json, snap.partitionColumns, newConf, now)
+        // row-tracking backfill: re-add every live file lacking ids
+        // (dataChange=false; pv keys go back to PHYSICAL under mapping) —
+        // the publish step's stampRowTracking assigns the ranges and the
+        // hwm domain
+        if (enablingRowTracking)
+          lines ++= snap.files.keys.toSeq.sorted.filterNot(snap.rowIds.contains).map(rel =>
+            addLive(snap, rel, now, dataChange = false, snap.dvs.get(rel)))
+        publishCommit(spark, rootP, Some(snap), commitLines(lines.result()), newConf, ict = ict)
       }
     }
-    throw new IllegalStateException(
-      s"SET TBLPROPERTIES at $path lost the commit race 20 times — another " +
-        "writer is committing continuously; retry later")
   }
 
   /** Set (or update) one metadata DOMAIN (writer feature
@@ -3395,58 +3013,23 @@ object DeltaWrite {
                                  operation: String): Long = {
     require(domain != null && domain.nonEmpty, "domain must be non-empty")
     val rootP = qualifiedRoot(spark, path)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
+    Txn.run(rootP.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        s"$operation at $path") { _ =>
       val snap = DeltaRead.snapshot(spark, rootP.toString)
       requireWritable(snap, path, removesData = false)
-      if (removed && !snap.domains.contains(domain)) return snap.version
-      val next = snap.version + 1
-      val lines = Seq.newBuilder[String]
-      val ci = mapper.createObjectNode
-      val cib = ci.putObject("commitInfo")
-      cib.put("timestamp", System.currentTimeMillis)
-      cib.put("operation", operation)
-      val op = cib.putObject("operationParameters")
-      op.put("domain", domain)
-      cib.put("engineInfo", "graft-delta-writer/1.0")
-      lines += mapper.writeValueAsString(ci)
-      // first domain write on a table without the feature: upgrade to
-      // the v7 features form carrying it (legacy writer versions
-      // expand to their implied feature names, same as the ICT upgrade)
-      val hasFeature = snap.minWriter >= 7 && snap.writerFeatures.contains("domainMetadata")
-      if (!hasFeature) {
-        val existing = if (snap.minWriter >= 7) snap.writerFeatures.toSeq
-          else impliedWriterFeatures(snap.minWriter)
-        val p = mapper.createObjectNode
-        val pb = p.putObject("protocol")
-        pb.put("minReaderVersion", snap.minReader)
-        pb.put("minWriterVersion", 7)
-        if (snap.minReader >= 3) {
-          val rfa = pb.putArray("readerFeatures")
-          snap.readerFeatures.toSeq.sorted.foreach(rfa.add)
-        }
-        val wfa = pb.putArray("writerFeatures")
-        (existing :+ "domainMetadata").distinct.sorted.foreach(wfa.add)
-        lines += mapper.writeValueAsString(p)
-      }
-      val dm = mapper.createObjectNode
-      val dmb = dm.putObject("domainMetadata")
-      dmb.put("domain", domain)
-      dmb.put("configuration", Option(configuration).getOrElse(""))
-      dmb.put("removed", removed)
-      lines += mapper.writeValueAsString(dm)
-      if (publishCommit(fs, logP, next, lines.result().mkString("\n") + "\n",
-            snap.configuration, Some(snap))) {
-        autoCheckpoint(spark, rootP.toString, next, snap.configuration)
-        return next
+      if (removed && !snap.domains.contains(domain)) Txn.Done(snap.version)
+      else {
+        // first domain write on a table without the feature: upgrade to
+        // the v7 features form carrying it (legacy writer versions
+        // expand to their implied feature names, same as the ICT upgrade)
+        val hasFeature = snap.minWriter >= 7 && snap.writerFeatures.contains("domainMetadata")
+        publishCommit(spark, rootP, Some(snap), commitLines(
+          Seq(commitInfoLine(System.currentTimeMillis, operation, "domain" -> domain)) ++
+            (if (hasFeature) None else Some(withWriterFeatures(snap, Seq("domainMetadata")))) ++
+            Seq(domainLine(domain, Option(configuration).getOrElse(""), removed))),
+          snap.configuration)
       }
     }
-    throw new IllegalStateException(
-      s"$operation at $path lost the commit race 20 times — another writer is " +
-        "committing continuously; retry later")
   }
 
   /** OPTIMIZE-style rewrite. `zorderBy` turns it into OPTIMIZE ZORDER
@@ -3466,7 +3049,6 @@ object DeltaWrite {
     require(zorderFiles >= 1, s"zorderFiles must be >= 1: $zorderFiles")
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
     var snap = DeltaRead.snapshot(spark, rootP.toString)
     // dataChange=false repackaging — permitted on append-only tables;
     // column-mapped tables rewrite through toPhysical (logical scan,
@@ -3572,11 +3154,27 @@ object DeltaWrite {
       writeDataFiles(spark, physDf, rootP, fs, physParts,
         shredOk = shredOptIn(snap)))
 
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    // the data job runs once: an appends-only competitor just moves the
+    // commit to the next version; the staged files are reclaimed only
+    // if the call ends without a win
+    Txn.run(fs, s"Delta compaction at $path",
+        staged = newFiles.map(f => new Path(rootP, f.relPath))) { attempt =>
+      if (attempt > 1) {
+        snap = DeltaRead.snapshot(spark, rootP.toString)
+        // stale if a folded file is GONE (rewritten/removed) or its DV
+        // IDENTITY moved (a concurrent DV DELETE soft-deleted rows this
+        // rewrite materialized as live — committing would resurrect them)
+        val stale = folded.exists { rel =>
+          !snap.files.contains(rel) ||
+            snap.dvs.get(rel).map(_.uniqueId).getOrElse("") != origDv(rel)
+        }
+        if (stale) throw new IllegalStateException(
+          s"Delta compaction at $path aborted: a concurrent commit removed, " +
+            "replaced or DV-deleted rows in a file this compaction folded — " +
+            "committing the rewrite would resurrect dead rows. Re-run the " +
+            "compaction against the new snapshot")
+      }
       val next = snap.version + 1
-      val removes = folded.toSeq.sorted
       // the marker claims "every file live at `next` is clustered" —
       // a competitor's files that appeared between the base snapshot
       // and this attempt would be live at `next` WITHOUT being
@@ -3585,37 +3183,12 @@ object DeltaWrite {
       // outputs; an under-claimed marker is always safe, an
       // over-claimed one skips files forever)
       val foreignNew = snap.files.keySet -- folded -- alreadyClustered
-      if (publishCommit(fs, logP, next,
-            compactContent(newFiles, removes, snap.dvs,
-              clusteredAt = if (implicitClustering && canMark && foreignNew.isEmpty)
-                Some(next) else None),
-            snap.configuration, Some(snap))) {
-        autoCheckpoint(spark, rootP.toString, next, snap.configuration)
-        return next
-      }
-      require(attempt < 50, s"Delta compaction at $path lost the version race " +
-        s"$attempt times — giving up; staged files are unreferenced")
-      snap = DeltaRead.snapshot(spark, rootP.toString)
-      // stale if a folded file is GONE (rewritten/removed) or its DV
-      // IDENTITY moved (a concurrent DV DELETE soft-deleted rows this
-      // rewrite materialized as live — committing would resurrect them)
-      val stale = folded.exists { rel =>
-        !snap.files.contains(rel) ||
-          snap.dvs.get(rel).map(_.uniqueId).getOrElse("") != origDv(rel)
-      }
-      if (stale) {
-        newFiles.foreach(f =>
-          try fs.delete(new Path(rootP, f.relPath), false)
-          catch { case scala.util.control.NonFatal(_) => () })
-        throw new IllegalStateException(
-          s"Delta compaction at $path aborted: a concurrent commit removed, " +
-            "replaced or DV-deleted rows in a file this compaction folded — " +
-            "committing the rewrite would resurrect dead rows. Re-run the " +
-            "compaction against the new snapshot")
-      }
-      // appends-only competitor: retry the same rewrite at the next version
+      publishCommit(spark, rootP, Some(snap),
+        compactContent(newFiles, folded.toSeq.sorted, snap.dvs,
+          clusteredAt = if (implicitClustering && canMark && foreignNew.isEmpty)
+            Some(next) else None),
+        snap.configuration)
     }
-    -1L // unreachable
   }
 
   /** RESTORE the table to the state of `toVersion` — delta-spark's
@@ -3640,11 +3213,8 @@ object DeltaWrite {
   def restore(spark: SparkSession, path: String, toVersion: Long): Long = {
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
     val target = DeltaRead.snapshot(spark, rootP.toString, Some(toVersion))
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
+    Txn.run(fs, s"RESTORE at $path") { _ =>
       val cur = DeltaRead.snapshot(spark, rootP.toString)
       requireWritable(cur, path, removesData = true, cdfHandled = true)
       // COLUMN MAPPING: physical names pin every file binding, so a
@@ -3666,91 +3236,82 @@ object DeltaWrite {
       if (cur.files == target.files && cur.dvs == target.dvs &&
           cur.schema.json == target.schema.json &&
           cur.partitionColumns == target.partitionColumns &&
-          cur.configuration == effConf) return cur.version // already there
-      // (config/partition-only drift past the file check → restoreContent
-      // emits a metaData-only commit: restore restores config too)
-      // every re-instated file (and its on-disk DV) must still exist —
-      // vacuum may have reclaimed history past the retention window
-      val returning = (target.files.keySet -- cur.files.keySet).toSeq.sorted
-      returning.foreach { rel =>
-        require(fs.exists(new Path(rootP, rel)),
-          s"cannot restore $path to v$toVersion: data file $rel was already " +
-            "vacuumed — restore only reaches versions within the vacuum retention")
-      }
-      target.dvs.foreach { case (rel, d) =>
-        if (d.storageType == "u")
-          require(fs.exists(DeletionVectors.onDiskPath(rootP, d.pathOrInlineDv)),
-            s"cannot restore $path to v$toVersion: the deletion vector of $rel " +
-              "was already vacuumed")
-      }
-      // CHANGE DATA FEED: a restore's changes are the retired files'
-      // LIVE rows (deletes) plus the re-instated files' live rows
-      // (inserts) — delta-spark RESTORE's file-granular CDC shape (a
-      // DV-only change reports its file as delete-all + insert-all
-      // churn; consumers key-reconcile). Rows land under the TARGET's
-      // schema/layout (what the table has after this commit); old-only
-      // columns null out, the same by-name rule the span reader uses.
-      // This is the one restore path that is not zero-data-I/O — it
-      // reads exactly the changed files once.
-      val cdcFiles: Seq[NewFile] =
-        if (!cdfEnabled(cur)) Nil
-        else {
-          def uid(m: Map[String, DeletionVectors.Descriptor], rel: String): String =
-            m.get(rel).map(_.uniqueId).getOrElse("")
-          val rm = cur.files.keySet.filter(rel =>
-            !target.files.contains(rel) || uid(cur.dvs, rel) != uid(target.dvs, rel))
-          val ad = target.files.keySet.filter(rel =>
-            !cur.files.contains(rel) || uid(cur.dvs, rel) != uid(target.dvs, rel))
-          // rowTracking: both sides' ids are attributable — retired
-          // rows carry the HEAD's ids, re-instated rows the target
-          // version's (restore re-adds embed their original baseRowId)
-          // — so the cdc rows key the id-surfacing CDF read directly
-          def canIds(s: DeltaRead.Snapshot, rels: Set[String]): Boolean =
-            s.minWriter >= 7 && s.writerFeatures.contains("rowTracking") &&
-              rels.forall(s.rowIds.contains)
-          def slice(s: DeltaRead.Snapshot, rels: Set[String]): DataFrame = {
-            val sub = s.copy(files = s.files.filter(kv => rels.contains(kv._1)))
-            if (canIds(s, rels))
-              DeltaRead.readSnapshotRowIds(spark, rootP.toString, sub,
-                DeltaRead.CdcRowIdCol)
-            else DeltaRead.readSnapshot(spark, rootP.toString, sub)
-          }
-          val pieces = Seq.newBuilder[DataFrame]
-          if (rm.nonEmpty)
-            pieces += slice(cur, rm).withColumn("_change_type", lit("delete"))
-          if (ad.nonEmpty)
-            pieces += slice(target, ad).withColumn("_change_type", lit("insert"))
-          pieces.result().reduceOption((a, b) =>
-            a.unionByName(b, allowMissingColumns = true)) match {
-            case None => Nil
-            case Some(ch) =>
-              val aligned = ch.select(
-                target.schema.fieldNames.map(n =>
-                  if (ch.columns.exists(_.equalsIgnoreCase(n))) col(n)
-                  else lit(null).cast(target.schema(n).dataType).as(n))
-                ++ Seq(col("_change_type")) ++
-                (if (ch.columns.contains(DeltaRead.CdcRowIdCol))
-                  Seq(col(DeltaRead.CdcRowIdCol)) else Nil): _*)
-              if (aligned.isEmpty) Nil
-              else writeCdcFiles(spark, target, aligned, rootP, fs)
-          }
+          cur.configuration == effConf) Txn.Done(cur.version) // already there
+      else {
+        // (config/partition-only drift past the file check → restoreContent
+        // emits a metaData-only commit: restore restores config too)
+        // every re-instated file (and its on-disk DV) must still exist —
+        // vacuum may have reclaimed history past the retention window
+        val returning = (target.files.keySet -- cur.files.keySet).toSeq.sorted
+        returning.foreach { rel =>
+          require(fs.exists(new Path(rootP, rel)),
+            s"cannot restore $path to v$toVersion: data file $rel was already " +
+              "vacuumed — restore only reaches versions within the vacuum retention")
         }
-      val next = cur.version + 1
-      if (publishCommit(fs, logP, next,
-            restoreContent(cur, target, toVersion, cdcFiles, effConf),
-            effConf, Some(cur))) {
-        autoCheckpoint(spark, rootP.toString, next, effConf)
-        return next
+        target.dvs.foreach { case (rel, d) =>
+          if (d.storageType == "u")
+            require(fs.exists(DeletionVectors.onDiskPath(rootP, d.pathOrInlineDv)),
+              s"cannot restore $path to v$toVersion: the deletion vector of $rel " +
+                "was already vacuumed")
+        }
+        // CHANGE DATA FEED: a restore's changes are the retired files'
+        // LIVE rows (deletes) plus the re-instated files' live rows
+        // (inserts) — delta-spark RESTORE's file-granular CDC shape (a
+        // DV-only change reports its file as delete-all + insert-all
+        // churn; consumers key-reconcile). Rows land under the TARGET's
+        // schema/layout (what the table has after this commit); old-only
+        // columns null out, the same by-name rule the span reader uses.
+        // This is the one restore path that is not zero-data-I/O — it
+        // reads exactly the changed files once.
+        val cdcFiles: Seq[NewFile] =
+          if (!cdfEnabled(cur)) Nil
+          else {
+            def uid(m: Map[String, DeletionVectors.Descriptor], rel: String): String =
+              m.get(rel).map(_.uniqueId).getOrElse("")
+            val rm = cur.files.keySet.filter(rel =>
+              !target.files.contains(rel) || uid(cur.dvs, rel) != uid(target.dvs, rel))
+            val ad = target.files.keySet.filter(rel =>
+              !cur.files.contains(rel) || uid(cur.dvs, rel) != uid(target.dvs, rel))
+            // rowTracking: both sides' ids are attributable — retired
+            // rows carry the HEAD's ids, re-instated rows the target
+            // version's (restore re-adds embed their original baseRowId)
+            // — so the cdc rows key the id-surfacing CDF read directly
+            def canIds(s: DeltaRead.Snapshot, rels: Set[String]): Boolean =
+              s.minWriter >= 7 && s.writerFeatures.contains("rowTracking") &&
+                rels.forall(s.rowIds.contains)
+            def slice(s: DeltaRead.Snapshot, rels: Set[String]): DataFrame = {
+              val sub = s.copy(files = s.files.filter(kv => rels.contains(kv._1)))
+              if (canIds(s, rels))
+                DeltaRead.readSnapshotRowIds(spark, rootP.toString, sub,
+                  DeltaRead.CdcRowIdCol)
+              else DeltaRead.readSnapshot(spark, rootP.toString, sub)
+            }
+            val pieces = Seq.newBuilder[DataFrame]
+            if (rm.nonEmpty)
+              pieces += slice(cur, rm).withColumn("_change_type", lit("delete"))
+            if (ad.nonEmpty)
+              pieces += slice(target, ad).withColumn("_change_type", lit("insert"))
+            pieces.result().reduceOption((a, b) =>
+              a.unionByName(b, allowMissingColumns = true)) match {
+              case None => Nil
+              case Some(ch) =>
+                val aligned = ch.select(
+                  target.schema.fieldNames.map(n =>
+                    if (ch.columns.exists(_.equalsIgnoreCase(n))) col(n)
+                    else lit(null).cast(target.schema(n).dataType).as(n))
+                  ++ Seq(col("_change_type")) ++
+                  (if (ch.columns.contains(DeltaRead.CdcRowIdCol))
+                    Seq(col(DeltaRead.CdcRowIdCol)) else Nil): _*)
+                if (aligned.isEmpty) Nil
+                else writeCdcFiles(spark, target, aligned, rootP, fs)
+            }
+          }
+        // a lost race re-derives against the winner's head (the staged
+        // cdc files are stale against it and get reclaimed)
+        publishCommit(spark, rootP, Some(cur),
+          restoreContent(cur, target, toVersion, cdcFiles, effConf), effConf, cdcFiles)
       }
-      // lost the race: re-derive against the winner's head (the staged
-      // cdc files are stale against it — reclaim)
-      cdcFiles.foreach(f =>
-        try fs.delete(new Path(rootP, f.relPath), false)
-        catch { case scala.util.control.NonFatal(_) => () })
     }
-    throw new IllegalStateException(
-      s"RESTORE at $path lost the commit race 20 times — another writer is " +
-        "committing continuously; retry later")
   }
 
   private def restoreContent(cur: DeltaRead.Snapshot, target: DeltaRead.Snapshot,
@@ -3760,33 +3321,15 @@ object DeltaWrite {
     val restoredConf = Option(effConf).getOrElse(target.configuration)
     val now = System.currentTimeMillis
     val lines = Seq.newBuilder[String]
-    val ci = mapper.createObjectNode
-    val cib = ci.putObject("commitInfo")
-    cib.put("timestamp", now)
-    cib.put("operation", "RESTORE")
-    cib.putObject("operationParameters").put("version", toVersion)
-    cib.put("engineInfo", "graft-delta-writer/1.0")
-    lines += mapper.writeValueAsString(ci)
+    lines += commitInfoLine(now, "RESTORE", "version" -> toVersion)
     cdcFiles.foreach(f => lines += cdcLine(f, now))
     // metaData re-emit when schema/partitioning drifted — CARRYING the
     // table id and the TARGET's configuration (restore restores config)
     if (cur.schema.json != target.schema.json ||
         cur.partitionColumns != target.partitionColumns ||
-        cur.configuration != restoredConf) {
-      val md = mapper.createObjectNode
-      val mdb = md.putObject("metaData")
-      mdb.put("id", Option(cur.metaId).getOrElse(java.util.UUID.randomUUID.toString))
-      val fmt = mdb.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      mdb.put("schemaString", target.schema.json)
-      val pc = mdb.putArray("partitionColumns")
-      target.partitionColumns.foreach(pc.add)
-      val cfg = mdb.putObject("configuration")
-      restoredConf.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-      mdb.put("createdTime", now)
-      lines += mapper.writeValueAsString(md)
-    }
+        cur.configuration != restoredConf)
+      lines += metaDataLine(cur.metaId, target.schema.json, target.partitionColumns,
+        restoredConf, now)
     // a file is "the same" only as (path, dv identity) — a file whose
     // DV CHANGED retires its current identity and re-adds the target's
     def uid(m: Map[String, DeletionVectors.Descriptor], rel: String): String =
@@ -3795,42 +3338,15 @@ object DeltaWrite {
       !target.files.contains(rel) || uid(cur.dvs, rel) != uid(target.dvs, rel))
     val toAdd = target.files.keySet.filter(rel =>
       !cur.files.contains(rel) || uid(cur.dvs, rel) != uid(target.dvs, rel))
-    toRemove.toSeq.sorted.foreach { rel =>
-      val rm = mapper.createObjectNode
-      val rmb = rm.putObject("remove")
-      rmb.put("path", encodePath(rel))
-      rmb.put("deletionTimestamp", now)
-      rmb.put("dataChange", true)
-      cur.dvs.get(rel).foreach(putDv(rmb, _))
-      lines += mapper.writeValueAsString(rm)
-    }
-    toAdd.toSeq.sorted.foreach { rel =>
-      val ad = mapper.createObjectNode
-      val adb = ad.putObject("add")
-      adb.put("path", encodePath(rel))
-      val pv = adb.putObject("partitionValues")
-      // Snapshot pv keys are LOGICAL; the log's are PHYSICAL under
-      // column mapping — translate back on the way out (delete's rule)
-      target.files(rel).foreach { case (k, v) =>
-        val pk = target.colMap.getOrElse(k, k)
-        if (v == null) pv.putNull(pk) else pv.put(pk, v)
-      }
-      adb.put("size", target.sizes.getOrElse(rel, -1L))
-      adb.put("modificationTime", now)
-      adb.put("dataChange", true)
-      target.stats.get(rel).foreach(adb.put("stats", _))
-      target.dvs.get(rel).foreach(putDv(adb, _))
-      // row tracking: a restored file's rows are the SAME physical rows
-      // they were at the target version — embed their original ids so
-      // stampRowTracking carries instead of reassigning (the hwm only
-      // ever rises, so the old range is still covered)
-      target.rowIds.get(rel).foreach { case (brid, dcv) =>
-        adb.put("baseRowId", brid)
-        if (dcv >= 0L) adb.put("defaultRowCommitVersion", dcv)
-      }
-      lines += mapper.writeValueAsString(ad)
-    }
-    lines.result().mkString("\n") + "\n"
+    lines ++= toRemove.toSeq.sorted.map(rel =>
+      removeLine(rel, now, dataChange = true, cur.dvs.get(rel)))
+    // row tracking: a restored file's rows are the SAME physical rows
+    // they were at the target version — embed their original ids so
+    // stampRowTracking carries instead of reassigning (the hwm only
+    // ever rises, so the old range is still covered)
+    lines ++= toAdd.toSeq.sorted.map(rel => addLive(target, rel, now, dataChange = true,
+      target.dvs.get(rel), target.rowIds.get(rel)))
+    commitLines(lines.result())
   }
 
   /** MATERIALIZE-DVs-ONLY OPTIMIZE (delta-spark's `REORG TABLE …
@@ -3857,7 +3373,6 @@ object DeltaWrite {
       s"minDeletedFraction must be in [0,1]: $minDeletedFraction")
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
     var snap = DeltaRead.snapshot(spark, rootP.toString)
     requireWritable(snap, path, removesData = false)
 
@@ -3884,35 +3399,23 @@ object DeltaWrite {
     val origDv: Map[String, String] = dirty.map(rel =>
       rel -> snap.dvs(rel).uniqueId).toMap
 
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val next = snap.version + 1
-      if (publishCommit(fs, logP, next,
-            compactContent(newFiles, dirty, snap.dvs),
-            snap.configuration, Some(snap))) {
-        autoCheckpoint(spark, rootP.toString, next, snap.configuration)
-        return next
-      }
-      require(attempt < 50, s"Delta DV purge at $path lost the version race " +
-        s"$attempt times — giving up; staged files are unreferenced")
-      snap = DeltaRead.snapshot(spark, rootP.toString)
-      val stale = dirty.exists { rel =>
-        !snap.files.contains(rel) ||
-          !snap.dvs.get(rel).map(_.uniqueId).contains(origDv(rel))
-      }
-      if (stale) {
-        newFiles.foreach(f =>
-          try fs.delete(new Path(rootP, f.relPath), false)
-          catch { case scala.util.control.NonFatal(_) => () })
-        throw new IllegalStateException(
+    // appends-only competitors just move the commit to the next version
+    Txn.run(fs, s"Delta DV purge at $path",
+        staged = newFiles.map(f => new Path(rootP, f.relPath))) { attempt =>
+      if (attempt > 1) {
+        snap = DeltaRead.snapshot(spark, rootP.toString)
+        val stale = dirty.exists { rel =>
+          !snap.files.contains(rel) ||
+            !snap.dvs.get(rel).map(_.uniqueId).contains(origDv(rel))
+        }
+        if (stale) throw new IllegalStateException(
           s"Delta DV purge at $path aborted: a concurrent commit changed a folded " +
             "file or its deletion vector — committing the rewrite would resurrect " +
             "deleted rows. Re-run the purge against the new snapshot")
       }
-      // appends-only competitor: retry the same rewrite at the next version
+      publishCommit(spark, rootP, Some(snap), compactContent(newFiles, dirty, snap.dvs),
+        snap.configuration)
     }
-    -1L // unreachable
   }
 
   /** Re-serialize a live deletionVector descriptor into a remove
@@ -3920,8 +3423,7 @@ object DeltaWrite {
     * the remove to name EXACTLY the dv identity it retires, including
     * offset PRESENCE (delta's uniqueId distinguishes absent from 0).
     */
-  private def putDv(rmb: com.fasterxml.jackson.databind.node.ObjectNode,
-                    d: DeletionVectors.Descriptor): Unit = {
+  private def putDv(rmb: ObjectNode, d: DeletionVectors.Descriptor): Unit = {
     val dv = rmb.putObject("deletionVector")
     dv.put("storageType", d.storageType)
     dv.put("pathOrInlineDv", d.pathOrInlineDv)
@@ -3939,45 +3441,150 @@ object DeltaWrite {
                              dvs: Map[String, DeletionVectors.Descriptor],
                              clusteredAt: Option[Long] = None): String = {
     val now = System.currentTimeMillis
-    val lines = Seq.newBuilder[String]
-    val ci = mapper.createObjectNode
-    val cib = ci.putObject("commitInfo")
-    cib.put("timestamp", now)
-    cib.put("operation", "OPTIMIZE")
-    cib.put("engineInfo", "graft-delta-writer/1.0")
-    lines += mapper.writeValueAsString(ci)
-    clusteredAt.foreach { v =>
-      val dm = mapper.createObjectNode
-      val dmb = dm.putObject("domainMetadata")
-      dmb.put("domain", ClusteredAtDomain)
-      dmb.put("configuration", s"""{"version":$v}""")
-      dmb.put("removed", false)
-      lines += mapper.writeValueAsString(dm)
-    }
-    removes.foreach { p =>
-      val rm = mapper.createObjectNode
-      val rmb = rm.putObject("remove")
-      rmb.put("path", encodePath(p))
-      rmb.put("deletionTimestamp", now)
-      rmb.put("dataChange", false)
-      dvs.get(p).foreach(putDv(rmb, _))
-      lines += mapper.writeValueAsString(rm)
-    }
-    adds.foreach { f =>
-      val ad = mapper.createObjectNode
-      val adb = ad.putObject("add")
-      adb.put("path", encodePath(f.relPath))
-      val pv = adb.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
+    commitLines(commitInfoLine(now, "OPTIMIZE") +:
+      (clusteredAt.map(v => domainLine(ClusteredAtDomain, s"""{"version":$v}""",
+        removed = false)).toSeq ++
+        fileActions(now, removes, dvs, adds, dataChange = false)))
+  }
+
+  // ----- log actions: one serializer per action kind -------------------
+
+  private type ObjectNode = com.fasterxml.jackson.databind.node.ObjectNode
+
+  /** Commit content: one action per line, newline-terminated. */
+  private def commitLines(actions: Seq[String]): String = actions.mkString("\n") + "\n"
+
+  private def actionLine(kind: String, body: ObjectNode): String = {
+    val n = mapper.createObjectNode
+    n.set[com.fasterxml.jackson.databind.JsonNode](kind, body)
+    mapper.writeValueAsString(n)
+  }
+
+  /** `commitInfo`; `params` become `operationParameters` (omitted when
+    * empty). The protocol wants it as each commit's FIRST action.
+    */
+  private def commitInfoLine(now: Long, operation: String, params: (String, Any)*): String = {
+    val b = mapper.createObjectNode
+    b.put("timestamp", now)
+    b.put("operation", operation)
+    if (params.nonEmpty) {
+      val op = b.putObject("operationParameters")
+      params.foreach {
+        case (k, v: Long) => op.put(k, v)
+        case (k, v) => op.put(k, v.toString)
       }
-      adb.put("size", f.size)
-      adb.put("modificationTime", f.modificationTime)
-      adb.put("dataChange", false)
-      if (f.stats != null) adb.put("stats", f.stats)
-      lines += mapper.writeValueAsString(ad)
     }
-    lines.result().mkString("\n") + "\n"
+    b.put("engineInfo", "graft-delta-writer/1.0")
+    actionLine("commitInfo", b)
+  }
+
+  private def addLine(rel: String, partitionValues: Iterable[(String, String)], size: Long,
+                      modificationTime: Long, dataChange: Boolean, stats: Option[String],
+                      dv: Option[DeletionVectors.Descriptor] = None,
+                      rowIds: Option[(Long, Long)] = None): String = {
+    val b = mapper.createObjectNode
+    b.put("path", encodePath(rel))
+    val pv = b.putObject("partitionValues")
+    partitionValues.foreach { case (k, v) => if (v == null) pv.putNull(k) else pv.put(k, v) }
+    b.put("size", size)
+    b.put("modificationTime", modificationTime)
+    b.put("dataChange", dataChange)
+    stats.foreach(b.put("stats", _))
+    dv.foreach(putDv(b, _))
+    rowIds.foreach { case (brid, dcv) =>
+      b.put("baseRowId", brid)
+      if (dcv >= 0L) b.put("defaultRowCommitVersion", dcv)
+    }
+    actionLine("add", b)
+  }
+
+  /** An add for a file this commit wrote. */
+  private def addNew(f: NewFile, dataChange: Boolean = true): String =
+    addLine(f.relPath, f.partitionValues, f.size, f.modificationTime, dataChange,
+      Option(f.stats))
+
+  /** A re-add of snapshot `s`'s file `rel`. Snapshot partition-value
+    * keys are LOGICAL; the log's are PHYSICAL under column mapping —
+    * translated back on the way out.
+    */
+  private def addLive(s: DeltaRead.Snapshot, rel: String, now: Long, dataChange: Boolean,
+                      dv: Option[DeletionVectors.Descriptor],
+                      rowIds: Option[(Long, Long)] = None): String =
+    addLine(rel, s.files(rel).toSeq.map { case (k, v) => s.colMap.getOrElse(k, k) -> v },
+      s.sizes.getOrElse(rel, -1L), now, dataChange, s.stats.get(rel), dv, rowIds)
+
+  private def removeLine(rel: String, now: Long, dataChange: Boolean,
+                         dv: Option[DeletionVectors.Descriptor]): String = {
+    val b = mapper.createObjectNode
+    b.put("path", encodePath(rel))
+    b.put("deletionTimestamp", now)
+    b.put("dataChange", dataChange)
+    dv.foreach(putDv(b, _))
+    actionLine("remove", b)
+  }
+
+  /** Removes (each carrying its live DV) then adds of a file-rewriting
+    * commit.
+    */
+  private def fileActions(now: Long, removes: Seq[String],
+                          dvs: Map[String, DeletionVectors.Descriptor],
+                          adds: Seq[NewFile], dataChange: Boolean): Seq[String] =
+    removes.map(p => removeLine(p, now, dataChange, dvs.get(p))) ++
+      adds.map(addNew(_, dataChange))
+
+  private def metaDataNode(id: String, schemaJson: String, partitionColumns: Seq[String],
+                           configuration: Map[String, String]): ObjectNode = {
+    val b = mapper.createObjectNode
+    b.put("id", id)
+    val fmt = b.putObject("format")
+    fmt.put("provider", "parquet")
+    fmt.putObject("options")
+    b.put("schemaString", schemaJson)
+    val pc = b.putArray("partitionColumns")
+    partitionColumns.foreach(pc.add)
+    val cfg = b.putObject("configuration")
+    configuration.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
+    b
+  }
+
+  /** `metaData` carrying table id `metaId` (a fresh one when null). */
+  private def metaDataLine(metaId: String, schemaJson: String, partitionColumns: Seq[String],
+                           configuration: Map[String, String], now: Long): String = {
+    val b = metaDataNode(Option(metaId).getOrElse(java.util.UUID.randomUUID.toString),
+      schemaJson, partitionColumns, configuration)
+    b.put("createdTime", now)
+    actionLine("metaData", b)
+  }
+
+  /** Protocol versions plus the feature lists (sorted, deduplicated),
+    * each omitted when None.
+    */
+  private def protocolNode(minReader: Int, minWriter: Int,
+                           readerFeatures: Option[Iterable[String]],
+                           writerFeatures: Option[Iterable[String]]): ObjectNode = {
+    val b = mapper.createObjectNode
+    b.put("minReaderVersion", minReader)
+    b.put("minWriterVersion", minWriter)
+    readerFeatures.foreach { fs =>
+      val a = b.putArray("readerFeatures"); fs.toSeq.distinct.sorted.foreach(a.add)
+    }
+    writerFeatures.foreach { fs =>
+      val a = b.putArray("writerFeatures"); fs.toSeq.distinct.sorted.foreach(a.add)
+    }
+    b
+  }
+
+  private def protocolLine(minReader: Int, minWriter: Int,
+                           readerFeatures: Option[Iterable[String]] = None,
+                           writerFeatures: Option[Iterable[String]] = None): String =
+    actionLine("protocol", protocolNode(minReader, minWriter, readerFeatures, writerFeatures))
+
+  private def domainLine(domain: String, configuration: String, removed: Boolean): String = {
+    val b = mapper.createObjectNode
+    b.put("domain", domain)
+    b.put("configuration", configuration)
+    b.put("removed", removed)
+    actionLine("domainMetadata", b)
   }
 
   /** Physically delete files no longer referenced by the CURRENT

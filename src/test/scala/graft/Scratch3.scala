@@ -231,10 +231,10 @@ object Scratch3 {
         val writers = 8
         val t1 = System.nanoTime()
         Await.result(Future.sequence((1 to writers).map(i => Future {
-          // maxAttempts >= writers: the unluckiest of 8 racers can lose
-          // 7 straight pointer CASes legitimately
+          // the unluckiest of 8 racers can lose 7 straight pointer
+          // CASes legitimately — well under the shared commit cap
           VersionedTable.commitDelta(spark, root, "parquet",
-            delta.withColumn("__w", lit(i)), compactAfter = 64, maxAttempts = 16)
+            delta.withColumn("__w", lit(i)), compactAfter = 64)
         })), Duration(600, "s"))
         val wall = (System.nanoTime() - t1) / 1e9
         val vN = VersionedTable.currentSnapshot(spark, root).get

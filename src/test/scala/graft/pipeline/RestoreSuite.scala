@@ -82,7 +82,7 @@ class RestoreSuite extends SparkSpec {
     // compact so v1/v2's delta dirs become unreferenced by the head
     VersionedTable.compact(spark, root)
     val e = intercept[IllegalStateException] {
-      VersionedTable.restoreHooked(spark, root, 1L, maxAttempts = 5,
+      VersionedTable.restoreHooked(spark, root, 1L,
         // the racing vacuum lands AFTER validation, BEFORE the CAS
         afterValidate = () => VersionedTable.vacuum(spark, root, keep = 1, graceMs = 0L))
     }

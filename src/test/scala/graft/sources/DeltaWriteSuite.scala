@@ -174,6 +174,33 @@ class DeltaWriteSuite extends SparkSpec {
     assert(stats.get("nullCount").get("id").asLong() == 0L)
   }
 
+  test("auto-checkpoint: DELETE and UPDATE landing on the interval fold the log") {
+    val root = tmp()
+    DeltaWrite.append(spark, (1L to 5L).map(i => (i, s"r$i")).toDF("id", "v")
+      .coalesce(1), root)                                                          // v0
+    DeltaWrite.setProperties(spark, root, Map("delta.checkpointInterval" -> "3"))  // v1
+    DeltaWrite.append(spark, Seq((6L, "r6")).toDF("id", "v"), root)                // v2
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val logP = new org.apache.hadoop.fs.Path(root, "_delta_log")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def assertCheckpointAt(v: Long): Unit = {
+      assert(fs.exists(new org.apache.hadoop.fs.Path(logP, f"$v%020d.checkpoint.parquet")),
+        s"no checkpoint at v$v")
+      val ptr = graft.pipeline.VersionedTable.readSmall(fs,
+        new org.apache.hadoop.fs.Path(logP, "_last_checkpoint")).get
+      assert(mapper.readTree(ptr).get("version").asLong() == v)
+    }
+    assert(DeltaWrite.delete(spark, root, "id = 1") == 3L)
+    assertCheckpointAt(3L)
+    DeltaWrite.append(spark, Seq((7L, "r7")).toDF("id", "v"), root)                // v4
+    DeltaWrite.append(spark, Seq((8L, "r8")).toDF("id", "v"), root)                // v5
+    assert(DeltaWrite.update(spark, root, "id = 2", Map("v" -> "'B'")) == 6L)
+    assertCheckpointAt(6L)
+    assert(DeltaRead.read(spark, root).orderBy("id").select("v").as[String].collect()
+      .toSeq == Seq("B", "r3", "r4", "r5", "r6", "r7", "r8"))
+  }
+
   test("auto-checkpoint folds the log at the interval; pointer fast path serves reads") {
     val root = tmp()
     for (i <- 0 to 11) // v0..v11: auto-checkpoint fires at v10
@@ -3105,5 +3132,60 @@ class DeltaWriteSuite extends SparkSpec {
       .as[(Long, String)].collect().toMap
     assert(got.keySet == (0L until 10L).filter(_ % 2 == 1).toSet)
     assert(got(7L) == "x1")
+  }
+
+  /** Per version: operation, operationParameters keys, and the ordered
+    * action kinds — add/remove/cdc tagged with their dataChange flag,
+    * consecutive repeats collapsed so file counts do not matter.
+    */
+  private def logShape(root: String, v: Long): String = {
+    import scala.jdk.CollectionConverters._
+    val f = new java.io.File(new java.io.File(root.stripPrefix("file:"), "_delta_log"),
+      f"$v%020d.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val nodes = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      .split("\n").filter(_.trim.nonEmpty).map(mapper.readTree).toSeq
+    val kinds = nodes.map { n =>
+      val k = n.fieldNames().next()
+      if (n.get(k).has("dataChange")) s"$k:${n.get(k).get("dataChange").asBoolean}" else k
+    }.foldLeft(Vector.empty[String])((acc, k) => if (acc.lastOption.contains(k)) acc else acc :+ k)
+    val ci = nodes.head.get("commitInfo")
+    val params = Option(ci.get("operationParameters"))
+      .map(_.fieldNames().asScala.toSeq).getOrElse(Nil)
+    s"${ci.get("operation").asText} [${params.mkString(",")}] ${kinds.mkString(" ")}"
+  }
+
+  test("log shape: every commit kind writes its pinned action sequence") {
+    val root = tmp()
+    DeltaWrite.append(spark, Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
+      .toDF("id", "v").coalesce(1), root)                                          // v0
+    DeltaWrite.setProperties(spark, root, Map(
+      "delta.enableChangeDataFeed" -> "true", "delta.enableRowTracking" -> "true",
+      "delta.enableDeletionVectors" -> "true"))                                    // v1
+    DeltaWrite.delete(spark, root, "id = 1")                                       // v2
+    DeltaWrite.update(spark, root, "id = 2", Map("v" -> "'B'"))                    // v3
+    DeltaWrite.merge(spark, Seq((3L, "C"), (5L, "e")).toDF("id", "v").coalesce(1),
+      root, Seq("id"))                                                             // v4
+    DeltaWrite.setDomainMetadata(spark, root, "graft.test", "{}")                  // v5
+    DeltaWrite.compact(spark, root, targetFiles = 1)                               // v6
+    DeltaWrite.delete(spark, root, "id = 4")                                       // v7
+    DeltaWrite.purgeDvs(spark, root, minDeletedFraction = 0.0)                     // v8
+    DeltaWrite.restore(spark, root, 6L)                                            // v9
+    DeltaWrite.enableColumnMapping(spark, root)                                    // v10
+    val expected = Seq(
+      "WRITE [mode] commitInfo protocol metaData add:true",
+      "SET TBLPROPERTIES [properties] commitInfo protocol metaData add:false domainMetadata",
+      "DELETE [predicate] commitInfo protocol cdc:false remove:true add:true domainMetadata",
+      "UPDATE [predicate] commitInfo cdc:false remove:true add:true domainMetadata",
+      "MERGE [matchedKeys] commitInfo cdc:false remove:true add:true domainMetadata",
+      "SET DOMAIN METADATA [domain] commitInfo domainMetadata",
+      "OPTIMIZE [] commitInfo remove:false add:false domainMetadata",
+      "DELETE [predicate] commitInfo cdc:false remove:true add:true domainMetadata",
+      "OPTIMIZE [] commitInfo remove:false add:false domainMetadata",
+      "RESTORE [version] commitInfo cdc:false remove:true add:true",
+      "SET TBLPROPERTIES [] commitInfo metaData")
+    (0L to 10L).zip(expected).foreach { case (v, want) =>
+      assert(logShape(root, v) == want, s"v$v")
+    }
   }
 }

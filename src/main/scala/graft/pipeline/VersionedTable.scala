@@ -577,11 +577,15 @@ object VersionedTable {
   /** Absolute data-file paths of `version`'s snapshot (see
     * [[entryFiles]] for the hive-partitioned refusal).
     */
-  def snapshotFiles(spark: SparkSession, root: String, version: Long): Seq[String] = {
+  def snapshotFiles(spark: SparkSession, root: String, version: Long): Seq[String] =
+    entryFiles(spark, root, snapshotEntries(spark, root, version))
+
+  /** The manifest entries of `version`'s snapshot. */
+  private[graft] def snapshotEntries(spark: SparkSession, root: String,
+                                     version: Long): Seq[String] = {
     val (fs, rootP) = fsFor(spark, root)
-    val entries = dirsOf(fs, mdirOf(rootP, root), version).getOrElse(throw new IllegalArgumentException(
+    dirsOf(fs, mdirOf(rootP, root), version).getOrElse(throw new IllegalArgumentException(
       s"versioned table at $root has no committed version $version"))
-    entryFiles(spark, root, entries)
   }
 
   /** [[snapshotFiles]] that understands hive layouts: every leaf data
@@ -640,23 +644,19 @@ object VersionedTable {
     }
 
   def snapshotFilesPartitioned(spark: SparkSession, root: String, version: Long)
-      : (Seq[LeafFile], Seq[String]) = {
-    val (fs, rootP) = fsFor(spark, root)
-    val entries = dirsOf(fs, mdirOf(rootP, root), version).getOrElse(throw new IllegalArgumentException(
-      s"versioned table at $root has no committed version $version"))
-    entryFilesPartitioned(spark, root, entries)
-  }
+      : (Seq[LeafFile], Seq[String]) =
+    entryFilesPartitioned(spark, root, snapshotEntries(spark, root, version))
 
-  /** [[appendedDirsBetween]] resolved with partition assignments —
-    * the hive-aware analog of [[appendedFilesBetween]], feeding the
-    * DSv2 micro-batch planner's partitioned spans (None = the span
-    * contains a rewrite and is not streamable row-wise).
+  /** The `_graft_schema` sidecar schema of each data dir `entries`
+    * reference, read in bounded parallel; a dir without a readable
+    * sidecar is left out.
     */
-  private[graft] def appendedFilesPartitionedBetween(
-      spark: SparkSession, root: String, from: Long, to: Long)
-      : Option[(Seq[LeafFile], Seq[String])] =
-    appendedDirsBetween(spark, root, from, to)
-      .map(entryFilesPartitioned(spark, root, _))
+  private[graft] def entrySchemas(spark: SparkSession, root: String, entries: Seq[String])
+      : Seq[(String, org.apache.spark.sql.types.StructType)] = {
+    val (fs, rootP) = fsFor(spark, root)
+    parallelMap(entries.map(entryDir).distinct)(d =>
+      FileStats.readSchemaSidecar(fs, new Path(rootP, d)).map(s => d -> s._1)).flatten
+  }
 
   /** [[snapshotFilesPartitioned]]'s entry resolution over an explicit
     * entry list (a snapshot's, or an offset span's appends).
@@ -807,15 +807,15 @@ object VersionedTable {
     }
   }
 
-  /** Structured-Streaming source over an APPEND-ONLY versioned table —
-    * EXACTLY-COMMITTED reads via the manifest-gated
-    * [[graft.streaming.VersionedStreamProvider]]: stream offsets are
-    * committed manifest versions, each micro-batch is precisely the
-    * rows appended in the offset span, so an unpublished delta dir
-    * (including a crashed committer's orphan) never streams, restarts
-    * resume at the checkpointed version, and maintenance compaction in
-    * the span contributes nothing. The first batch delivers the full
-    * snapshot as of the first trigger (override with
+  /** Structured-Streaming source over an APPEND-ONLY parquet versioned
+    * table — EXACTLY-COMMITTED reads via the DSv2 `graft` format's
+    * manifest-gated [[graft.sources.GraftMicroBatchStream]]: stream
+    * offsets are committed manifest versions, each micro-batch is
+    * precisely the rows appended in the offset span, so an unpublished
+    * delta dir (including a crashed committer's orphan) never streams,
+    * restarts resume at the checkpointed version, and maintenance
+    * compaction in the span contributes nothing. The first batch
+    * delivers the full snapshot as of the first trigger (override with
     * `startingVersion = Some("latest")` or `Some("<n>")`).
     *
     * Remaining contracts:
@@ -826,11 +826,13 @@ object VersionedTable {
     *  - merge/overwrite commits are NOT streamable row-wise (no row
     *    diff on plain parquet) — a rewrite in the span fails the
     *    stream; stream append-only tables.
+    *  - schema evolution is additive only: a column whose type changed
+    *    fails the stream.
+    *  - csv/json tables refuse: the stream plans parquet scans.
     */
   def readStream(spark: SparkSession, root: String, format: String = "",
                  startingVersion: Option[String] = None): DataFrame = {
-    val fmt = resolveFormat(spark, root, format)
-    val r = spark.readStream.format("graft-versioned").option("format", fmt)
+    val r = spark.readStream.format("graft").option("format", format)
     startingVersion.foreach(v => r.option("startingVersion", v))
     r.load(root)
   }

@@ -5,7 +5,7 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
 import graft.pipeline.VersionedTable
-import graft.streaming.VersionedStreamProvider
+import graft.streaming.StartingVersion
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, Row, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -15,6 +15,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.sources.{DataSourceRegister, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -37,10 +38,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * readers to maintain or to slow down. The ONE override is
   * `toMicroBatchStream`: offsets are manifest versions and each
   * micro-batch plans exactly the files APPENDED in its offset span
-  * ([[VersionedTable.appendedFilesBetween]]), preserving the DSv1
-  * source's semantics (full-snapshot first batch, `startingVersion`
-  * incl. the persisted-once 'latest', rewrite spans refused loudly,
-  * additive schema evolution null-filled by the parquet reader).
+  * ([[VersionedTable.appendedDirsBetween]]): full-snapshot first
+  * batch, `startingVersion` incl. the persisted-once 'latest', rewrite
+  * spans and changed column types refused loudly, additive schema
+  * evolution null-filled by the parquet reader. It is the one
+  * streaming read path of versioned tables
+  * ([[VersionedTable.readStream]] routes here).
   *
   * Scope: parquet-format tables, flat OR hive-partitioned (partition
   * columns resolve from the manifest's leaf paths into a native
@@ -325,16 +328,13 @@ class GraftStreamSink(root: String, checkpointLocation: String,
     val spark = data.sparkSession
     if (checkedSchema.compareAndSet(false, true)) {
       VersionedTable.currentSnapshot(spark, root).foreach { s =>
-        val existing = VersionedTable.readVersion(spark, root, s.version, "parquet")
-          .schema.fields.map(f => f.name -> f.dataType).toMap
-        data.schema.fields.foreach { f =>
-          existing.get(f.name).foreach { dt =>
-            require(org.apache.spark.sql.graftbridge.ColumnBridge.sameType(dt, f.dataType),
-              s"graft streaming sink at $root: column '${f.name}' is " +
-                s"${dt.simpleString} in the table but ${f.dataType.simpleString} " +
-                "in the stream — non-additive schema changes are not appendable " +
-                "(column add/drop is fine)")
-          }
+        val existing = VersionedTable.readVersion(spark, root, s.version, "parquet").schema
+        ColumnBridge.changedType(data.schema, existing).foreach { case (f, dt) =>
+          throw new IllegalArgumentException(
+            s"graft streaming sink at $root: column '${f.name}' is " +
+              s"${dt.simpleString} in the table but ${f.dataType.simpleString} " +
+              "in the stream — non-additive schema changes are not appendable " +
+              "(column add/drop is fine)")
         }
       }
     }
@@ -381,16 +381,13 @@ class GraftWriteBuilder(root: String, tableSchema: StructType)
         // land and break every subsequent read of the union.
         if (!overwrite) {
           VersionedTable.currentSnapshot(spark, root).foreach { s =>
-            val existing = VersionedTable.readVersion(spark, root, s.version, "parquet")
-              .schema.fields.map(f => f.name -> f.dataType).toMap
-            data.schema.fields.foreach { f =>
-              existing.get(f.name).foreach { dt =>
-                require(org.apache.spark.sql.graftbridge.ColumnBridge.sameType(dt, f.dataType),
-                  s"append to versioned table at $root: column '${f.name}' is " +
-                    s"${dt.simpleString} in the table but ${f.dataType.simpleString} " +
-                    "in the data — non-additive schema changes need an explicit " +
-                    "overwrite (column add/drop is fine)")
-              }
+            val existing = VersionedTable.readVersion(spark, root, s.version, "parquet").schema
+            ColumnBridge.changedType(data.schema, existing).foreach { case (f, dt) =>
+              throw new IllegalArgumentException(
+                s"append to versioned table at $root: column '${f.name}' is " +
+                  s"${dt.simpleString} in the table but ${f.dataType.simpleString} " +
+                  "in the data — non-additive schema changes need an explicit " +
+                  "overwrite (column add/drop is fine)")
             }
           }
         }
@@ -646,8 +643,8 @@ class GraftScan(inner: ParquetScan, root: String,
 }
 
 /** DSv2 offset = committed manifest version (0 is the "before any
-  * commit" sentinel, versions start at 1 — same encoding the DSv1
-  * source checkpoints, so the json forms are interchangeable).
+  * commit" sentinel, versions start at 1); its json is the plain
+  * version number.
   */
 case class GraftOffset(version: Long) extends Offset {
   override def json: String = version.toString
@@ -674,15 +671,9 @@ class GraftMicroBatchStream(template: GraftScan, root: String,
   private def spark = template.sparkSession
 
   private val startFrom: Long =
-    Option(template.options.get("startingVersion")) match {
-      case None => 0L
-      case Some("latest") =>
-        VersionedStreamProvider.resolveLatestOnce(spark, checkpointLocation, root)
-      case Some(n) => try n.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"startingVersion must be a version number or 'latest', got '$n'")
-      }
-    }
+    StartingVersion.parse(spark, Option(template.options.get("startingVersion")),
+      checkpointLocation, none = 0L,
+      () => VersionedTable.currentSnapshot(spark, root).map(_.version).getOrElse(0L))
 
   /** Admission control: at most this many manifest VERSIONS advance
     * per trigger (Delta's maxFilesPerTrigger analog at the commit
@@ -708,8 +699,8 @@ class GraftMicroBatchStream(template: GraftScan, root: String,
   private def head: Long =
     VersionedTable.currentSnapshot(spark, root).map(_.version).getOrElse(startFrom)
 
-  /** Testing seam (mirrors the DSv1 source's). */
-  private[sources] def resolvedStart: Long = startFrom
+  /** The resolved exclusive start (testing seam: 'latest' pinning). */
+  private[graft] def resolvedStart: Long = startFrom
 
   override def initialOffset(): Offset = GraftOffset(startFrom)
 
@@ -717,21 +708,40 @@ class GraftMicroBatchStream(template: GraftScan, root: String,
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
+  /** Never below `start`: a `startingVersion` past the head must wait
+    * for the table to reach it, not commit the lower head as an offset
+    * that later spans would stream from.
+    */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[GraftOffset].version
-    GraftOffset(maxVersionsPerTrigger match {
+    GraftOffset(math.max(from, maxVersionsPerTrigger match {
       case Some(cap) => math.min(head, from + cap)
       case None => head
-    })
+    }))
   }
 
   override def reportLatestOffset(): Offset = GraftOffset(head)
 
   override def deserializeOffset(json: String): Offset = GraftOffset(json.trim.toLong)
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[GraftOffset].version
-    val to = end.asInstanceOf[GraftOffset].version
+  /** Spark plans one batch's scan node several times (every copy of the
+    * exec asks the stream again), and each plan reads the span's
+    * manifests and sidecars. A span of committed versions never
+    * changes, so the last span's partitions are reused.
+    */
+  private var lastPlan: Option[((Long, Long), Array[InputPartition])] = None
+
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    synchronized {
+      val span = (start.asInstanceOf[GraftOffset].version, end.asInstanceOf[GraftOffset].version)
+      lastPlan.collect { case (`span`, parts) => parts }.getOrElse {
+        val parts = planSpan(span._1, span._2)
+        lastPlan = Some(span -> parts)
+        parts
+      }
+    }
+
+  private def planSpan(from: Long, to: Long): Array[InputPartition] = {
     def rewriteRefusal: Nothing = throw new UnsupportedOperationException(
       s"versioned table at $root has a merge/overwrite commit in the offset " +
         s"span ($from, $to] — rewrites are not streamable row-wise on plain " +
@@ -743,11 +753,26 @@ class GraftMicroBatchStream(template: GraftScan, root: String,
     // and plan through the same explicit-PartitionSpec index as the
     // batch scan, so partition columns survive micro-batching.
     val partSchema = template.fileIndex.partitionSchema
-    val files: Seq[VersionedTable.LeafFile] =
+    val entries =
       if (from >= to) Nil
-      else if (from == 0L) VersionedTable.snapshotFilesPartitioned(spark, root, to)._1
-      else VersionedTable.appendedFilesPartitionedBetween(spark, root, from, to)
-        .getOrElse(rewriteRefusal)._1
+      else if (from == 0L) VersionedTable.snapshotEntries(spark, root, to)
+      else VersionedTable.appendedDirsBetween(spark, root, from, to).getOrElse(rewriteRefusal)
+    // Additive evolution only: the parquet reader null-fills a column a
+    // dir lacks, but a dir whose column TYPE differs from the stream's
+    // would fail mid-read or be widened silently. The commit-time schema
+    // sidecars settle it without opening a footer; a dir without one
+    // is left to the parquet reader.
+    VersionedTable.entrySchemas(spark, root, entries).foreach { case (dir, dirSchema) =>
+      ColumnBridge.changedType(template.dataSchema, dirSchema).foreach { case (f, dt) =>
+        throw new IllegalStateException(
+          s"versioned stream at $root: column '${f.name}' changed type from " +
+            s"${f.dataType.simpleString} (checkpointed stream schema) to " +
+            s"${dt.simpleString} in data dir $dir — non-additive schema evolution " +
+            "is not streamable; restart the stream with a fresh checkpoint " +
+            "(only column add/drop is supported across restarts)")
+      }
+    }
+    val files = VersionedTable.entryFilesPartitioned(spark, root, entries)._1
     if (files.isEmpty) Array.empty
     else {
       val index = GraftDataSource.partitionedIndex(

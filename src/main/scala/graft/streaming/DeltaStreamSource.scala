@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.graftbridge.StreamingShims
+import org.apache.spark.sql.graftbridge.{ColumnBridge, StreamingShims}
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 
@@ -49,9 +49,9 @@ import org.apache.spark.sql.types.StructType
   *
   * Schema: pinned at stream start (the engine's checkpoint schema);
   * additive source evolution null-fills/drops per batch, a changed
-  * column TYPE fails the stream — the same contract as
-  * [[VersionedTableSource.conform]], and the same posture delta-spark
-  * takes.
+  * column TYPE fails the stream — the same contract as the versioned
+  * `graft` stream ([[graft.sources.GraftMicroBatchStream]]), and the
+  * same posture delta-spark takes.
   *
   * Scale: per trigger the driver parses only the span's commit JSONs
   * (O(files touched), same residency as delta-spark's DeltaSource);
@@ -98,18 +98,8 @@ class DeltaStreamProvider extends StreamSourceProvider with DataSourceRegister {
     val declared = sourceSchema(sqlContext, schema, providerName, parameters)._2
     // -1 is the "before any commit" sentinel — delta versions start AT
     // ZERO (unlike graft manifests), so 0 is a real, streamable commit
-    val initialFrom = parameters.get("startingVersion") match {
-      case None => -1L
-      case Some("latest") =>
-        // reuse the graft source's pin-once file: resolve the head a
-        // single time per checkpoint, never per (re)start
-        VersionedStreamProvider.resolveLatestOnceBy(spark, metadataPath,
-          () => DeltaRead.latestVersion(spark, root).getOrElse(-1L))
-      case Some(n) => try n.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"startingVersion must be a version number or 'latest', got '$n'")
-      }
-    }
+    val initialFrom = StartingVersion.parse(spark, parameters.get("startingVersion"),
+      metadataPath, none = -1L, () => DeltaRead.latestVersion(spark, root).getOrElse(-1L))
     def flag(name: String): Boolean =
       parameters.get(name).exists(_.trim.equalsIgnoreCase("true"))
     val maxFiles = parameters.get("maxFilesPerTrigger").map { v =>
@@ -164,21 +154,18 @@ class DeltaTableSource(spark: SparkSession, root: String,
     case other => other.json.trim.toLong
   }
 
-  /** Same additive-evolution contract as [[VersionedTableSource]]:
-    * order/null-fill/drop columns, fail on a changed type.
+  /** Additive evolution only: order/null-fill/drop columns, fail on a
+    * changed type (the cast only normalizes nullability/metadata).
     */
   private def conform(df: DataFrame): DataFrame = {
-    val present = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    schema.fields.foreach { f =>
-      present.get(f.name).foreach { dt =>
-        if (!org.apache.spark.sql.graftbridge.ColumnBridge.sameType(dt, f.dataType))
-          throw new IllegalStateException(
-            s"delta stream at $root: column '${f.name}' changed type from " +
-              s"${f.dataType.simpleString} (checkpointed stream schema) to " +
-              s"${dt.simpleString} in the source — non-additive schema evolution " +
-              "is not streamable; restart the stream with a fresh checkpoint")
-      }
+    ColumnBridge.changedType(schema, df.schema).foreach { case (f, dt) =>
+      throw new IllegalStateException(
+        s"delta stream at $root: column '${f.name}' changed type from " +
+          s"${f.dataType.simpleString} (checkpointed stream schema) to " +
+          s"${dt.simpleString} in the source — non-additive schema evolution " +
+          "is not streamable; restart the stream with a fresh checkpoint")
     }
+    val present = df.schema.fieldNames.toSet
     df.select(schema.fields.toSeq.map(f =>
       if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)): _*)
@@ -202,7 +189,9 @@ class DeltaTableSource(spark: SparkSession, root: String,
     * a 100k-commit lag never parses past the cap.
     */
   override def getOffset: Option[OffsetV1] = {
-    val head = DeltaRead.latestVersion(spark, root)
+    // never below the start: a startingVersion past the head waits for
+    // the table to reach it instead of streaming from the lower head
+    val head = DeltaRead.latestVersion(spark, root).filter(_ >= initialFrom)
     (head, maxFilesPerTrigger) match {
       case (None, _) => None
       case (Some(h), None) => Some(LongOffset(h))

@@ -13,12 +13,19 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** `DataType.sameType` (equality ignoring nullability) is
-    * private[sql] — re-exported for schema-evolution checks outside the
-    * sql package.
+  /** The additive-only schema-evolution gate: the first field of
+    * `expected` that `actual` also has, but with a different type
+    * (compared by `DataType.sameType`, which ignores nullability and is
+    * private[sql]), paired with its type in `actual`. Columns present
+    * on one side only are additive evolution and never reported.
     */
-  def sameType(a: org.apache.spark.sql.types.DataType,
-               b: org.apache.spark.sql.types.DataType): Boolean = a.sameType(b)
+  def changedType(expected: org.apache.spark.sql.types.StructType,
+                  actual: org.apache.spark.sql.types.StructType)
+      : Option[(org.apache.spark.sql.types.StructField, org.apache.spark.sql.types.DataType)] = {
+    val present = actual.fields.map(f => f.name -> f.dataType).toMap
+    expected.fields.iterator.flatMap(f => present.get(f.name).map(f -> _))
+      .find { case (f, dt) => !dt.sameType(f.dataType) }
+  }
 
   /** `StructType.asNullable` is private[sql] — re-exported for the
     * schema-sidecar writer (file-source reads force nullability, so

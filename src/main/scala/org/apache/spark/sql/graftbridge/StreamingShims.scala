@@ -2,7 +2,11 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{DataFrame, Row}
 
-/** Bridge for the one internal hook a DSv1 streaming `Source` needs:
+/** Bridges for the DSv1 streaming faces graft still has — the
+  * `graft-delta` Source (its batches are DataFrames built by DV
+  * filtering, CDF and row-id reads) and the `graft` format's Sink.
+  *
+  * The Source side needs one internal hook:
   * `MicroBatchExecution` asserts that the DataFrame `getBatch` returns
   * has `isStreaming=true`, but every public way to build a DataFrame
   * from storage yields a batch plan. The stock file source (and OSS
@@ -18,7 +22,7 @@ object StreamingShims {
     * stays deferred to the micro-batch's own jobs. The cost of this
     * boundary is that downstream streaming predicates do not push into
     * the scan — acceptable for a source whose unit of read is an
-    * already-pruned set of committed delta directories.
+    * already-pruned set of committed data files.
     */
   def asMicroBatch(df: DataFrame): DataFrame = {
     val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

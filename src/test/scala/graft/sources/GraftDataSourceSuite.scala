@@ -10,8 +10,8 @@ import org.apache.spark.sql.streaming.StreamingQueryException
   * file-pruned-merge manifests, pushdown/pruning through the native
   * parquet scan) and the micro-batch stream (manifest offsets,
   * full-snapshot bootstrap, restart resume, orphan invisibility,
-  * rewrite refusal) — the same contracts VersionedStreamSuite pins for
-  * the DSv1 face.
+  * rewrite refusal) — the same contracts VersionedStreamSuite pins
+  * through VersionedTable.readStream.
   */
 class GraftDataSourceSuite extends SparkSpec {
   import spark.implicits._
@@ -251,6 +251,8 @@ class GraftDataSourceSuite extends SparkSpec {
       spark.read.format("graft").load(csvRoot).collect()
     }
     assert(e2.getMessage.contains("parquet"), e2.getMessage)
+    val e3 = intercept[Exception] { VersionedTable.readStream(spark, csvRoot) }
+    assert(e3.getMessage.contains("parquet"), e3.getMessage)
   }
 
   test("micro-batch stream: snapshot bootstrap, appends stream once, orphans never") {
@@ -392,6 +394,23 @@ class GraftDataSourceSuite extends SparkSpec {
       q2.processAllAvailable()
       assert(sinkIds(sink2) == Seq(4L))
     } finally { q2.stop(); spark.catalog.dropTempView(sink2) }
+  }
+
+  test("startingVersion past the head streams only commits after it") {
+    val dir = tmp("graft_dsv2_pasthead"); val root = dir + "/t"
+    append(root, 1L) // v1
+    append(root, 2L) // v2
+    val sink = freshSink()
+    val q = spark.readStream.format("graft").option("startingVersion", "5").load(root)
+      .writeStream.format("memory").queryName(sink).outputMode("append")
+      .option("checkpointLocation", dir + "/ck")
+      .start()
+    try {
+      q.processAllAvailable()
+      assert(sinkIds(sink) == Seq())
+      (3L to 6L).foreach { i => append(root, i); q.processAllAvailable() } // v3..v6
+      assert(sinkIds(sink) == Seq(6L), s"expected only post-v5 rows: ${sinkIds(sink)}")
+    } finally { q.stop(); spark.catalog.dropTempView(sink) }
   }
 
   test("maxVersionsPerTrigger: the backlog drains as bounded increments, not one batch") {

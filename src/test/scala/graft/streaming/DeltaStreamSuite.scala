@@ -67,6 +67,26 @@ class DeltaStreamSuite extends SparkSpec {
     } finally q2.stop()
   }
 
+  test("startingVersion past the head streams only commits after it") {
+    val root = tmp("dstream_pasthead")
+    (0L to 2L).foreach { i => // v0..v2
+      DeltaWrite.append(spark, Seq((i, s"v$i")).toDF("id", "v").coalesce(1), root)
+    }
+    val name = sinkName()
+    val q = spark.readStream.format("graft-delta")
+      .option("startingVersion", "5").load(root)
+      .writeStream.format("memory").queryName(name).start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table(name).count() == 0)
+      (3L to 6L).foreach { i => // v3..v6
+        DeltaWrite.append(spark, Seq((i, s"v$i")).toDF("id", "v").coalesce(1), root)
+        q.processAllAvailable()
+      }
+      assert(spark.table(name).as[(Long, String)].collect().toSeq == Seq((6L, "v6")))
+    } finally q.stop()
+  }
+
   test("maxFilesPerTrigger paces the tail commit-by-commit; nothing lost or duplicated") {
     val root = tmp("dstream_rate")
     DeltaWrite.append(spark, Seq((0L, "base")).toDF("id", "v").coalesce(1), root) // v0

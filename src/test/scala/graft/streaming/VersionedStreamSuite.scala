@@ -5,7 +5,8 @@ import graft.pipeline.VersionedTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQueryException
 
-/** The manifest-gated streaming source's exactly-committed contract:
+/** The exactly-committed contract of [[VersionedTable.readStream]]
+  * (the DSv2 `graft` micro-batch stream):
   * an unpublished delta dir never streams, restarts resume at the
   * checkpointed version, compaction/vacuum during the stream is
   * invisible, rewrites fail loudly, and a fresh stream bootstraps the
@@ -189,24 +190,29 @@ class VersionedStreamSuite extends SparkSpec {
     val dir = tmp("graft_vss_pin"); val root = dir + "/t"
     append(root, 1L)
     append(root, 2L)
-    val provider = new VersionedStreamProvider
-    val params = Map("path" -> root, "format" -> "parquet", "startingVersion" -> "latest")
+    // the stream as the engine builds it: table -> scan -> micro-batch
+    // stream over the checkpoint's source metadata dir
+    def stream(meta: String): graft.sources.GraftMicroBatchStream = {
+      val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("path", root, "startingVersion", "latest"))
+      val ds = new graft.sources.GraftDataSource
+      ds.getTable(ds.inferSchema(opts), Array.empty, opts.asCaseSensitiveMap())
+        .asInstanceOf[graft.sources.GraftTable].newScanBuilder(opts).build()
+        .toMicroBatchStream(meta).asInstanceOf[graft.sources.GraftMicroBatchStream]
+    }
     val meta = dir + "/ck/sources/0"
-    val s1 = provider.createSource(spark.sqlContext, meta, None, "graft-versioned", params)
-      .asInstanceOf[VersionedTableSource]
-    assert(s1.startFrom == 2L)
+    val s1 = stream(meta)
+    assert(s1.resolvedStart == 2L)
     // the table moves while the stream is down; if batch 0's offset was
     // logged but never committed, a restart that re-resolved 'latest'
     // would skip (2, 3] silently — the persisted resolution prevents it
     append(root, 3L)
-    val s2 = provider.createSource(spark.sqlContext, meta, None, "graft-versioned", params)
-      .asInstanceOf[VersionedTableSource]
-    assert(s2.startFrom == 2L,
-      s"restart re-resolved 'latest' to ${s2.startFrom} — the skip window is open")
+    val s2 = stream(meta)
+    assert(s2.resolvedStart == 2L,
+      s"restart re-resolved 'latest' to ${s2.resolvedStart} — the skip window is open")
     // a DIFFERENT stream (its own metadata dir) resolves fresh
-    val s3 = provider.createSource(spark.sqlContext, dir + "/ck2/sources/0", None,
-      "graft-versioned", params).asInstanceOf[VersionedTableSource]
-    assert(s3.startFrom == 3L)
+    val s3 = stream(dir + "/ck2/sources/0")
+    assert(s3.resolvedStart == 3L)
   }
 
   test("startingVersion=latest skips history; a number streams strictly after it") {
@@ -228,5 +234,21 @@ class VersionedStreamSuite extends SparkSpec {
       q2.processAllAvailable()
       assert(ids(s2) == Seq(2L, 3L), s"after v1 means v2..HEAD, got ${ids(s2)}")
     } finally { q2.stop(); spark.catalog.dropTempView(s2) }
+  }
+
+  test("readStream plans through the DSv2 graft micro-batch stream") {
+    val dir = tmp("graft_vss_dsv2"); val root = dir + "/t"
+    append(root, 1L)
+    val sink = freshSink()
+    val q = start(root, sink, dir + "/ck")
+    try {
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.analyzed
+      assert(plan.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2.StreamingDataSourceV2ScanRelation => r
+      }.nonEmpty, s"readStream did not plan a DSv2 micro-batch scan:\n$plan")
+    } finally { q.stop(); spark.catalog.dropTempView(sink) }
   }
 }

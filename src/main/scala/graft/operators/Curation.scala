@@ -9,17 +9,17 @@ import org.apache.spark.sql.functions._
   * collapse keeping the smallest id per normalized-text fingerprint.
   *
   * Shape at scale: features + language ID + fingerprint are ONE
-  * codegen'd projection fused with the scan (no UDFs); the dedup
-  * keeper is a `min_by(struct(...), doc_id)` hash aggregation on the
-  * fingerprint — ONE evaluation of the text kernels, ONE shuffle, and
-  * map-side partial aggregation, so a mass-duplicated boilerplate
-  * fingerprint collapses to one row per map task instead of funneling
-  * every duplicate to a single reducer (the skew a row_number window
-  * would create, and exactly the corpus shape — template-heavy crawl
-  * data — this operator targets). The earlier groupBy+semi-join
-  * formulation evaluated the heavy projection twice. Near-dup removal
-  * composes on top via [[Dedup.minhashLsh]] output ids when the
-  * corpus warrants it.
+  * codegen'd projection fused with the scan (no UDFs); the gate and
+  * the dedup keeper are one `min_by(struct(...), when(gate, doc_id))`
+  * hash aggregation on the fingerprint — ONE evaluation of the text
+  * kernels, ONE shuffle, and map-side partial aggregation, so a
+  * mass-duplicated boilerplate fingerprint collapses to one row per
+  * map task instead of funneling every duplicate to a single reducer
+  * (the skew a row_number window would create, and exactly the
+  * corpus shape — template-heavy crawl data — this operator targets).
+  * The earlier groupBy+semi-join formulation evaluated the heavy
+  * projection twice. Near-dup removal composes on top via
+  * [[Dedup.minhashLsh]] output ids when the corpus warrants it.
   */
 object Curation {
 
@@ -40,12 +40,18 @@ object Curation {
       TextAnalysis.tokenCount(t).cast("long").as("n_tokens"),
       TextAnalysis.langId(t).as("lang_pred"),
       TextAnalysis.fingerprintMd5(t).as("fp"))
-    val filtered = featured.where(
-      col("n_tokens").between(minTokens, maxTokens) &&
-        col("lang_pred").isin(langs: _*))
-    filtered
+    // The gate lives INSIDE the keeper aggregate: min_by ignores null
+    // orderings, so each fingerprint keeps its minimal PASSING id and a
+    // fingerprint with no passing doc keeps null. A `where` on the
+    // features would be pushed below the Spread exchange and run the
+    // kernels twice, once on the unsplit scan (see [[Spread]]).
+    val gate = col("n_tokens").between(minTokens, maxTokens) &&
+      col("lang_pred").isin(langs: _*)
+    featured
       .groupBy(col("fp"))
-      .agg(min_by(struct(col("doc_id"), col("n_tokens"), col("lang_pred")), col("doc_id")).as("__keep"))
+      .agg(min_by(struct(col("doc_id"), col("n_tokens"), col("lang_pred")),
+        when(gate, col("doc_id"))).as("__keep"))
+      .where(col("__keep").isNotNull)
       .select(col("__keep.doc_id").as("doc_id"),
         col("__keep.n_tokens").as("n_tokens"),
         col("__keep.lang_pred").as("lang_pred"))

@@ -677,13 +677,15 @@ object Dedup {
     * fraction — the score a curation filter thresholds on.
     *
     * Plan shape (nothing is O(corpus²)):
-    *  1. window explode: O(total chars) rows — `sequence`+`explode`+
-    *     `substring`, all codegen'd, no UDF;
+    *  1. window stage: one codegen'd kernel walks each doc's code
+    *     points once and emits its window array
+    *     ([[org.apache.spark.sql.graftbridge.CharWindowGrams]], no UDF)
+    *     — O(total chars) array entries, exploded per use;
     *  2. duplicated-gram set: ONE hash aggregation with map-side
-    *     partials (`count(distinct doc)>=minDocs` via the two-level
-    *     (gram, doc) pre-aggregate, bounding a hot gram's reducer
-    *     fan-in the same way [[graft.operators.TextAnalysis]]'s vocab
-    *     does), then a semi join back;
+    *     partials over each doc's DISTINCT window keys
+    *     (`array_distinct` of the kernel's array, so a gram repeated
+    *     inside one doc counts once toward `minDocs`), then a semi join
+    *     of the `posexplode`d windows back;
     *  3. per-doc interval merge: one window function pass ordered by
     *     start (running max of span end), sum of uncovered deltas —
     *     O(flagged windows log), never materializing per-position rows.
@@ -691,6 +693,7 @@ object Dedup {
     * `hashed = true` replaces the n-byte gram key with xxhash64 — the
     * 100 TB shuffle shape (8 B keys; a collision can only over-mark
     * ~2⁻⁶⁴ of windows). Exact mode is the oracle surface (q119).
+    * `idCol` must be a key of `docs` (one row per document).
     */
   def duplicatedSpans(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text", n: Int = 50,
@@ -715,6 +718,7 @@ object Dedup {
     * and the rebuild is a codegen'd higher-order `aggregate` fold over
     * the sorted interval array slicing the original text — no UDF, no
     * per-position rows, no driver involvement.
+    * `idCol` must be a key of `docs`.
     */
   def removeDuplicatedSpans(docs: DataFrame, idCol: String = "doc_id",
                             textCol: String = "text", n: Int = 50,
@@ -754,26 +758,32 @@ object Dedup {
   /** Every length-`n` window of `base` (which must carry
     * (doc_id, __t)) as (doc_id, start, g) — `g` is the raw n-char gram
     * or its xxhash64 under `hashed` (the 100 TB shuffle shape,
-    * ~2⁻⁶⁴ over-mark rate). The short-doc guard must be a WHEN, not
-    * greatest(...,0): Spark's sequence(1, 0) yields the DESCENDING
-    * [1, 0] (auto step -1), which would mint two phantom "windows"
-    * (both clamping to the full short text) — two identical sub-n
-    * docs would then flag each other with dup_frac > 1. A doc shorter
-    * than n has no length-n window at all: explode(null) drops it.
+    * ~2⁻⁶⁴ over-mark rate), `start` its 1-based char offset. A doc
+    * shorter than n has no length-n window at all. The hashes are the
+    * keys a gram store persists ([[IncrementalDedup.initGramStore]]):
+    * bit-identical to `xxhash64(substring(text, start, n))`.
     */
   private[operators] def windowGrams(base: DataFrame, n: Int,
-                                     hashed: Boolean): DataFrame = {
+                                     hashed: Boolean): DataFrame =
+    positioned(windowArrays(base, n, hashed))
+
+  /** (doc_id, __w): each doc's window array from ONE code-point walk
+    * ([[org.apache.spark.sql.graftbridge.CharWindowGrams]]; index i is
+    * the window starting at char i + 1), spread first so the kernel
+    * runs on every core of a single-split input.
+    */
+  private def windowArrays(base: DataFrame, n: Int, hashed: Boolean): DataFrame = {
     require(n >= 2, s"window length must be >= 2: $n")
-    Spread(base)
-      .select(col("doc_id"), col("__t"),
-        explode(when(length(col("__t")) >= n,
-          sequence(lit(1), length(col("__t")) - (n - 1)))
-          .otherwise(lit(null).cast("array<int>")))
-          .as("start"))
-      .select(col("doc_id"), col("start"),
-        (if (hashed) xxhash64(expr(s"substring(__t, start, $n)"))
-         else expr(s"substring(__t, start, $n)")).as("g"))
+    import org.apache.spark.sql.graftbridge.{CharWindowGrams, ColumnBridge}
+    Spread(base).select(col("doc_id"),
+      ColumnBridge.column(CharWindowGrams(ColumnBridge.expression(col("__t")), n, hashed))
+        .as("__w"))
   }
+
+  /** [[windowArrays]] output exploded to (doc_id, start, g) rows. */
+  private def positioned(w: DataFrame): DataFrame =
+    w.select(col("doc_id"), posexplode(col("__w")).as(Seq("pos", "g")))
+      .select(col("doc_id"), (col("pos") + 1).as("start"), col("g"))
 
   /** Merged-interval coverage of flagged window starts: per doc of
     * `base`, how many characters the length-`n` windows at `dup`'s
@@ -803,18 +813,19 @@ object Dedup {
   /** Shared front end of [[duplicatedSpans]] / [[removeDuplicatedSpans]]:
     * the start offsets (1-based) of every length-`n` window occurring
     * in >= `minDocs` distinct documents. `base` must carry
-    * (doc_id, __t). The (gram, doc) pre-aggregate bounds a hot gram's
-    * reducer fan-in.
+    * (doc_id, __t), one row per doc. Doc frequency counts each doc's
+    * DISTINCT window keys (a gram repeated 1M times inside ONE document
+    * contributes one row, not 1M — a hot gram's reducer fan-in stays
+    * bounded by map-side partials); the probe side `posexplode`s the
+    * same window arrays.
     */
   private def flaggedWindowStarts(base: DataFrame, n: Int, minDocs: Int,
                                   hashed: Boolean): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2: $minDocs")
-    val w = windowGrams(base, n, hashed)
-    // (g, doc) first: a gram repeated 1M times inside ONE document
-    // contributes one row to the distinct-doc count, not 1M
-    val dupG = w.select("g", "doc_id").distinct()
+    val w = windowArrays(base, n, hashed)
+    val dupG = w.select(explode(array_distinct(col("__w"))).as("g"))
       .groupBy("g").agg(count(lit(1)).as("nd"))
       .where(col("nd") >= minDocs).select("g")
-    w.join(dupG, Seq("g"), "left_semi").select("doc_id", "start")
+    positioned(w).join(dupG, Seq("g"), "left_semi").select("doc_id", "start")
   }
 }

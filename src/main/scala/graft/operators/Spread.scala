@@ -31,6 +31,17 @@ import org.apache.spark.sql.DataFrame
   * DuckDB oracle). Round-robin repartition sorts locally before
   * assigning rows (sortBeforeRepartition, Spark default) so retries
   * are deterministic.
+  *
+  * Caller contract: do not filter on a kernel's output right above the
+  * spread projection. Catalyst pushes a predicate placed on
+  * `Spread(df).select(kernel(...))` through the projection and below
+  * the round-robin exchange, so the kernel then runs on the unsplit
+  * scan for the predicate AND again above the exchange for the
+  * projection. Gate inside or after an aggregate instead
+  * ([[Curation.curate]] folds its gate into the keeper's `min_by`).
+  * A filter on a generator's, a join's or an aggregate's output is
+  * not pushed past those nodes, and a cheap predicate on an input
+  * column (`languageMix`) is harmless below the exchange.
   */
 private[graft] object Spread {
   /** Same-binary A/B kill switch (the r17 crc-switch discipline):

@@ -8,42 +8,78 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared shingle-hash iteration for the one-pass signature
-  * expressions: visit the xxhash64 (seed 42, Spark's SQL default) of
-  * every k-char shingle of `text`, matching
-  * `xxhash64(substr(text, i, k))` exactly.
+/** The one code-point walk behind every char-window kernel
+  * ([[MinHashSig]], [[ShingleSet]], [[SimHash64]], [[CharWindowGrams]]).
   *
-  * ASCII fast path: when numBytes == numChars the char windows are
-  * byte windows, hashed in place over the UTF8String's buffer — zero
-  * allocation per shingle. Multi-byte text falls back to per-window
-  * UTF8String.substringSQL (same result, one small allocation per
-  * window). Texts shorter than k hash their substr-truncated prefix,
-  * mirroring `substr`'s clamping, so results equal the exploded
-  * formulation on every input.
+  * A window of k code points starting at char `c` is the byte range
+  * `[offsets(c), offsets(c + k))` — exactly the bytes
+  * `substring(text, c + 1, k)` returns — so every window is hashed or
+  * sliced in place after ONE O(bytes) walk. ASCII text (numBytes ==
+  * numChars) skips the walk: its char offsets are its byte offsets.
+  * Code-point lengths come from `UTF8String.numBytesForFirstByte`, the
+  * table Spark's own `substring` and `length` use, so an invalid
+  * UTF-8 byte counts as one char in both. The one divergence: a
+  * multi-byte lead byte truncated at the very END of the string, where
+  * Spark's `substring` copies past the string's last byte; the walk
+  * clamps that last window to the string.
   */
-private[graftbridge] object ShingleHashing {
+private[graftbridge] object CharWindows {
   final val SqlXxhashSeed = 42L
 
-  @inline def forEachShingleHash(s: UTF8String, k: Int)(f: Long => Unit): Unit = {
+  /** Start byte of each code point of `s`, then `numBytes`; null when
+    * `s` is ASCII (char offset == byte offset).
+    */
+  private def offsets(s: UTF8String): Array[Int] = {
     val numBytes = s.numBytes()
     val numChars = s.numChars()
-    val n = math.max(numChars - (k - 1), 1)
-    if (numBytes == numChars) {
-      val base = s.getBaseObject
-      val offset = s.getBaseOffset
-      var i = 0
-      while (i < n) {
-        val len = math.min(k, numBytes - i)
-        f(XXH64.hashUnsafeBytes(base, offset + i, math.max(len, 0), SqlXxhashSeed))
-        i += 1
-      }
-    } else {
-      var i = 0
-      while (i < n) {
-        val sub = s.substringSQL(i + 1, k)
-        f(XXH64.hashUnsafeBytes(sub.getBaseObject, sub.getBaseOffset, sub.numBytes(), SqlXxhashSeed))
-        i += 1
-      }
+    if (numChars == numBytes) return null
+    val off = new Array[Int](numChars + 1)
+    var b = 0
+    var c = 0
+    while (c < numChars) {
+      off(c) = b
+      b += UTF8String.numBytesForFirstByte(s.getByte(b))
+      c += 1
+    }
+    off(numChars) = math.min(b, numBytes)
+    off
+  }
+
+  /** Number of windows [[forEachWindow]] visits. */
+  def count(s: UTF8String, k: Int, clampShort: Boolean): Int = {
+    val m = s.numChars() - (k - 1)
+    if (clampShort) math.max(m, 1) else math.max(m, 0)
+  }
+
+  /** Visit the byte range `(from, until)` of every k-code-point window
+    * of `s`, in start order. With `clampShort` a text shorter than k
+    * yields ONE window, the whole text (`substr`'s clamping, the
+    * shingle-kernel contract; "" yields one empty window); without it
+    * such a text yields none.
+    */
+  @inline def forEachWindow(s: UTF8String, k: Int, clampShort: Boolean)(f: (Int, Int) => Unit): Unit = {
+    val numChars = s.numChars()
+    val n = count(s, k, clampShort)
+    val off = offsets(s)
+    var i = 0
+    while (i < n) {
+      val e = math.min(i + k, numChars)
+      if (off == null) f(i, e) else f(off(i), off(e))
+      i += 1
+    }
+  }
+
+  /** xxhash64 (seed 42, Spark's SQL default) of every k-char shingle of
+    * `s`, matching `xxhash64(substr(s, i, k))` exactly; texts shorter
+    * than k hash their whole (clamped) text, mirroring `substr`, so
+    * results equal the exploded formulation on every input. Zero
+    * allocation per shingle, ASCII or not.
+    */
+  @inline def forEachShingleHash(s: UTF8String, k: Int)(f: Long => Unit): Unit = {
+    val base = s.getBaseObject
+    val offset = s.getBaseOffset
+    forEachWindow(s, k, clampShort = true) { (from, until) =>
+      f(XXH64.hashUnsafeBytes(base, offset + from, until - from, SqlXxhashSeed))
     }
   }
 }
@@ -119,7 +155,7 @@ object MinHashSig {
   def compute(s: UTF8String, numHashes: Int, k: Int, a: Array[Long], b: Array[Long]): ArrayData = {
     val mins = new Array[Long](numHashes)
     java.util.Arrays.fill(mins, Long.MaxValue)
-    ShingleHashing.forEachShingleHash(s, k) { h =>
+    CharWindows.forEachShingleHash(s, k) { h =>
       // Fold the 64-bit shingle hash into the field: mask to 31 bits,
       // then reduce mod P (collision prob per in-doc pair ~2^-31 —
       // negligible next to the 1/numHashes estimator noise).
@@ -192,10 +228,10 @@ case class ShingleSet(child: Expression, shingleK: Int)
 
 object ShingleSet {
   def compute(s: UTF8String, k: Int): ArrayData = {
-    val n = math.max(s.numChars() - (k - 1), 1)
+    val n = CharWindows.count(s, k, clampShort = true)
     val buf = new Array[Long](n)
     var i = 0
-    ShingleHashing.forEachShingleHash(s, k) { h => buf(i) = h; i += 1 }
+    CharWindows.forEachShingleHash(s, k) { h => buf(i) = h; i += 1 }
     java.util.Arrays.sort(buf)
     var w = 0
     var r = 0
@@ -323,11 +359,11 @@ object WordGramHashes {
       buf(i) =
         if (WordGramSupport.contiguous(bytes, starts, ends, i, n))
           XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET + starts(i),
-            ends(i + n - 1) - starts(i), ShingleHashing.SqlXxhashSeed)
+            ends(i + n - 1) - starts(i), CharWindows.SqlXxhashSeed)
         else {
           val g = WordGramSupport.assemble(bytes, starts, ends, i, n)
           XXH64.hashUnsafeBytes(g, Platform.BYTE_ARRAY_OFFSET, g.length,
-            ShingleHashing.SqlXxhashSeed)
+            CharWindows.SqlXxhashSeed)
         }
       i += 1
     }
@@ -393,7 +429,7 @@ object WordGrams {
 object SimHash64 {
   def compute(s: UTF8String, k: Int): Long = {
     val counts = new Array[Int](64)
-    ShingleHashing.forEachShingleHash(s, k) { h =>
+    CharWindows.forEachShingleHash(s, k) { h =>
       var b = 0
       while (b < 64) {
         if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
@@ -407,5 +443,64 @@ object SimHash64 {
       b += 1
     }
     sim
+  }
+}
+
+/** Every length-`n` character window of a string, in start order
+  * (duplicates kept: the array index is the window's 0-based start),
+  * from ONE code-point walk ([[CharWindows]]) — the span-dedup window
+  * stage as a scan-fused projection. `hashed` yields the xxhash64 (seed
+  * 42) of each window, bit-identical to `xxhash64(substring(t, s, n))`;
+  * otherwise the window strings themselves, equal to
+  * `substring(t, s, n)`, for s in 1..len-n+1. A text shorter than n has
+  * no window (empty array). One walk per doc, because a `substring`
+  * per window re-walks the string from byte 0: O(len²) per doc.
+  */
+case class CharWindowGrams(child: Expression, n: Int, hashed: Boolean)
+  extends UnaryExpression with ExpectsInputTypes {
+  require(n >= 1, s"window length must be >= 1, got $n")
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType =
+    ArrayType(if (hashed) LongType else StringType, containsNull = false)
+  override def prettyName: String = if (hashed) "char_window_hashes" else "char_windows"
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val s = input.asInstanceOf[UTF8String]
+    if (hashed) CharWindowGrams.hashes(s, n) else CharWindowGrams.windows(s, n)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = CharWindowGrams.getClass.getName.stripSuffix("$") + "$.MODULE$"
+    val fn = if (hashed) "hashes" else "windows"
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $cls.$fn($c, $n);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object CharWindowGrams {
+  def hashes(s: UTF8String, n: Int): ArrayData = {
+    val buf = new Array[Long](CharWindows.count(s, n, clampShort = false))
+    val base = s.getBaseObject
+    val offset = s.getBaseOffset
+    var i = 0
+    CharWindows.forEachWindow(s, n, clampShort = false) { (from, until) =>
+      buf(i) = XXH64.hashUnsafeBytes(base, offset + from, until - from, CharWindows.SqlXxhashSeed)
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(buf)
+  }
+
+  def windows(s: UTF8String, n: Int): ArrayData = {
+    val out = new Array[Any](CharWindows.count(s, n, clampShort = false))
+    val bytes = s.getBytes
+    var i = 0
+    CharWindows.forEachWindow(s, n, clampShort = false) { (from, until) =>
+      out(i) = UTF8String.fromBytes(bytes, from, until - from)
+      i += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 }

@@ -310,6 +310,26 @@ class PlanAuditSuite extends SparkSpec {
     assert(p.linesIterator.count(_.contains("hashpartitioning(_fp")) <= 2, p)
   }
 
+  test("curate: the token/langid kernels run only above the Spread exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val curated = graft.operators.Curation.curate(
+      Tables.load(spark, sfDir, "documents"), minTokens = 5)
+    val phys = curated.queryExecution.sparkPlan
+    val spreads = phys.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    }
+    // the single-split bench input gets exactly one round-robin spread
+    assert(spreads.size == 1, phys.treeString)
+    // a gate on the features below the exchange would evaluate
+    // tokenCount/langId on the unsplit scan, then again above it
+    def runsKernel(root: org.apache.spark.sql.execution.SparkPlan): Boolean =
+      root.collect { case n => n }.flatMap(_.expressions)
+        .exists(_.exists(_.prettyName == "regexp_extract_all"))
+    assert(runsKernel(phys), phys.treeString) // not vacuous: the kernel is in the plan
+    assert(!runsKernel(spreads.head.child), phys.treeString)
+  }
+
   test("q114: vocab top-k plans as TakeOrdered, never a single-partition global sort") {
     val p = plan("q114_vocab")
     assert(p.contains("TakeOrderedAndProject"), p)
@@ -332,13 +352,17 @@ class PlanAuditSuite extends SparkSpec {
     val p = plan("q119_substring_dup")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"), p)
     assert(!p.contains("BatchEvalPython") && !p.contains("ArrowEval"), p)
-    assert(p.contains("Generate"), p) // the sequence+explode window generator
+    // the windows come from the one-pass kernel, exploded by a
+    // Generate — not a per-position sequence + substring
+    assert(p.contains("char_windows("), p)
+    assert(!p.contains("sequence("), p)
+    assert(p.contains("Generate"), p)
     // the duplicated-gram probe is a semi join; the coverage pass is
     // ONE window over (doc_id, start) — never a per-position explode
     assert(p.contains("LeftSemi"), p)
     assert(count(p, "Window") == 1, p)
-    // distinct-doc bounding: the (g, doc) pre-aggregate keeps map-side
-    // partials before the gram-keyed exchange
+    // distinct-doc bounding: each doc's distinct windows feed a
+    // gram-keyed count with map-side partials
     assert(p.contains("hashpartitioning(g"), p)
   }
 
@@ -347,9 +371,12 @@ class PlanAuditSuite extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"), p)
     assert(!p.contains("BatchEvalPython") && !p.contains("ArrowEval"), p)
     // the interval fold is a higher-order aggregate in a projection.
-    // TWO Generates = the gram front end's two passes over the window
-    // explode (duplicated-gram set + probe side of the semi join); a
-    // THIRD would mean intervals re-exploding into per-position rows
+    // TWO Generates = the gram front end's two explodes of the kernel's
+    // window array (distinct windows for the duplicated-gram set +
+    // positions for the probe side of the semi join); a THIRD would
+    // mean intervals re-exploding into per-position rows
+    assert(p.contains("char_windows("), p)
+    assert(!p.contains("sequence("), p)
     assert(count(p, "Generate") == 2, p)
     // gaps-and-islands: two window passes over (doc_id, start), both
     // doc-partitioned (brk marker + running island id fuse into one

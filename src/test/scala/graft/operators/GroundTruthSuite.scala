@@ -274,5 +274,31 @@ class GroundTruthSuite extends SparkSpec {
     val tsc = Dedup.removeDuplicatedSpans(short, n = 50).orderBy("doc_id").collect()
     assert(tsc.forall(_.getString(1) == "twin-short"),
       "sub-n twins pass through the transform untouched")
+    // the one-pass window kernel is BIT-IDENTICAL, in both modes, to
+    // the per-position formulation it replaced (gram stores persist
+    // these hashes, so they must not drift): "", null, shorter than n,
+    // exactly n, ASCII, 2/3/4-byte code points (surrogate pairs in
+    // Java) and invalid UTF-8 bytes (0xFF, a lone continuation 0x80, a
+    // lead byte 0xE2 swallowing two ASCII bytes) in mid-string
+    val n = 5
+    val probe = Seq[(Long, String)]((30L, ""), (31L, null), (32L, "abc"), (33L, "abcde"),
+      (34L, "plain ascii text, longer than n"), (35L, "héllo wörld ñandú"),
+      (36L, "€uro ≠ 日本語テキスト"), (37L, "emoji 😀 pairs 𝄞 here 😀!"),
+      (38L, "é€😀a€😀é𝄞ñ日")).toDF("doc_id", "__t")
+      .unionByName(spark.sql("SELECT 39L AS doc_id, " +
+        "cast(unhex('61FF62C3A96380E282AC64E27879F09F988061') AS string) AS __t"))
+    assert(probe.where(col("doc_id") === 39L).select(length(col("__t"))).head.getInt(0) == 11,
+      "the invalid bytes must reach the kernel unrepaired")
+    for (hashed <- Seq(false, true)) {
+      val t = col("__t")
+      val sub = expr(s"substring(__t, start, $n)")
+      val want = probe
+        .select(col("doc_id"), t, explode(when(length(t) >= n,
+          sequence(lit(1), length(t) - (n - 1))).otherwise(lit(null).cast("array<int>"))).as("start"))
+        .select(col("doc_id"), col("start"), (if (hashed) xxhash64(sub) else sub).as("g"))
+      val got = Dedup.windowGrams(probe, n, hashed)
+      assert(want.count() == 83L && got.count() == want.count(), s"hashed=$hashed")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"hashed=$hashed")
+    }
   }
 }

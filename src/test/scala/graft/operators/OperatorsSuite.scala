@@ -109,8 +109,12 @@ class DedupSuite extends SparkSpec {
   }
 
   test("one-pass ShingleSet expression equals sort_array(collect_set) over exploded shingles") {
+    // 9006: 5,200 code points cycling 1-, 2-, 3- and 4-byte chars (the
+    // 4-byte ones are surrogate pairs in Java), so the kernel's
+    // code-point walk is checked far past any short-string shortcut
+    val mixed = (0 until 5200).map(i => Seq("é", "€", "😀", "a", "ñ", "日", " ", "𝄞")(i * 7 % 8)).mkString
     val edge = Seq((9001L, ""), (9002L, "ab"), (9003L, "héllo wörld €dge"),
-      (9004L, "aaaaaaaaaa"), (9005L, "exact"))
+      (9004L, "aaaaaaaaaa"), (9005L, "exact"), (9006L, mixed))
       .toDF("doc_id", "text")
     val input = docs.select("doc_id", "text").unionByName(edge)
     val a = input.select(col("doc_id").as("id"),

@@ -772,7 +772,7 @@ object Dedup {
     * the window starting at char i + 1), spread first so the kernel
     * runs on every core of a single-split input.
     */
-  private def windowArrays(base: DataFrame, n: Int, hashed: Boolean): DataFrame = {
+  private[operators] def windowArrays(base: DataFrame, n: Int, hashed: Boolean): DataFrame = {
     require(n >= 2, s"window length must be >= 2: $n")
     import org.apache.spark.sql.graftbridge.{CharWindowGrams, ColumnBridge}
     Spread(base).select(col("doc_id"),
@@ -781,7 +781,7 @@ object Dedup {
   }
 
   /** [[windowArrays]] output exploded to (doc_id, start, g) rows. */
-  private def positioned(w: DataFrame): DataFrame =
+  private[operators] def positioned(w: DataFrame): DataFrame =
     w.select(col("doc_id"), posexplode(col("__w")).as(Seq("pos", "g")))
       .select(col("doc_id"), (col("pos") + 1).as("start"), col("g"))
 

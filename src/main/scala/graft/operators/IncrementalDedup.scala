@@ -722,26 +722,32 @@ object IncrementalDedup {
         "(or a re-init crashed mid-publish; re-run it)"))
     val n = params.window
     val base = delta.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
-    val w = Dedup.windowGrams(base, n, params.hashed)
-      .persist(StorageLevel.MEMORY_AND_DISK) // probe + flag join + admit
+    // each doc's window array, from one kernel pass: the gram counts
+    // and the flag join's positioned windows both read it
+    val w = Dedup.windowArrays(base, n, params.hashed)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val store = VersionedTable.read(spark, root).select("g")
     // flag GRAM SETS first, then join the big window side ONCE — the
-    // alternative (semi-joining w against store AND against the
-    // within-batch grams, union, distinct) shuffles the full window
-    // set three times instead of once
-    val deltaG = w.select("g", "doc_id").distinct()
+    // alternative (semi-joining the windows against store AND against
+    // the within-batch grams, union, distinct) shuffles the full window
+    // set three times instead of once. Doc frequency counts each doc's
+    // DISTINCT grams (`array_distinct` of its window array, as batch
+    // span dedup does), so no (g, doc_id) aggregate runs; one row per
+    // distinct delta gram, persisted for the probe, flag and admit.
+    val deltaG = w.select(explode(array_distinct(col("__w"))).as("g"))
+      .groupBy("g").agg(count(lit(1)).as("nd"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val withinG = deltaG.groupBy("g").agg(count(lit(1)).as("nd"))
-      .where(col("nd") >= 2).select("g")
+    val withinG = deltaG.where(col("nd") >= 2).select("g")
     // store ⋉ delta grams: the store streams once, output bounded by
     // the DELTA's gram count — never the corpus's
-    val corpusG = store.join(deltaG.select("g").distinct(), Seq("g"), "left_semi")
+    val corpusG = store.join(deltaG.select("g"), Seq("g"), "left_semi")
     val flaggedG = corpusG.unionByName(withinG).distinct()
-    val flagged = w.join(flaggedG, Seq("g"), "left_semi").select("doc_id", "start")
+    val flagged = Dedup.positioned(w).join(flaggedG, Seq("g"), "left_semi")
+      .select("doc_id", "start")
     val scores = Dedup.spanCoverage(base, flagged, n).localCheckpoint(true)
     var version = -1L
     if (append) {
-      val newG = deltaG.select("g").distinct().join(store, Seq("g"), "left_anti")
+      val newG = deltaG.select("g").join(store, Seq("g"), "left_anti")
       version = VersionedTable.commitDelta(spark, root, "parquet", newG)
     }
     deltaG.unpersist(blocking = false)

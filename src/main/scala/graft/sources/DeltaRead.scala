@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** Read-only interop with EXISTING Delta Lake tables — the reference's
   * sources accept `format: delta` (reference: src/drune/engines/spark/
@@ -197,12 +197,14 @@ object DeltaRead {
 
   /** [[readWithRowIds]] over an EXPLICIT snapshot-shaped file set —
     * shared with [[DeltaWrite.compact]]'s id-preserving rewrite, which
-    * scans only its folded subset.
+    * scans only its folded subset. `keepRowMeta` keeps the physical
+    * position columns, as in [[readSnapshot]].
     */
   private[graft] def readSnapshotRowIds(spark: SparkSession, path: String,
                                           snap: Snapshot,
                                           rowIdCol: String,
-                                          matFlagCol: Option[String] = None): DataFrame = {
+                                          matFlagCol: Option[String] = None,
+                                          keepRowMeta: Boolean = false): DataFrame = {
     val matName = snap.configuration.get("delta.rowTracking.materializedRowIdColumnName")
     matName.foreach { m =>
       require(!snap.schema.fieldNames.contains(m),
@@ -240,11 +242,14 @@ object DeltaRead {
     val joined = readSnapshot(spark, path, scanSnap, keepRowMeta = true)
       .join(baseDf, Seq("__graft_dv_fp"))
     val fresh = col("__graft_base_rid") + col("__graft_dv_ri")
+    val helpers =
+      if (keepRowMeta) Seq("__graft_base_rid")
+      else Seq("__graft_dv_fp", "__graft_dv_ri", "__graft_base_rid")
     // `matFlagCol`: emit whether THIS row's id came from the hidden
     // materialized column (true) or the fresh formula (false) — the
     // CDF reader uses it to tell a rewrite's carried/updated rows
     // (materialized) from its inserts (fresh) inside one add file.
-    val out0 = matName match {
+    matName match {
       case Some(m) =>
         // when the caller names the OUTPUT after the materialized
         // column itself (compact's id-preserving rewrite does),
@@ -255,14 +260,13 @@ object DeltaRead {
         val flagged = matFlagCol.foldLeft(joined) {
           (d, fc) => d.withColumn(fc, col(s"`$m`").isNotNull)
         }.withColumn(rowIdCol, coalesce(col(s"`$m`"), fresh))
-        val out = flagged.drop("__graft_dv_fp", "__graft_dv_ri", "__graft_base_rid")
+        val out = flagged.drop(helpers: _*)
         if (rowIdCol == m) out else out.drop(m)
       case None =>
         matFlagCol.foldLeft(joined.withColumn(rowIdCol, fresh)) {
           (d, fc) => d.withColumn(fc, lit(false))
-        }.drop("__graft_dv_fp", "__graft_dv_ri", "__graft_base_rid")
+        }.drop(helpers: _*)
     }
-    out0
   }
 
   /** The scan over an EXPLICIT snapshot-shaped file set — the body of
@@ -340,7 +344,8 @@ object DeltaRead {
     val rootP = qualifiedRoot(spark, path)
     if (snap.files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        snap.schema)
+        if (!withRowMeta) snap.schema
+        else snap.schema.add("__graft_dv_fp", StringType).add("__graft_dv_ri", LongType))
     // Column mapping: the PARQUET read uses physical names; partition
     // values were translated to logical keys at snapshot build, so the
     // partition side stays logical throughout. The final projection
@@ -1572,61 +1577,79 @@ object DeltaRead {
     read(spark, path, Some(versionAt(spark, path, tsMillis)))
 
   /** PHYSICAL row indexes matching `condition`, per live file — the
-    * input of a DV-emitting delete ([[DeltaWrite.delete]]). The scan
-    * deliberately ignores the current DVs: DV indexes address physical
-    * file rows, and the caller unions with the existing bitmap (a
-    * match that is already soft-deleted simply stays deleted). Returns
-    * decoded-relative-path → sorted indexes; refuses past the DV cap.
-    *
-    * Scale shape: the per-file grouping and index sort run ON THE
-    * EXECUTORS (`groupBy(file).agg(sort_array(collect_list(idx)))`) so
-    * the driver receives ONE row per touched file whose payload is the
-    * packed index array — 8 bytes per matched row, the same residency
-    * the commit's DV serialization needs anyway. A row-level collect
-    * here would ship a full Row object + the repeated file-path string
-    * per matched row (~20× the bytes) and OOM the driver long before
-    * the cap fired. The cap itself is BYTES of index payload
-    * ([[DeletionVectors.maxDeletedRows]] × 8), checked on the collected
-    * index arrays — the collect itself is bounded by
-    * `spark.driver.maxResultSize`, so a pathological DELETE fails
-    * inside it rather than ahead of it.
+    * input of a DV-emitting delete ([[DeltaWrite.delete]]) on a table
+    * without the change data feed. The scan deliberately ignores the
+    * current DVs: DV indexes address physical file rows, and the
+    * caller unions with the existing bitmap (a match that is already
+    * soft-deleted simply stays deleted). Returns decoded-relative-path
+    * → sorted indexes; refuses past the DV cap.
     */
   private[sources] def matchedPhysicalRows(spark: SparkSession, path: String,
                                            snap: Snapshot,
                                            condition: String): Map[String, Array[Long]] = {
+    val out = rowIndexesByFile(spark, path, snap,
+      scanSnapshot(spark, path, snap.copy(dvs = Map.empty), withRowMeta = true)
+        .where(condition))
+    requireDvBudget(out, "DELETE", path)
+    out
+  }
+
+  /** The physical row indexes of `rows` (a [[readSnapshot]] /
+    * [[readSnapshotRowIds]] frame over `snap`'s files with
+    * `keepRowMeta`), per file — decoded-relative-path → sorted indexes.
+    *
+    * Scale shape: the executors pack each partition's indexes per file
+    * (one `(file, Array[Long])` row per file a partition holds, in the
+    * same job that scans — no shuffle stage), so the driver receives 8
+    * bytes per matched row, the same residency the commit's DV
+    * serialization needs anyway, and only concatenates and sorts a
+    * file's runs. A row-level collect would ship a full Row object +
+    * the repeated file-path string per matched row (~20× the bytes)
+    * and OOM the driver long before the cap fired. The collect is
+    * bounded by `spark.driver.maxResultSize`, so a pathological match
+    * fails inside it before the driver is at risk; [[requireDvBudget]]
+    * checks the DV cap on the result.
+    */
+  private[sources] def rowIndexesByFile(spark: SparkSession, path: String,
+                                        snap: Snapshot,
+                                        rows: DataFrame): Map[String, Array[Long]] = {
     val rootP = qualifiedRoot(spark, path)
     // key space = _metadata.file_path = SparkPath (URL-encoded URI)
     // form; Path.toString would leave e.g. a space in a partition
     // value raw and the lookup below would miss (see readSnapshot)
     val absToRel = snap.files.keys.map(rel => new Path(rootP, rel).toUri.toString -> rel).toMap
-    val scanned = scanSnapshot(spark, path, snap.copy(dvs = Map.empty), withRowMeta = true)
-      .where(condition)
-      .select(col("__graft_dv_fp"), col("__graft_dv_ri"))
-    // ONE scan (r19, guide §1.2/§1.4): the budget used to be guarded by
-    // a dedicated count() — a second full pass over every candidate
-    // file before the collect. The refusal condition is unchanged
-    // (same threshold, same message) but now checks the collected
-    // sizes; the collect itself stays bounded by
-    // spark.driver.maxResultSize (1 GB default ≈ the 800 MB the old
-    // pre-count admitted anyway), so a pathological DELETE still fails
-    // before the driver is at risk — it just fails inside the collect
-    // rather than ahead of it.
-    import org.apache.spark.sql.functions.{collect_list, sort_array}
-    val out = scanned.groupBy(col("__graft_dv_fp"))
-      .agg(sort_array(collect_list(col("__graft_dv_ri"))).as("__graft_dv_ris"))
+    import spark.implicits._
+    rows.select(col("__graft_dv_fp"), col("__graft_dv_ri")).as[(String, Long)]
+      .mapPartitions { it =>
+        val byFile = scala.collection.mutable.HashMap
+          .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+        it.foreach { case (fp, ri) =>
+          byFile.getOrElseUpdate(fp, new scala.collection.mutable.ArrayBuilder.ofLong) += ri
+        }
+        byFile.iterator.map { case (fp, b) => (fp, b.result()) }
+      }
       .collect()
-      .map { r =>
-        val rel = absToRel.getOrElse(r.getString(0),
-          throw new IllegalStateException(
-            s"DELETE scan surfaced an unknown file ${r.getString(0)}"))
-        rel -> r.getSeq[Long](1).toArray
-      }.toMap
-    val n = out.valuesIterator.map(_.length.toLong).sum
+      .groupBy(_._1)
+      .map { case (fp, runs) =>
+        val rel = absToRel.getOrElse(fp,
+          throw new IllegalStateException(s"DML scan surfaced an unknown file $fp"))
+        val idx = runs.flatMap(_._2)
+        java.util.Arrays.sort(idx)
+        rel -> idx
+      }
+  }
+
+  /** DELETE and UPDATE refuse a match whose row indexes exceed the
+    * deletion-vector budget ([[DeletionVectors.maxDeletedRows]] × 8
+    * bytes).
+    */
+  private[sources] def requireDvBudget(matched: Map[String, Array[Long]], opName: String,
+                                       path: String): Unit = {
+    val n = matched.valuesIterator.map(_.length.toLong).sum
     require(8L * n <= 8L * DeletionVectors.maxDeletedRows,
-      s"DELETE at $path matches $n rows (${8L * n} bytes of row indexes) — past " +
+      s"$opName at $path matches $n rows (${8L * n} bytes of row indexes) — past " +
         s"the deletion-vector budget (${8L * DeletionVectors.maxDeletedRows} bytes); " +
         "rewrite the table instead")
-    out
   }
 
   /** One commit's DATA-CHANGING actions, for the streaming source:

@@ -168,7 +168,7 @@ object DeltaWrite {
     }
 
   def delete(spark: SparkSession, path: String, condition: String,
-             inlineMaxBytes: Int = 262144): Long = {
+             inlineMaxBytes: Int = InlineDvMaxBytes): Long = {
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     var snap = DeltaRead.snapshot(spark, rootP.toString)
@@ -176,8 +176,10 @@ object DeltaWrite {
     // condition's namespace) and the commit re-serializes each file's
     // partitionValues back under PHYSICAL keys (addLive)
     requireWritable(snap, path, removesData = true, cdfHandled = true)
-    val matched = DeltaRead.matchedPhysicalRows(spark, rootP.toString, snap, condition)
-    if (matched.isEmpty) return snap.version
+    // without the change data feed the row indexes are the delete's
+    // only product: one unpersisted scan, taken once — a retry unions
+    // them with the winner's DVs
+    lazy val physical = DeltaRead.matchedPhysicalRows(spark, rootP.toString, snap, condition)
     Txn.run(fs, s"DELETE at $path") { attempt =>
       if (attempt > 1) {
         snap = DeltaRead.snapshot(spark, rootP.toString)
@@ -186,46 +188,43 @@ object DeltaWrite {
         // retry — mirroring [[update]]'s per-attempt validation
         requireWritable(snap, path, removesData = true, cdfHandled = true)
       }
-      val updates = dvUnionUpdates(spark, snap, fs, rootP, matched,
-        inlineMaxBytes, "DELETE", path)
-      if (updates.isEmpty) Txn.Done(snap.version)
-      else {
-        // CHANGE DATA FEED: the deleted rows (live rows matching the
-        // predicate under THIS attempt's snapshot DVs — already-dead rows
-        // never re-appear as changes) land under _change_data/ per CAS
-        // attempt: a concurrent DV-only DELETE that won the race may have
-        // deleted an overlapping subset of the same files, and cdc rows
-        // staged against the stale snapshot would report those rows
-        // deleted twice to feed consumers. A lost race deletes the stale
-        // staged files and re-derives, mirroring [[update]].
-        val cdcFiles: Seq[NewFile] =
-          if (!cdfEnabled(snap)) Nil
+      if (!cdfEnabled(snap)) {
+        val updates = dvUnionUpdates(spark, snap, fs, rootP, physical,
+          inlineMaxBytes, "DELETE", path)
+        if (updates.isEmpty) Txn.Done(snap.version)
+        else publishCommit(spark, rootP, Some(snap),
+          dvDmlContent(snap, "DELETE", "predicate" -> condition, updates, Nil, Nil),
+          snap.configuration)
+      } else {
+        // CHANGE DATA FEED: the deleted rows are the change rows, so ONE
+        // persisted pass per CAS attempt yields both the DV indexes and
+        // the cdc rows — live rows matching the predicate under THIS
+        // attempt's snapshot DVs (already-dead rows never re-appear as
+        // changes). A concurrent DV-only DELETE that won the race may
+        // have deleted an overlapping subset of the same files; a lost
+        // race deletes the staged cdc files and re-derives, mirroring
+        // [[update]]. rowTracking tables: the change rows carry their
+        // RETIRED ids ([[DeltaRead.CdcRowIdCol]]) so the id-keyed CDF
+        // read can surface them — a delete's ids are always
+        // attributable (the rows' files and baseRowIds are unchanged).
+        val withIds = snap.minWriter >= 7 &&
+          snap.writerFeatures.contains("rowTracking") &&
+          snap.files.keySet.forall(snap.rowIds.contains)
+        val (rows, matched) = liveMatches(spark, rootP, snap,
+          if (withIds) Some(DeltaRead.CdcRowIdCol) else None)(_.where(condition))
+        try {
+          DeltaRead.requireDvBudget(matched, "DELETE", path)
+          val updates = dvUnionUpdates(spark, snap, fs, rootP, matched,
+            inlineMaxBytes, "DELETE", path)
+          if (updates.isEmpty) Txn.Done(snap.version)
           else {
-            val touched = matched.keySet
-            val tSnap = snap.copy(files = snap.files.filter(kv => touched.contains(kv._1)))
-            // rowTracking tables: the change rows carry their RETIRED ids
-            // ([[DeltaRead.CdcRowIdCol]]) so the id-keyed CDF read can
-            // surface them — a delete's ids are always attributable (the
-            // rows' files and baseRowIds are unchanged)
-            val withIds = snap.minWriter >= 7 &&
-              snap.writerFeatures.contains("rowTracking") &&
-              touched.forall(snap.rowIds.contains)
-            val delRows = (if (withIds)
-                DeltaRead.readSnapshotRowIds(spark, rootP.toString, tSnap,
-                  DeltaRead.CdcRowIdCol)
-              else DeltaRead.readSnapshot(spark, rootP.toString, tSnap))
-              .where(condition)
-              .withColumn("_change_type", lit("delete"))
-            // `updates` non-empty ⟹ some matched row index is not in its
-            // file's old DV ⟹ at least one LIVE row matches `condition`
-            // ⟹ delRows is non-empty — the old isEmpty probe re-ran the
-            // whole matched scan as its own job to learn that (r19,
-            // guide §1.2)
-            writeCdcFiles(spark, snap, delRows, rootP, fs)
+            val cdcFiles = dropEmptyTaskZeroFile(spark, fs, rootP, writeCdcFiles(spark, snap,
+              rows.drop(RowMeta: _*).withColumn("_change_type", lit("delete")), rootP, fs))
+            publishCommit(spark, rootP, Some(snap),
+              dvDmlContent(snap, "DELETE", "predicate" -> condition, updates, Nil, cdcFiles),
+              snap.configuration, cdcFiles)
           }
-        publishCommit(spark, rootP, Some(snap),
-          dvDmlContent(snap, "DELETE", condition, updates, Nil, cdcFiles),
-          snap.configuration, cdcFiles)
+        } finally rows.unpersist(false)
       }
     }
   }
@@ -248,7 +247,7 @@ object DeltaWrite {
     */
   def update(spark: SparkSession, path: String, condition: String,
              assignments: Map[String, String],
-             inlineMaxBytes: Int = 262144): Long = {
+             inlineMaxBytes: Int = InlineDvMaxBytes): Long = {
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -272,122 +271,168 @@ object DeltaWrite {
         snap = DeltaRead.snapshot(spark, rootP.toString)
         requireWritable(snap, path, removesData = true, cdfHandled = true)
       }
-      val matched = DeltaRead.matchedPhysicalRows(spark, rootP.toString, snap, condition)
-      val updates =
-        if (matched.isEmpty) Nil
-        else dvUnionUpdates(spark, snap, fs, rootP, matched, inlineMaxBytes, "UPDATE", path)
-      // no match, or every match already deleted
-      if (updates.isEmpty) Txn.Done(snap.version)
-      else {
-        val touched = matched.keySet
-        // ROW-ID MATERIALIZATION (round 18): on a table declaring a
-        // materialized row-id column, UPDATE's postimage files carry each
-        // updated row's CURRENT id in the hidden column — an update moves
-        // a row to a new file but must not re-key it (delta-spark's
-        // stable-id contract; same machinery as compact/merge). The
-        // soft-deleted originals' files keep their baseRowId, so unmatched
-        // rows' ids never move either way.
-        val matName: Option[String] =
-          if (snap.minWriter >= 7 && snap.writerFeatures.contains("rowTracking") &&
-              touched.forall(snap.rowIds.contains))
-            snap.configuration.get("delta.rowTracking.materializedRowIdColumnName")
-              .filterNot(m => snap.schema.fieldNames.contains(m) ||
-                snap.colMap.values.exists(_ == m))
-          else None
-        val touchedSnap = snap.copy(files = snap.files.filter(kv => touched.contains(kv._1)))
-        // MATCHED-ROW MATERIALIZATION (r19, guide §1.2/§5): on CDF
-        // tables the matched live rows feed THREE sub-plans — the
-        // rewritten images' data write, the cdc preimages and the cdc
-        // postimages — and each used to re-scan the touched parquet
-        // files. The matched set is DV-budget-bounded (delta-sized,
-        // never table-sized), so persist it for the attempt; spill beats
-        // a triple rescan. Without CDF there is ONE consumer (the data
-        // write) and the persist would be pure overhead — skipped.
-        // Released in the finally — a lost CAS recomputes from the
-        // winner's snapshot.
-        val updCdf = cdfEnabled(snap)
-        val liveMatched0 = (matName match {
-          case Some(m) => DeltaRead.readSnapshotRowIds(spark, rootP.toString, touchedSnap, m)
-          case None => DeltaRead.readSnapshot(spark, rootP.toString, touchedSnap)
-        }).where(condition)
-        val liveMatched =
-          if (updCdf)
-            liveMatched0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else liveMatched0
-        try {
-        val assigned = liveMatched.select((snap.schema.fields.map { f =>
-          byLower.get(f.name.toLowerCase)
-            .map(e => expr(e).cast(f.dataType).as(f.name))
-            .getOrElse(col(s"`${f.name}`"))
-        } ++ matName.map(m => col(s"`$m`"))).toIndexedSeq: _*)
-        // generated columns RECOMPUTE from the post-update row unless the
-        // statement assigned them explicitly — only the ASSIGNED ones
-        // validate (a recomputed column equals its expression by
-        // construction; re-checking it would cost a pass per column)
-        val gens = generatedOf(snap)
-        val newRows = gens.foldLeft(assigned) { case (d, (name, e)) =>
-          if (byLower.contains(name.toLowerCase)) {
-            validateGenerated(snap, d, name, e, path, "UPDATE"); d
+      // ROW-ID MATERIALIZATION (round 18): on a table declaring a
+      // materialized row-id column, UPDATE's postimage files carry each
+      // updated row's CURRENT id in the hidden column — an update moves
+      // a row to a new file but must not re-key it (delta-spark's
+      // stable-id contract; same machinery as compact/merge). The
+      // soft-deleted originals' files keep their baseRowId, so unmatched
+      // rows' ids never move either way.
+      val matName: Option[String] =
+        if (snap.minWriter >= 7 && snap.writerFeatures.contains("rowTracking") &&
+            snap.files.keySet.forall(snap.rowIds.contains))
+          snap.configuration.get("delta.rowTracking.materializedRowIdColumnName")
+            .filterNot(m => snap.schema.fieldNames.contains(m) ||
+              snap.colMap.values.exists(_ == m))
+        else None
+      // ONE pass over the matched live rows, persisted for the attempt:
+      // it yields the DV indexes and feeds the rewritten images' data
+      // write and, on CDF tables, the cdc pre- and postimages. The
+      // matched set is DV-budget-bounded (delta-sized, never
+      // table-sized), so spill beats a rescan. A lost CAS recomputes
+      // from the winner's snapshot.
+      val (rows, matched) = liveMatches(spark, rootP, snap, matName)(_.where(condition))
+      try {
+        DeltaRead.requireDvBudget(matched, "UPDATE", path)
+        val updates = dvUnionUpdates(spark, snap, fs, rootP, matched,
+          inlineMaxBytes, "UPDATE", path)
+        // no match, or every match already deleted
+        if (updates.isEmpty) Txn.Done(snap.version)
+        else {
+          val liveMatched = rows.drop(RowMeta: _*)
+          val assigned = liveMatched.select((snap.schema.fields.map { f =>
+            byLower.get(f.name.toLowerCase)
+              .map(e => expr(e).cast(f.dataType).as(f.name))
+              .getOrElse(col(s"`${f.name}`"))
+          } ++ matName.map(m => col(s"`$m`"))).toIndexedSeq: _*)
+          // generated columns RECOMPUTE from the post-update row unless the
+          // statement assigned them explicitly — only the ASSIGNED ones
+          // validate (a recomputed column equals its expression by
+          // construction; re-checking it would cost a pass per column)
+          val gens = generatedOf(snap)
+          val newRows = gens.foldLeft(assigned) { case (d, (name, e)) =>
+            if (byLower.contains(name.toLowerCase)) {
+              validateGenerated(snap, d, name, e, path, "UPDATE"); d
+            }
+            else d.withColumn(name,
+              expr(e).cast(snap.schema(snap.schema.fieldIndex(name)).dataType))
           }
-          else d.withColumn(name,
-            expr(e).cast(snap.schema(snap.schema.fieldIndex(name)).dataType))
+          enforceConstraints(snap, newRows, path, "UPDATE")
+          val cdcFiles: Seq[NewFile] =
+            if (!cdfEnabled(snap)) Nil
+            else {
+              // with a materialized row-id column the pre/postimage SHARE
+              // each row's id (rename the id column to the cdc home
+              // [[DeltaRead.CdcRowIdCol]]); without it the postimage's
+              // fresh ids are unknowable here, so no ids attach and the
+              // id-keyed CDF read refuses this commit loudly
+              val pre = matName.map(m => liveMatched
+                .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(liveMatched)
+              val post = matName.map(m => newRows
+                .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(newRows)
+              dropEmptyTaskZeroFile(spark, fs, rootP, writeCdcFiles(spark, snap,
+                pre.withColumn("_change_type", lit("update_preimage"))
+                  .unionByName(post.withColumn("_change_type", lit("update_postimage"))),
+                rootP, fs))
+            }
+          val (physDf, physParts) = toPhysical(snap, newRows, matName.toSeq)
+          val newFiles = dropEmptyTaskZeroFile(spark, fs, rootP, withStats(spark, fs, rootP,
+            writeDataFiles(spark, physDf, rootP, fs, physParts,
+              shredOk = shredOptIn(snap))))
+          publishCommit(spark, rootP, Some(snap),
+            dvDmlContent(snap, "UPDATE", "predicate" -> condition, updates, newFiles, cdcFiles),
+            snap.configuration, newFiles ++ cdcFiles)
         }
-        enforceConstraints(snap, newRows, path, "UPDATE")
-        val cdcFiles: Seq[NewFile] =
-          if (!cdfEnabled(snap)) Nil
-          else {
-            // with a materialized row-id column the pre/postimage SHARE
-            // each row's id (rename the id column to the cdc home
-            // [[DeltaRead.CdcRowIdCol]]); without it the postimage's
-            // fresh ids are unknowable here, so no ids attach and the
-            // id-keyed CDF read refuses this commit loudly
-            val pre = matName.map(m => liveMatched
-              .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(liveMatched)
-            val post = matName.map(m => newRows
-              .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(newRows)
-            writeCdcFiles(spark, snap,
-              pre.withColumn("_change_type", lit("update_preimage"))
-                .unionByName(post.withColumn("_change_type", lit("update_postimage"))),
-              rootP, fs)
-          }
-        val (physDf, physParts) = toPhysical(snap, newRows, matName.toSeq)
-        val newFiles = withStats(spark, fs, rootP,
-          writeDataFiles(spark, physDf, rootP, fs, physParts,
-            shredOk = shredOptIn(snap)))
-        publishCommit(spark, rootP, Some(snap),
-          dvDmlContent(snap, "UPDATE", condition, updates, newFiles, cdcFiles),
-          snap.configuration, newFiles ++ cdcFiles)
-        } finally { if (updCdf) liveMatched.unpersist(false) }
-      }
+      } finally rows.unpersist(false)
     }
   }
 
-  /** A DV DML commit (DELETE / UPDATE): each touched file's old
-    * identity is removed and — unless its new DV covers every row —
-    * re-added with the new DV, then UPDATE's rewritten images land as
-    * plain adds. The first DV on a table upgrades the protocol.
+  /** Row-index bytes a DV DML inlines into the log before it writes an
+    * on-disk "u" DV file instead.
     */
-  private def dvDmlContent(snap: DeltaRead.Snapshot, operation: String, condition: String,
+  private val InlineDvMaxBytes = 262144
+
+  /** The position columns a `keepRowMeta` scan carries (file path and
+    * physical row index).
+    */
+  private val RowMeta = Seq("__graft_dv_fp", "__graft_dv_ri")
+
+  /** ONE pass over the live rows of `snap`'s files that `keep` selects —
+    * DVs applied, physical positions ([[RowMeta]]) and, with `idCol`,
+    * row ids attached, persisted — plus their row indexes per file,
+    * collected from that same frame. The DV DMLs' single read: the
+    * indexes union into each file's DV ([[dvUnionUpdates]]) while the
+    * persisted rows feed the written images and the change rows. A
+    * live index set unioned with the old DV equals the physical-match
+    * union, because dead rows are already in the old DV. The caller
+    * unpersists the returned frame.
+    */
+  private def liveMatches(spark: SparkSession, rootP: Path, snap: DeltaRead.Snapshot,
+                          idCol: Option[String])(keep: DataFrame => DataFrame)
+      : (DataFrame, Map[String, Array[Long]]) = {
+    val scan = idCol match {
+      case Some(c) => DeltaRead.readSnapshotRowIds(spark, rootP.toString, snap, c,
+        keepRowMeta = true)
+      case None => DeltaRead.readSnapshot(spark, rootP.toString, snap, keepRowMeta = true)
+    }
+    val rows = keep(scan).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try (rows, DeltaRead.rowIndexesByFile(spark, rootP.toString, snap, rows))
+    catch { case e: Throwable => rows.unpersist(false); throw e }
+  }
+
+  /** Spark's writer opens a file for task 0 even when that partition
+    * holds no rows (every other task opens one at its first row). The
+    * single-pass DELETE / UPDATE writes come from a frame over EVERY
+    * live file, whose first partition often matches nothing: that
+    * zero-row file is deleted and left out of the commit whenever the
+    * write produced others (a non-empty write never needs it). One
+    * footer read at most, none for files carrying stats.
+    */
+  private def dropEmptyTaskZeroFile(spark: SparkSession, fs: FileSystem, rootP: Path,
+                                    files: Seq[NewFile]): Seq[NewFile] =
+    if (files.length < 2) files
+    else files.filterNot { f =>
+      val p = new Path(rootP, f.relPath)
+      p.getName.startsWith("part-00000-") && {
+        val rows = Option(f.stats).flatMap(DeltaRead.parseAddStats).map(_.rows).getOrElse(
+          graft.pipeline.FileStats.readFooterStats(fs.makeQualified(p).toString,
+            spark.sparkContext.hadoopConfiguration).rows)
+        rows == 0L && fs.delete(p, false)
+      }
+    }
+
+  /** A DV DML commit (DELETE / UPDATE / MERGE): each touched file's old
+    * identity is removed and — unless its new DV covers every row —
+    * re-added with the new DV, then the written rows land as plain
+    * adds. Action order: commitInfo, protocol (the first DV on a table
+    * upgrades it), metaData (`identityHw` marks a MERGE moved), cdc,
+    * removes, adds.
+    */
+  private def dvDmlContent(snap: DeltaRead.Snapshot, operation: String,
+                           parameter: (String, String),
                            updates: Seq[(String, Option[DeletionVectors.Descriptor],
                              DeletionVectors.Descriptor)],
-                           newFiles: Seq[NewFile], cdcFiles: Seq[NewFile]): String = {
+                           newFiles: Seq[NewFile], cdcFiles: Seq[NewFile],
+                           identityHw: Map[String, Long] = Map.empty): String = {
     val now = System.currentTimeMillis
-    commitLines(commitInfoLine(now, operation, "predicate" -> condition) +:
-      (protocolUpgrade(snap).toSeq ++ cdcFiles.map(cdcLine(_, now)) ++
-        updates.flatMap { case (rel, oldDv, newDv) =>
-          // null newDv = the DV covered the whole file: drop it
-          removeLine(rel, now, dataChange = true, oldDv) +:
-            Option(newDv).map(d => addLive(snap, rel, now, dataChange = true, Some(d))).toSeq
-        } ++ newFiles.map(addNew(_))))
+    commitLines(commitInfoLine(now, operation, parameter) +:
+      ((if (updates.isEmpty) None else protocolUpgrade(snap)).toSeq ++
+        identityMetaDataLine(snap, identityHw, now).toSeq ++
+        cdcFiles.map(cdcLine(_, now)) ++
+        updates.map { case (rel, oldDv, _) => removeLine(rel, now, dataChange = true, oldDv) } ++
+        // null newDv = the DV covered the whole file: drop it
+        updates.collect { case (rel, _, newDv) if newDv != null =>
+          addLive(snap, rel, now, dataChange = true, Some(newDv)) } ++
+        newFiles.map(addNew(_))))
   }
 
   /** FILE-PRUNED MERGE (upsert): rows of `source` replace target rows
-    * matching on `keys` and new keys insert — committed as
-    * remove+add over ONLY the files whose key-column stats intersect
-    * the source's key set. Untouched files carry by ABSENCE of a
-    * remove action: zero data I/O and byte-identical add entries in
-    * the snapshot, so the commit is O(touched + source), delta-spark
-    * MERGE's pruned shape — not the O(table) full overwrite.
+    * matching on `keys` and new keys insert, over ONLY the files whose
+    * key-column stats intersect the source's key set. Untouched files
+    * carry by ABSENCE of a remove action: zero data I/O and
+    * byte-identical add entries in the snapshot, so the commit is
+    * O(touched + source), delta-spark MERGE's pruned shape — not the
+    * O(table) full overwrite.
     *
     * Classification mirrors [[graft.pipeline.VersionedTable
     * .commitMerge]]: the source's distinct head-key set is collected
@@ -396,30 +441,48 @@ object DeltaWrite {
     * log-resident `add.stats` min/max ([[DeltaRead.parseAddStats]]).
     * A file without usable stats on the key column is conservatively
     * touched — never silently skipped. Soundness: an untouched file's
-    * key range excludes every source key, so no row in it can match;
-    * rewriting only touched files preserves MERGE semantics exactly.
+    * key range excludes every source key, so no row in it can match.
+    *
+    * Two commit shapes, chosen by [[mergeUsesDvs]]:
+    *  - DELETION VECTORS, when the table sets
+    *    `delta.enableDeletionVectors=true`, the merge is the default
+    *    upsert, and the live DVs plus the matched rows fit
+    *    [[DeletionVectors.maxDeletedRows]] (delta-spark's DV MERGE, as
+    *    DELETE and UPDATE here): one persisted pass over the touched
+    *    files' live rows that a source key matches; their row indexes
+    *    union into each file's DV (remove + re-add under the same path
+    *    with the new DV) and the new files hold only the source's rows.
+    *    Unmatched rows are never rewritten, so the data written is
+    *    O(source) and the log O(matched).
+    *  - COPY-ON-WRITE otherwise (and as the fallback past the DV cap —
+    *    the rewrite leaves the touched files without DVs): the touched
+    *    files are removed and rewritten whole.
     *
     * `mergeFn(touchedBase, source)` builds the replacement rows for
     * the touched subset (default: upsert — source wins on key match,
-    * unmatched touched rows carry). DIVERGENCE from delta-spark
-    * MERGE: the default mergeFn inserts EVERY source row, so a source
-    * carrying duplicate key values yields duplicate rows in the table
-    * (all-duplicates-win), where delta-spark fails the statement on
-    * multiple source matches for one target row — callers porting a
-    * MERGE workload with possibly-duplicated sources should
-    * `.dropDuplicates(keys)` first or pass a deduplicating mergeFn.
+    * unmatched touched rows carry); a custom mergeFn always rewrites.
+    * DIVERGENCE from delta-spark MERGE: the default upsert inserts
+    * EVERY source row, so a source carrying duplicate key values
+    * yields duplicate rows in the table (all-duplicates-win), where
+    * delta-spark fails the statement on multiple source matches for
+    * one target row — callers porting a MERGE workload with
+    * possibly-duplicated sources should `.dropDuplicates(keys)` first
+    * or pass a deduplicating mergeFn.
     * ROW-ID MATERIALIZATION (round 18): on a rowTracking table
     * declaring `delta.rowTracking.materializedRowIdColumnName`, the
-    * default-mergeFn rewrite preserves surviving rows' ids in the
-    * hidden column (carried rows keep theirs, updated rows inherit
-    * the matched target's, inserts mint fresh) — and duplicated
-    * source keys refuse loudly there (they cannot soundly share one
-    * inherited id). Touched files READ WITH their
-    * deletion vectors applied, and their removes carry the DV
-    * descriptors, so a merge after a DV delete stays consistent for
-    * every reader. A CAS loss re-derives everything against the
-    * winner's snapshot (the staged files are deleted — unlike
-    * append/overwrite the data job DEPENDS on the snapshot it read).
+    * default upsert preserves surviving rows' ids (carried rows keep
+    * theirs, updated rows inherit the matched target's in the hidden
+    * column, inserts mint fresh) — and duplicated source keys refuse
+    * loudly there (they cannot soundly share one inherited id). An
+    * inserted row's fresh id is baseRowId + its index in the new file,
+    * so the two shapes give inserts different (equally valid, unique
+    * and stable) ids: the DV path's new files hold fewer rows. Touched
+    * files READ WITH their deletion vectors applied, and their removes
+    * carry the DV descriptors, so a merge after a DV delete stays
+    * consistent for every reader. A CAS loss re-derives everything
+    * against the winner's snapshot (the staged files are deleted —
+    * unlike append/overwrite the data job DEPENDS on the snapshot it
+    * read).
     */
   def merge(spark: SparkSession, source: DataFrame, path: String, keys: Seq[String],
             mergeFn: (DataFrame, DataFrame) => DataFrame = null,
@@ -488,13 +551,7 @@ object DeltaWrite {
         Some(org.apache.spark.sql.functions.broadcast(
           spark.createDataFrame(rows, keyFields)))
       } else None
-    def srcKeysOf(src: DataFrame): DataFrame =
-      srcKeysLocal.getOrElse(src.select(keys.map(col): _*))
-    val fn: (DataFrame, DataFrame) => DataFrame =
-      if (mergeFn != null) mergeFn
-      else (touched, src) => src.unionByName(
-        touched.join(srcKeysOf(src), keys, "left_anti"),
-        allowMissingColumns = true)
+    val srcKeys: DataFrame = srcKeysLocal.getOrElse(source.select(keys.map(col): _*))
     // exact when the group set is complete; None degrades to a
     // dedicated probe on the (rare) oversized source
     val dupSrcKnown: Option[Boolean] =
@@ -549,12 +606,13 @@ object DeltaWrite {
         }
       }
       val touchedSet = touched.toSet
+      val touchedSnap = snap.copy(files = snap.files.filter(kv => touchedSet.contains(kv._1)))
       // ROW-ID MATERIALIZATION (round 18 — completes round 17's arc):
       // when the table DECLARES a materialized row-id column
       // (delta-spark's stable-id contract,
       // `delta.rowTracking.materializedRowIdColumnName`), the merge's
-      // touched-file rewrite preserves each surviving row's CURRENT id
-      // by writing it into that hidden parquet column — carried rows
+      // written rows preserve each surviving row's CURRENT id by
+      // writing it into that hidden parquet column — carried rows
       // keep theirs, updated rows inherit the matched target row's,
       // and inserted rows stay null (the protocol's fresh formula
       // baseRowId + row_index keys them). Attribution needs the
@@ -570,57 +628,90 @@ object DeltaWrite {
               source.columns.exists(_.equalsIgnoreCase(m)) ||
               snap.colMap.values.exists(_ == m))
         else None
-      val touchedBase: DataFrame =
-        if (touched.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-        else matName match {
-          case Some(m) => DeltaRead.readSnapshotRowIds(spark, rootP.toString,
-            snap.copy(files = snap.files.filter(kv => touchedSet.contains(kv._1))), m)
-          case None => DeltaRead.readSnapshot(spark, rootP.toString,
-            snap.copy(files = snap.files.filter(kv => touchedSet.contains(kv._1))))
+      // DELETION-VECTOR PATH: one persisted pass over the touched files'
+      // live rows that a source key matches yields their DV indexes and
+      // every target-side input below; [[mergeUsesDvs]] decides it
+      // before the pass (table opt-in, default upsert) and again with
+      // the matched count (the DV cap) — past the cap the pass is
+      // dropped and the merge rewrites the touched files instead
+      val customFn = mergeFn != null
+      val dvPass: Option[(DataFrame, Map[String, Array[Long]])] =
+        if (touched.isEmpty || !mergeUsesDvs(snap, customFn, 0L)) None
+        else {
+          val (rows, matched) = liveMatches(spark, rootP, touchedSnap, matName)(
+            _.join(srcKeys, keys, "left_semi"))
+          if (mergeUsesDvs(snap, customFn, matched.valuesIterator.map(_.length.toLong).sum))
+            Some((rows, matched))
+          else { rows.unpersist(false); None }
         }
+      // the target rows the merge reads: the matched live rows on the DV
+      // path (carried rows stay in their files), else every live row of
+      // the touched files, read WITH their deletion vectors applied
+      val targetRows: DataFrame = dvPass match {
+        case Some((rows, _)) => rows.drop(RowMeta: _*)
+        case None =>
+          if (touched.isEmpty)
+            spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
+          else matName match {
+            case Some(m) => DeltaRead.readSnapshotRowIds(spark, rootP.toString, touchedSnap, m)
+            case None => DeltaRead.readSnapshot(spark, rootP.toString, touchedSnap)
+          }
+      }
       // id-carrying frames for the mergeFn: the hidden column must not
-      // leak into the upsert's key joins or the schema checks
-      val touchedData = matName.map(touchedBase.drop(_)).getOrElse(touchedBase)
+      // leak into a custom merge's joins or the schema checks
+      val targetData = matName.map(targetRows.drop(_)).getOrElse(targetRows)
       // PER-KEY SURVIVOR IDS, COMPUTED ONCE (r19, guide §1.2): the
-      // data rewrite's id inheritance AND — on CDF tables — the cdc
-      // postimage join used to each run their own identical
-      // touchedBase aggregation: two full passes over the touched
-      // files for one tiny keyed frame. Persisted for the attempt
-      // (one row per distinct touched key, keys + one long —
+      // data write's id inheritance AND — on CDF tables — the cdc
+      // postimage join read one keyed frame. Persisted for the attempt
+      // (one row per distinct target key, keys + one long —
       // delta-class, never table-wide) only when the cdc decomposition
       // will consume it a second time; released after the commit
       // decision.
       val mergeCdf = cdfEnabled(snap)
       val idByKeyOpt: Option[DataFrame] = matName.map { m =>
-        val byKey = touchedBase.groupBy(keys.map(col): _*)
+        val byKey = targetRows.groupBy(keys.map(col): _*)
           .agg(org.apache.spark.sql.functions.min(col(s"`$m`")).as(m))
         if (mergeCdf)
           byKey.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else byKey
       }
       try {
-      // merged output must conform to the TABLE schema (realigned by
-      // name, loud on drift) — schema evolution is an explicit overwrite
-      val merged0 = fn(touchedData, source)
-      val missing = snap.schema.fieldNames
-        .filterNot(n => merged0.columns.exists(_.equalsIgnoreCase(n)))
-      val extra = merged0.columns
-        .filterNot(n => snap.schema.fieldNames.exists(_.equalsIgnoreCase(n)))
-      require(missing.isEmpty && extra.isEmpty,
-        s"merge output does not match the Delta table schema at $path — missing: " +
-          s"[${missing.mkString(", ")}], extra: [${extra.mkString(", ")}]; " +
-          "overwrite the table to change its schema")
-      val merged = matName match {
-        case Some(m) =>
-          // stable ids demand unambiguous inheritance: a source key
-          // matching one target row inherits its id; a multi-row target
-          // key collapses under the upsert (source wins once) and the
-          // deterministic survivor id is the minimum; a DUPLICATED
-          // source key would copy one target id onto several output
-          // rows — refuse loudly, delta-spark fails multi-match MERGEs
-          // outright (dropDuplicates(keys) first)
+        // the merged rows: a custom mergeFn's replacement for the touched
+        // rows, or the default upsert — every source row (on id tables
+        // pulling its matched key's surviving id; null = insert, the
+        // fresh formula applies) plus, on copy-on-write, the touched rows
+        // no source key matches, carried with the ids they were read with
+        val merged0 =
+          if (customFn) mergeFn(targetData, source)
+          else {
+            val srcWithId = idByKeyOpt.fold(source)(source.join(_, keys, "left"))
+            // DV path: carried rows stay in their files — the empty target
+            // side only aligns the columns and types as copy-on-write's
+            // union does
+            val carried =
+              if (dvPass.isDefined) targetRows.where(lit(false))
+              else targetRows.join(srcKeys, keys, "left_anti")
+            srcWithId.unionByName(carried, allowMissingColumns = true)
+          }
+        // merged output must conform to the TABLE schema (realigned by
+        // name, loud on drift) — schema evolution is an explicit overwrite
+        val missing = snap.schema.fieldNames
+          .filterNot(n => merged0.columns.exists(_.equalsIgnoreCase(n)))
+        val extra = merged0.columns.filterNot(n => matName.contains(n) ||
+          snap.schema.fieldNames.exists(_.equalsIgnoreCase(n)))
+        require(missing.isEmpty && extra.isEmpty,
+          s"merge output does not match the Delta table schema at $path — missing: " +
+            s"[${missing.mkString(", ")}], extra: [${extra.mkString(", ")}]; " +
+            "overwrite the table to change its schema")
+        // stable ids demand unambiguous inheritance: a source key matching
+        // one target row inherits its id; a multi-row target key collapses
+        // under the upsert (source wins once) and the deterministic
+        // survivor id is the minimum; a DUPLICATED source key would copy
+        // one target id onto several output rows — refuse loudly,
+        // delta-spark fails multi-match MERGEs outright
+        // (dropDuplicates(keys) first)
+        if (matName.isDefined) {
           val dupSrc = dupSrcKnown.getOrElse(
             source.groupBy(keys.map(col): _*).count()
               .where(col("count") > 1).limit(1).count() > 0)
@@ -629,161 +720,183 @@ object DeltaWrite {
               "row-id column, so source rows inherit their matched target row's " +
               "id — a source carrying duplicate key values would mint DUPLICATE " +
               "row ids; dropDuplicates(keys) the source first")
-          val idByKey = idByKeyOpt.get
-          // re-derive the default upsert WITH ids: source rows pull the
-          // matched key's id (null = insert, fresh formula applies),
-          // carried rows keep the id they were read with
-          val srcWithId = source.join(idByKey, keys, "left")
-          val carriedWithId = touchedBase.join(
-            srcKeysOf(source), keys, "left_anti")
-          srcWithId.unionByName(carriedWithId, allowMissingColumns = true)
-            .select((snap.schema.fieldNames :+ m).map(col): _*)
-        case None => merged0.select(snap.schema.fieldNames.map(col): _*)
-      }
-      snap.schema.fields.zip(merged.schema.fields).foreach { case (t, d) =>
-        require(t.dataType.catalogString == d.dataType.catalogString,
-          s"type mismatch merging into Delta table $path — column '${t.name}' " +
-            s"is ${t.dataType.catalogString} in the table, " +
-            s"${d.dataType.catalogString} in the merge output")
-      }
-      enforceConstraints(snap, merged, path, "MERGE")
-      withGeneratedColumns(snap, merged, path, "MERGE") // validate-only: schema is fixed
-      // IDENTITY COLUMNS: merge realigns to the table schema, so the
-      // source MUST carry the identity value — an explicit insert,
-      // legal only under allowExplicitInsert (GENERATED BY DEFAULT).
-      // The high-water mark bumps past the merged extreme in the SAME
-      // commit's metaData (mergeContent), preserving the protocol's
-      // collision-freedom for later allocating appends. The extreme is
-      // probed over the COMMITTED frame (a custom mergeFn may mint
-      // values absent from the source), one bounded agg per identity
-      // column, identity tables only.
-      val mergeIdentities = identitiesOf(snap)
-      mergeIdentities.foreach(id => require(id.allowExplicit,
-        s"Delta table at $path has GENERATED ALWAYS identity column " +
-          s"'${id.name}' — MERGE realigns its output to the table schema and " +
-          "would insert explicit identity values, which GENERATED ALWAYS " +
-          "forbids; use GENERATED BY DEFAULT or route through append"))
-      val mergeIdentityHw: Map[String, Long] =
-        if (mergeIdentities.isEmpty) Map.empty
-        else {
-          import org.apache.spark.sql.functions.{max => fmax, min => fmin, sum => fsum, when => fwhen}
-          // ONE agg pass for every identity column (per-column aggs
-          // re-ran the whole un-materialized merge join once each):
-          // the extreme AND a null probe — a source frame that omits
-          // the identity column null-fills under the default mergeFn's
-          // unionByName, and silently committing NULL identity values
-          // would break the contract for every reader
-          val aggs = mergeIdentities.flatMap { id =>
-            Seq((if (id.step > 0) fmax(col(id.name)) else fmin(col(id.name)))
-                .as(s"__ext_${id.name}"),
-              fsum(fwhen(col(id.name).isNull, 1L).otherwise(0L))
-                .as(s"__nulls_${id.name}"))
-          }
-          val row = merged.agg(aggs.head, aggs.tail: _*).head()
-          mergeIdentities.flatMap { id =>
-            val ni = row.fieldIndex(s"__nulls_${id.name}")
-            require(row.isNullAt(ni) || row.getLong(ni) == 0L,
-              s"MERGE into Delta table at $path would commit NULL values in " +
-                s"identity column '${id.name}' (${row.getLong(ni)} row(s)) — the " +
-                "merge output realigns to the table schema, so the source (or a " +
-                "custom mergeFn) must supply every identity value explicitly")
-            val cur = id.highWater.getOrElse(id.start - id.step)
-            val ei = row.fieldIndex(s"__ext_${id.name}")
-            if (row.isNullAt(ei)) None
-            else {
-              val v = row.getLong(ei)
-              if (if (id.step > 0) v > cur else v < cur) Some(id.name -> v) else None
-            }
-          }.toMap
         }
-      val (physDf, physParts) = toPhysical(snap, merged, matName.toSeq)
-      val newFiles = withStats(spark, fs, rootP,
-        writeDataFiles(spark, physDf, rootP, fs, physParts,
-          shredOk = shredOptIn(snap)))
-      if (touched.isEmpty && newFiles.isEmpty) Txn.Done(snap.version) // empty no-op
-      else {
-        // CHANGE DATA FEED: decompose the default upsert into the
-        // protocol's change types — touched rows whose key the source
-        // carries are updates (preimage = current row, postimage = the
-        // source row realigned to the table schema), source rows with
-        // unseen keys are inserts. Carried rows (untouched by key) are
-        // NOT changes and never land in _change_data — exactly why a
-        // MERGE commit cannot leave CDF readers to derive from its
-        // whole-file add/remove actions.
-        val cdcFiles: Seq[NewFile] =
-          if (!cdfEnabled(snap)) Nil
+        val merged = merged0.select((snap.schema.fieldNames ++ matName).map(col).toIndexedSeq: _*)
+        snap.schema.fields.zip(merged.schema.fields).foreach { case (t, d) =>
+          require(t.dataType.catalogString == d.dataType.catalogString,
+            s"type mismatch merging into Delta table $path — column '${t.name}' " +
+              s"is ${t.dataType.catalogString} in the table, " +
+              s"${d.dataType.catalogString} in the merge output")
+        }
+        enforceConstraints(snap, merged, path, "MERGE")
+        withGeneratedColumns(snap, merged, path, "MERGE") // validate-only: schema is fixed
+        // IDENTITY COLUMNS: merge realigns to the table schema, so the
+        // source MUST carry the identity value — an explicit insert,
+        // legal only under allowExplicitInsert (GENERATED BY DEFAULT).
+        // The high-water mark bumps past the merged extreme in the SAME
+        // commit's metaData, preserving the protocol's collision-freedom
+        // for later allocating appends. The extreme is probed over the
+        // WRITTEN frame (a custom mergeFn may mint values absent from the
+        // source), one bounded agg per identity column, identity tables
+        // only.
+        val mergeIdentities = identitiesOf(snap)
+        mergeIdentities.foreach(id => require(id.allowExplicit,
+          s"Delta table at $path has GENERATED ALWAYS identity column " +
+            s"'${id.name}' — MERGE realigns its output to the table schema and " +
+            "would insert explicit identity values, which GENERATED ALWAYS " +
+            "forbids; use GENERATED BY DEFAULT or route through append"))
+        val mergeIdentityHw: Map[String, Long] =
+          if (mergeIdentities.isEmpty) Map.empty
           else {
-            val tblKeys = keys.map(k =>
-              snap.schema.fieldNames.find(_.equalsIgnoreCase(k)).get)
-            val srcNames = source.columns
-            val srcT = source.select(snap.schema.fields.map { f =>
-              if (srcNames.exists(_.equalsIgnoreCase(f.name))) col(f.name)
-              else lit(null).cast(f.dataType).as(f.name)
-            }: _*)
-            val tKeys = touchedData.select(tblKeys.map(col): _*)
-            // source keys from the driver-collected group set when
-            // complete (r19, guide §3.1) — the semi-join below then
-            // broadcasts instead of shuffling the touched-file side
-            val sKeys = srcKeysLocal.getOrElse(srcT.select(tblKeys.map(col): _*))
-            val changes = matName match {
-              case Some(m) =>
-                // id-keyed changes (rowTracking + materialized column):
-                // preimages carry each matched target row's own id,
-                // postimages inherit the key's surviving id (min — the
-                // same deterministic survivor the data rewrite keeps; a
-                // multi-row target key's extra preimages surface with
-                // their retired ids), inserts stay unkeyed — their fresh
-                // ids are assigned at publish, and the id-keyed CDF read
-                // re-derives them from this commit's new files.
-                // idByKey is the PERSISTED per-key survivor frame the data
-                // rewrite already computed (r19): its key set IS the
-                // distinct touched keys, so one inner join replaces the
-                // old tKeys semi-join + id left-join pair, and the insert
-                // anti-join probes the same tiny frame instead of
-                // re-scanning the touched files for their keys.
-                val idByKey = idByKeyOpt.get
-                  .withColumnRenamed(m, DeltaRead.CdcRowIdCol)
-                touchedBase.withColumnRenamed(m, DeltaRead.CdcRowIdCol)
-                  .join(sKeys, tblKeys, "left_semi")
-                  .withColumn("_change_type", lit("update_preimage"))
-                  .unionByName(srcT.join(idByKey, tblKeys, "inner")
-                    .withColumn("_change_type", lit("update_postimage")))
-                  .unionByName(srcT.join(idByKey.select(tblKeys.map(col): _*),
-                      tblKeys, "left_anti")
-                    .withColumn(DeltaRead.CdcRowIdCol, lit(null).cast("long"))
-                    .withColumn("_change_type", lit("insert")))
-              case None =>
-                touchedData.join(sKeys, tblKeys, "left_semi")
-                  .withColumn("_change_type", lit("update_preimage"))
-                  .unionByName(srcT.join(tKeys, tblKeys, "left_semi")
-                    .withColumn("_change_type", lit("update_postimage")))
-                  .unionByName(srcT.join(tKeys, tblKeys, "left_anti")
-                    .withColumn("_change_type", lit("insert")))
+            import org.apache.spark.sql.functions.{max => fmax, min => fmin, sum => fsum, when => fwhen}
+            // ONE agg pass for every identity column (per-column aggs
+            // re-ran the whole un-materialized merge join once each):
+            // the extreme AND a null probe — a source frame that omits
+            // the identity column null-fills under the default mergeFn's
+            // unionByName, and silently committing NULL identity values
+            // would break the contract for every reader
+            val aggs = mergeIdentities.flatMap { id =>
+              Seq((if (id.step > 0) fmax(col(id.name)) else fmin(col(id.name)))
+                  .as(s"__ext_${id.name}"),
+                fsum(fwhen(col(id.name).isNull, 1L).otherwise(0L))
+                  .as(s"__nulls_${id.name}"))
             }
-            // changes is empty ⟺ the source is empty (every source row is
-            // an update_postimage or an insert; every preimage needs a
-            // source key) — and the source's emptiness is already known
-            // from the collected key groups, so the old isEmpty probe
-            // re-ran the three cdc joins as its own job for nothing
-            // (r19, guide §1.2). `grouped` is complete OR past
-            // maxCollectedKeys — both cases non-empty when length > 0.
-            if (grouped.isEmpty) Nil else writeCdcFiles(spark, snap, changes, rootP, fs)
+            val row = merged.agg(aggs.head, aggs.tail: _*).head()
+            mergeIdentities.flatMap { id =>
+              val ni = row.fieldIndex(s"__nulls_${id.name}")
+              require(row.isNullAt(ni) || row.getLong(ni) == 0L,
+                s"MERGE into Delta table at $path would commit NULL values in " +
+                  s"identity column '${id.name}' (${row.getLong(ni)} row(s)) — the " +
+                  "merge output realigns to the table schema, so the source (or a " +
+                  "custom mergeFn) must supply every identity value explicitly")
+              val cur = id.highWater.getOrElse(id.start - id.step)
+              val ei = row.fieldIndex(s"__ext_${id.name}")
+              if (row.isNullAt(ei)) None
+              else {
+                val v = row.getLong(ei)
+                if (if (id.step > 0) v > cur else v < cur) Some(id.name -> v) else None
+              }
+            }.toMap
           }
-        // a lost race reclaims the staged files: the data job read THIS
-        // snapshot's touched files, so the output is stale against the
-        // winner's state and the retry re-derives from scratch
-        // (commitMerge's posture)
-        val now = System.currentTimeMillis
-        publishCommit(spark, rootP, Some(snap),
-          commitLines(commitInfoLine(now, "MERGE", "matchedKeys" -> keys.mkString(",")) +:
-            (identityMetaDataLine(snap, mergeIdentityHw, now).toSeq ++
-              cdcFiles.map(cdcLine(_, now)) ++
-              fileActions(now, touched, snap.dvs, newFiles, dataChange = true))),
-          snap.configuration, newFiles ++ cdcFiles)
+        val updates = dvPass.fold(Seq.empty[(String, Option[DeletionVectors.Descriptor],
+            DeletionVectors.Descriptor)]) { case (_, matched) =>
+          dvUnionUpdates(spark, snap, fs, rootP, matched, InlineDvMaxBytes, "MERGE", path)
+        }
+        val (physDf, physParts) = toPhysical(snap, merged, matName.toSeq)
+        val newFiles = withStats(spark, fs, rootP,
+          writeDataFiles(spark, physDf, rootP, fs, physParts,
+            shredOk = shredOptIn(snap)))
+        val removesAny = if (dvPass.isDefined) updates.nonEmpty else touched.nonEmpty
+        if (!removesAny && newFiles.isEmpty) Txn.Done(snap.version) // empty no-op
+        else {
+          // CHANGE DATA FEED: decompose the default upsert into the
+          // protocol's change types — target rows whose key the source
+          // carries are updates (preimage = current row, postimage = the
+          // source row realigned to the table schema), source rows with
+          // unseen keys are inserts. Carried rows (untouched by key) are
+          // NOT changes and never land in _change_data — exactly why a
+          // MERGE commit cannot leave CDF readers to derive from its
+          // file-level add/remove actions.
+          val cdcFiles: Seq[NewFile] =
+            if (!mergeCdf) Nil
+            else {
+              val tblKeys = keys.map(k =>
+                snap.schema.fieldNames.find(_.equalsIgnoreCase(k)).get)
+              val srcNames = source.columns
+              val srcT = source.select(snap.schema.fields.map { f =>
+                if (srcNames.exists(_.equalsIgnoreCase(f.name))) col(f.name)
+                else lit(null).cast(f.dataType).as(f.name)
+              }: _*)
+              // the matched target rows: the preimages, whose key set also
+              // splits the source into postimages and inserts (the DV
+              // path's persisted pass already holds exactly them)
+              val matchedRows =
+                if (dvPass.isDefined) targetRows
+                else targetRows.join(srcKeys, keys, "left_semi")
+              val changes = matName match {
+                case Some(m) =>
+                  // id-keyed changes (rowTracking + materialized column):
+                  // preimages carry each matched target row's own id,
+                  // postimages inherit the key's surviving id (min — the
+                  // same deterministic survivor the data write keeps; a
+                  // multi-row target key's extra preimages surface with
+                  // their retired ids), inserts stay unkeyed — their fresh
+                  // ids are assigned at publish, and the id-keyed CDF read
+                  // re-derives them from this commit's new files. The
+                  // persisted idByKey's key set holds every matched key,
+                  // so one inner join keys the postimages and the insert
+                  // anti-join probes the same tiny frame.
+                  val idByKey = idByKeyOpt.get
+                    .withColumnRenamed(m, DeltaRead.CdcRowIdCol)
+                  matchedRows.withColumnRenamed(m, DeltaRead.CdcRowIdCol)
+                    .withColumn("_change_type", lit("update_preimage"))
+                    .unionByName(srcT.join(idByKey, tblKeys, "inner")
+                      .withColumn("_change_type", lit("update_postimage")))
+                    .unionByName(srcT.join(idByKey.select(tblKeys.map(col): _*),
+                        tblKeys, "left_anti")
+                      .withColumn(DeltaRead.CdcRowIdCol, lit(null).cast("long"))
+                      .withColumn("_change_type", lit("insert")))
+                case None =>
+                  // ONE key frame for both splits — only the MATCHED keys
+                  // (source-bounded, not every touched key), so the
+                  // postimage semi-join and the insert anti-join share
+                  // one build side
+                  val matchedKeys = matchedRows.select(tblKeys.map(col): _*)
+                  matchedRows.withColumn("_change_type", lit("update_preimage"))
+                    .unionByName(srcT.join(matchedKeys, tblKeys, "left_semi")
+                      .withColumn("_change_type", lit("update_postimage")))
+                    .unionByName(srcT.join(matchedKeys, tblKeys, "left_anti")
+                      .withColumn("_change_type", lit("insert")))
+              }
+              // changes is empty ⟺ the source is empty (every source row is
+              // an update_postimage or an insert; every preimage needs a
+              // source key) — and the source's emptiness is already known
+              // from the collected key groups, so the old isEmpty probe
+              // re-ran the three cdc joins as its own job for nothing
+              // (r19, guide §1.2). `grouped` is complete OR past
+              // maxCollectedKeys — both cases non-empty when length > 0.
+              if (grouped.isEmpty) Nil else writeCdcFiles(spark, snap, changes, rootP, fs)
+            }
+          // a lost race reclaims the staged files: the data job read THIS
+          // snapshot's touched files, so the output is stale against the
+          // winner's state and the retry re-derives from scratch
+          // (commitMerge's posture)
+          val content =
+            if (dvPass.isDefined)
+              dvDmlContent(snap, "MERGE", "matchedKeys" -> keys.mkString(","), updates,
+                newFiles, cdcFiles, mergeIdentityHw)
+            else {
+              val now = System.currentTimeMillis
+              commitLines(commitInfoLine(now, "MERGE", "matchedKeys" -> keys.mkString(",")) +:
+                (identityMetaDataLine(snap, mergeIdentityHw, now).toSeq ++
+                  cdcFiles.map(cdcLine(_, now)) ++
+                  fileActions(now, touched, snap.dvs, newFiles, dataChange = true)))
+            }
+          publishCommit(spark, rootP, Some(snap), content, snap.configuration,
+            newFiles ++ cdcFiles)
+        }
+      } finally {
+        dvPass.foreach(_._1.unpersist(false))
+        if (mergeCdf) idByKeyOpt.foreach(_.unpersist(false))
       }
-      } finally { if (mergeCdf) idByKeyOpt.foreach(_.unpersist(false)) }
     }
   }
+
+  /** Whether a MERGE soft-deletes its matched target rows through
+    * deletion vectors instead of rewriting every touched file: the
+    * table opts in (`delta.enableDeletionVectors=true`), the merge is
+    * the default upsert (a custom `mergeFn`'s replacement frame cannot
+    * be split into matched and written rows), and the live DVs plus
+    * `matchedRows` stay within [[DeletionVectors.maxDeletedRows]] —
+    * past it [[DeltaRead]] refuses to read the table, while a rewrite
+    * leaves the touched files without DVs.
+    */
+  private[sources] def mergeUsesDvs(snap: DeltaRead.Snapshot, customMergeFn: Boolean,
+                                    matchedRows: Long): Boolean =
+    !customMergeFn &&
+      snap.configuration.get("delta.enableDeletionVectors").exists(_.equalsIgnoreCase("true")) &&
+      snap.dvs.iterator.collect { case (rel, d) if snap.files.contains(rel) => d.cardinality }
+        .sum + matchedRows <= DeletionVectors.maxDeletedRows
 
   /** The protocol line a first-DV commit needs: upgrade to reader v3 /
     * writer v7 with `deletionVectors`, carrying every EXISTING feature

@@ -295,6 +295,17 @@ class IncrementalDedupSuite extends SparkSpec {
     assert(e2.getMessage.contains("_gram_params"))
   }
 
+  test("gram store: spanDelta takes doc frequency from per-doc window arrays") {
+    // no (g, doc_id) distinct aggregate over the exploded windows: each
+    // doc's distinct grams come from array_distinct of its window array
+    // (13 jobs with that aggregate, 11 without)
+    val r = tmpRoot("incdedup_grams_jobs")
+    IncrementalDedup.initGramStore(spark, corpus, r,
+      params = IncrementalDedup.GramParams(window = 30, hashed = true))
+    val (_, jobs) = jobsSubmitted(IncrementalDedup.spanDelta(spark, delta, r, append = false))
+    assert(jobs <= 11, s"spanDelta submitted $jobs jobs")
+  }
+
   test("gram store crash window: scores consumed, admit lost — replay is exact") {
     // the kill lands BETWEEN the two effects of spanDelta: the caller
     // already consumed `scores` (materialized before the append by

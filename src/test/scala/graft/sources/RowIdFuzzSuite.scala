@@ -43,6 +43,17 @@ class RowIdFuzzSuite extends SparkSpec {
   }
 
   test("random DML sequences never re-key surviving rows (materialized ids)") {
+    fuzz(Map.empty)
+  }
+
+  test("random DML sequences never re-key surviving rows (deletion-vector merges)") {
+    fuzz(Map("delta.enableDeletionVectors" -> "true"))
+  }
+
+  /** The seeded DML sequence on a table declaring a materialized row-id
+    * column plus `props`.
+    */
+  private def fuzz(props: Map[String, String]): Unit = {
     val rnd = new scala.util.Random(4242L)
     val root = tmp()
     var nextKey = 0L
@@ -51,7 +62,7 @@ class RowIdFuzzSuite extends SparkSpec {
       ks.map(k => (k, k % 7)).toDF("k", "v")
     }
     DeltaWrite.append(spark, freshRows(40).repartition(2), root)
-    DeltaWrite.setProperties(spark, root, Map(
+    DeltaWrite.setProperties(spark, root, props ++ Map(
       "delta.enableRowTracking" -> "true",
       "delta.rowTracking.materializedRowIdColumnName" -> "_mat_rid"))
     var before = liveIds(root)

@@ -112,25 +112,6 @@ object DeltaWrite {
       txn = Some((appId, batchVersion)))
   }
 
-  /** DV-EMITTING DELETE — delta-spark's modern DELETE shape: instead
-    * of rewriting every touched file, each file's matching PHYSICAL
-    * row indexes union into its deletion vector and the commit is
-    * remove(F, oldDv) + add(F, newDv) pairs — O(deleted rows) log
-    * bytes, ZERO data-file I/O. The new bitmap inlines into the log
-    * ("i") up to `inlineMaxBytes` serialized, else lands as an on-disk
-    * "u" DV file with the protocol's framing. First DV on a table
-    * upgrades the protocol to v3, CARRYING every existing feature
-    * (legacy writer versions expand to their implied feature names —
-    * clobbering a feature would break other writers' enforcement).
-    *
-    * Returns the committed version; a no-match (or all-matches-
-    * already-deleted) delete commits nothing and returns the current
-    * version. CAS losers retry against the winner's DVs; a competitor
-    * rewriting a target file aborts loudly (its row indexes no longer
-    * address the same physical rows). Losers' staged "u" DV files are
-    * unreferenced and vacuum-reclaimable, like staged data files.
-    */
-
   /** Per-file deletion-vector union for a row-matching DML (DELETE /
     * UPDATE): each touched file's existing DV rows union with the
     * newly matched indexes; a file already covering every match drops
@@ -167,6 +148,27 @@ object DeltaWrite {
       }
     }
 
+  /** DV-EMITTING DELETE — delta-spark's modern DELETE shape: instead
+    * of rewriting every touched file, each file's matching PHYSICAL
+    * row indexes union into its deletion vector and the commit is
+    * remove(F, oldDv) + add(F, newDv) pairs — O(deleted rows) log
+    * bytes, ZERO data-file I/O. The new bitmap inlines into the log
+    * ("i") up to `inlineMaxBytes` serialized, else lands as an on-disk
+    * "u" DV file with the protocol's framing. First DV on a table
+    * upgrades the protocol to v3, CARRYING every existing feature
+    * (legacy writer versions expand to their implied feature names —
+    * clobbering a feature would break other writers' enforcement).
+    *
+    * Returns the committed version; a no-match (or all-matches-
+    * already-deleted) delete commits nothing and returns the current
+    * version. CAS losers retry against the winner's DVs; a competitor
+    * rewriting a target file aborts loudly (its row indexes no longer
+    * address the same physical rows). Losers' staged "u" DV files are
+    * unreferenced and vacuum-reclaimable, like staged data files. On
+    * change-data-feed tables the deleted rows are the change data,
+    * written rebalanced ([[writeDataFiles]]): one `_change_data` file
+    * for a small delete, for one extra shuffle-map job.
+    */
   def delete(spark: SparkSession, path: String, condition: String,
              inlineMaxBytes: Int = InlineDvMaxBytes): Long = {
     val rootP = qualifiedRoot(spark, path)
@@ -218,8 +220,9 @@ object DeltaWrite {
             inlineMaxBytes, "DELETE", path)
           if (updates.isEmpty) Txn.Done(snap.version)
           else {
-            val cdcFiles = dropEmptyTaskZeroFile(spark, fs, rootP, writeCdcFiles(spark, snap,
-              rows.drop(RowMeta: _*).withColumn("_change_type", lit("delete")), rootP, fs))
+            val cdcFiles = writeCdcFiles(spark, snap,
+              rows.drop(RowMeta: _*).withColumn("_change_type", lit("delete")), rootP, fs,
+              rebalance = true)
             publishCommit(spark, rootP, Some(snap),
               dvDmlContent(snap, "DELETE", "predicate" -> condition, updates, Nil, cdcFiles),
               snap.configuration, cdcFiles)
@@ -243,7 +246,10 @@ object DeltaWrite {
     * commit carries `update_preimage`/`update_postimage` cdc rows. A
     * CAS loss re-derives everything against the winner's snapshot
     * (staged data and cdc files are deleted first — like [[merge]],
-    * the data job depends on the snapshot it read).
+    * the data job depends on the snapshot it read). Both writes — the
+    * new images and the cdc images — are rebalanced ([[writeDataFiles]]):
+    * a small update commits one data file and one cdc file (one per
+    * partition value it touches), for one extra shuffle-map job each.
     */
   def update(spark: SparkSession, path: String, condition: String,
              assignments: Map[String, String],
@@ -330,15 +336,15 @@ object DeltaWrite {
                 .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(liveMatched)
               val post = matName.map(m => newRows
                 .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(newRows)
-              dropEmptyTaskZeroFile(spark, fs, rootP, writeCdcFiles(spark, snap,
+              writeCdcFiles(spark, snap,
                 pre.withColumn("_change_type", lit("update_preimage"))
                   .unionByName(post.withColumn("_change_type", lit("update_postimage"))),
-                rootP, fs))
+                rootP, fs, rebalance = true)
             }
           val (physDf, physParts) = toPhysical(snap, newRows, matName.toSeq)
-          val newFiles = dropEmptyTaskZeroFile(spark, fs, rootP, withStats(spark, fs, rootP,
+          val newFiles = withStats(spark, fs, rootP,
             writeDataFiles(spark, physDf, rootP, fs, physParts,
-              shredOk = shredOptIn(snap))))
+              shredOk = shredOptIn(snap), rebalance = true))
           publishCommit(spark, rootP, Some(snap),
             dvDmlContent(snap, "UPDATE", "predicate" -> condition, updates, newFiles, cdcFiles),
             snap.configuration, newFiles ++ cdcFiles)
@@ -379,27 +385,6 @@ object DeltaWrite {
     try (rows, DeltaRead.rowIndexesByFile(spark, rootP.toString, snap, rows))
     catch { case e: Throwable => rows.unpersist(false); throw e }
   }
-
-  /** Spark's writer opens a file for task 0 even when that partition
-    * holds no rows (every other task opens one at its first row). The
-    * single-pass DELETE / UPDATE writes come from a frame over EVERY
-    * live file, whose first partition often matches nothing: that
-    * zero-row file is deleted and left out of the commit whenever the
-    * write produced others (a non-empty write never needs it). One
-    * footer read at most, none for files carrying stats.
-    */
-  private def dropEmptyTaskZeroFile(spark: SparkSession, fs: FileSystem, rootP: Path,
-                                    files: Seq[NewFile]): Seq[NewFile] =
-    if (files.length < 2) files
-    else files.filterNot { f =>
-      val p = new Path(rootP, f.relPath)
-      p.getName.startsWith("part-00000-") && {
-        val rows = Option(f.stats).flatMap(DeltaRead.parseAddStats).map(_.rows).getOrElse(
-          graft.pipeline.FileStats.readFooterStats(fs.makeQualified(p).toString,
-            spark.sparkContext.hadoopConfiguration).rows)
-        rows == 0L && fs.delete(p, false)
-      }
-    }
 
   /** A DV DML commit (DELETE / UPDATE / MERGE): each touched file's old
     * identity is removed and — unless its new DV covers every row —
@@ -453,7 +438,9 @@ object DeltaWrite {
     *    union into each file's DV (remove + re-add under the same path
     *    with the new DV) and the new files hold only the source's rows.
     *    Unmatched rows are never rewritten, so the data written is
-    *    O(source) and the log O(matched).
+    *    O(source) and the log O(matched). The source rows and the cdc
+    *    rows are written rebalanced ([[writeDataFiles]]): one file each
+    *    for a small merge, for one extra shuffle-map job each.
     *  - COPY-ON-WRITE otherwise (and as the fallback past the DV cap —
     *    the rewrite leaves the touched files without DVs): the touched
     *    files are removed and rewritten whole.
@@ -783,9 +770,11 @@ object DeltaWrite {
           dvUnionUpdates(spark, snap, fs, rootP, matched, InlineDvMaxBytes, "MERGE", path)
         }
         val (physDf, physParts) = toPhysical(snap, merged, matName.toSeq)
+        // the DV path writes only the source's rows (rebalanced, like
+        // DELETE's and UPDATE's writes); copy-on-write rewrites whole files
         val newFiles = withStats(spark, fs, rootP,
           writeDataFiles(spark, physDf, rootP, fs, physParts,
-            shredOk = shredOptIn(snap)))
+            shredOk = shredOptIn(snap), rebalance = dvPass.isDefined))
         val removesAny = if (dvPass.isDefined) updates.nonEmpty else touched.nonEmpty
         if (!removesAny && newFiles.isEmpty) Txn.Done(snap.version) // empty no-op
         else {
@@ -855,7 +844,8 @@ object DeltaWrite {
               // re-ran the three cdc joins as its own job for nothing
               // (r19, guide §1.2). `grouped` is complete OR past
               // maxCollectedKeys — both cases non-empty when length > 0.
-              if (grouped.isEmpty) Nil else writeCdcFiles(spark, snap, changes, rootP, fs)
+              if (grouped.isEmpty) Nil
+              else writeCdcFiles(spark, snap, changes, rootP, fs, rebalance = dvPass.isDefined)
             }
           // a lost race reclaims the staged files: the data job read THIS
           // snapshot's touched files, so the output is stale against the
@@ -2545,11 +2535,13 @@ object DeltaWrite {
     * failure leaves that file statless rather than failing the commit.
     * Distributed above the same 64-file threshold as the sidecar
     * writer — a 100k-file commit must not serialize 100k object-store
-    * footer reads on the driver.
+    * footer reads on the driver. Files that already carry stats (task
+    * 0's, read by [[writeDataFiles]]'s zero-row guard) are not re-read.
     */
   private def withStats(spark: SparkSession, fs: FileSystem, rootP: Path,
-                        files: Seq[NewFile]): Seq[NewFile] =
-    try {
+                        written: Seq[NewFile]): Seq[NewFile] = {
+    val (known, files) = written.partition(_.stats != null)
+    known ++ (try {
       import graft.pipeline.FileStats
       val uris = files.map(f => fs.makeQualified(new Path(rootP, f.relPath)).toString)
       val stats: Seq[Option[FileStats.FileStat]] =
@@ -2592,7 +2584,8 @@ object DeltaWrite {
           s"delta commit at $rootP (${e.getClass.getSimpleName}: ${e.getMessage}) — " +
           "files commit without stats; delta-native data skipping will scan them")
         files
-    }
+    })
+  }
 
   private def statsJson(st: graft.pipeline.FileStats.FileStat): String = {
     val node = mapper.createObjectNode
@@ -2615,11 +2608,6 @@ object DeltaWrite {
     mapper.writeValueAsString(node)
   }
 
-  /** Distributed parquet write into a hidden staging dir under the
-    * table root, then per-file rename into place (same-FS move =
-    * metadata op). File names come from Spark's writer
-    * (part-NNNNN-&lt;job-uuid&gt;…) so they never collide with live files.
-    */
   /** Does this table OPT IN to shredded variant layouts
     * (`delta.enableVariantShredding=true` + the
     * variantShredding-preview reader feature, both set by
@@ -2632,10 +2620,45 @@ object DeltaWrite {
       snap.minReader >= 3 &&
       snap.readerFeatures.contains("variantShredding-preview")
 
+  /** Distributed parquet write into a hidden staging dir under the
+    * table root, then per-file rename into place (same-FS move =
+    * metadata op). File names come from Spark's writer
+    * (part-NNNNN-&lt;job-uuid&gt;…) so they never collide with live files.
+    *
+    * FILE SIZING: the frame's partitioning sets the file count, which
+    * suits appends, overwrites and copy-on-write rewrites (whole files
+    * in, whole files out, or the caller's own partitioning). The
+    * deletion-vector DMLs pass `rebalance`: their writes hold only the
+    * rows they changed — a DELETE's change data, an UPDATE's new images
+    * and change data, a DV MERGE's source rows and change data — but
+    * inherit the partitioning of the touched-file scan or of a union of
+    * change branches, one near-empty file per partition and branch.
+    * AQE's rebalance (`RebalancePartitions`, keyed by the physical
+    * partition columns `parts` on a partitioned table) sizes them
+    * instead: the file count follows
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` — one file for a
+    * small change set (one per partition value touched), skew-split
+    * files for a large one. The cost is one shuffle-map job, over the
+    * changed rows only (the DV paths never rewrite unchanged ones).
+    *
+    * ZERO-ROW GUARD: Spark's writer opens a file for task 0 even when
+    * that partition holds no rows (every other task opens one at its
+    * first row), so a write whose first partition is empty — an append
+    * of a filtered frame, copy-on-write change data whose first touched
+    * file matches nothing — would commit a zero-row file. On an
+    * unpartitioned write that produced other files, task 0's file
+    * (`part-00000-*`) has its footer read: with zero rows it is deleted
+    * and left out, else its stats ride on the returned file so
+    * [[withStats]] does not read the footer again. A lone file is kept
+    * (an empty write still commits its schema-bearing file). A
+    * partitioned write opens files only at a row, so it never needs
+    * the guard.
+    */
   private def writeDataFiles(spark: SparkSession, df: DataFrame, rootP: Path,
                              fs: FileSystem, parts: Seq[String],
                              subdir: String = "",
-                             shredOk: Boolean = false): Seq[NewFile] = {
+                             shredOk: Boolean = false,
+                             rebalance: Boolean = false): Seq[NewFile] = {
     val staging = new Path(rootP,
       ".graft-delta-staging-" + java.util.UUID.randomUUID.toString.take(12))
     // id-mode frames carry parquet.field.id metadata that MUST reach
@@ -2675,7 +2698,8 @@ object DeltaWrite {
       if (needIds) spark.conf.set(FieldIdKey, "true")
       if (hasVariant) spark.conf.set(ShredKey, "false")
       try {
-        val w = df.write.mode("overwrite")
+        val w = (if (rebalance) df.hint("rebalance", parts.map(p => col(s"`$p`")): _*)
+          else df).write.mode("overwrite")
         (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(staging.toString)
       } finally {
         if (needIds) priorFieldId match {
@@ -2695,7 +2719,19 @@ object DeltaWrite {
           found += st
       }
       walk(staging)
-      found.toSeq.sortBy(_.getPath.toString).map { st =>
+      val taskZero: Option[(FileStatus, graft.pipeline.FileStats.FileStat)] =
+        if (parts.nonEmpty || found.length < 2) None
+        else found.find(_.getPath.getName.startsWith("part-00000-")).flatMap { st =>
+          try Some(st -> graft.pipeline.FileStats.readFooterStats(
+            fs.makeQualified(st.getPath).toString, spark.sparkContext.hadoopConfiguration))
+          catch { case scala.util.control.NonFatal(_) => None }
+        }
+      val kept = taskZero match {
+        case Some((st, fst)) if fst.rows == 0L && fs.delete(st.getPath, false) =>
+          found.filterNot(_ eq st)
+        case _ => found
+      }
+      kept.toSeq.sortBy(_.getPath.toString).map { st =>
         val rel = relativize(staging, st.getPath)
         // `subdir` relocates the output under a hidden table subtree
         // (cdc files live under _change_data/ per the protocol) while
@@ -2705,7 +2741,8 @@ object DeltaWrite {
         if (destRel.contains("/")) fs.mkdirs(dest.getParent)
         require(fs.rename(st.getPath, dest),
           s"staging move ${st.getPath} -> $dest failed; no commit was written")
-        NewFile(destRel, partitionValuesOf(rel, parts), st.getLen, st.getModificationTime)
+        NewFile(destRel, partitionValuesOf(rel, parts), st.getLen, st.getModificationTime,
+          taskZero.collect { case (z, fst) if z eq st => statsJson(fst) }.orNull)
       }
     } finally fs.delete(staging, true)
   }
@@ -2721,10 +2758,12 @@ object DeltaWrite {
     * (insert / delete / update_preimage / update_postimage), is
     * renamed physical under column mapping here, and lands partitioned
     * like the table so each cdc action carries its partitionValues.
+    * `rebalance`: a deletion-vector DML's change rows, sized as
+    * [[writeDataFiles]] describes.
     */
   private def writeCdcFiles(spark: SparkSession, snap: DeltaRead.Snapshot,
                             changes: DataFrame, rootP: Path,
-                            fs: FileSystem): Seq[NewFile] = {
+                            fs: FileSystem, rebalance: Boolean = false): Seq[NewFile] = {
     val phys =
       if (snap.colMap.isEmpty) changes
       else {
@@ -2737,7 +2776,7 @@ object DeltaWrite {
       }
     val physParts = snap.partitionColumns.map(p => snap.colMap.getOrElse(p, p))
     writeDataFiles(spark, phys, rootP, fs, physParts, subdir = "_change_data",
-      shredOk = shredOptIn(snap))
+      shredOk = shredOptIn(snap), rebalance = rebalance)
   }
 
   /** A `cdc` action line: `dataChange=false` per the protocol (cdc

@@ -2331,6 +2331,20 @@ class DeltaWriteSuite extends SparkSpec {
     assert(DeltaRead.snapshot(spark, root, Some(4L)).files.size == 2)
   }
 
+  test("version-checksum sidecars: each of 10 consecutive appends writes exactly one <v>.crc") {
+    val root = tmp()
+    (1 to 10).foreach(i =>
+      DeltaWrite.append(spark, Seq((i.toLong, s"r$i")).toDF("id", "v").coalesce(1), root))
+    val logDir = new java.io.File(root.stripPrefix("file:"), "_delta_log")
+    val crcs = logDir.list().filter(_.matches("""\d{20}\.crc""")).sorted.toSeq
+    assert(crcs == (0 until 10).map(v => f"$v%020d.crc"), "every commit publish writes its checksum")
+    val snap = DeltaRead.snapshot(spark, root) // validates the head crc en route
+    assert(snap.version == 9L && snap.files.size == 10)
+    val head = new com.fasterxml.jackson.databind.ObjectMapper().readTree(new String(
+      java.nio.file.Files.readAllBytes(new java.io.File(logDir, crcs.last).toPath), "UTF-8"))
+    assert(head.get("numFiles").asLong == 10L)
+  }
+
   // --- nested column-mapped schema changes (round 16) ---------------
 
   private def mkMappedTable(root: String, s: org.apache.spark.sql.types.StructType,

@@ -1,6 +1,6 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -18,26 +18,13 @@ class DvMergeSuite extends SparkSpec {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_dvmerge").toString + "/t"
 
-  private val mapper = new ObjectMapper()
-
-  /** Commit `v`'s actions as (kind, body). */
-  private def actions(root: String, v: Long): Seq[(String, JsonNode)] = {
-    val f = new java.io.File(new java.io.File(root, "_delta_log"), f"$v%020d.json")
-    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      .split("\n").filter(_.trim.nonEmpty).toSeq.map { l =>
-        val n = mapper.readTree(l)
-        val k = n.fieldNames().next()
-        k -> n.get(k)
-      }
-  }
-
   private def paths(acts: Seq[(String, JsonNode)], kind: String): Seq[String] =
     acts.collect { case (`kind`, n) => DeltaRead.decodePath(n.get("path").asText()) }
 
   /** Whether some MERGE commit re-added a file it removed, with a DV. */
   private def softDeleted(root: String): Boolean =
     DeltaRead.versions(spark, root).exists { v =>
-      val acts = actions(root, v)
+      val acts = CommitActions(root, v)
       acts.head._2.get("operation").asText() == "MERGE" && {
         val removed = paths(acts, "remove").toSet
         acts.exists { case (k, n) =>
@@ -142,7 +129,7 @@ class DvMergeSuite extends SparkSpec {
     // keys 5 and 150 fall in the first two files; 1000 inserts
     val source = Seq((5L, -5L), (150L, -150L), (1000L, -1L)).toDF("id", "v").coalesce(1)
     val v = DeltaWrite.merge(spark, source, root, Seq("id"))
-    val acts = actions(root, v)
+    val acts = CommitActions(root, v)
     val touched = before.files.keySet.filter { rel =>
       spark.read.parquet(new java.io.File(root, rel).toString)
         .where(col("id").isin(5L, 150L)).count() > 0
@@ -200,7 +187,7 @@ class DvMergeSuite extends SparkSpec {
     val upsert = (t: DataFrame, s: DataFrame) =>
       s.unionByName(t.join(s.select("id"), Seq("id"), "left_anti"))
     val v = DeltaWrite.merge(spark, Seq((5L, -5L)).toDF("id", "v"), root, Seq("id"), upsert)
-    val acts = actions(root, v)
+    val acts = CommitActions(root, v)
     val removed = paths(acts, "remove").toSet
     assert(removed.nonEmpty)
     assert(acts.collect { case ("add", n) => n }.forall(n => !n.has("deletionVector") &&

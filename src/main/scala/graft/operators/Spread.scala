@@ -44,13 +44,6 @@ import org.apache.spark.sql.DataFrame
   * column (`languageMix`) is harmless below the exchange.
   */
 private[graft] object Spread {
-  /** Same-binary A/B kill switch (the r17 crc-switch discipline):
-    * `SPARK_GRAFT_SPREAD=off` turns every Spread site into the
-    * identity so a bench pair on one binary isolates the machinery.
-    */
-  private val disabled: Boolean =
-    sys.env.get("SPARK_GRAFT_SPREAD").exists(_.equalsIgnoreCase("off"))
-
   /** Byte floor for MEDIUM-density kernels (token counts, word-gram
     * explodes, chunking, fingerprints): below this input size the
     * serial stage is cheaper than the repartition's extra stage —
@@ -64,7 +57,6 @@ private[graft] object Spread {
   val MediumFloor: Long = 4L << 20
 
   def apply(df: DataFrame, minBytes: Long = 0L): DataFrame = {
-    if (disabled) return df
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     val files = try df.inputFiles catch { case scala.util.control.NonFatal(_) => Array.empty[String] }

@@ -515,7 +515,9 @@ object DeltaRead {
       Some(spark.baseRelationToDataFrame(rel))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Reconstruct the file-list snapshot at `version` (newest if None).
+  /** Reconstruct the file-list snapshot at `version` (newest if None)
+    * — one [[DeltaLog]] replay: the newest checkpoint's state, then
+    * the commits after it folded on the driver.
     *
     * Log discovery has two paths:
     *  - `_last_checkpoint` FAST PATH (latest-version reads only): the
@@ -534,8 +536,9 @@ object DeltaRead {
     * entire table state — millions of rows on a large table) stays a
     * DataFrame; only the post-checkpoint tail commits (bounded by the
     * writer's checkpoint interval) are parsed on the driver, and the
-    * live-file set is resolved as `checkpoint adds ANTI-JOIN
-    * tail-touched paths UNION tail's final adds`. Only the final LIVE
+    * live-file set is resolved as `checkpoint adds ANTI-JOIN (tail-
+    * touched identities, tail-live paths) UNION tail's final adds`
+    * ([[DeltaLog.untouchedAdds]]). Only the final LIVE
     * list is collected — for scan planning, the same driver residency
     * delta-spark's own prepared scan has — so a heavily-churned log
     * never materializes its dead files on the driver.
@@ -556,15 +559,14 @@ object DeltaRead {
     // cached version's commit file is byte-identical (len+mtime — a
     // deleted/recreated table at the same path fails this and rebuilds),
     // probe the contiguous tail forward (commit versions are dense), and
-    // replay only the new commits' actions driver-side. A metaData
-    // action in the span falls back to the full rebuild (schema /
-    // column-mapping changes re-key partition values). This is
+    // fold only the new commits' actions onto it, driver-side — the
+    // same [[DeltaLog]] fold a cold replay runs. This is
     // delta-spark's SnapshotManagement shape; it caches METADATA only —
     // never query results — and every data read still scans parquet.
     val fromCache: Option[Snapshot] =
       Option(snapCache.get(logP.toString))
         .filter(c => version.forall(_ >= c.snap.version)).flatMap { c =>
-        val vFile = new Path(logP, f"${c.snap.version}%020d.json")
+        val vFile = DeltaLog.commitFile(logP, c.snap.version)
         val ident =
           try {
             val st = fs.getFileStatus(vFile)
@@ -573,14 +575,14 @@ object DeltaRead {
         if (!ident) None
         else {
           var latest = c.snap.version
-          while (version.forall(_ > latest) &&
-              fs.exists(new Path(logP, f"${latest + 1}%020d.json")))
+          while (version.forall(_ > latest) && fs.exists(DeltaLog.commitFile(logP, latest + 1)))
             latest += 1
           val target = version.getOrElse(latest)
           if (target == c.snap.version) Some(c.snap) // validated when cached
           else if (target > latest) None // asked past the contiguous tail
-          else applyCommitsIncremental(fs, logP, c.snap, target).map { snap =>
-            validateChecksum(fs, logP, path, snap)
+          else DeltaLog.replay(fs, logP, DeltaLog.resume(path, c.snap), c.snap.version + 1,
+              target).toOption.map { st =>
+            val snap = validated(fs, logP, path, st.snap.copy(version = target))
             if (version.isEmpty || target == latest) cachePut(fs, logP, snap)
             snap
           }
@@ -606,310 +608,35 @@ object DeltaRead {
         (t, checkpoints.filter(_ <= t).lastOption, cpFiles)
     }
 
-    var schemaJson: String = null
-    var partCols: Seq[String] = Nil
-    var metaId: String = null
-    var ckptAdds: Option[DataFrame] = None
-    // one row per writer appId — inherently tiny (collect is bounded)
-    val txns = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    // reader-protocol gate is DEFERRED to the end of the replay: v2
-    // legality depends on metaData.configuration (column-mapping mode),
-    // which an earlier action in the same log carries
-    var minReader = 1
-    var minWriter = 2
-    val readerFeatures = scala.collection.mutable.Set.empty[String]
-    val writerFeatures = scala.collection.mutable.Set.empty[String]
-    var tableConf = Map.empty[String, String]
-    // domain → (configuration, removed); last action per domain wins,
-    // checkpoint rows first so the tail overrides
-    val domainsB = scala.collection.mutable.LinkedHashMap.empty[String, (String, Boolean)]
-
-    ckpt.foreach { cv =>
-      val rows = spark.read.parquet(
-        checkpointFiles(cv).map(n => new Path(logP, n).toString): _*)
-      // checkpoint rows: one action per row in struct columns
-      val cols = rows.columns.toSet
-      if (cols("metaData")) {
-        // `id`/`configuration` are optional in hand-written/legacy
-        // checkpoint layouts
-        val mdCols = rows.select("metaData.*").columns.toSet
-        val idCol = if (mdCols("id")) col("metaData.id") else lit(null).cast("string")
-        val confCol = if (mdCols("configuration")) col("metaData.configuration")
-          else lit(null).cast("map<string,string>")
-        rows.select(col("metaData.schemaString"), col("metaData.partitionColumns"),
-            idCol, confCol)
-          .collect().filter(!_.isNullAt(0)).foreach { r =>
-            schemaJson = r.getString(0); partCols = r.getSeq[String](1)
-            if (!r.isNullAt(2)) metaId = r.getString(2)
-            if (!r.isNullAt(3)) tableConf = r.getMap[String, String](3).toMap
-          }
-      }
-      // V2 (UUID-named) checkpoints split file actions into SIDECAR
-      // parquet under _delta_log/_sidecars/ — the main file holds the
-      // non-file actions (and a checkpointMetadata marker). Resolve the
-      // sidecar list here; adds then extract from main + sidecars alike.
-      val sideFrames: Seq[DataFrame] =
-        if (!cols("sidecar")) Nil
-        else rows.select(col("sidecar.path")).where(col("sidecar.path").isNotNull)
-          .collect().map(_.getString(0)).toSeq.sorted.map { rel =>
-            val p = if (rel.contains("://") || rel.startsWith("/"))
-              throw new IllegalStateException(
-                s"v2 checkpoint at $path references an absolute sidecar '$rel' — " +
-                  "this interop reader resolves sidecars under _delta_log/_sidecars only")
-            else new Path(new Path(logP, "_sidecars"), rel)
-            spark.read.parquet(p.toString)
-          }
-      val addFrames = (Seq(rows).filter(_.columns.contains("add")) ++
-        sideFrames.filter(_.columns.contains("add")))
-      require(addFrames.nonEmpty,
-        s"unrecognized checkpoint layout at $path (no add column in the " +
-          "checkpoint or its sidecars)")
-      def addsOf(frame: DataFrame): DataFrame = {
-        val addCols = frame.select("add.*").columns.toSet
-        val sizeCol =
-          if (addCols("size")) col("add.size") else lit(-1L).as("size")
-        val pvCol =
-          if (addCols("partitionValues")) col("add.partitionValues")
-          else lit(null).cast("map<string,string>").as("partitionValues")
-        val statsCol =
-          if (addCols("stats")) col("add.stats")
-          else lit(null).cast("string").as("stats")
-        val dvCols: Seq[org.apache.spark.sql.Column] =
-          if (addCols("deletionVector"))
-            Seq(col("add.deletionVector.storageType").cast("string").as("dv_st"),
-              col("add.deletionVector.pathOrInlineDv").cast("string").as("dv_p"),
-              col("add.deletionVector.offset").cast("int").as("dv_off"),
-              col("add.deletionVector.sizeInBytes").cast("int").as("dv_sz"),
-              col("add.deletionVector.cardinality").cast("long").as("dv_card"))
-          else Seq(lit(null).cast("string").as("dv_st"),
-            lit(null).cast("string").as("dv_p"), lit(null).cast("int").as("dv_off"),
-            lit(null).cast("int").as("dv_sz"), lit(null).cast("long").as("dv_card"))
-        // row-tracking fields survive the fold (writer-side state: a
-        // re-add must carry its file's ids, the hwm domain must cover
-        // every assigned id)
-        val bridCol =
-          if (addCols("baseRowId")) col("add.baseRowId") else lit(null).cast("bigint")
-        val dcvCol =
-          if (addCols("defaultRowCommitVersion")) col("add.defaultRowCommitVersion")
-          else lit(null).cast("bigint")
-        // paths stay URI-ENCODED inside the frame; decoding happens
-        // once, post-replay, so checkpoint adds and tail removes meet
-        // in the same (encoded) key space
-        frame.select(Seq(col("add.path").cast("string").as("path"),
-            pvCol.cast("map<string,string>").as("partitionValues"),
-            sizeCol.cast("bigint").as("size"), statsCol.cast("string").as("stats"),
-            bridCol.cast("bigint").as("baseRowId"),
-            dcvCol.cast("bigint").as("defaultRowCommitVersion"))
-            ++ dvCols: _*)
-          .where(col("path").isNotNull)
-      }
-      ckptAdds = Some(addFrames.map(addsOf).reduce(_.unionByName(_)))
-      // protocol gate can live in the checkpoint too (validated after
-      // the replay, once the table configuration is known)
-      if (cols("protocol")) {
-        val pCols = rows.select("protocol.*").columns.toSet
-        val featCol = if (pCols("readerFeatures")) col("protocol.readerFeatures")
-          else lit(null).cast("array<string>")
-        val wFeatCol = if (pCols("writerFeatures")) col("protocol.writerFeatures")
-          else lit(null).cast("array<string>")
-        val mwCol = if (pCols("minWriterVersion")) col("protocol.minWriterVersion")
-          else lit(null).cast("int")
-        rows.select(col("protocol.minReaderVersion"), featCol, wFeatCol, mwCol).collect()
-          .filter(!_.isNullAt(0)).foreach { r =>
-            minReader = minReader.max(r.getInt(0))
-            if (!r.isNullAt(1)) readerFeatures ++= r.getSeq[String](1)
-            if (!r.isNullAt(2)) writerFeatures ++= r.getSeq[String](2)
-            if (!r.isNullAt(3)) minWriter = minWriter.max(r.getInt(3))
-          }
-      }
-      // SetTransaction marks survive checkpointing (required by the
-      // protocol — a cleaned log must not forget a sink's high-water)
-      if (cols("txn")) rows.select("txn.appId", "txn.version").collect()
-        .filter(!_.isNullAt(0)).foreach(r => txns(r.getString(0)) = r.getLong(1))
-      // domain metadata survives checkpointing too (live rows; a
-      // foreign checkpoint may carry removed=true tombstones — honor
-      // the flag rather than assume)
-      if (cols("domainMetadata")) {
-        val dCols = rows.select("domainMetadata.*").columns.toSet
-        val cfgCol = if (dCols("configuration")) col("domainMetadata.configuration")
-          else lit(null).cast("string")
-        val rmCol = if (dCols("removed")) col("domainMetadata.removed") else lit(false)
-        rows.select(col("domainMetadata.domain"), cfgCol, rmCol)
-          .where(col("domainMetadata.domain").isNotNull)
-          .collect().foreach { r =>
-            domainsB(r.getString(0)) =
-              (if (r.isNullAt(1)) null else r.getString(1),
-                !r.isNullAt(2) && r.getBoolean(2))
-          }
-      }
+    // the checkpoint's non-file actions seed the fold; its add set (the
+    // unbounded part) stays a DataFrame until the tail is known
+    val ck = ckpt.map(cv => DeltaLog.readCheckpoint(spark, logP, path, checkpointFiles(cv)))
+    val tail = DeltaLog.replay(fs, logP, DeltaLog.seed(path, ck), ckpt.map(_ + 1).getOrElse(0L),
+        target).fold(v =>
+      // commits below the newest checkpoint may be legitimately vacuumed
+      // (delta log cleanup); a HOLE after the replay start is unreadable
+      throw new IllegalStateException(
+        s"Delta log at $path is missing commit $v (log cleaned past the " +
+          s"requested version?) — cannot reconstruct version $target"), identity)
+    // carried files: the checkpoint's adds the tail left live (the
+    // only collect — the live list scan planning needs anyway)
+    val live = ck.fold(tail.snap) { c =>
+      DeltaLog.withAdds(tail, DeltaLog.untouchedAdds(spark, c.files, tail)
+        .collect().iterator.map(DeltaLog.addOf).toSeq)
     }
-
-    // Tail replay (driver-side, bounded by the checkpoint interval):
-    // last action per (ENCODED path, dv.uniqueId) wins — the protocol's
-    // file-action identity. A DELETE that grows a file's deletion
-    // vector commits add(F, newDv) + remove(F, oldDv) in ONE commit;
-    // path-only keying would let line order decide whether F survives.
-    // Some(pv) = live add, None = removed; for unmapped/DV-free tables
-    // every uid is "" and this reduces to the old path keying exactly.
-    def dvOf(n: JsonNode): DeletionVectors.Descriptor = parseDv(n)
-    def uidOf(d: DeletionVectors.Descriptor): String = if (d == null) "" else d.uniqueId
-    // last two elements: baseRowId / defaultRowCommitVersion (row
-    // tracking; -1 = the add carries none)
-    val tail = scala.collection.mutable.LinkedHashMap[(String, String),
-      Option[(Map[String, String], Long, String, DeletionVectors.Descriptor, Long, Long)]]()
-    val replayFrom = ckpt.map(_ + 1).getOrElse(0L)
-    for (v <- replayFrom to target) {
-      val p = new Path(logP, f"$v%020d.json")
-      if (!fs.exists(p)) {
-        // commits below the newest checkpoint may be legitimately
-        // vacuumed (delta log cleanup); a HOLE after the replay start
-        // is an unreadable table
-        throw new IllegalStateException(
-          s"Delta log at $path is missing commit $v (log cleaned past the " +
-            s"requested version?) — cannot reconstruct version $target")
-      }
-      val content = graft.pipeline.VersionedTable.readSmall(fs, p).getOrElse(
-        throw new IllegalStateException(s"Delta commit $v at $path is unreadable"))
-      content.split("\n").map(_.trim).filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("protocol")) {
-          val p = node.get("protocol")
-          minReader = minReader.max(p.path("minReaderVersion").asInt(1))
-          minWriter = minWriter.max(p.path("minWriterVersion").asInt(2))
-          if (p.has("readerFeatures"))
-            readerFeatures ++= p.get("readerFeatures").elements().asScala.map(_.asText())
-          if (p.has("writerFeatures"))
-            writerFeatures ++= p.get("writerFeatures").elements().asScala.map(_.asText())
-        }
-        if (node.has("metaData")) {
-          val md = node.get("metaData")
-          schemaJson = md.path("schemaString").asText(null)
-          partCols = md.path("partitionColumns").elements().asScala
-            .map(_.asText()).toSeq
-          metaId = md.path("id").asText(metaId)
-          if (md.has("configuration"))
-            tableConf = md.get("configuration").properties().asScala
-              .map(e => e.getKey -> e.getValue.asText()).toMap
-        }
-        if (node.has("add")) {
-          val add = node.get("add")
-          val pv = Option(add.get("partitionValues")).map(n =>
-            n.properties().asScala.map(e =>
-              e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-            .getOrElse(Map.empty[String, String])
-          val sz = Option(add.get("size")).filterNot(_.isNull).map(_.asLong()).getOrElse(-1L)
-          val st = Option(add.get("stats")).filterNot(_.isNull).map(_.asText()).orNull
-          val dv = dvOf(add.get("deletionVector"))
-          val brid = if (add.hasNonNull("baseRowId")) add.get("baseRowId").asLong(-1L) else -1L
-          val dcv = if (add.hasNonNull("defaultRowCommitVersion"))
-            add.get("defaultRowCommitVersion").asLong(-1L) else -1L
-          tail.put((add.get("path").asText(), uidOf(dv)), Some((pv, sz, st, dv, brid, dcv)))
-        }
-        if (node.has("remove")) {
-          val rm = node.get("remove")
-          tail.put((rm.path("path").asText(), uidOf(dvOf(rm.get("deletionVector")))), None)
-        }
-        if (node.has("txn")) {
-          val t = node.get("txn")
-          txns(t.path("appId").asText()) = t.path("version").asLong()
-        }
-        if (node.has("domainMetadata")) {
-          val d = node.get("domainMetadata")
-          domainsB(d.path("domain").asText()) =
-            (d.path("configuration").asText(null), d.path("removed").asBoolean(false))
-        }
-      }
-    }
-
-    val entries: Map[String, (Map[String, String], Long, String, DeletionVectors.Descriptor, Long, Long)] =
-      ckptAdds match {
-      case None =>
-        // no checkpoint: the tail IS the whole history (collapse to one
-        // entry per path — a live file has exactly one live dv identity)
-        tail.collect { case ((p, _), Some(e)) => decodePath(p) -> e }.toMap
-      case Some(adds) =>
-        import spark.implicits._
-        // decode BEFORE the anti-join: the match key must be the
-        // canonical path, not its encoding — a cross-writer table can
-        // remove "a%28b%29" where the checkpoint added "a(b)" and an
-        // encoded-key join would resurrect the dead file (the driver
-        // replay always matched decoded; so must the distributed one).
-        // The join key is (path, dv.uniqueId) — the file-action
-        // identity — so a remove of (F, oldDv) cannot kill a
-        // checkpointed (F, null) twin or vice versa.
-        val dec = org.apache.spark.sql.functions.udf((p: String) => decodePath(p))
-        val uidCol = org.apache.spark.sql.functions.when(
-          col("dv_st").isNull || col("dv_st") === "", lit("")).otherwise(
-          org.apache.spark.sql.functions.concat(col("dv_st"), col("dv_p"), lit("@"),
-            org.apache.spark.sql.functions.coalesce(col("dv_off"), lit(0)).cast("string")))
-        val addsDec = adds.select(dec(col("path")).as("path"), col("partitionValues"),
-          col("size"), col("stats"), col("dv_st"), col("dv_p"), col("dv_off"),
-          col("dv_sz"), col("dv_card"), col("baseRowId"),
-          col("defaultRowCommitVersion"), uidCol.as("__uid"))
-        val carried0 =
-          if (tail.isEmpty) addsDec
-          else {
-            val touched = broadcast(tail.keys.toSeq
-              .map { case (p, uid) => (decodePath(p), uid) }.distinct
-              .toDF("path", "__uid"))
-            addsDec.join(touched, Seq("path", "__uid"), "left_anti")
-          }
-        // the join puts its keys first — pin the collect order explicitly
-        val carried = carried0.select("path", "partitionValues", "size", "stats",
-          "dv_st", "dv_p", "dv_off", "dv_sz", "dv_card",
-          "baseRowId", "defaultRowCommitVersion")
-        val live = carried.collect().map { r =>
-          val pv = if (r.isNullAt(1)) Map.empty[String, String]
-            else r.getMap[String, String](1).toMap
-          val sz = if (r.isNullAt(2)) -1L else r.getLong(2)
-          val st = if (r.isNullAt(3)) null else r.getString(3)
-          val dv = if (r.isNullAt(4) || r.getString(4).isEmpty) null
-            else DeletionVectors.Descriptor(r.getString(4), r.getString(5),
-              if (r.isNullAt(6)) None else Some(r.getInt(6)),
-              if (r.isNullAt(7)) 0 else r.getInt(7),
-              if (r.isNullAt(8)) 0L else r.getLong(8))
-          val brid = if (r.isNullAt(9)) -1L else r.getLong(9)
-          val dcv = if (r.isNullAt(10)) -1L else r.getLong(10)
-          r.getString(0) -> ((pv, sz, st, dv, brid, dcv))
-        }.toMap
-        live ++ tail.collect { case ((p, _), Some(e)) => decodePath(p) -> e }
-    }
-
-    require(schemaJson != null,
+    require(live.schema != null,
       s"Delta log at $path carries no metaData action — cannot derive a schema")
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val mode = tableConf.getOrElse("delta.columnMapping.mode", "none")
-    validateReaderProtocol(path, minReader, readerFeatures.toSet, mode)
-    // id mode (round 15 — the Iceberg-converted-table case): the
-    // protocol requires BOTH id and physicalName in either mapping
-    // mode, so the logical→physical map builds the same way; the SCAN
-    // additionally resolves parquet columns by FIELD ID
-    // ([[scanSnapshot]]), because an id-mode file's column names need
-    // not match physicalName (converted tables keep their original
-    // names and carry ids in the footers).
-    val colMap = if (mode == "name" || mode == "id") buildColMap(path, schema)
-      else Map.empty[String, String]
-    // add.partitionValues (and stats) keys are PHYSICAL names under
-    // column mapping; the Snapshot is logical everywhere except stats,
-    // which stay physical because skipping happens at the (physical)
-    // parquet scan.
-    val physToLogical = colMap.map(_.swap)
-    def pvKeys(pv: Map[String, String]): Map[String, String] =
-      if (physToLogical.isEmpty) pv
-      else pv.map { case (k, v) => physToLogical.getOrElse(k, k) -> v }
-    val snap = Snapshot(target, schema,
-      partCols, entries.map { case (p, (pv, _, _, _, _, _)) => p -> pvKeys(pv) },
-      entries.map { case (p, (_, sz, _, _, _, _)) => p -> sz }, metaId, txns.toMap,
-      entries.collect { case (p, (_, _, st, _, _, _)) if st != null => p -> st },
-      colMap,
-      entries.collect { case (p, (_, _, _, dv, _, _)) if dv != null => p -> dv },
-      minReader, minWriter, readerFeatures.toSet, writerFeatures.toSet, tableConf,
-      domainsB.collect { case (d, (cfg, false)) => d -> cfg }.toMap,
-      entries.collect { case (p, (_, _, _, _, brid, dcv)) if brid >= 0L =>
-        p -> ((brid, dcv)) })
-    validateChecksum(fs, logP, path, snap)
+    val snap = validated(fs, logP, path, live.copy(version = target))
     if (version.isEmpty) cachePut(fs, logP, snap)
     snap
+  }
+
+  /** `s` once the reader-protocol gate and the `<v>.crc` check pass. */
+  private def validated(fs: FileSystem, logP: Path, path: String, s: Snapshot): Snapshot = {
+    validateReaderProtocol(path, s.minReader, s.readerFeatures,
+      s.configuration.getOrElse("delta.columnMapping.mode", "none"))
+    validateChecksum(fs, logP, path, s)
+    s
   }
 
   /** One cached latest snapshot per table (log path), advanced
@@ -931,100 +658,6 @@ object DeltaRead {
   /** Test seam / escape hatch: forget every cached snapshot. */
   private[graft] def invalidateSnapshotCache(): Unit = snapCache.clear()
 
-  /** Replay commits `(base.version, target]` on top of a cached
-    * snapshot, driver-side and action-by-action (the log's sequential
-    * semantics — equivalent to the full replay's last-wins fold on the
-    * (path, dv.uniqueId) file identity). Returns None when the span is
-    * unreadable or carries a `metaData` action (schema / configuration /
-    * column-mapping changes re-key partition values and gates — the
-    * full rebuild handles those).
-    */
-  private def applyCommitsIncremental(fs: FileSystem, logP: Path,
-                                      base: Snapshot, target: Long): Option[Snapshot] = {
-    var files = base.files; var sizes = base.sizes; var stats = base.stats
-    var dvs = base.dvs; var rowIds = base.rowIds
-    var txns = base.txns; var domains = base.domains
-    var minReader = base.minReader; var minWriter = base.minWriter
-    var readerF = base.readerFeatures; var writerF = base.writerFeatures
-    val physToLogical = base.colMap.map(_.swap)
-    def pvKeys(pv: Map[String, String]): Map[String, String] =
-      if (physToLogical.isEmpty) pv
-      else pv.map { case (k, v) => physToLogical.getOrElse(k, k) -> v }
-    var bail = false
-    var v = base.version + 1
-    while (v <= target && !bail) {
-      val p = new Path(logP, f"$v%020d.json")
-      val contentOpt = graft.pipeline.VersionedTable.readSmall(fs, p)
-      if (contentOpt.isEmpty) bail = true
-      val lines = contentOpt.map(_.split("\n").iterator.map(_.trim).filter(_.nonEmpty))
-        .getOrElse(Iterator.empty)
-      while (lines.hasNext && !bail) {
-        val line = lines.next()
-        val node = mapper.readTree(line)
-        if (node.has("metaData")) bail = true
-        else {
-        if (node.has("protocol")) {
-          val pr = node.get("protocol")
-          minReader = minReader.max(pr.path("minReaderVersion").asInt(1))
-          minWriter = minWriter.max(pr.path("minWriterVersion").asInt(2))
-          if (pr.has("readerFeatures"))
-            readerF ++= pr.get("readerFeatures").elements().asScala.map(_.asText())
-          if (pr.has("writerFeatures"))
-            writerF ++= pr.get("writerFeatures").elements().asScala.map(_.asText())
-        }
-        if (node.has("add")) {
-          val add = node.get("add")
-          val dec = decodePath(add.get("path").asText())
-          val pv = Option(add.get("partitionValues")).map(n =>
-            n.properties().asScala.map(e =>
-              e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-            .getOrElse(Map.empty[String, String])
-          files += dec -> pvKeys(pv)
-          sizes += dec -> Option(add.get("size")).filterNot(_.isNull)
-            .map(_.asLong()).getOrElse(-1L)
-          val st = Option(add.get("stats")).filterNot(_.isNull).map(_.asText()).orNull
-          if (st != null) stats += dec -> st else stats -= dec
-          val dv = parseDv(add.get("deletionVector"))
-          if (dv != null) dvs += dec -> dv else dvs -= dec
-          val brid = if (add.hasNonNull("baseRowId")) add.get("baseRowId").asLong(-1L) else -1L
-          val dcv = if (add.hasNonNull("defaultRowCommitVersion"))
-            add.get("defaultRowCommitVersion").asLong(-1L) else -1L
-          if (brid >= 0L) rowIds += dec -> ((brid, dcv)) else rowIds -= dec
-        }
-        if (node.has("remove")) {
-          val rm = node.get("remove")
-          val dec = decodePath(rm.path("path").asText())
-          val uid = Option(parseDv(rm.get("deletionVector")))
-            .map(_.uniqueId).getOrElse("")
-          val curUid = dvs.get(dec).map(_.uniqueId).getOrElse("")
-          // the protocol's file-action identity is (path, dv.uniqueId):
-          // a remove of the OLD dv must not kill the same path's re-add
-          // under a NEW dv (DV-growing DELETE commits both in one commit)
-          if (files.contains(dec) && curUid == uid) {
-            files -= dec; sizes -= dec; stats -= dec; dvs -= dec; rowIds -= dec
-          }
-        }
-        if (node.has("txn")) {
-          val t = node.get("txn")
-          txns += t.path("appId").asText() -> t.path("version").asLong()
-        }
-        if (node.has("domainMetadata")) {
-          val d = node.get("domainMetadata")
-          val dom = d.path("domain").asText()
-          if (d.path("removed").asBoolean(false)) domains -= dom
-          else domains += dom -> d.path("configuration").asText(null)
-        }
-        }
-      }
-      v += 1
-    }
-    if (bail) return None
-    Some(base.copy(version = target, files = files, sizes = sizes, stats = stats,
-      dvs = dvs, rowIds = rowIds, txns = txns, domains = domains,
-      minReader = minReader, minWriter = minWriter,
-      readerFeatures = readerF, writerFeatures = writerF))
-  }
-
   /** Opportunistic `<v>.crc` version-checksum validation (delta-spark
     * writes these sidecars; [[DeltaWrite]] does too): when the
     * snapshot's version has a parseable checksum carrying `numFiles` /
@@ -1035,18 +668,8 @@ object DeltaRead {
     * protocol); size validation is skipped when any live file's size
     * is unknown (legacy adds without `size`).
     */
-  /** Runtime kill switch for the whole `<v>.crc` machinery (publish +
-    * validation): `SPARK_GRAFT_DELTA_CRC=off`. Exists so a bench A/B
-    * can measure the machinery's cost on the same binary; checksums
-    * are optional per the protocol, so disabling only loses the
-    * corruption-detection depth, never correctness of served data.
-    */
-  private[sources] val crcDisabled: Boolean =
-    sys.env.get("SPARK_GRAFT_DELTA_CRC").exists(_.equalsIgnoreCase("off"))
-
   private def validateChecksum(fs: FileSystem, logP: Path, path: String,
                                s: Snapshot): Unit = {
-    if (crcDisabled) return
     val n: JsonNode =
       try {
         val p = new Path(logP, f"${s.version}%020d.crc")
@@ -1076,20 +699,6 @@ object DeltaRead {
             s"${s.version}: tableSizeBytes=$expect recorded vs $got replayed — the " +
             "log or a checkpoint is corrupted; refusing to serve a wrong snapshot")
     }
-  }
-
-  /** A `deletionVector` descriptor from its action-JSON node (null =
-    * no DV). Offset PRESENCE matters: delta's uniqueId distinguishes
-    * an absent offset from 0, and a re-serialized remove must match.
-    */
-  private def parseDv(n: JsonNode): DeletionVectors.Descriptor = {
-    if (n == null || n.isNull) return null
-    val st = n.path("storageType").asText("")
-    if (st.isEmpty) null
-    else DeletionVectors.Descriptor(st, n.path("pathOrInlineDv").asText(""),
-      if (n.hasNonNull("offset")) Some(n.get("offset").asInt()) else None,
-      n.path("sizeInBytes").asInt(0),
-      n.path("cardinality").asLong(0))
   }
 
   /** CHANGE DATA FEED read — delta-spark's `readChangeFeed` shape over
@@ -1171,11 +780,6 @@ object DeltaRead {
     def pvLogical(pv: Map[String, String]): Map[String, String] =
       if (physToLogical.isEmpty) pv
       else pv.map { case (k, v) => physToLogical.getOrElse(k, k) -> v }
-    def pvOf(n: JsonNode): Map[String, String] =
-      Option(n.get("partitionValues")).map(_.properties().asScala
-        .map(e => e.getKey ->
-          (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-        .getOrElse(Map.empty[String, String])
     // cdc parquet carries _change_type as a real column; under column
     // mapping it is its own physical name (no mapping id — it is not
     // table data)
@@ -1195,49 +799,24 @@ object DeltaRead {
       scala.collection.mutable.ArrayBuffer.empty[(Long, DataFrame,
         (Long, Long, Long) => Unit)]
     (fromVersion to endV).foreach { v =>
-      val p = new Path(logP, f"$v%020d.json")
-      val content = graft.pipeline.VersionedTable.readSmall(fs, p).getOrElse(
+      val actions = DeltaLog.readCommit(fs, logP, v).getOrElse(
         throw new IllegalStateException(
           s"Delta log at $path is missing commit $v — the change-feed span " +
             "reaches past the log's retention (cleaned log); raise fromVersion " +
             "into the retained span"))
-      var ts: Long = -1L
-      val cdc = Seq.newBuilder[(String, Map[String, String], Long)]
+      var ts = actions.collect { case c: DeltaLog.CommitInfo if c.timestamp > 0 => c.timestamp }
+        .lastOption.getOrElse(-1L)
+      val cdcFiles = actions.collect { case c: DeltaLog.Cdc =>
+        (decodePath(c.path), pvLogical(c.partitionValues), c.size) }
       // (relPath, partitionValues, size, dv, baseRowId | -1 when unstamped)
-      val adds = Seq.newBuilder[(String, Map[String, String], Long,
-        DeletionVectors.Descriptor, Long)]
-      val rms = Seq.newBuilder[(String, DeletionVectors.Descriptor)]
-      content.split("\n").map(_.trim).filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("commitInfo")) {
-          val t = node.get("commitInfo").path("timestamp").asLong(-1L)
-          if (t > 0) ts = t
-        }
-        if (node.has("cdc")) {
-          val c = node.get("cdc")
-          cdc += ((decodePath(c.get("path").asText()),
-            pvLogical(pvOf(c)), c.path("size").asLong(-1L)))
-        }
-        if (node.has("add") && node.get("add").path("dataChange").asBoolean(true)) {
-          val a = node.get("add")
-          adds += ((decodePath(a.get("path").asText()), pvLogical(pvOf(a)),
-            a.path("size").asLong(-1L), parseDv(a.get("deletionVector")),
-            if (a.hasNonNull("baseRowId")) a.get("baseRowId").asLong() else -1L))
-        }
-        if (node.has("remove") &&
-            node.get("remove").path("dataChange").asBoolean(true)) {
-          val r = node.get("remove")
-          rms += ((decodePath(r.get("path").asText()),
-            parseDv(r.get("deletionVector"))))
-        }
-      }
-      if (ts < 0) ts = fs.getFileStatus(p).getModificationTime
+      val addFiles = actions.collect { case a: DeltaLog.AddFile if a.dataChange =>
+        (decodePath(a.path), pvLogical(a.partitionValues), a.size, a.dv, a.baseRowId) }
+      val rmFiles = actions.collect { case r: DeltaLog.RemoveFile if r.dataChange =>
+        (decodePath(r.path), r.dv) }
+      if (ts < 0) ts = fs.getFileStatus(DeltaLog.commitFile(logP, v)).getModificationTime
       def stamp(df: DataFrame): DataFrame = df
         .withColumn("_commit_version", lit(v))
         .withColumn("_commit_timestamp", lit(new java.sql.Timestamp(ts)))
-      val cdcFiles = cdc.result()
-      val addFiles = adds.result()
-      val rmFiles = rms.result()
       val rmPaths = rmFiles.map(_._1).toSet
       // this version's add actions as a snapshot-shaped scan; with row
       // ids, each add's log-resident baseRowId keys the fresh formula
@@ -1405,26 +984,6 @@ object DeltaRead {
     }
   }
 
-  /** TOP-LEVEL logical → physical name map for column-mapped tables:
-    * every top-level field must carry the protocol's physicalName
-    * metadata. Nested mapped schemas read too (round 15): the inner
-    * renames resolve from each nested field's own metadata at the scan
-    * ([[scanSnapshot]]'s recursive physicalization + cast-back) — this
-    * map stays top-level because that is what partition translation
-    * and the writers consume.
-    */
-  private def buildColMap(path: String, schema: StructType): Map[String, String] = {
-    schema.fields.map { f =>
-      val key = "delta.columnMapping.physicalName"
-      if (!f.metadata.contains(key))
-        throw new IllegalStateException(
-          s"Delta table at $path declares column mapping but column " +
-            s"'${f.name}' carries no physicalName metadata (the protocol " +
-            "requires it in both name and id modes) — corrupt log?")
-      f.name -> f.metadata.getString(key)
-    }.toMap
-  }
-
   /** `_last_checkpoint` fast path for latest-version reads: returns
     * (latest version, checkpoint version, its file names) with NO log
     * listing, or None when the pointer is absent/stale/half-written
@@ -1551,13 +1110,8 @@ object DeltaRead {
         val enableV = conf.get("delta.inCommitTimestampEnablementVersion")
           .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(0L)
         stamped.collect { case (v, _) if v >= enableV =>
-          graft.pipeline.VersionedTable.readSmall(fs, new Path(logP, f"$v%020d.json"))
-            .flatMap(_.split("\n").find(_.contains("inCommitTimestamp")))
-            .flatMap { l =>
-              val n = mapper.readTree(l)
-              Option(n.get("commitInfo")).flatMap(ci =>
-                Option(ci.get("inCommitTimestamp")).map(t => v -> t.asLong()))
-            }
+          graft.pipeline.VersionedTable.readSmall(fs, DeltaLog.commitFile(logP, v))
+            .flatMap(DeltaLog.inCommitTimestamp).map(v -> _)
         }.flatten.toMap
       }
     // monotonic adjustment in version order (ICT values are already
@@ -1653,15 +1207,14 @@ object DeltaRead {
   }
 
   /** One commit's DATA-CHANGING actions, for the streaming source:
-    * adds as (encoded path, partitionValues, size, statsOrNull), plus
-    * how many files the commit removed. Actions flagged
+    * its adds, plus how many files the commit removed. Actions flagged
     * `dataChange=false` (OPTIMIZE repackaging) are excluded on both
     * sides — per the protocol they carry no new rows and must not
     * stream or fail a stream.
     */
   private[graft] final case class CommitActions(
       version: Long,
-      adds: Seq[(String, Map[String, String], Long, String, Long)],
+      adds: Seq[DeltaLog.AddFile],
       removes: Int)
 
   /** Parse commits `(fromExclusive, toInclusive]` — the streaming
@@ -1674,32 +1227,12 @@ object DeltaRead {
     val logP = new Path(qualifiedRoot(spark, path), "_delta_log")
     val fs = logP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     (fromExclusive + 1 to toInclusive).map { v =>
-      val p = new Path(logP, f"$v%020d.json")
-      val content = graft.pipeline.VersionedTable.readSmall(fs, p).getOrElse(
+      val actions = DeltaLog.readCommit(fs, logP, v).getOrElse(
         throw new IllegalStateException(
           s"Delta log at $path is missing commit $v — the stream's lag exceeded " +
             "the log's retention (cleaned log); restart from a fresh checkpoint"))
-      var removes = 0
-      // (encodedPath, partitionValues, size, statsOrNull, baseRowId|-1)
-      val adds = Seq.newBuilder[(String, Map[String, String], Long, String, Long)]
-      content.split("\n").map(_.trim).filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("add")) {
-          val ad = node.get("add")
-          if (ad.path("dataChange").asBoolean(true)) {
-            val pv = Option(ad.get("partitionValues")).map(_.properties().asScala
-              .map(e => e.getKey ->
-                (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-              .getOrElse(Map.empty[String, String])
-            adds += ((ad.get("path").asText(), pv,
-              ad.path("size").asLong(-1L), ad.path("stats").asText(null),
-              if (ad.hasNonNull("baseRowId")) ad.get("baseRowId").asLong() else -1L))
-          }
-        }
-        if (node.has("remove") &&
-            node.get("remove").path("dataChange").asBoolean(true)) removes += 1
-      }
-      CommitActions(v, adds.result(), removes)
+      CommitActions(v, actions.collect { case a: DeltaLog.AddFile if a.dataChange => a },
+        actions.count { case r: DeltaLog.RemoveFile => r.dataChange; case _ => false })
     }
   }
 

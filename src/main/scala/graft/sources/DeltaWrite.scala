@@ -1830,13 +1830,8 @@ object DeltaWrite {
     */
   private[sources] def prevIct(fs: FileSystem, logP: Path, v: Long): Option[Long] =
     if (v < 0) None
-    else graft.pipeline.VersionedTable.readSmall(fs, new Path(logP, f"$v%020d.json"))
-      .flatMap(_.split("\n").find(_.contains("inCommitTimestamp")))
-      .flatMap { l =>
-        val n = mapper.readTree(l)
-        Option(n.get("commitInfo"))
-          .flatMap(ci => Option(ci.get("inCommitTimestamp")).map(_.asLong()))
-      }
+    else graft.pipeline.VersionedTable.readSmall(fs, DeltaLog.commitFile(logP, v))
+      .flatMap(DeltaLog.inCommitTimestamp)
 
   /** Monotonic ICT for the commit about to land at `version`. */
   private def nextIct(fs: FileSystem, logP: Path, version: Long): Long =
@@ -1847,8 +1842,8 @@ object DeltaWrite {
     * VersionChecksum shape: table-level aggregates (tableSizeBytes,
     * numFiles) plus the replayed metadata/protocol, which a reader can
     * validate a snapshot against without replaying the log. Computed
-    * INCREMENTALLY from the pre-commit snapshot plus this commit's own
-    * actions — never a replay, so the 100 TB cost is O(commit).
+    * INCREMENTALLY — the [[DeltaLog]] fold of this commit's own actions
+    * onto the pre-commit snapshot, so the 100 TB cost is O(commit).
     * Skipped — never written wrong — when the base state is
     * unavailable (no prevSnap on a non-initial commit) or any live
     * file's size is unknown (a legacy add without `size`). Optional
@@ -1859,56 +1854,30 @@ object DeltaWrite {
                                    content: String,
                                    prevSnap: Option[DeltaRead.Snapshot]): Unit =
     try {
-      // runtime kill switch (SPARK_GRAFT_DELTA_CRC=off) so a bench A/B
-      // can compare crc-on vs crc-off on the SAME binary; checksums are
-      // optional per the protocol, so "off" only loses validation depth
-      if (DeltaRead.crcDisabled) return
-      var metaNode: com.fasterxml.jackson.databind.JsonNode = null
-      var protoNode: com.fasterxml.jackson.databind.JsonNode = null
-      var ict: Option[Long] = None
-      val adds = Map.newBuilder[String, Long]
-      val removesB = Set.newBuilder[String]
-      val txnB = Map.newBuilder[String, Long]
-      val domB = Map.newBuilder[String, (String, Boolean)]
-      content.split("\n").filter(_.trim.nonEmpty).foreach { l =>
-        val n = mapper.readTree(l)
-        if (n.has("metaData")) metaNode = n.get("metaData")
-        if (n.has("protocol")) protoNode = n.get("protocol")
-        if (n.has("commitInfo") && n.get("commitInfo").has("inCommitTimestamp"))
-          ict = Some(n.get("commitInfo").get("inCommitTimestamp").asLong)
-        if (n.has("add")) {
-          val a = n.get("add")
-          adds += DeltaRead.decodePath(a.get("path").asText) ->
-            (if (a.has("size")) a.get("size").asLong(-1L) else -1L)
-        }
-        if (n.has("remove"))
-          removesB += DeltaRead.decodePath(n.get("remove").get("path").asText)
-        if (n.has("txn")) {
-          val t = n.get("txn")
-          txnB += t.path("appId").asText() -> t.path("version").asLong()
-        }
-        if (n.has("domainMetadata")) {
-          val d = n.get("domainMetadata")
-          domB += d.path("domain").asText() ->
-            ((d.path("configuration").asText(""), d.path("removed").asBoolean(false)))
-        }
-      }
-      val base: Map[String, Long] = prevSnap match {
-        case Some(s) => s.files.keys.map(p => p -> s.sizes.getOrElse(p, -1L)).toMap
-        case None if version == 0L => Map.empty
-        case None => return
-      }
-      val post = base -- removesB.result() ++ adds.result()
-      if (post.values.exists(_ < 0L)) return
-      if (metaNode == null) metaNode = prevSnap.map(crcMetaNode).orNull
-      if (protoNode == null) protoNode = prevSnap.map(crcProtoNode).orNull
+      if (prevSnap.isEmpty && version > 0L) return
+      val table = logP.getParent.toString
+      val actions = DeltaLog.parseCommit(content)
+      val post = DeltaLog.fold(prevSnap.fold(DeltaLog.emptyState(table))(
+        DeltaLog.resume(table, _)), actions)
+      val s = post.snap
+      if (s.files.keysIterator.exists(p => s.sizes(p) < 0L)) return
+      // this commit's own metaData / protocol as logged, else the base's
+      val metaNode = Option(post.metadata).map { m =>
+        val b = metaDataNode(m.id, m.schemaString, m.partitionColumns, m.configuration)
+        m.createdTime.foreach(b.put("createdTime", _))
+        b
+      }.orElse(prevSnap.map(crcMetaNode)).orNull
+      val protoNode = Option(post.protocol).map(p =>
+        protocolNode(p.minReader, p.minWriter, p.readerFeatures, p.writerFeatures))
+        .orElse(prevSnap.map(crcProtoNode)).orNull
       if (metaNode == null || protoNode == null) return
       val node = mapper.createObjectNode
-      node.put("tableSizeBytes", post.values.sum)
-      node.put("numFiles", post.size.toLong)
+      node.put("tableSizeBytes", s.files.keysIterator.map(s.sizes).sum)
+      node.put("numFiles", s.files.size.toLong)
       node.put("numMetadata", 1L)
       node.put("numProtocol", 1L)
-      ict.foreach(v => node.put("inCommitTimestampOpt", v))
+      actions.collect { case c: DeltaLog.CommitInfo => c.inCommitTimestamp }.flatten
+        .lastOption.foreach(v => node.put("inCommitTimestampOpt", v))
       node.set[com.fasterxml.jackson.databind.JsonNode]("metadata", metaNode)
       node.set[com.fasterxml.jackson.databind.JsonNode]("protocol", protoNode)
       // the optional state lists delta-spark's VersionChecksum also
@@ -1917,19 +1886,15 @@ object DeltaWrite {
       // many-sink streaming table grow every crc (and every commit's
       // driver work) unboundedly — the list is optional per the
       // protocol, so omission only loses validation depth.
-      val postTxns = prevSnap.map(_.txns).getOrElse(Map.empty) ++ txnB.result()
-      if (postTxns.nonEmpty && postTxns.size <= 100) {
+      if (s.txns.nonEmpty && s.txns.size <= 100) {
         val arr = node.putArray("setTransactions")
-        postTxns.toSeq.sortBy(_._1).foreach { case (appId, v) =>
+        s.txns.toSeq.sortBy(_._1).foreach { case (appId, v) =>
           val t = arr.addObject(); t.put("appId", appId); t.put("version", v)
         }
       }
-      val postDoms = prevSnap.map(_.domains.map { case (d, c) => d -> ((c, false)) })
-        .getOrElse(Map.empty) ++ domB.result()
-      val liveDoms = postDoms.collect { case (d, (c, false)) => d -> c }
-      if (liveDoms.nonEmpty) {
+      if (s.domains.nonEmpty) {
         val arr = node.putArray("domainMetadata")
-        liveDoms.toSeq.sortBy(_._1).foreach { case (d, c) =>
+        s.domains.toSeq.sortBy(_._1).foreach { case (d, c) =>
           val o = arr.addObject()
           o.put("domain", d); o.put("configuration", Option(c).getOrElse(""))
           o.put("removed", false)
@@ -1984,19 +1949,16 @@ object DeltaWrite {
     */
   private[sources] def stampRowTracking(version: Long, content: String,
       prevSnap: Option[DeltaRead.Snapshot]): String = {
-    import scala.jdk.CollectionConverters._
     // cheap reject: the feature name must appear in the prev protocol
     // or in this commit's own protocol line
     val prevActive = prevSnap.exists(s =>
       s.minWriter >= 7 && s.writerFeatures.contains("rowTracking"))
     if (!prevActive && !content.contains("rowTracking")) return content
     val lines = content.split("\n").toIndexedSeq.filter(_.trim.nonEmpty)
-    val contentActive = lines.exists { l =>
-      l.contains("\"protocol\"") && l.contains("rowTracking") && {
-        val n = mapper.readTree(l)
-        n.has("protocol") && Option(n.get("protocol").get("writerFeatures"))
-          .exists(_.elements().asScala.exists(_.asText() == "rowTracking"))
-      }
+      .map(l => l -> DeltaLog.parseAction(l))
+    val contentActive = lines.exists {
+      case (_, Some(p: DeltaLog.Protocol)) => p.writerFeatures.exists(_.contains("rowTracking"))
+      case _ => false
     }
     if (!prevActive && !contentActive) return content
     var hwm = prevSnap.flatMap(_.domains.get(RowTrackingDomain))
@@ -2022,48 +1984,34 @@ object DeltaWrite {
     }
     val carried: Map[String, (Long, Long)] =
       prevSnap.map(_.rowIds).getOrElse(Map.empty)
-    def numRecordsOf(a: com.fasterxml.jackson.databind.JsonNode): Option[Long] =
-      Option(a.get("stats")).filterNot(_.isNull).map(_.asText())
-        .flatMap(DeltaRead.parseAddStats).map(_.rows).filter(_ >= 0L)
+    def numRecordsOf(a: DeltaLog.AddFile): Option[Long] =
+      Option(a.stats).flatMap(DeltaRead.parseAddStats).map(_.rows).filter(_ >= 0L)
     var stamped = false
     var domainSeen = false
-    val out = lines.map { l =>
-      val n = mapper.readTree(l)
-      if (n.has("domainMetadata") &&
-          n.get("domainMetadata").path("domain").asText() == RowTrackingDomain) {
+    val out = lines.flatMap {
+      case (_, Some(d: DeltaLog.DomainMetadata)) if d.domain == RowTrackingDomain =>
         // content carrying its own hwm (foreign shape): fold it in and
         // drop the line — the recomputed domain appended below covers it
         domainSeen = true
-        hwm = math.max(hwm,
-          parseHwm(n.get("domainMetadata").path("configuration").asText("")))
-        null
-      } else if (n.has("add")) {
-        val a = n.get("add").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-        if (a.hasNonNull("baseRowId")) {
-          numRecordsOf(a).foreach(nr =>
-            hwm = math.max(hwm, a.get("baseRowId").asLong() + nr - 1))
-          l
-        } else {
-          val rel = DeltaRead.decodePath(a.get("path").asText())
-          carried.get(rel) match {
-            case Some((brid, dcv)) =>
-              a.put("baseRowId", brid)
-              if (dcv >= 0L) a.put("defaultRowCommitVersion", dcv)
-              stamped = true
-              mapper.writeValueAsString(n)
-            case None =>
-              val nr = numRecordsOf(a).getOrElse(throw new UnsupportedOperationException(
-                s"row tracking requires numRecords stats on every new add action — " +
-                  s"'$rel' carries none; cannot assign a sound baseRowId range"))
-              a.put("baseRowId", hwm + 1)
-              a.put("defaultRowCommitVersion", version)
-              hwm += nr
-              stamped = true
-              mapper.writeValueAsString(n)
-          }
-        }
-      } else l
-    }.filter(_ != null)
+        hwm = math.max(hwm, parseHwm(Option(d.configuration).getOrElse("")))
+        None
+      case (l, Some(a: DeltaLog.AddFile)) if a.baseRowId >= 0L =>
+        numRecordsOf(a).foreach(nr => hwm = math.max(hwm, a.baseRowId + nr - 1))
+        Some(l)
+      case (l, Some(a: DeltaLog.AddFile)) =>
+        val rel = DeltaRead.decodePath(a.path)
+        stamped = true
+        Some(carried.get(rel) match {
+          case Some((brid, dcv)) => DeltaLog.withRowIds(l, brid, dcv)
+          case None =>
+            val nr = numRecordsOf(a).getOrElse(throw new UnsupportedOperationException(
+              s"row tracking requires numRecords stats on every new add action — " +
+                s"'$rel' carries none; cannot assign a sound baseRowId range"))
+            hwm += nr
+            DeltaLog.withRowIds(l, hwm - nr + 1, version)
+        })
+      case (l, _) => Some(l)
+    }
     if (!stamped && !domainSeen) return content
     commitLines(out :+ domainLine(RowTrackingDomain,
       s"""{"rowIdHighWaterMark":$hwm}""", removed = false))
@@ -2077,9 +2025,10 @@ object DeltaWrite {
     * the caller already fixed it for this attempt, else the next
     * monotonic value (it must exceed whatever commit actually precedes
     * this one) — and row-tracking tables get their add actions stamped
-    * ([[stampRowTracking]]). A win writes the `<v>.crc`
-    * version-checksum sidecar (best-effort) and then folds the log at
-    * the checkpoint cadence `conf` sets. `staged` are the files this
+    * ([[stampRowTracking]]); both stamps and the crc's fold of the
+    * commit go through [[DeltaLog]], the one log-format module. A win
+    * writes the `<v>.crc` version-checksum sidecar (best-effort) and
+    * then folds the log at the checkpoint cadence `conf` sets. `staged` are the files this
     * attempt wrote.
     */
   private def publishCommit(spark: SparkSession, rootP: Path,
@@ -2092,13 +2041,7 @@ object DeltaWrite {
     lazy val stamped = {
       val ictValue = ict.orElse(
         if (ictEnabled(conf)) Some(nextIct(fs, logP, version)) else None)
-      val withIct = ictValue.fold(content) { t =>
-        val lines = content.split("\n").filter(_.trim.nonEmpty)
-        val ci = mapper.readTree(lines.head)
-        ci.get("commitInfo").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-          .put("inCommitTimestamp", t)
-        commitLines(mapper.writeValueAsString(ci) +: lines.tail.toSeq)
-      }
+      val withIct = ictValue.fold(content)(DeltaLog.withInCommitTimestamp(content, _))
       stampRowTracking(version, withIct, prevSnap)
     }
     Txn.Publish(version,
@@ -3790,40 +3733,9 @@ object DeltaWrite {
 
   // ----- checkpointing ------------------------------------------------
   // Parquet checkpoint rows: one action per row, exactly one non-null
-  // struct column. The fixed shapes below are the protocol's checkpoint
-  // schema for the action families this writer emits; [[DeltaRead]]
-  // (and delta-spark) read them back by column presence.
-  private case class CkFormat(provider: String, options: Map[String, String])
-  private case class CkMeta(id: String, format: CkFormat, schemaString: String,
-                            partitionColumns: Seq[String],
-                            configuration: Map[String, String],
-                            createdTime: java.lang.Long)
-  /** Feature lists are null (absent column value) on legacy protocols
-    * — per the spec they exist only when minReader>=3 / minWriter>=7,
-    * and a checkpoint that DROPPED them would downgrade the table for
-    * every reader of the fold.
-    */
-  private case class CkProtocol(minReaderVersion: Int, minWriterVersion: Int,
-                                readerFeatures: Seq[String], writerFeatures: Seq[String])
-  /** The protocol's DeletionVectorDescriptor shape inside a checkpoint
-    * add — field names match what [[DeltaRead]] (and delta-spark) read
-    * back. Null when the file carries no DV.
-    */
-  private case class CkDv(storageType: String, pathOrInlineDv: String,
-                          offset: java.lang.Integer, sizeInBytes: Int,
-                          cardinality: Long)
-  private case class CkAdd(path: String, partitionValues: Map[String, String],
-                           size: Long, modificationTime: Long, dataChange: Boolean,
-                           stats: String, deletionVector: CkDv = null,
-                           // row tracking (writer feature): null when absent
-                           baseRowId: java.lang.Long = null,
-                           defaultRowCommitVersion: java.lang.Long = null)
-  private case class CkRemove(path: String, deletionTimestamp: Long,
-                              dataChange: Boolean)
-  private case class CkTxn(appId: String, version: Long, lastUpdated: java.lang.Long)
-  private case class CkDomain(domain: String, configuration: String, removed: Boolean)
-  private case class CkRow(protocol: CkProtocol, metaData: CkMeta, add: CkAdd,
-                           remove: CkRemove, txn: CkTxn, domainMetadata: CkDomain = null)
+  // struct column, in [[DeltaLog.CheckpointSchema]]'s shapes;
+  // [[DeltaLog.readCheckpoint]] (and delta-spark) read them back by
+  // column presence.
 
   /** Delta duration-property parse: `interval N <unit>` (delta-spark's
     * CalendarInterval surface restricted to the fixed-length units the
@@ -3919,9 +3831,7 @@ object DeltaWrite {
     val CkAny = """(\d{20})\.checkpoint(\..+)?\.parquet""".r
     val v2MainRe = """\d{20}\.checkpoint\.[0-9a-fA-F]{8}-[0-9a-fA-F-]{27}\.parquet"""
     def sidecarRefsOf(n: String): Seq[String] =
-      spark.read.parquet(new Path(logP, n).toString).select("sidecar.path")
-        .where(col("sidecar.path").isNotNull)
-        .collect().toSeq.map(_.getString(0))
+      DeltaLog.readCheckpoint(spark, logP, path, Seq(n)).sidecars
     val expired = names.collect { case n @ CkAny(v, _) if v.toLong <= cut => n }
     // Sidecar reachability across RETAINED v2 mains, computed only
     // when the expired set actually holds a v2 main (the common
@@ -3952,10 +3862,8 @@ object DeltaWrite {
         // deletion only orphans files
         val refs = try sidecarRefsOf(n)
           catch { case scala.util.control.NonFatal(_) => Nil }
-        refs.foreach { rel =>
-          if (!rel.contains("://") && !rel.startsWith("/") &&
-              !retained.contains(rel) &&
-              fs.delete(new Path(new Path(logP, "_sidecars"), rel), false))
+        refs.filterNot(retained.contains).foreach { rel =>
+          if (DeltaLog.sidecarFile(logP, rel).exists(fs.delete(_, false)))
             deleted += s"_sidecars/$rel"
         }
       }
@@ -3983,12 +3891,13 @@ object DeltaWrite {
     * [[CheckpointInterval]] commits; callable directly as maintenance.
     *
     * Construction INCREMENTS the previous checkpoint instead of
-    * replaying from v0: the prior checkpoint's `add` rows stay a
+    * replaying from v0, through the same [[DeltaLog]] replay as
+    * [[DeltaRead.snapshot]]: the prior checkpoint's `add` rows stay a
     * DataFrame (the unbounded part — millions of rows on a large
-    * table), the post-checkpoint tail (bounded by the interval) parses
-    * on the driver, and the carried set is `prev adds ANTI-JOIN
-    * tail-touched paths` on DECODED keys — the same replay shape, and
-    * the same cross-writer-encoding guard, as [[DeltaRead.snapshot]].
+    * table), the post-checkpoint tail (bounded by the interval) folds
+    * on the driver, and the carried set is [[DeltaLog.untouchedAdds]]:
+    * `prev adds ANTI-JOIN (tail-touched (path, dv.uniqueId) identities,
+    * tail-live paths)` on DECODED keys — the snapshot's own rule.
     * `metaData`, `protocol` and every `txn` high-water mark are carried
     * (the protocol requires SetTransaction marks to survive
     * checkpointing — a cleaned log must not forget a streaming sink's
@@ -4021,7 +3930,7 @@ object DeltaWrite {
     * layout; see the v2 branch below for its publish-order reasoning.
     */
   def checkpoint(spark: SparkSession, path: String, parts: Int = 0): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, lit, struct, udf, when}
+    import org.apache.spark.sql.functions.{lit, struct}
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val logP = new Path(rootP, "_delta_log")
@@ -4034,392 +3943,81 @@ object DeltaWrite {
     val latest = (commits ++ cpFiles.keys).max
     if (cpFiles.contains(latest)) return latest // nothing newer to fold
     val prev = cpFiles.keys.filter(_ < latest).toSeq.sorted.lastOption
-    // checkpoint adds CARRY their deletionVector descriptors ([[CkDv]])
-    // — a live DV is snapshot state, and a fold that dropped it would
-    // resurrect the soft-deleted rows for every checkpoint reader.
-    // (Inline 'i' DVs travel whole in pathOrInlineDv; on-disk 'u' DV
-    // files stay referenced, exactly like data files, and vacuum's
-    // live-set already protects them.)
-
-    // --- driver tail replay (bounded by the checkpoint interval) ---
-    // protocol starts UNKNOWN, not (1,2): a tail with no protocol
-    // action inherits the previous checkpoint's protocol row below —
-    // defaulting would silently DOWNGRADE a v3/v7 table (dropping
-    // deletionVectors/appendOnly/… features every other writer's
-    // enforcement relies on) the moment a feature-less tail folds.
-    var protocol: CkProtocol = null
-    var meta: CkMeta = null
-    val tailAdds = scala.collection.mutable.LinkedHashMap[(String, String), CkAdd]()
-    val tailTombs = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val touched = scala.collection.mutable.LinkedHashSet[String]() // decoded
-    val txns = scala.collection.mutable.LinkedHashMap[String, CkTxn]()
-    val domains = scala.collection.mutable.LinkedHashMap[String, CkDomain]()
+    val ck = prev.map(cv => DeltaLog.readCheckpoint(spark, logP, path, cpFiles(cv)))
+    // the previous checkpoint's state, then the tail (bounded by the
+    // interval) folded on the driver — the same replay as a snapshot's.
+    // Carried adds keep their deletionVector descriptors: a live DV is
+    // snapshot state, and a fold that dropped it would resurrect the
+    // soft-deleted rows for every checkpoint reader.
+    val st = DeltaLog.replay(fs, logP, DeltaLog.seed(path, ck), prev.map(_ + 1).getOrElse(0L),
+        latest).fold(v => throw new IllegalStateException(
+      s"Delta log at $path is missing commit $v — cannot checkpoint $latest"), identity)
     val nowMs = System.currentTimeMillis
-    for (v <- prev.map(_ + 1).getOrElse(0L) to latest) {
-      val p = new Path(logP, f"$v%020d.json")
-      val content = graft.pipeline.VersionedTable.readSmall(fs, p).getOrElse(
-        throw new IllegalStateException(
-          s"Delta log at $path is missing commit $v — cannot checkpoint $latest"))
-      content.split("\n").map(_.trim).filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("protocol")) {
-          val pr = node.get("protocol")
-          import scala.jdk.CollectionConverters._
-          def feats(n: String): Seq[String] =
-            if (pr.has(n)) pr.get(n).elements().asScala.map(_.asText()).toSeq else null
-          protocol = CkProtocol(pr.path("minReaderVersion").asInt(1),
-            pr.path("minWriterVersion").asInt(2),
-            feats("readerFeatures"), feats("writerFeatures"))
-        }
-        if (node.has("metaData")) {
-          val md = node.get("metaData")
-          import scala.jdk.CollectionConverters._
-          meta = CkMeta(
-            md.path("id").asText(null),
-            CkFormat(md.path("format").path("provider").asText("parquet"),
-              Option(md.get("format")).flatMap(f => Option(f.get("options")))
-                .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-                .getOrElse(Map.empty)),
-            md.path("schemaString").asText(null),
-            md.path("partitionColumns").elements().asScala.map(_.asText()).toSeq,
-            Option(md.get("configuration"))
-              .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-              .getOrElse(Map.empty),
-            if (md.has("createdTime")) Long.box(md.get("createdTime").asLong()) else null)
-        }
-        // file actions reconcile by (path, dv.uniqueId) — a historical
-        // DELETE's add(F, dv) + a later remove(F, dv) must cancel out
-        // (e.g. after a graft compact), so the fold keys carry the dv
-        // identity; only a dv add SURVIVING to the fold refuses (below)
-        def ckDvOf(n: com.fasterxml.jackson.databind.JsonNode): CkDv =
-          Option(n.get("deletionVector")).filterNot(_.isNull)
-            .filter(_.path("storageType").asText("").nonEmpty)
-            .map(dv => CkDv(dv.path("storageType").asText(""),
-              dv.path("pathOrInlineDv").asText(""),
-              if (dv.hasNonNull("offset")) Int.box(dv.get("offset").asInt()) else null,
-              dv.path("sizeInBytes").asInt(0),
-              dv.path("cardinality").asLong(0L))).orNull
-        def dvUid(n: com.fasterxml.jackson.databind.JsonNode): String = {
-          val d = Option(n.get("deletionVector")).filterNot(_.isNull)
-          d.map { dv =>
-            val off = if (dv.hasNonNull("offset")) dv.get("offset").asInt() else 0
-            s"${dv.path("storageType").asText("")}${dv.path("pathOrInlineDv").asText("")}@$off"
-          }.getOrElse("")
-        }
-        if (node.has("add")) {
-          val ad = node.get("add")
-          import scala.jdk.CollectionConverters._
-          val enc = ad.get("path").asText()
-          val pv = Option(ad.get("partitionValues")).map(_.properties().asScala
-            .map(e => e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText()))
-            .toMap).getOrElse(Map.empty[String, String])
-          tailAdds((enc, dvUid(ad))) = CkAdd(enc, pv,
-            ad.path("size").asLong(-1L), ad.path("modificationTime").asLong(0L),
-            dataChange = false, stats = ad.path("stats").asText(null),
-            deletionVector = ckDvOf(ad),
-            baseRowId = if (ad.hasNonNull("baseRowId"))
-              Long.box(ad.get("baseRowId").asLong()) else null,
-            defaultRowCommitVersion = if (ad.hasNonNull("defaultRowCommitVersion"))
-              Long.box(ad.get("defaultRowCommitVersion").asLong()) else null)
-          tailTombs.remove(enc) // a re-added path is live, not a tombstone
-          touched += DeltaRead.decodePath(enc)
-        }
-        if (node.has("remove")) {
-          val rm = node.get("remove")
-          val enc = rm.path("path").asText()
-          tailAdds.remove((enc, dvUid(rm)))
-          tailTombs(enc) = rm.path("deletionTimestamp").asLong(nowMs)
-          touched += DeltaRead.decodePath(enc)
-        }
-        if (node.has("txn")) {
-          val t = node.get("txn")
-          val appId = t.path("appId").asText()
-          txns(appId) = CkTxn(appId, t.path("version").asLong(),
-            if (t.has("lastUpdated")) Long.box(t.get("lastUpdated").asLong()) else null)
-        }
-        if (node.has("domainMetadata")) {
-          // last action per domain wins; removed=true tombstones fold
-          // away below (a checkpoint needs only LIVE domains — the
-          // commits holding the removal get cleaned with the prefix)
-          val d = node.get("domainMetadata")
-          val dom = d.path("domain").asText()
-          domains(dom) = CkDomain(dom, d.path("configuration").asText(null),
-            d.path("removed").asBoolean(false))
-        }
-      }
-    }
-
-    // a path with a surviving add is live, never a tombstone (a
-    // DELETE's remove(F) + add(F, dv) pair leaves F live)
-    tailAdds.keys.foreach { case (p, _) => tailTombs.remove(p) }
-
-    val enc = org.apache.spark.sql.Encoders.product[CkRow]
-    // all-nullable shape for the carried-adds projection: the cast
-    // target must not claim NOT NULL on columns a foreign checkpoint
-    // legitimately leaves nullable
-    val ckSchema = org.apache.spark.sql.graftbridge.ColumnBridge.asNullable(enc.schema)
-    def nullCol(n: String) = lit(null).cast(ckSchema(n).dataType).as(n)
-
-    // --- carried adds from the previous checkpoint (distributed) ---
-    // carried = (live adds, unexpired tombstones) from the previous
-    // checkpoint, both distributed and both anti-joined (decoded keys)
-    // against everything the tail touched
-    val carried: Option[(DataFrame, Option[DataFrame])] = prev.map { cv =>
-      val main = spark.read.parquet(
-        cpFiles(cv).map(n => new Path(logP, n).toString): _*)
-      val mainCols = main.columns.toSet
-      // folding ON TOP of a v2 (sidecar) checkpoint (round 14): the
-      // main file holds the non-file actions, the sidecars the file
-      // actions — union them (by name, missing columns null) and the
-      // classic fold below proceeds unchanged. Writing a CLASSIC
-      // checkpoint stays legal under the v2Checkpoint FEATURE; the
-      // `delta.checkpointPolicy = v2` table property pins the v2
-      // form, which the v2 write branch below emits once metaData
-      // resolves.
-      val rows: DataFrame =
-        if (!mainCols("sidecar")) main
-        else {
-          val sides = main.select(col("sidecar.path"))
-            .where(col("sidecar.path").isNotNull)
-            .collect().map(_.getString(0)).toSeq.sorted.map { rel =>
-              require(!rel.contains("://") && !rel.startsWith("/"),
-                s"v2 checkpoint at $path references an absolute sidecar '$rel' — " +
-                  "this writer resolves sidecars under _delta_log/_sidecars only")
-              spark.read.parquet(new Path(new Path(logP, "_sidecars"), rel).toString)
-            }
-          sides.foldLeft(main)((a, b) => a.unionByName(b, allowMissingColumns = true))
-        }
-      val cols = rows.columns.toSet
-      require(cols("add"),
-        s"unrecognized checkpoint layout at $path (no add column in the " +
-          "checkpoint or its sidecars)")
-      if (protocol == null && cols("protocol")) {
-        // the tail carried no protocol action — INHERIT the
-        // checkpointed one, feature lists included (a protocol row is
-        // total state, and this fold's output replaces the previous
-        // checkpoint as the log's authoritative base)
-        val pCols = rows.select("protocol.*").columns.toSet
-        def featCol(n: String) =
-          if (pCols(n)) col("protocol." + n).cast("array<string>")
-          else lit(null).cast("array<string>")
-        val mwCol = if (pCols("minWriterVersion"))
-          col("protocol.minWriterVersion").cast("int") else lit(null).cast("int")
-        rows.where(col("protocol.minReaderVersion").isNotNull)
-          .select(col("protocol.minReaderVersion").cast("int"), mwCol,
-            featCol("readerFeatures"), featCol("writerFeatures"))
-          .collect().headOption.foreach { r =>
-            protocol = CkProtocol(r.getInt(0), if (r.isNullAt(1)) 2 else r.getInt(1),
-              if (r.isNullAt(2)) null else r.getSeq[String](2),
-              if (r.isNullAt(3)) null else r.getSeq[String](3))
-          }
-      }
-      if (meta == null && cols("metaData")) {
-        // the tail carried no metaData — inherit the checkpointed one
-        import scala.jdk.CollectionConverters._
-        rows.where(col("metaData.schemaString").isNotNull)
-          .select("metaData.*").collect().headOption.foreach { r =>
-            def opt[T](n: String, f: Int => T): T =
-              if (r.schema.fieldNames.contains(n) && !r.isNullAt(r.fieldIndex(n)))
-                f(r.fieldIndex(n)) else null.asInstanceOf[T]
-            meta = CkMeta(
-              opt("id", r.getString),
-              CkFormat("parquet", Map.empty),
-              r.getString(r.fieldIndex("schemaString")),
-              if (r.schema.fieldNames.contains("partitionColumns"))
-                r.getSeq[String](r.fieldIndex("partitionColumns")) else Nil,
-              Option(opt[scala.collection.Map[String, String]]("configuration",
-                r.getMap[String, String])).map(_.toMap).getOrElse(Map.empty),
-              opt("createdTime", i => Long.box(r.getLong(i))))
-          }
-      }
-      if (cols("txn")) // tail marks win over checkpointed ones
-        rows.where(col("txn.appId").isNotNull).select("txn.*").collect().foreach { r =>
-          val appId = r.getString(r.fieldIndex("appId"))
-          if (!txns.contains(appId))
-            txns(appId) = CkTxn(appId, r.getLong(r.fieldIndex("version")),
-              if (r.schema.fieldNames.contains("lastUpdated") &&
-                  !r.isNullAt(r.fieldIndex("lastUpdated")))
-                Long.box(r.getLong(r.fieldIndex("lastUpdated"))) else null)
-        }
-      if (cols("domainMetadata")) // tail actions win over checkpointed ones
-        rows.where(col("domainMetadata.domain").isNotNull)
-          .select("domainMetadata.*").collect().foreach { r =>
-            val dom = r.getString(r.fieldIndex("domain"))
-            if (!domains.contains(dom))
-              domains(dom) = CkDomain(dom,
-                if (r.schema.fieldNames.contains("configuration") &&
-                    !r.isNullAt(r.fieldIndex("configuration")))
-                  r.getString(r.fieldIndex("configuration")) else null,
-                r.schema.fieldNames.contains("removed") &&
-                  !r.isNullAt(r.fieldIndex("removed")) &&
-                  r.getBoolean(r.fieldIndex("removed")))
-          }
-      val addCols = rows.select("add.*").columns.toSet
-      def ac(n: String, dt: String) =
-        if (addCols(n)) col("add." + n).cast(dt).as(n) else lit(null).cast(dt).as(n)
-      // carried DVs rebuild field-by-NAME into CkDv's shape (a foreign
-      // checkpoint's descriptor may carry extra fields / other order —
-      // a positional struct cast would scramble them)
-      val dvType = ckSchema("add").dataType.asInstanceOf[
-        org.apache.spark.sql.types.StructType]("deletionVector").dataType
-      val dvCol =
-        if (!addCols("deletionVector")) lit(null).cast(dvType).as("deletionVector")
-        else when(col("add.deletionVector.storageType").isNotNull,
-          struct(
-            col("add.deletionVector.storageType").cast("string").as("storageType"),
-            col("add.deletionVector.pathOrInlineDv").cast("string").as("pathOrInlineDv"),
-            col("add.deletionVector.offset").cast("int").as("offset"),
-            col("add.deletionVector.sizeInBytes").cast("int").as("sizeInBytes"),
-            col("add.deletionVector.cardinality").cast("long").as("cardinality")))
-          .otherwise(lit(null).cast(dvType)).as("deletionVector")
-      val prevAdds = rows.where(col("add.path").isNotNull).select(
-        col("add.path").cast("string").as("path"),
-        ac("partitionValues", "map<string,string>"),
-        ac("size", "bigint"), ac("modificationTime", "bigint"),
-        // checkpoint file actions always write dataChange=false — they
-        // describe existing state, not new data (protocol requirement)
-        lit(false).as("dataChange"),
-        ac("stats", "string"),
-        dvCol,
-        // row-tracking ids carry through the fold (dropping them would
-        // orphan the hwm domain and break re-add id carry)
-        ac("baseRowId", "bigint"), ac("defaultRowCommitVersion", "bigint"))
-      val prevTombs: Option[DataFrame] =
-        if (!cols("remove")) None
-        else {
-          val rmCols = rows.select("remove.*").columns.toSet
-          val dt = if (rmCols("deletionTimestamp"))
-            coalesce(col("remove.deletionTimestamp").cast("bigint"), lit(0L))
-          else lit(0L)
-          Some(rows.where(col("remove.path").isNotNull).select(
-            col("remove.path").cast("string").as("path"),
-            dt.as("deletionTimestamp"))
-            .where(col("deletionTimestamp") >= lit(nowMs - TombstoneRetentionMs)))
-        }
-      if (touched.isEmpty) (prevAdds, prevTombs)
-      else {
-        import spark.implicits._
-        // null-safe: a by-name union branch that lacks `add` carries a
-        // literal-null path the optimizer may fold through the UDF
-        // before the isNotNull filter prunes it
-        val dec = udf((p: String) => if (p == null) null else DeltaRead.decodePath(p))
-        val touchedDf = broadcast(touched.toSeq.toDF("__dpath"))
-        def anti(df: DataFrame) = df.withColumn("__dpath", dec(col("path")))
-          .join(touchedDf, Seq("__dpath"), "left_anti").drop("__dpath")
-        (anti(prevAdds), prevTombs.map(anti))
-      }
-    }
-
+    val tombsSince = nowMs - TombstoneRetentionMs
+    val meta = st.metadata
     require(meta != null,
       s"Delta log at $path carries no metaData action — cannot checkpoint")
     // `delta.checkpointPolicy = v2` PINS the v2 (UUID + sidecar)
-    // checkpoint form (round 15: this writer now emits it — see the
-    // v2 branch below); a v2-policy table without the v2Checkpoint
-    // reader feature is spec-invalid, so refuse rather than emit a
-    // layout other readers would reject.
+    // checkpoint form (see the v2 branch below); a v2-policy table
+    // without the v2Checkpoint reader feature is spec-invalid, so
+    // refuse rather than emit a layout other readers would reject.
     val v2Policy = meta.configuration.get("delta.checkpointPolicy").contains("v2")
     if (v2Policy)
-      require(Option(protocol).exists(p =>
-          Option(p.readerFeatures).exists(_.contains("v2Checkpoint"))),
+      require(Option(st.protocol).exists(_.readerFeatures.exists(_.contains("v2Checkpoint"))),
         s"Delta table at $path pins delta.checkpointPolicy = v2 but its protocol " +
           "does not carry the v2Checkpoint reader feature — a spec-valid v2-policy " +
           "table always does; refusing to checkpoint an inconsistent table")
-    require(protocol != null,
+    // a protocol never defaults: inventing (1, 2) would silently
+    // DOWNGRADE a v3/v7 table for every reader of the fold
+    require(st.protocol != null,
       s"Delta log at $path carries no protocol action (neither in the commit " +
         "tail nor the previous checkpoint) — a spec-valid log always has one; " +
         "refusing to checkpoint rather than invent a default protocol")
 
-    val driverRows: Seq[CkRow] =
-      Seq(CkRow(protocol, null, null, null, null),
-        CkRow(null, meta, null, null, null)) ++
-        txns.values.map(t => CkRow(null, null, null, null, t)) ++
-        // LIVE domains only: replay needs no removal tombstones once
-        // the removing commit is folded
-        domains.values.collect { case d if !d.removed =>
-          CkRow(null, null, null, null, null, d) } ++
-        tailAdds.values.map(a => CkRow(null, null, a, null, null)) ++
-        tailTombs.collect { case (p, ts) if ts >= nowMs - TombstoneRetentionMs =>
-          CkRow(null, null, null, CkRemove(p, ts, dataChange = false), null)
-        }
-    // explicit Rows, not the product encoder: Janino chokes generating
-    // a serializer for the 3-deep CkRow→CkAdd→CkDv nesting (interpreted
-    // fallback works but spams a CompileException per checkpoint); the
-    // driver emits a handful of rows, so hand conversion is free
-    val driverDf = {
-      import org.apache.spark.sql.Row
-      def dvR(d: CkDv): Row =
-        if (d == null) null
-        else Row(d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes, d.cardinality)
-      def rowOf(r: CkRow): Row = Row(
-        if (r.protocol == null) null
-        else Row(r.protocol.minReaderVersion, r.protocol.minWriterVersion,
-          r.protocol.readerFeatures, r.protocol.writerFeatures),
-        if (r.metaData == null) null
-        else Row(r.metaData.id,
-          Row(r.metaData.format.provider, r.metaData.format.options),
-          r.metaData.schemaString, r.metaData.partitionColumns,
-          r.metaData.configuration, r.metaData.createdTime),
-        if (r.add == null) null
-        else Row(r.add.path, r.add.partitionValues, r.add.size,
-          r.add.modificationTime, r.add.dataChange, r.add.stats,
-          dvR(r.add.deletionVector), r.add.baseRowId,
-          r.add.defaultRowCommitVersion),
-        if (r.remove == null) null
-        else Row(r.remove.path, r.remove.deletionTimestamp, r.remove.dataChange),
-        if (r.txn == null) null
-        else Row(r.txn.appId, r.txn.version, r.txn.lastUpdated),
-        if (r.domainMetadata == null) null
-        else Row(r.domainMetadata.domain, r.domainMetadata.configuration,
-          r.domainMetadata.removed))
+    // driver rows: the non-file state, LIVE domains only (replay needs
+    // no removal once the removing commit is folded), the tail's live
+    // adds and its unexpired tombstones
+    val driverRows: Seq[DeltaLog.Action] =
+      Seq(st.protocol, meta) ++ st.txns.values ++
+        st.snap.domains.map { case (d, c) => DeltaLog.DomainMetadata(d, c, removed = false) } ++
+        st.adds.values ++
+        st.tombstones.values.filter(_.deletionTimestamp.forall(_ >= tombsSince))
+    val ckSchema = DeltaLog.CheckpointSchema
+    // explicit Rows, not a product encoder: Janino chokes generating a
+    // serializer for the 3-deep add→deletionVector nesting; the driver
+    // emits a handful of rows, so hand conversion is free
+    def rowsDf(actions: Seq[DeltaLog.Action]): DataFrame = {
       import scala.jdk.CollectionConverters._
-      spark.createDataFrame(driverRows.map(rowOf).asJava, ckSchema)
+      spark.createDataFrame(actions.map(DeltaLog.checkpointRow(_, nowMs)).asJava, ckSchema)
     }
-    val carriedAddsDf = carried.map { case (adds, _) => adds.select(
-      nullCol("protocol"), nullCol("metaData"),
-      struct(col("path"), col("partitionValues"), col("size"),
-        col("modificationTime"), col("dataChange"), col("stats"),
-        col("deletionVector"), col("baseRowId"), col("defaultRowCommitVersion"))
-        .cast(ckSchema("add").dataType).as("add"),
-      nullCol("remove"), nullCol("txn"), nullCol("domainMetadata"))
+    val (fileRows, nonFileRows) = driverRows.partition {
+      case _: DeltaLog.AddFile | _: DeltaLog.RemoveFile => true
+      case _ => false
     }
-    val carriedTombsDf = carried.flatMap(_._2).map(_.select(
-      nullCol("protocol"), nullCol("metaData"), nullCol("add"),
-      struct(col("path"), col("deletionTimestamp"), lit(false).as("dataChange"))
-        .cast(ckSchema("remove").dataType).as("remove"),
-      nullCol("txn"), nullCol("domainMetadata")))
-    val all0 = (Seq(driverDf) ++ carriedAddsDf ++ carriedTombsDf)
-      .reduce(_ unionByName _)
+    // carried from the previous checkpoint, distributed: its adds the
+    // tail left live, and its unexpired tombstones whose path the tail
+    // did not touch
+    val carried = ck.toSeq.flatMap { c =>
+      Seq(DeltaLog.untouchedAdds(spark, c.files, st).select("add"),
+        DeltaLog.untouchedTombstones(spark, c.files, st, tombsSince))
+    }
+    val fileDf = (rowsDf(fileRows) +: carried)
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val all0 = rowsDf(nonFileRows).unionByName(fileDf)
     // the domainMetadata COLUMN appears only when live domains exist:
     // readers gate their domain collect on the column's presence, so a
     // domain-less table (the common case) must not pay an extra Spark
     // job per snapshot/fold for an all-null column
-    val hasDomains = domains.values.exists(!_.removed)
+    val hasDomains = st.snap.domains.nonEmpty
     val all = if (hasDomains) all0 else all0.drop("domainMetadata")
 
     // --- part count: explicit, or auto from a footer-only estimate ---
+    // (a v2 previous checkpoint's file actions live in its SIDECARS —
+    // counted too, or the estimate collapses to one write task)
     val nParts =
       if (parts > 0) parts
       else {
-        // spark.read.parquet(...).count() on untransformed files is a
-        // metadata-only count — no row decode even on a huge checkpoint.
-        // A v2 PREVIOUS checkpoint keeps its file actions in SIDECARS
-        // (the main file is a handful of non-file rows) — count those
-        // too, or the estimate collapses to nParts=1 and the whole add
-        // set funnels through one write task
-        val prevCount = prev.map { cv =>
-          val mains = cpFiles(cv).map(n => new Path(logP, n).toString)
-          val mainDf = spark.read.parquet(mains: _*)
-          val sideFiles =
-            if (!mainDf.columns.contains("sidecar")) Nil
-            else mainDf.select(col("sidecar.path"))
-              .where(col("sidecar.path").isNotNull)
-              .collect().map(_.getString(0)).toSeq
-              .filter(rel => !rel.contains("://") && !rel.startsWith("/"))
-              .map(rel => new Path(new Path(logP, "_sidecars"), rel).toString)
-          mainDf.count() + (if (sideFiles.isEmpty) 0L
-            else spark.read.parquet(sideFiles: _*).count())
-        }.getOrElse(0L)
-        val est = prevCount + driverRows.size
+        val est = ck.fold(0L)(_.rowCount) + driverRows.size
         math.max(1L, (est + CkPartActions - 1) / CkPartActions).toInt
       }
 
@@ -4455,10 +4053,8 @@ object DeltaWrite {
       val tmpSide = new Path(logP, ".ckpt-tmp-" + java.util.UUID.randomUUID.toString.take(12))
       val tmpMain = new Path(logP, ".ckpt-tmp-" + java.util.UUID.randomUUID.toString.take(12))
       try {
-        val fileActs = all
-          .where(col("add.path").isNotNull || col("remove.path").isNotNull)
-          .select(col("add"), col("remove"))
-        fileActs.repartition(nParts).write.parquet(tmpSide.toString)
+        fileDf.select(col("add"), col("remove")).repartition(nParts)
+          .write.parquet(tmpSide.toString)
         val fileActionCount = spark.read.parquet(tmpSide.toString).count()
         val sideParts = fs.listStatus(tmpSide).map(_.getPath)
           .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
@@ -4469,15 +4065,15 @@ object DeltaWrite {
           require(fs.rename(src, dst),
             s"v2 checkpoint publish at $path failed renaming sidecar $name — " +
               "the partial sidecar set is unreferenced and invisible to readers")
-          val st = fs.getFileStatus(dst)
-          (name, st.getLen, st.getModificationTime)
+          val f = fs.getFileStatus(dst)
+          (name, f.getLen, f.getModificationTime)
         }
         def nulls(names: String*) = names.map {
           case "checkpointMetadata" => lit(null).cast(cmType).as("checkpointMetadata")
           case "sidecar" => lit(null).cast(scType).as("sidecar")
           case n => lit(null).cast(ckSchema(n).dataType).as(n)
         }
-        val nonFileDf = driverDf.where(col("add").isNull && col("remove").isNull)
+        val nonFileDf = rowsDf(nonFileRows)
           .select(Seq(col("protocol"), col("metaData"), col("txn"),
             col("domainMetadata")) ++
             nulls("checkpointMetadata", "sidecar"): _*)

@@ -285,26 +285,23 @@ class DeltaTableSource(spark: SparkSession, root: String,
           def pvLogical(pv: Map[String, String]): Map[String, String] =
             if (physToLogical.isEmpty || pv == null) pv
             else pv.map { case (k, v) => physToLogical.getOrElse(k, k) -> v }
-          val files = adds.map { case (enc, pv, _, _, _) =>
-            decodeRel(enc) -> pvLogical(pv)
-          }.toMap
-          val sizes = adds.map { case (enc, _, sz, _, _) => decodeRel(enc) -> sz }.toMap
-          val stats = adds.collect { case (enc, _, _, st, _) if st != null =>
-            decodeRel(enc) -> st
-          }.toMap
+          val files = adds.map(a => decodeRel(a.path) -> pvLogical(a.partitionValues)).toMap
+          val sizes = adds.map(a => decodeRel(a.path) -> a.size).toMap
+          val stats = adds.collect { case a if a.stats != null => decodeRel(a.path) -> a.stats }
+            .toMap
           val spanSnap = meta.copy(files = files, sizes = sizes, stats = stats)
           if (withRowIds) {
             // each add's log-resident baseRowId keys the span's rows —
             // q139's formula applied per micro-batch, so a streaming
             // consumer gets the same stable keys the batch read has
-            adds.foreach { case (enc, _, _, _, brid) =>
-              require(brid >= 0L,
-                s"delta stream at $root: commit adds '${decodeRel(enc)}' without " +
+            adds.foreach { a =>
+              require(a.baseRowId >= 0L,
+                s"delta stream at $root: commit adds '${decodeRel(a.path)}' without " +
                   "a baseRowId — the span reaches before row tracking was " +
                   "enabled; restart the stream from a later startingVersion") }
             DeltaRead.readSnapshotRowIds(spark, root,
-              spanSnap.copy(rowIds = adds.map { case (enc, _, _, _, brid) =>
-                decodeRel(enc) -> (brid, to) }.toMap), "_row_id")
+              spanSnap.copy(rowIds = adds.map(a => decodeRel(a.path) -> (a.baseRowId, to))
+                .toMap), "_row_id")
           } else DeltaRead.readSnapshot(spark, root, spanSnap)
         }
       }

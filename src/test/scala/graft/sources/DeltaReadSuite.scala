@@ -322,6 +322,58 @@ class DeltaReadSuite extends SparkSpec {
     assert(e2.getMessage.contains("minReaderVersion=4"))
   }
 
+  test("newest protocol action wins before and after a checkpoint") {
+    // a foreign log whose v1 protocol DROPS a writer feature v0 declared:
+    // the replay takes the last protocol action (the spec's rule), so the
+    // checkpoint — which writes that one action — reads back the same
+    val root = tmp()
+    writeDataFile(Seq((1L, "a")).toDF("id", "v"), root, "f1.parquet")
+    commit(root, 0, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,""" +
+        """"writerFeatures":["appendOnly","invariants"]}}""",
+      metaDataLine(schema), addLine(root, "f1.parquet")))
+    commit(root, 1, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["appendOnly"]}}"""))
+    DeltaRead.invalidateSnapshotCache()
+    val before = DeltaRead.snapshot(spark, root)
+    assert(before.writerFeatures == Set("appendOnly"))
+    assert(DeltaWrite.checkpoint(spark, root) == 1L)
+    DeltaRead.invalidateSnapshotCache()
+    val after = DeltaRead.snapshot(spark, root)
+    assert(after.writerFeatures == before.writerFeatures)
+    assert(after.files == before.files)
+  }
+
+  test("checkpoint actions read back whether or not JSON output keeps null fields") {
+    // a session writing JSON nulls serialises each checkpoint row with
+    // every empty action column present; none of them is an action
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.jsonGenerator.ignoreNullFields", "false")
+    val root = tmp()
+    writeDataFile(Seq((1L, "a")).toDF("id", "v"), root, "f1.parquet")
+    commit(root, 0, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,""" +
+        """"writerFeatures":["appendOnly","invariants"]}}""",
+      metaDataLine(schema), addLine(root, "f1.parquet"),
+      """{"txn":{"appId":"sink-1","version":3,"lastUpdated":1}}"""))
+    DeltaRead.invalidateSnapshotCache()
+    val before = DeltaRead.snapshot(s2, root)
+    assert(DeltaWrite.checkpoint(s2, root) == 0L)
+    // a tail with a metaData action but no protocol action: the next
+    // checkpoint carries the seed's protocol, not a default one
+    commit(root, 1, Seq(metaDataLine(schema)))
+    assert(DeltaWrite.checkpoint(s2, root) == 1L)
+    for (v <- Seq(0L, 1L)) {
+      DeltaRead.invalidateSnapshotCache()
+      val after = DeltaRead.snapshot(s2, root, Some(v))
+      assert((after.minReader, after.minWriter) == ((1, 7)), s"v$v")
+      assert(after.writerFeatures == Set("appendOnly", "invariants"), s"v$v")
+      assert(after.txns == Map("sink-1" -> 3L), s"v$v")
+      assert(after.schema == before.schema, s"v$v")
+      assert(after.files == before.files, s"v$v")
+    }
+  }
+
   // --- column mapping (reader protocol v2 / v3-columnMapping) ---
 
   private def mappedField(logical: String, dt: DataType, id: Long, physical: String) =

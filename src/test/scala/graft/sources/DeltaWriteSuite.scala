@@ -2345,6 +2345,82 @@ class DeltaWriteSuite extends SparkSpec {
     assert(head.get("numFiles").asLong == 10L)
   }
 
+  test("row ids stay dense (0..n-1) across two auto-checkpoints") {
+    val root = tmp()
+    DeltaWrite.append(spark, Seq((0L, "seed")).toDF("id", "v").coalesce(1), root)  // v0
+    DeltaWrite.setProperties(spark, root, Map("delta.enableRowTracking" -> "true")) // v1
+    (1 to 21).foreach(i =>                                                          // v2..v22
+      DeltaWrite.append(spark, Seq((i.toLong, s"r$i")).toDF("id", "v").coalesce(1), root))
+    val log = new java.io.File(root.stripPrefix("file:"), "_delta_log").list().toSet
+    assert(Seq(10L, 20L).forall(v => log(f"$v%020d.checkpoint.parquet")),
+      "the appends must cross two auto-checkpoints")
+    val s = DeltaRead.snapshot(spark, root)
+    assert(s.files.size == 22 && s.rowIds.size == 22)
+    val ids = DeltaRead.readWithRowIds(spark, root).select("_row_id").as[Long].collect().sorted
+    assert(ids.toSeq == (0L to 21L), s"ids must be the dense range: ${ids.take(5).toSeq}…")
+  }
+
+  /** Drive a table through every commit kind graft writes, reading the
+    * snapshot after each commit so the cached snapshot advances one
+    * commit at a time; returns those cached snapshots.
+    */
+  private def driveEveryCommitKind(root: String,
+                                   props: Map[String, String]): Seq[DeltaRead.Snapshot] = {
+    def rows(lo: Long, hi: Long) =
+      spark.range(lo, hi).selectExpr("id", "CAST(id % 5 AS STRING) AS v").coalesce(1)
+    val seen = Seq.newBuilder[DeltaRead.Snapshot]
+    def step(commit: => Long): Unit = { commit; seen += DeltaRead.snapshot(spark, root) }
+    step(DeltaWrite.append(spark, rows(0, 40), root))
+    step(DeltaWrite.setProperties(spark, root, props ++ Map(
+      "delta.enableChangeDataFeed" -> "true", "delta.enableRowTracking" -> "true",
+      "delta.enableDeletionVectors" -> "true", "delta.enableInCommitTimestamps" -> "true")))
+    step(DeltaWrite.append(spark, rows(40, 60), root))
+    step(DeltaWrite.delete(spark, root, "id % 7 = 3"))
+    step(DeltaWrite.update(spark, root, "id % 7 = 5", Map("v" -> "'u'")))
+    step(DeltaWrite.merge(spark, rows(55, 70).withColumn("v", lit("m")), root, Seq("id")))
+    step(DeltaWrite.purgeDvs(spark, root, 0.01))
+    step(DeltaWrite.delete(spark, root, "id % 11 = 0"))
+    step(DeltaWrite.appendStream(spark, rows(70, 75), root, "replay-app", 1L))
+    step(DeltaWrite.setDomainMetadata(spark, root, "test.domain", """{"k":1}"""))
+    step(DeltaWrite.removeDomainMetadata(spark, root, "test.domain"))
+    step(DeltaWrite.append(spark, rows(75, 80).withColumn("w", lit(1)), root,
+      mergeSchema = true))
+    step(DeltaWrite.compact(spark, root))
+    step(DeltaWrite.restore(spark, root, 5L))
+    seen.result()
+  }
+
+  test("cached advance, cold replay and every checkpoint form agree") {
+    def cold(root: String, version: Option[Long] = None): DeltaRead.Snapshot = {
+      DeltaRead.invalidateSnapshotCache()
+      DeltaRead.snapshot(spark, root, version)
+    }
+    def logNames(root: String): Seq[String] =
+      new java.io.File(root.stripPrefix("file:"), "_delta_log").list().toSeq
+    // (policy, checkpoint part counts to fold a copy of the table with)
+    Seq(Map.empty[String, String] -> Seq(0, 2),
+        Map("delta.checkpointPolicy" -> "v2") -> Seq(0)).foreach { case (policy, forms) =>
+      val root = tmp()
+      val seen = driveEveryCommitKind(root, policy)
+      val head = seen.last
+      assert(head.version > 10L && head.version % 10L != 0L,
+        s"the drive must cross the v10 auto-checkpoint and end unfolded: v${head.version}")
+      seen.foreach(s => assert(cold(root, Some(s.version)) == s, s"cached v${s.version}"))
+      assert(cold(root) == head)
+      forms.foreach { parts =>
+        val copy = tmp()
+        org.apache.commons.io.FileUtils.copyDirectory(
+          new java.io.File(root.stripPrefix("file:")), new java.io.File(copy.stripPrefix("file:")))
+        assert(DeltaWrite.checkpoint(spark, copy, parts) == head.version)
+        val folded = logNames(copy).filter(_.startsWith(f"${head.version}%020d.checkpoint"))
+        if (parts == 2) assert(folded.size == 2, folded)
+        if (policy.nonEmpty) assert(folded.exists(_.matches(""".*checkpoint\.[0-9a-f-]{36}\.parquet""")),
+          folded)
+        assert(cold(copy) == head, s"policy $policy, parts $parts")
+      }
+    }
+  }
+
   // --- nested column-mapped schema changes (round 16) ---------------
 
   private def mkMappedTable(root: String, s: org.apache.spark.sql.types.StructType,
@@ -3146,6 +3222,29 @@ class DeltaWriteSuite extends SparkSpec {
       .as[(Long, String)].collect().toMap
     assert(got.keySet == (0L until 10L).filter(_ % 2 == 1).toSet)
     assert(got(7L) == "x1")
+  }
+
+  test("variant: shredded and unshredded layouts read identical values") {
+    val docs = spark.range(2000).selectExpr("id",
+      """parse_json(concat('{"k":', id, ',"score":', id % 97,
+         ',"meta":{"lang":"l', id % 23, '"}}')) AS v""")
+    val plain = tmp()
+    val shred = tmp()
+    DeltaWrite.append(spark, docs, plain)
+    DeltaWrite.append(spark, docs.limit(1), shred) // create, then opt in
+    DeltaWrite.setProperties(spark, shred, Map("delta.enableVariantShredding" -> "true"))
+    DeltaWrite.delete(spark, shred, "true")
+    DeltaWrite.append(spark, docs, shred)
+    def onePath(root: String): Long = DeltaRead.read(spark, root)
+      .selectExpr("variant_get(v, '$.score', 'bigint') AS s")
+      .agg(sum("s")).head().getLong(0)
+    def twoPath(root: String): Long = DeltaRead.read(spark, root)
+      .where("variant_get(v, '$.meta.lang', 'string') = 'l7'")
+      .selectExpr("variant_get(v, '$.score', 'bigint') AS s")
+      .agg(sum("s")).head().getLong(0)
+    assert(onePath(plain) == onePath(shred))
+    assert(twoPath(plain) == twoPath(shred))
+    assert(DeltaRead.read(spark, plain).count() == DeltaRead.read(spark, shred).count())
   }
 
   /** Per version: operation, operationParameters keys, and the ordered

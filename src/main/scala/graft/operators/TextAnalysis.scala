@@ -3,15 +3,24 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, LangId, NormalizeText, StopwordHits}
 
 /** Text-analysis operators for training-data pipelines over a
   * `documents(doc_id, text, lang, source, n_chars)` table.
   *
   * Everything here is built from codegen'd native functions (length /
-  * regexp / split / transform / aggregate) — no UDFs — so each operator
-  * is a pure projection: zero shuffles, scales linearly with input
-  * bytes, and fuses with surrounding projections in one
-  * whole-stage-codegen pass.
+  * regexp / split / transform / aggregate) and graftbridge kernels — no
+  * UDFs — so each operator is a pure projection: zero shuffles, scales
+  * linearly with input bytes, and fuses with surrounding projections in
+  * one whole-stage-codegen pass.
+  *
+  * Case folding goes through the graftbridge kernels ([[normalize]],
+  * [[langId]], [[stopwordHits]], built on
+  * [[org.apache.spark.sql.graftbridge.CaseFold]]), never through
+  * Spark's `lower` / `upper` / `initcap`: the first of those in a JVM
+  * builds ICU's title-case table (~1.5 s, ~2.7 MB kept for the JVM's
+  * life) that lowercasing never reads. The kernels' output is
+  * byte-identical to Spark's `lower`.
   */
 object TextAnalysis {
 
@@ -76,10 +85,8 @@ object TextAnalysis {
     val symRatio = round(
       (countMatches(text, "#") + countMatches(text, "\\.\\.\\."))
         .cast("double") / nD, 4)
-    val toksLower = transform(toks, t => lower(t))
-    val stopHits = stopwords("en")
-      .map(w => array_contains(toksLower, w).cast("int"))
-      .reduce(_ + _).cast("long")
+    val stopHits = ColumnBridge.column(StopwordHits(ColumnBridge.expression(text),
+      stopwords("en"), distinct = true)).cast("long")
     val rWords = (nWords >= minWords && nWords <= maxWords).cast("int")
     val rMean = (meanLen >= 3.0 && meanLen <= 10.0).cast("int")
     val rAlpha = (alphaRatio >= 0.8).cast("int")
@@ -110,23 +117,19 @@ object TextAnalysis {
     "es" -> Seq("el", "los", "las", "es", "en", "que", "por", "una"),
     "pt" -> Seq("o", "os", "das", "em", "que", "uma", "para", "com"))
 
-  /** Count of tokens hitting a stopword list. */
-  def stopwordHits(text: Column, words: Seq[String]): Column = {
-    val set = array(words.map(lit): _*)
-    size(filter(tokens(lower(text)), t => array_contains(set, t)))
-  }
+  /** Count of the lowercased text's tokens hitting a stopword list
+    * (one fold and one split, [[StopwordHits]]).
+    */
+  def stopwordHits(text: Column, words: Seq[String]): Column =
+    ColumnBridge.column(StopwordHits(ColumnBridge.expression(text), words, distinct = false))
 
   /** Heuristic language ID: argmax over per-language stopword hits,
     * ties to the lexicographically larger language code; "und" when
-    * nothing hits. Pure projection.
+    * nothing hits. Pure projection: one fold and one split for every
+    * language ([[LangId]]).
     */
-  def langId(text: Column): Column = {
-    val scored = stopwords.toSeq.sortBy(_._1).map { case (lg, ws) =>
-      struct(stopwordHits(text, ws).as("hits"), lit(lg).as("lang"))
-    }
-    val best = array_max(array(scored: _*))
-    when(best.getField("hits") > 0, best.getField("lang")).otherwise(lit("und"))
-  }
+  def langId(text: Column): Column =
+    ColumnBridge.column(LangId(ColumnBridge.expression(text), stopwords.toSeq.sortBy(_._1)))
 
   /** PII scrub patterns → replacement tags, applied in order. Kept to
     * portable character-class regexes (no lookarounds) so the same
@@ -156,10 +159,11 @@ object TextAnalysis {
   }
 
   /** Normalized text used by dedup + fingerprints: lowercase, collapsed
-    * whitespace, trimmed.
+    * whitespace, trimmed — `trim(regexp_replace(lower(text), '\\s+', ' '))`
+    * byte for byte, in one walk ([[NormalizeText]]).
     */
   def normalize(text: Column): Column =
-    trim(regexp_replace(lower(text), "\\s+", " "))
+    ColumnBridge.column(NormalizeText(ColumnBridge.expression(text)))
 
   /** 64-bit fingerprint of normalized text. xxhash64 is Spark-native,
     * codegen'd, 8 bytes/doc — the right dedup key at 100 TB (vs 32-byte

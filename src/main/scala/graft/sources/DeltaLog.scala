@@ -220,7 +220,9 @@ object DeltaLog {
       // re-added under a new DV in this commit stays live
       if (s.files.contains(p) && uid(s.dvs.get(p).orNull) != u) st.copy(touched = st.touched + k)
       else st.copy(snap = s.copy(files = s.files - p, sizes = s.sizes - p, stats = s.stats - p,
-          dvs = s.dvs - p, rowIds = s.rowIds - p),
+          dvs = s.dvs - p, rowIds = s.rowIds - p,
+          sizeBytes = s.sizeBytes - s.sizes.get(p).fold(0L)(math.max(_, 0L)),
+          unknownSizes = s.unknownSizes - s.sizes.get(p).count(_ < 0L)),
         adds = st.adds - p, tombstones = st.tombstones + (p -> r), touched = st.touched + k)
     case _ => st
   }
@@ -228,19 +230,26 @@ object DeltaLog {
   /** `st`'s snapshot with the given (decoded path → add) files live.
     * Partition-value keys are PHYSICAL in the log under column mapping
     * and logical in the snapshot; stats stay physical (skipping runs at
-    * the scan).
+    * the scan). The size totals swap out a replaced file's old size.
     */
   private[sources] def withAdds(st: LogState,
                                 adds: Iterable[(String, AddFile)]): DeltaRead.Snapshot = {
     val s = st.snap
     val toLogical = st.toLogical
     val paths = adds.map(_._1)
-    s.copy(
+    var sizes = s.sizes
+    var sizeBytes = s.sizeBytes
+    var unknownSizes = s.unknownSizes
+    adds.foreach { case (p, a) =>
+      sizes.get(p).foreach(old => if (old >= 0L) sizeBytes -= old else unknownSizes -= 1)
+      if (a.size >= 0L) sizeBytes += a.size else unknownSizes += 1
+      sizes = sizes.updated(p, a.size)
+    }
+    s.copy(sizeBytes = sizeBytes, unknownSizes = unknownSizes, sizes = sizes,
       files = s.files ++ adds.map { case (p, a) =>
         p -> (if (toLogical.isEmpty) a.partitionValues
               else a.partitionValues.map { case (k, v) => toLogical.getOrElse(k, k) -> v })
       },
-      sizes = s.sizes ++ adds.map { case (p, a) => p -> a.size },
       stats = s.stats -- paths ++ adds.collect { case (p, a) if a.stats != null => p -> a.stats },
       dvs = s.dvs -- paths ++ adds.collect { case (p, a) if a.dv != null => p -> a.dv },
       rowIds = s.rowIds -- paths ++ adds.collect { case (p, a) if a.baseRowId >= 0L =>

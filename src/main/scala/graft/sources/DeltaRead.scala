@@ -137,7 +137,14 @@ object DeltaRead {
         * `delta.rowTracking` high-water mark domain
         * ([[DeltaWrite]] stamps every add on a rowTracking table).
         */
-      rowIds: Map[String, (Long, Long)] = Map.empty)
+      rowIds: Map[String, (Long, Long)] = Map.empty,
+      /** running totals over the live files, kept by the [[DeltaLog]]
+        * fold so writing and checking a `<v>.crc` is O(1): the sum of
+        * the known `sizes` and the count of unknown (-1) ones. Copies
+        * that subset `files` for a scan do not keep them.
+        */
+      sizeBytes: Long = 0L,
+      unknownSizes: Int = 0)
 
   /** Is `path` a Delta table root (has a transaction log)? A
     * log-cleaned table may hold its state ONLY as checkpoint parquet
@@ -666,7 +673,8 @@ object DeltaRead {
     * snapshot anyway would silently return wrong data. Absent or
     * unreadable checksums are fine (they're optional per the
     * protocol); size validation is skipped when any live file's size
-    * is unknown (legacy adds without `size`).
+    * is unknown (legacy adds without `size`). O(1): the totals ride
+    * the fold ([[Snapshot.sizeBytes]]).
     */
   private def validateChecksum(fs: FileSystem, logP: Path, path: String,
                                s: Snapshot): Unit = {
@@ -687,12 +695,9 @@ object DeltaRead {
             s"replayed snapshot has ${s.files.size} live files — the log or a " +
             "checkpoint is corrupted; refusing to serve a wrong snapshot")
     }
-    if (n.hasNonNull("tableSizeBytes") && s.files.keys.forall(p =>
-        s.sizes.getOrElse(p, -1L) >= 0L)) {
+    if (n.hasNonNull("tableSizeBytes") && s.unknownSizes == 0) {
       val expect = n.get("tableSizeBytes").asLong
-      // keysIterator, NOT keys.map: mapping a key SET through sizes
-      // would dedup equal sizes and undercount
-      val got = s.files.keysIterator.map(s.sizes).sum
+      val got = s.sizeBytes
       if (expect != got)
         throw new IllegalStateException(
           s"Delta table at $path fails checksum validation at version " +

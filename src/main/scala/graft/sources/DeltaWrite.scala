@@ -1860,7 +1860,7 @@ object DeltaWrite {
       val post = DeltaLog.fold(prevSnap.fold(DeltaLog.emptyState(table))(
         DeltaLog.resume(table, _)), actions)
       val s = post.snap
-      if (s.files.keysIterator.exists(p => s.sizes(p) < 0L)) return
+      if (s.unknownSizes > 0) return
       // this commit's own metaData / protocol as logged, else the base's
       val metaNode = Option(post.metadata).map { m =>
         val b = metaDataNode(m.id, m.schemaString, m.partitionColumns, m.configuration)
@@ -1872,7 +1872,7 @@ object DeltaWrite {
         .orElse(prevSnap.map(crcProtoNode)).orNull
       if (metaNode == null || protoNode == null) return
       val node = mapper.createObjectNode
-      node.put("tableSizeBytes", s.files.keysIterator.map(s.sizes).sum)
+      node.put("tableSizeBytes", s.sizeBytes)
       node.put("numFiles", s.files.size.toLong)
       node.put("numMetadata", 1L)
       node.put("numProtocol", 1L)

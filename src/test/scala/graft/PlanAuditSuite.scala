@@ -330,6 +330,29 @@ class PlanAuditSuite extends SparkSpec {
     assert(!runsKernel(spreads.head.child), phys.treeString)
   }
 
+  test("text operators fold case through the graftbridge kernels, never Spark's lower/upper/initcap") {
+    import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Curation, Dedup, TextAnalysis}
+    val docs = Tables.load(spark, sfDir, "documents")
+    // (operator, a kernel its plan must hold, so the check is not vacuous);
+    // the MinHash dedup step's only text stage is its signature projection
+    val frames = Seq(
+      ("curate", "lang_id", Curation.curate(docs, minTokens = 5)),
+      ("minhash dedup", "normalize_text", Dedup.minhashSignatures(docs)),
+      ("decontaminate", "normalize_text", Curation.decontaminate(docs, docs.limit(5))),
+      ("exact dedup", "normalize_text", Dedup.exact(docs)),
+      ("gopherRules", "stopword_hits",
+        docs.select(TextAnalysis.gopherRules(col("text")).map { case (n, c) => c.as(n) }: _*)))
+    for ((name, kernel, df) <- frames) {
+      val plan = df.queryExecution.optimizedPlan
+      val exprs = plan.collectWithSubqueries { case n => n }.flatMap(_.expressions)
+      val caseMaps = exprs.flatMap(_.collect { case e @ (_: Lower | _: Upper | _: InitCap) => e })
+      assert(caseMaps.isEmpty, s"$name folds case through Spark: $caseMaps\n$plan")
+      assert(exprs.exists(_.exists(_.prettyName == kernel)), s"$name: no $kernel\n$plan")
+    }
+  }
+
   test("q114: vocab top-k plans as TakeOrdered, never a single-partition global sort") {
     val p = plan("q114_vocab")
     assert(p.contains("TakeOrderedAndProject"), p)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class DedupSuite extends SparkSpec {
@@ -113,9 +114,14 @@ class DedupSuite extends SparkSpec {
     // 4-byte ones are surrogate pairs in Java), so the kernel's
     // code-point walk is checked far past any short-string shortcut
     val mixed = (0 until 5200).map(i => Seq("é", "€", "😀", "a", "ñ", "日", " ", "𝄞")(i * 7 % 8)).mkString
+    // 9007 ends in a truncated 3-byte lead byte and 9008 holds a lone
+    // continuation byte: normalize re-encodes both with U+FFFD, so the
+    // reference's per-position substring never reads past the string
+    val malformed = Seq((9007L, "4142434420E2"), (9008L, "414280434445"))
+      .toDF("doc_id", "hex").select(col("doc_id"), unhex(col("hex")).cast("string").as("text"))
     val edge = Seq((9001L, ""), (9002L, "ab"), (9003L, "héllo wörld €dge"),
       (9004L, "aaaaaaaaaa"), (9005L, "exact"), (9006L, mixed))
-      .toDF("doc_id", "text")
+      .toDF("doc_id", "text").unionByName(malformed)
     val input = docs.select("doc_id", "text").unionByName(edge)
     val a = input.select(col("doc_id").as("id"),
       graft.functions.VectorFunctions.shingleSet(
@@ -434,6 +440,80 @@ class TextSuite extends SparkSpec {
     assert(out(0).getAs[Int]("n") == 3)
     assert(out(0).getAs[String]("norm") == "héllo world x1")
     assert(out(1).getAs[Int]("n") == 0)
+  }
+
+  test("text kernels equal the Spark lower/regex formulations byte for byte, ICU on and off") {
+    // the Column formulations the kernels replaced, kept as the reference
+    def refTokens(t: Column) = regexp_extract_all(t, lit("\\S+"), lit(0))
+    def refNormalize(t: Column) = trim(regexp_replace(lower(t), "\\s+", " "))
+    def refHits(t: Column, ws: Seq[String]) =
+      size(filter(refTokens(lower(t)), x => array_contains(array(ws.map(lit): _*), x)))
+    def refLangId(t: Column) = {
+      val best = array_max(array(TextAnalysis.stopwords.toSeq.sortBy(_._1).map { case (lg, ws) =>
+        struct(refHits(t, ws).as("hits"), lit(lg).as("lang"))
+      }: _*))
+      when(best.getField("hits") > 0, best.getField("lang")).otherwise(lit("und"))
+    }
+    def refGopherStop(t: Column) = {
+      val low = transform(refTokens(t), x => lower(x))
+      TextAnalysis.stopwords("en").map(w => array_contains(low, w).cast("int"))
+        .reduce(_ + _).cast("long")
+    }
+    val edge = Seq[(Long, String)](
+      (9001L, ""), (9002L, null), (9003L, " \t\n\u000B\f\r "),
+      (9004L, "A B"), (9005L, "A\tB"), (9006L, "A\nB"), (9007L, "A\u000BB"),
+      (9008L, "A\fB"), (9009L, "A\rB"), (9010L, " \t\n The  CAT\r\n and   Dog \f\u000B "),
+      (9011L, "İstanbul İN THE city"), (9012L, "ΣΟΦΟΣ σοφος ΟΔΟΣ"), (9013L, "Straße ß SS"),
+      (9014L, "\u212Aelvin \u212A THE"), (9015L, "e\u0301 A\u0308 The\u0301 the"),
+      (9016L, "😀 𝄞 THE \uD835\uDC00 and"), (9017L, "der le"), (9018L, "das que EN"),
+      (9019L, "The THE the tHe und"),
+      // Unicode 14-16 capitals: ICU 77 lowercases them, JDK 17's
+      // String.toLowerCase does not, so the two fold branches differ
+      (9022L, "\u2C2F\uA7C0\u1C89 THE"))
+      .toDF("doc_id", "text")
+    // 9020: truncated 3-byte lead byte at the end; 9021: lone continuation byte
+    val malformed = Seq((9020L, "54484520414E4420E2"), (9021L, "544880452074686520414E44"))
+      .toDF("doc_id", "hex").select(col("doc_id"), unhex(col("hex")).cast("string").as("text"))
+    // the repartition keeps the edge rows out of local-relation folding
+    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
+    val input = docs
+      .unionByName(edge.unionByName(malformed).repartition(2))
+    val t = col("text")
+    val pairs: Seq[(String, Column, Column)] = Seq(
+      ("normalize", TextAnalysis.normalize(t), refNormalize(t)),
+      ("normalize bytes", hex(TextAnalysis.normalize(t)), hex(refNormalize(t))),
+      ("langId", TextAnalysis.langId(t), refLangId(t)),
+      ("gopher stop_hits", TextAnalysis.gopherRules(t).toMap.apply("stop_hits"), refGopherStop(t))) ++
+      TextAnalysis.stopwords.toSeq.sortBy(_._1).map { case (lg, ws) =>
+        (s"stopwordHits($lg)", TextAnalysis.stopwordHits(t, ws), refHits(t, ws))
+      }
+    val icuKey = "spark.sql.icu.caseMappings.enabled"
+    val modeKey = "spark.sql.codegen.factoryMode"
+    val wscgKey = "spark.sql.codegen.wholeStage"
+    val saved = Seq(icuKey, modeKey, wscgKey).map(k => k -> spark.conf.getOption(k))
+    try {
+      for (icu <- Seq("true", "false"); mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+        spark.conf.set(icuKey, icu)
+        spark.conf.set(modeKey, mode)
+        spark.conf.set(wscgKey, (mode == "CODEGEN_ONLY").toString)
+        val rows = input.select(col("doc_id") +: pairs.flatMap { case (n, k, r) =>
+          Seq(k.as(s"k:$n"), r.as(s"r:$n")) }: _*).collect()
+        assert(rows.length == docs.count() + 22)
+        for (row <- rows; i <- pairs.indices) {
+          val (got, want) = (row.get(1 + 2 * i), row.get(2 + 2 * i))
+          assert(got == want, s"${pairs(i)._1} differs on doc ${row.get(0)} " +
+            s"(icu=$icu, $mode): kernel=$got reference=$want")
+        }
+        val edgeOut = rows.filter(_.getLong(0) >= 9000L).map(r => r.getLong(0) -> r).toMap
+        assert(edgeOut(9017L).getAs[String]("k:langId") == "fr") // de/fr tie: larger code
+        assert(edgeOut(9018L).getAs[String]("k:langId") == "pt") // das+que: pt beats de, es
+        assert(edgeOut(9003L).getAs[String]("k:normalize") == "")
+        assert(edgeOut(9014L).getAs[String]("k:normalize") == "kelvin k the")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("langId: picks dominant stopword language") {

@@ -1133,6 +1133,62 @@ class DeltaReadSuite extends SparkSpec {
     assert(DeltaRead.read(spark, root).count() == 4L)
   }
 
+  test("crc size totals ride the fold: a cached advance equals a recount; a tampered crc still fails") {
+    val root = tmp()
+    def recount(s: DeltaRead.Snapshot): (Long, Int) = {
+      val sizes = s.files.keysIterator.map(s.sizes).toSeq
+      (sizes.filter(_ >= 0L).sum, sizes.count(_ < 0L))
+    }
+    def check(s: DeltaRead.Snapshot, unknown: Int): Unit = {
+      assert((s.sizeBytes, s.unknownSizes) == recount(s), s"v${s.version}")
+      assert(s.unknownSizes == unknown, s"v${s.version}")
+    }
+    (0 until 3).foreach(f => DeltaWrite.append(spark,                                    // v0-v2
+      spark.range(f * 10L, f * 10L + 10L).select(col("id"), col("id").cast("string").as("v"))
+        .coalesce(1), root))
+    DeltaWrite.setProperties(spark, root, Map("delta.enableDeletionVectors" -> "true"))  // v3
+    check(DeltaRead.snapshot(spark, root), 0)
+    // a legacy add without `size` (v4), removed again (v5): the cache
+    // advances from v3 across both commits at once
+    writeDataFile(Seq((100L, "x")).toDF("id", "v"), root, "legacy.parquet")
+    commit(root, 4, Seq(
+      """{"add":{"path":"legacy.parquet","partitionValues":{},"modificationTime":1,"dataChange":true}}"""))
+    commit(root, 5, Seq(removeLine("legacy.parquet")))
+    check(DeltaRead.snapshot(spark, root, Some(4L)), 1)
+    check(DeltaRead.snapshot(spark, root), 0)
+    DeltaWrite.delete(spark, root, "id = 3")                                             // v6 (DV)
+    val s6 = DeltaRead.snapshot(spark, root)
+    assert(s6.dvs.size == 1, s6.dvs)
+    check(s6, 0)
+    // v7 re-adds one live file without a remove (its old size must be
+    // swapped out of the total, not added twice) and removes another
+    val Seq(again, gone) = s6.files.keys.filterNot(s6.dvs.contains).toSeq.sorted.take(2)
+    commit(root, 7, Seq(addLine(root, again), removeLine(gone)))                        // v7
+    check(DeltaRead.snapshot(spark, root), 0)
+    assert(DeltaWrite.checkpoint(spark, root) == 7L)
+    // v8 by hand, with a crc whose byte total is off by one: the cached
+    // advance from v7 validates against the carried totals and refuses
+    writeDataFile(Seq((200L, "y")).toDF("id", "v"), root, "extra.parquet")
+    commit(root, 8, Seq(addLine(root, "extra.parquet")))
+    val s7 = DeltaRead.snapshot(spark, root, Some(7L))
+    val extra = java.nio.file.Files.size(java.nio.file.Paths.get(root, "extra.parquet"))
+    val crc8 = java.nio.file.Paths.get(root, "_delta_log", f"${8L}%020d.crc")
+    def writeCrc(bytes: Long): Unit = java.nio.file.Files.write(crc8,
+      s"""{"tableSizeBytes":$bytes,"numFiles":${s7.files.size + 1}}""".getBytes("UTF-8"))
+    writeCrc(s7.sizeBytes + extra + 1L)
+    val e = intercept[IllegalStateException] { DeltaRead.snapshot(spark, root) }
+    assert(e.getMessage.contains("checksum validation"), e.getMessage)
+    writeCrc(s7.sizeBytes + extra)
+    val s8 = DeltaRead.snapshot(spark, root)
+    assert(s8.version == 8L)
+    check(s8, 0)
+    // the cold replay (checkpoint + tail) carries the same totals
+    DeltaRead.invalidateSnapshotCache()
+    val cold = DeltaRead.snapshot(spark, root)
+    assert((cold.sizeBytes, cold.unknownSizes, cold.files.keySet) ==
+      ((s8.sizeBytes, s8.unknownSizes, s8.files.keySet)))
+  }
+
   test("deletion vectors: overwrite of a DV'd table emits dv-carrying removes") {
     val root = tmp()
     writeDataFile((0L until 4L).map(i => (i, s"v$i")).toDF("id", "v"), root, "f1.parquet")

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Deduplication operators for document corpora.
   *
@@ -470,6 +471,10 @@ object Dedup {
     (verified, sets)
   }
 
+  /** [[nearDupGroups]]' output: (doc_id, group_id), both non-null ids. */
+  private val GroupSchema = new StructType()
+    .add("doc_id", LongType, nullable = false).add("group_id", LongType, nullable = false)
+
   /** Resolve near-dup PAIRS into GROUPS: connected components by
     * iterative min-label propagation ("hash-to-min"): every vertex
     * starts labelled with its own id; each round it takes the min of
@@ -486,32 +491,33 @@ object Dedup {
     * one row per paired doc) and their BLOCKS released each round via
     * [[releaseCheckpoint]] (Dataset.unpersist is a no-op on checkpoint
     * blocks); convergence is detected with a limit(1) existence probe,
-    * not a full count. Below `localMaxPairs` the components resolve in
-    * a driver-side union-find instead — identical output, one job
-    * instead of rounds (see the inline note).
+    * not a full count. Up to `localMaxPairs` pairs the components
+    * resolve in a driver-side union-find instead — identical output,
+    * one bounded collect instead of rounds (see the inline note).
     */
   def nearDupGroups(pairs: DataFrame, maxIters: Int = 20,
                     localMaxPairs: Long = 500000L): DataFrame = {
-    val edges = pairs.select(col("id_a"), col("id_b"))
-      .unionByName(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Size-adaptive: a verified near-dup pair set is LSH-bounded and
-    // usually orders of magnitude smaller than the corpus; below
+    // usually orders of magnitude smaller than the corpus; up to
     // `localMaxPairs` (≤ ~16 MB of ids — the same driver-payload class
     // as the IVF centroids) a driver-side union-find resolves the
-    // components in one job instead of ~3 jobs × O(diameter) rounds of
-    // label propagation. Identical output (GroundTruthSuite asserts
-    // equality with naive union-find); the iterative path below
-    // remains the scale route and kicks in automatically past the
-    // threshold.
-    val nEdges = edges.count() // materializes the persisted edge list
+    // components from one bounded collect instead of ~3 jobs ×
+    // O(diameter) rounds of label propagation. Identical output
+    // (GroundTruthSuite asserts equality with naive union-find); the
+    // iterative path below remains the scale route and kicks in
+    // automatically once the collect comes back over the threshold.
+    // coalesce(1): one task reads the pair partitions in turn and stops
+    // at the limit, so the probe is one job whatever the partitioning
+    // (a plain limit-collect scans 1, then 4×, … partitions per job)
+    val cap = math.min(math.max(localMaxPairs, 0L), Int.MaxValue - 1L).toInt
+    val sample = pairs.select("id_a", "id_b").coalesce(1).limit(cap + 1).collect()
     // a 100 TB operator needs to SEE which route ran (and tune
     // local_max_pairs / max_iters from the YAML dedup step if the
     // default threshold is wrong for its pair volume)
     val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup")
-    if (nEdges / 2 <= localMaxPairs) {
-      log.info(s"nearDupGroups: ${nEdges / 2} pairs <= localMaxPairs=$localMaxPairs" +
-        " — resolving components in the driver union-find (one job)")
+    if (sample.length <= localMaxPairs) {
+      log.info(s"nearDupGroups: ${sample.length} pairs <= localMaxPairs=$localMaxPairs" +
+        " — resolving components in the driver union-find (one collect)")
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       val members = scala.collection.mutable.HashSet.empty[Long]
       def find(x: Long): Long = {
@@ -521,7 +527,7 @@ object Dedup {
         while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      edges.select("id_a", "id_b").collect().foreach { row =>
+      sample.foreach { row =>
         val (a, b) = (row.getLong(0), row.getLong(1))
         members += a; members += b
         val (ra, rb) = (find(a), find(b))
@@ -529,12 +535,16 @@ object Dedup {
         // id — the hash-to-min invariant of the distributed path
         if (ra != rb) { val (lo, hi) = (math.min(ra, rb), math.max(ra, rb)); parent(hi) = lo }
       }
-      val rowsOut = members.toSeq.map(id => (id, find(id)))
-      edges.unpersist(false)
-      import pairs.sparkSession.implicits._
-      return rowsOut.toDF("doc_id", "group_id").localCheckpoint(true)
+      // rows + explicit schema: no encoder derivation, and the result is
+      // already materialized on the driver (a local relation)
+      val rowsOut = new java.util.ArrayList[Row](members.size)
+      members.foreach(id => rowsOut.add(Row(id, find(id))))
+      return pairs.sparkSession.createDataFrame(rowsOut, GroupSchema)
     }
-    log.info(s"nearDupGroups: ${nEdges / 2} pairs > localMaxPairs=$localMaxPairs" +
+    val edges = pairs.select(col("id_a"), col("id_b"))
+      .unionByName(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    log.info(s"nearDupGroups: more than $localMaxPairs pairs (localMaxPairs)" +
       s" — distributed label propagation (maxIters=$maxIters)")
     var labels = edges.select(col("id_a").as("id")).distinct()
       .withColumn("label", col("id"))

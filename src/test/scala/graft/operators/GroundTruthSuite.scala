@@ -180,6 +180,22 @@ class GroundTruthSuite extends SparkSpec {
     assert(local(3L) == 1L && local(5L) == 1L && local(11L) == 10L && local(22L) == 20L)
   }
 
+  test("nearDupGroups threshold boundary: localMaxPairs pairs stay local, one more goes distributed") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (5L, 3L), (20L, 21L), (21L, 22L), (22L, 20L))
+      .toDF("id_a", "id_b").repartition(3).localCheckpoint(true) // materialized, like LSH output
+    val n = pairs.count()
+    def asMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("group_id")).toMap
+    val (local, localJobs) = jobsSubmitted(Dedup.nearDupGroups(pairs, localMaxPairs = n))
+    val (dist, distJobs) = jobsSubmitted(Dedup.nearDupGroups(pairs, localMaxPairs = n - 1))
+    // the small path is one bounded collect; its result is already local
+    assert(localJobs == 1, s"local path ran $localJobs jobs")
+    assert(distJobs > localJobs, s"distributed path ran $distJobs jobs")
+    assert(asMap(local) == asMap(dist))
+    assert(asMap(local)(5L) == 1L && asMap(local)(22L) == 20L)
+    Dedup.releaseCheckpoint(pairs, dist)
+  }
+
   test("degenerate hot bucket: identical docs cap out instead of exploding pairs") {
     import spark.implicits._
     // 200 byte-identical docs + 2 genuine near-dups; maxBucket=50 caps
